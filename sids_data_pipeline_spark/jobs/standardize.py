@@ -5,16 +5,21 @@ Reference: ``batch/processing/__main__.py`` + ``raster.py:20-40`` — per
 file, gdal_translate band-select → gdalwarp clip to the SIDS window →
 ZSTD/128×128 tiled output, then an SQLite ``INSERT`` marks the raster
 done, and already-recorded rasters are skipped on re-run
-(``utils.py:31-38``, ``data.py``). Here the whole batch is one declarative
-plan: the registered ``geotiff`` format scans every input as pixel rows
-(partition per file), a left-anti join on the Parquet ledger drops
-already-standardized rasters BEFORE any decoding work is scheduled for
-them (predicate on the file-path partition would be even earlier; the
-anti-join keeps it declarative), `standardize_pixels` applies band select
-+ extent clip, and the same format's write path emits the standardized
-files in the reference's ZSTD+tiled profile. The ledger append is the
-final action, so a crash mid-write re-processes (idempotent overwrite)
-rather than skipping unfinished rasters.
+(``utils.py:31-38``, ``data.py``). Here the whole batch reads its
+pixels once, in one Spark write:
+
+- Pruning is a driver-side listing: the input files whose stems are in
+  the Parquet ledger are dropped BEFORE any decode work is scheduled.
+- The registered ``geotiff`` format scans the pending files as pixel
+  rows (one partition per file); band select + extent clip are plain
+  filters.
+- The same format's Arrow write path emits one ZSTD, 128-tiled file per
+  raster. The written raster ids are an observed metric of that write
+  (``DataFrame.observe``), so the pixels are read once, nothing is
+  cached, and no extra Spark job collects the ids.
+- The ledger append is the final action, so a crash mid-write
+  re-processes (idempotent overwrite) rather than skipping unfinished
+  rasters.
 
 At 100 TB: inputs parallelize per file, the clip filter prunes pixels
 before the (per-raster) repartition, and the only driver-side state is
@@ -23,11 +28,11 @@ the pending-raster id list (manifest-sized).
 
 from __future__ import annotations
 
-from pyspark.sql import SparkSession
+from pyspark.sql import Observation, SparkSession
 from pyspark.sql import functions as F
 
 from sids_data_pipeline_spark.sources.geotiff_datasource import register
-from sids_data_pipeline_spark.sources.raster import CLIP_LAT, CLIP_LON, standardize_pixels
+from sids_data_pipeline_spark.sources.raster import CLIP_LAT, CLIP_LON
 
 
 def run_standardize_job(
@@ -93,21 +98,21 @@ def run_standardize_job(
     )
     std = clip_extent(select_band(pending, band), lon=lon, lat=lat)
 
-    from sids_data_pipeline_spark.lifecycle import track
-
-    std = track(std.persist())  # one decode feeds both the id collect and the write
-    processed = [r.raster_id for r in std.select("raster_id").distinct().collect()]
+    # the ids ride on the write as an observed metric: one pass over the
+    # pixels, no cache, no separate collect job
+    written = Observation("standardize")
+    (
+        std.observe(written, F.collect_set("raster_id").alias("ids"))
+        .repartition("raster_id")
+        .write.format("geotiff")
+        .option("compress", "zstd")
+        .option("tile", "128")
+        .mode("overwrite")
+        .save(out_dir)
+    )
+    processed = sorted(written.get["ids"])
     if processed:
-        (
-            std.repartition("raster_id")
-            .write.format("geotiff")
-            .option("compress", "zstd")
-            .option("tile", "128")
-            .mode("overwrite")
-            .save(out_dir)
-        )
         spark.createDataFrame(
             [(r,) for r in processed], "raster_id string"
         ).write.mode("append").parquet(ledger_path)
-    std.unpersist()
-    return {"processed": sorted(processed), "skipped": skipped}
+    return {"processed": processed, "skipped": skipped}

@@ -849,8 +849,42 @@ def encode_pixel_group(
     compress: str | None = None,
     tile: int | None = None,
 ) -> bytes:
-    """One raster's long-format pixel rows → encoded GeoTIFF bytes.
-    Shared by the applyInPandas sink (:func:`export_geotiff`) and the
+    """One raster's long-format pixel rows → encoded GeoTIFF bytes: the
+    pandas face of :func:`encode_pixels`, used by the applyInPandas sink
+    (:func:`export_geotiff`)."""
+    if "band" in pdf.columns:
+        require_single_band(pdf["band"].dropna().unique())
+    return encode_pixels(
+        pdf["lon"].to_numpy(),
+        pdf["lat"].to_numpy(),
+        pdf["val"].to_numpy(dtype="float64"),
+        nodata=nodata,
+        compress=compress,
+        tile=tile,
+    )
+
+
+def require_single_band(bands) -> None:
+    """Raise unless ``bands`` (one raster's distinct non-null band
+    values) names at most one band: the encoders write single-band
+    files."""
+    if len(bands) > 1:
+        raise ValueError(
+            "pixel GeoTIFF encode writes single-band files; split by band "
+            f"first (got bands {sorted(bands)})"
+        )
+
+
+def encode_pixels(
+    lon: np.ndarray,
+    lat: np.ndarray,
+    vals: np.ndarray,
+    nodata: float = -9999.0,
+    compress: str | None = None,
+    tile: int | None = None,
+) -> bytes:
+    """One raster's pixel-centre coordinates and float64 values →
+    encoded GeoTIFF bytes. Shared by :func:`encode_pixel_group` and the
     registered write-path data source (geotiff_datasource).
 
     Places rows/cols by COORDINATE position, not by y/x index
@@ -861,14 +895,9 @@ def encode_pixel_group(
     distinct-count would mis-register every pixel after a dropped
     row/column), cells land at round((coord − origin) / size) so gaps
     become nodata runs, and the origin is the centre lattice's corner.
-    NULLs encode as the nodata sentinel."""
-    if "band" in pdf.columns and pdf["band"].nunique() > 1:
-        raise ValueError(
-            "encode_pixel_group writes single-band files; split by band "
-            f"first (got bands {sorted(pdf['band'].unique())})"
-        )
-    lon_u = np.sort(pdf["lon"].unique())
-    lat_u = np.sort(pdf["lat"].unique())
+    NaN values (NULLs) encode as the nodata sentinel."""
+    lon_u = np.sort(pd.unique(lon))
+    lat_u = np.sort(pd.unique(lat))
     # two-step pitch inference: the minimum spacing finds the true cell
     # count even with dropped rows/columns, then span ÷ (count − 1)
     # averages out per-center float noise that a single min-diff carries
@@ -881,9 +910,8 @@ def encode_pixel_group(
     origin_x = float(lon_u[0]) - sx / 2.0
     origin_y = float(lat_u[-1]) + sy / 2.0
     grid = np.full((h, w), nodata, dtype="float64")
-    xi = np.rint((pdf["lon"].to_numpy() - lon_u[0]) / sx).astype(np.int64)
-    yi = np.rint((lat_u[-1] - pdf["lat"].to_numpy()) / sy).astype(np.int64)
-    vals = pdf["val"].to_numpy(dtype="float64")
+    xi = np.rint((lon - lon_u[0]) / sx).astype(np.int64)
+    yi = np.rint((lat_u[-1] - lat) / sy).astype(np.int64)
     grid[yi, xi] = np.where(np.isnan(vals), nodata, vals)
     return encode_geotiff(
         grid, origin_x, origin_y, sx, nodata=nodata, pixel_deg_y=sy,

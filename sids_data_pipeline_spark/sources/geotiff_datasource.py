@@ -26,13 +26,14 @@ standardization) as a declarative scan.
 from __future__ import annotations
 
 import glob as _glob
+import itertools
 import os
 from typing import Iterator, Sequence
 
 from pyspark.sql.datasource import (
     DataSource,
+    DataSourceArrowWriter,
     DataSourceReader,
-    DataSourceWriter,
     InputPartition,
     WriterCommitMessage,
 )
@@ -180,10 +181,38 @@ class _WrittenFiles(WriterCommitMessage):
         self.files = files
 
 
-class GeoTiffWriter(DataSourceWriter):
+def _replace_with(path: str, data: bytes) -> None:
+    """Write ``data`` to ``path`` through a hidden sibling temp file and
+    ``os.replace``: readers see either the old file or the whole new
+    one, and a failed write leaves neither a partial target nor the
+    temp file."""
+    import uuid
+
+    d, name = os.path.split(path)
+    os.makedirs(d, exist_ok=True)
+    tmp = os.path.join(d, f".{name}.{uuid.uuid4().hex}.tmp")
+    try:
+        with open(tmp, "wb") as f:
+            f.write(data)
+        os.replace(tmp, path)
+    except BaseException:
+        try:
+            os.remove(tmp)
+        except FileNotFoundError:
+            pass
+        raise
+
+
+class GeoTiffWriter(DataSourceArrowWriter):
     """Write path of the registered format:
     ``df.write.format("geotiff").mode(...).save(dir)`` emits one
     ``<raster_id>.tif`` per raster from long-format pixel rows.
+
+    The rows arrive as Arrow record batches; each raster's ``lon``,
+    ``lat`` and ``val`` columns go to :func:`geotiff.encode_pixels` as
+    NumPy arrays, so no Python object is built per pixel. Each file is
+    written to a hidden sibling temp file and renamed into place, so a
+    task that dies mid-write leaves no truncated ``.tif`` behind.
 
     CONTRACT: one raster must not span partitions — callers
     ``repartition("raster_id")`` first (the format is one-file-per-
@@ -215,17 +244,19 @@ class GeoTiffWriter(DataSourceWriter):
         self._overwrite = overwrite
 
     def write(self, iterator) -> _WrittenFiles:
-        import pandas as pd
+        import pyarrow as pa
+        import pyarrow.compute as pc
 
-        from sids_data_pipeline_spark.sources.geotiff import encode_pixel_group
+        from sids_data_pipeline_spark.sources import geotiff
 
-        rows = list(iterator)
-        if not rows:
+        batches = iter(iterator)
+        first = next(batches, None)
+        if first is None:
             return _WrittenFiles(())
-        pdf = pd.DataFrame([r.asDict() for r in rows])
-        os.makedirs(self._path, exist_ok=True)
+        table = pa.Table.from_batches(itertools.chain((first,), batches))
+        ids = table.column("raster_id")
         written = []
-        for rid, group in pdf.groupby("raster_id"):
+        for rid in pc.unique(ids).drop_null().to_pylist():
             out = os.path.join(self._path, f"{rid}.tif")
             if os.path.exists(out) and not self._overwrite:
                 raise FileExistsError(
@@ -233,14 +264,20 @@ class GeoTiffWriter(DataSourceWriter):
                     "partitions, or append to a populated dir) — "
                     "repartition('raster_id') and use mode('overwrite')"
                 )
-            data = encode_pixel_group(
-                group,
+            group = table.filter(pc.equal(ids, rid))
+            if "band" in group.column_names:
+                geotiff.require_single_band(
+                    pc.unique(group.column("band")).drop_null().to_pylist()
+                )
+            data = geotiff.encode_pixels(
+                group.column("lon").to_numpy(),
+                group.column("lat").to_numpy(),
+                group.column("val").to_numpy().astype("float64", copy=False),
                 nodata=self._nodata,
                 compress=self._compress,
                 tile=self._tile,
             )
-            with open(out, "wb") as f:
-                f.write(data)
+            _replace_with(out, data)
             written.append(out)
         return _WrittenFiles(tuple(written))
 

@@ -443,6 +443,129 @@ def test_geotiff_datasource_write_roundtrip(spark, tmp_path):
     assert a == b
 
 
+def _writer_pixels(spark):
+    """Two rasters of long-format PIXELS rows; ``r1`` has a NULL pixel
+    and a dropped pixel (a gap the lattice inference must keep)."""
+    from sids_data_pipeline_spark.schemas import PIXELS
+
+    rows = []
+    for stem, base in (("r1", 0.0), ("r2", 50.0)):
+        for y in range(5):
+            for x in range(6):
+                if stem == "r1" and (y, x) == (4, 5):
+                    continue
+                val = None if stem == "r1" and (y, x) == (1, 2) else base + 6 * y + x
+                rows.append((stem, 1, y, x, 1.0 + (x + 0.5) * 0.1,
+                             0.5 - (y + 0.5) * 0.1, val))
+    return spark.createDataFrame(rows, PIXELS)
+
+
+def test_geotiff_writer_bytes_match_encode_pixel_group(spark, tmp_path):
+    """The Arrow write path emits exactly the bytes encode_pixel_group
+    gives for the same rows, and no file for the zero-row partitions a
+    16-way repartition of two rasters leaves."""
+    from sids_data_pipeline_spark.sources.geotiff_datasource import register
+
+    register(spark)
+    px = _writer_pixels(spark)
+    out = tmp_path / "out"
+    px.repartition(16, "raster_id").write.format("geotiff").option(
+        "compress", "zstd"
+    ).option("tile", "128").mode("overwrite").save(str(out))
+    assert sorted(p.name for p in out.iterdir()) == ["r1.tif", "r2.tif"]
+    pdf = px.toPandas()
+    for stem, group in pdf.groupby("raster_id"):
+        want = geotiff.encode_pixel_group(group, compress="zstd", tile=128)
+        assert (out / f"{stem}.tif").read_bytes() == want, stem
+
+
+def test_geotiff_writer_null_val_is_nodata(spark, tmp_path):
+    """NULL val rows and missing pixels both decode as the nodata
+    sentinel; every other cell keeps its value."""
+    from sids_data_pipeline_spark.sources.geotiff_datasource import register
+
+    register(spark)
+    out = tmp_path / "out"
+    _writer_pixels(spark).repartition("raster_id").write.format("geotiff").option(
+        "nodata", "-1"
+    ).mode("overwrite").save(str(out))
+    values, _, nodata = geotiff.decode_geotiff((out / "r1.tif").read_bytes())
+    assert nodata == -1.0 and values.shape == (5, 6)
+    want = np.arange(30, dtype="float64").reshape(5, 6)
+    want[1, 2] = want[4, 5] = -1.0
+    assert np.array_equal(values, want)
+
+
+def test_geotiff_writer_append_refuses_existing_file(spark, tmp_path):
+    """mode('append') into a directory that already holds <stem>.tif
+    raises FileExistsError and leaves that file as it was."""
+    from sids_data_pipeline_spark.sources.geotiff_datasource import register
+
+    register(spark)
+    out = tmp_path / "out"
+    out.mkdir()
+    (out / "r1.tif").write_bytes(b"keep")
+    with pytest.raises(Exception, match="FileExistsError"):
+        _writer_pixels(spark).filter("raster_id = 'r1'").repartition(
+            "raster_id"
+        ).write.format("geotiff").mode("append").save(str(out))
+    assert (out / "r1.tif").read_bytes() == b"keep"
+
+
+def _arrow_pixels(stem="r1"):
+    import pyarrow as pa
+
+    y, x = np.mgrid[0:3, 0:4]
+    return pa.RecordBatch.from_pydict({
+        "raster_id": [stem] * 12,
+        "band": pa.array([1] * 12, pa.int32()),
+        "lon": (x.ravel() + 0.5) * 0.1,
+        "lat": 0.3 - (y.ravel() + 0.5) * 0.1,
+        "val": np.arange(12, dtype="float64"),
+    })
+
+
+def test_geotiff_writer_empty_partition_writes_nothing(tmp_path):
+    """No batches, or only zero-row batches, write no file and make no
+    directory."""
+    from sids_data_pipeline_spark.sources.geotiff_datasource import GeoTiffWriter
+
+    out = tmp_path / "out"
+    writer = GeoTiffWriter({"path": str(out)}, overwrite=False)
+    assert writer.write(iter([])).files == ()
+    assert writer.write(iter([_arrow_pixels().slice(0, 0)])).files == ()
+    assert not out.exists()
+
+
+@pytest.mark.parametrize("stage", ["encode", "file_write"])
+def test_geotiff_writer_failure_leaves_no_partial_file(tmp_path, monkeypatch, stage):
+    """A write that fails while encoding, or part-way through writing the
+    file, leaves the previous <stem>.tif intact (or none at all) and no
+    temp file behind."""
+    from sids_data_pipeline_spark.sources.geotiff_datasource import GeoTiffWriter
+
+    out = tmp_path / "out"
+    writer = GeoTiffWriter({"path": str(out)}, overwrite=True)
+    writer.write(iter([_arrow_pixels("r1")]))
+    before = (out / "r1.tif").read_bytes()
+
+    class Unwritable:
+        """Not a bytes-like object: the temp file is created, then
+        ``f.write`` raises."""
+
+    def failing_encode(*args, **kwargs):
+        if stage == "encode":
+            raise RuntimeError("encode failed")
+        return Unwritable()
+
+    monkeypatch.setattr(geotiff, "encode_pixels", failing_encode)
+    for stem in ("r1", "r2"):
+        with pytest.raises((RuntimeError, TypeError)):
+            writer.write(iter([_arrow_pixels(stem)]))
+    assert sorted(p.name for p in out.iterdir()) == ["r1.tif"]
+    assert (out / "r1.tif").read_bytes() == before
+
+
 def test_geopackage_nonstandard_pk_and_null_geometry(spark, tmp_path):
     """A spec-valid GPKG may use any INTEGER PRIMARY KEY name and may
     carry NULL-geometry rows; both must ingest, not crash."""

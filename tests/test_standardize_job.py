@@ -96,3 +96,36 @@ def test_standardize_foreign_estate_mixed_profiles(spark, tmp_path):
         # georef re-inferred from pixel centers: exact up to float eps
         assert np.allclose((ox, oy, sx, sy), (0.0, 0.8, 0.1, 0.1),
                            atol=1e-12), stem
+
+
+def test_standardize_fully_clipped_raster_not_processed(spark, tmp_path):
+    """A pending raster wholly outside the clip extent produces no output
+    rows: it is not reported as processed, no file is written for it and
+    the ledger gets no row for it, so a later run with a wider extent
+    still picks it up."""
+    src = tmp_path / "in"
+    src.mkdir()
+    _write_fixture(src, "inside", 0.0)
+    far = np.arange(64, dtype="float64").reshape(8, 8)
+    (src / "far.tif").write_bytes(
+        encode_geotiff(far, origin_x=50.0, origin_y=0.8, pixel_deg=0.1)
+    )
+    out = tmp_path / "out"
+    ledger = str(tmp_path / "ledger")
+
+    res = run_standardize_job(
+        spark, str(src / "*.tif"), str(out), ledger,
+        lon=(0.0, 0.45), lat=(0.0, 0.8),
+    )
+    assert res == {"processed": ["inside"], "skipped": []}
+    assert sorted(p.name for p in out.iterdir()) == ["inside.tif"]
+    ids = [r.raster_id for r in spark.read.parquet(ledger).collect()]
+    assert ids == ["inside"]
+
+    # only the clipped raster is pending now, and it still yields nothing
+    res2 = run_standardize_job(
+        spark, str(src / "*.tif"), str(out), ledger,
+        lon=(0.0, 0.45), lat=(0.0, 0.8),
+    )
+    assert res2 == {"processed": [], "skipped": ["inside"]}
+    assert not (out / "far.tif").exists()
