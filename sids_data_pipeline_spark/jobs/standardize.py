@@ -5,34 +5,89 @@ Reference: ``batch/processing/__main__.py`` + ``raster.py:20-40`` — per
 file, gdal_translate band-select → gdalwarp clip to the SIDS window →
 ZSTD/128×128 tiled output, then an SQLite ``INSERT`` marks the raster
 done, and already-recorded rasters are skipped on re-run
-(``utils.py:31-38``, ``data.py``). Here the whole batch reads its
-pixels once, in one Spark write:
+(``utils.py:31-38``, ``data.py``). Here each file stays a NumPy array
+from decode to write:
 
 - Pruning is a driver-side listing: the input files whose stems are in
   the Parquet ledger are dropped BEFORE any decode work is scheduled.
-- The registered ``geotiff`` format scans the pending files as pixel
-  rows (one partition per file); band select + extent clip are plain
-  filters.
-- The same format's Arrow write path emits one ZSTD, 128-tiled file per
-  raster. The written raster ids are an observed metric of that write
-  (``DataFrame.observe``), so the pixels are read once, nothing is
-  cached, and no extra Spark job collects the ids.
+- The pending files are listed through ``binaryFile`` with only their
+  ``path`` selected, so Spark packs them into tasks by its own file
+  split rule (``spark.sql.files.maxPartitionBytes``,
+  ``openCostInBytes``, default parallelism) and the JVM reads no bytes.
+- One ``mapInArrow`` kernel standardizes every file of its task
+  (:func:`geotiff.standardize_geotiff`: decode, band select, clip as a
+  row/column slice, ZSTD 128-tiled encode) and writes it through a temp
+  file + ``os.replace``. It yields the raster ids it wrote; no pixel row
+  is built and nothing is shuffled or cached.
 - The ledger append is the final action, so a crash mid-write
   re-processes (idempotent overwrite) rather than skipping unfinished
   rasters.
 
-At 100 TB: inputs parallelize per file, the clip filter prunes pixels
-before the (per-raster) repartition, and the only driver-side state is
-the pending-raster id list (manifest-sized).
+At 100 TB: inputs parallelize per file, each task holds one decoded
+raster at a time, and the only driver-side state is the pending-raster
+id list (manifest-sized).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Observation, SparkSession
-from pyspark.sql import functions as F
+import os
 
-from sids_data_pipeline_spark.sources.geotiff_datasource import register
+from pyspark.sql import SparkSession
+
 from sids_data_pipeline_spark.sources.raster import CLIP_LAT, CLIP_LON
+
+
+def _ledgered_ids(spark: SparkSession, ledger_path: str) -> set[str]:
+    """The raster ids in the ledger; empty on a first run. Only a
+    missing ledger, or one holding no data file yet (a first append
+    killed before its commit), reads as empty: a ledger that exists but
+    lacks ``raster_id`` raises rather than silently reprocessing every
+    raster."""
+    from pyspark.errors import AnalysisException
+
+    try:
+        ledger = spark.read.parquet(ledger_path)
+    except AnalysisException as ex:
+        if ex.getCondition() not in ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"):
+            raise
+        return set()
+    return {r.raster_id for r in ledger.select("raster_id").distinct().collect()}
+
+
+def _hadoop_literal(path: str) -> str:
+    """Escape Hadoop glob metacharacters so a listed file name loads as
+    itself."""
+    return "".join("\\" + c if c in "\\[]{}*?" else c for c in path)
+
+
+def _standardize_kernel(out_dir, band, lon, lat):
+    """mapInArrow kernel: ``path`` batches → the ``raster_id`` of every
+    file it wrote. A file whose pixels the extent clips away entirely is
+    neither written nor reported."""
+
+    def kernel(batches):
+        import pyarrow as pa
+
+        from sids_data_pipeline_spark.sources.geotiff import standardize_geotiff
+        from sids_data_pipeline_spark.sources.geotiff_datasource import (
+            _read_bytes,
+            _replace_with,
+        )
+
+        for batch in batches:
+            written = []
+            for path in batch.column("path").to_pylist():
+                data = standardize_geotiff(_read_bytes(path), band, lon, lat, path)
+                if data is None:
+                    continue
+                stem = os.path.splitext(os.path.basename(path))[0]
+                _replace_with(os.path.join(out_dir, f"{stem}.tif"), data)
+                written.append(stem)
+            yield pa.RecordBatch.from_pydict(
+                {"raster_id": pa.array(written, pa.string())}
+            )
+
+    return kernel
 
 
 def run_standardize_job(
@@ -49,68 +104,46 @@ def run_standardize_job(
     ledger. Returns {"processed": [...], "skipped": [...]} — ``skipped``
     is the input rasters the ledger pruned (not the whole ledger, which
     may span other input directories). ``lon``/``lat`` ARE the clip
-    extent (they can widen past the defaults, not just narrow).
+    extent (they can widen past the defaults, not just narrow); a
+    raster with no pixel centre inside it is neither written nor
+    processed, so a later run with a wider extent still picks it up.
 
     Remote estates: ``input_glob`` may be a remote URI — listing goes
     through Hadoop globStatus (driver-side) and executor decode reads
     bytes via ``pyarrow.fs`` (s3/gs/hdfs where pyarrow supports the
     scheme; see ``geotiff_datasource._read_bytes``). ``out_dir`` must be
-    LOCAL/shared-posix — the geotiff writer refuses remote save paths
-    (executor workers have no JVM gateway to the Hadoop FS for writes).
-    The ``ledger_path`` is plain Spark parquet and may live anywhere.
+    LOCAL/shared-posix and a remote one raises ``ValueError`` before any
+    work (executor workers have no JVM gateway to the Hadoop FS for
+    writes). The ``ledger_path`` is plain Spark parquet and may live
+    anywhere.
     """
-    import os
-
-    from pyspark.errors import AnalysisException
-
-    from sids_data_pipeline_spark.sources.raster import clip_extent, select_band
-
-    register(spark)
-
-    try:
-        done = spark.read.parquet(ledger_path).select("raster_id")
-    except AnalysisException:
-        # first run: the ledger doesn't exist yet (local or remote URI)
-        done = spark.createDataFrame([], "raster_id string")
-    done_ids = {r.raster_id for r in done.distinct().collect()}
-
-    # Prune BEFORE decode: raster_id is the filename stem the reader
-    # derives, so a driver-side LISTING decides pending-ness without
-    # scheduling any decode work — local paths via glob, remote URIs via
-    # Hadoop FileSystem.globStatus (metadata only; decoding the whole
-    # estate just to learn its stems would keep every re-run
-    # proportional to the ledger, not the pending set). `skipped` is the
-    # ledger ∩ THIS input's rasters (the docstring contract) — the
-    # ledger may span other input directories.
+    from sids_data_pipeline_spark.sources.geotiff_datasource import require_local_dir
     from sids_data_pipeline_spark.sources.storage import hadoop_glob
 
+    require_local_dir(out_dir)
+    done_ids = _ledgered_ids(spark, ledger_path)
+
+    # Prune BEFORE decode: raster_id is the filename stem, so a
+    # driver-side LISTING decides pending-ness without scheduling any
+    # decode work — local paths via glob, remote URIs via Hadoop
+    # FileSystem.globStatus (metadata only). `skipped` is the ledger ∩
+    # THIS input's rasters (the docstring contract) — the ledger may
+    # span other input directories.
     files = hadoop_glob(spark, input_glob)
     stems = {os.path.splitext(os.path.basename(f))[0]: f for f in files}
     skipped = sorted(s for s in stems if s in done_ids)
     pending_files = [f for s, f in stems.items() if s not in done_ids]
     if not pending_files:
         return {"processed": [], "skipped": skipped}
-    pending = (
-        spark.read.format("geotiff")
-        .option("band", str(band))
-        .option("files", ",".join(pending_files))
-        .load(input_glob)
-    )
-    std = clip_extent(select_band(pending, band), lon=lon, lat=lat)
 
-    # the ids ride on the write as an observed metric: one pass over the
-    # pixels, no cache, no separate collect job
-    written = Observation("standardize")
-    (
-        std.observe(written, F.collect_set("raster_id").alias("ids"))
-        .repartition("raster_id")
-        .write.format("geotiff")
-        .option("compress", "zstd")
-        .option("tile", "128")
-        .mode("overwrite")
-        .save(out_dir)
+    written = (
+        spark.read.format("binaryFile")
+        .load([_hadoop_literal(f) for f in pending_files])
+        .select("path")
+        .mapInArrow(_standardize_kernel(out_dir, band, lon, lat), "raster_id string")
+        .collect()
     )
-    processed = sorted(written.get["ids"])
+    processed = sorted(r.raster_id for r in written)
     if processed:
         spark.createDataFrame(
             [(r,) for r in processed], "raster_id string"

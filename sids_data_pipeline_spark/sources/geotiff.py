@@ -24,6 +24,9 @@ sample bytes. This module implements that subset in pure numpy:
   payloads never touch the driver; at 100 TB the parallelism is file
   count and the output partitions by raster_id + coarse grid
   (sources/storage.write_pixels_partitioned).
+- :func:`standardize_geotiff` — Entry-2 for one file in array form:
+  decode, band select, clip as a row/column slice, ZSTD 128-tiled
+  encode; no pixel rows (the standardize job's per-file step).
 """
 
 from __future__ import annotations
@@ -595,6 +598,30 @@ def decode_geotiff_bands(data: bytes):
     return values, (ox, oy, sx, sy), nodata
 
 
+def decode_band_grids(data: bytes, band: int | None, label: str):
+    """Decode one GeoTIFF → ([(band, values float64 [h, w]), ...],
+    (origin_x, origin_y, sx, sy)) for the 1-based ``band``, or for every
+    band when it is None, with the file's nodata cells as NaN. The one
+    decode step of the pixel-row readers (:func:`pixel_decode_fn`, the
+    registered ``geotiff`` source) and of :func:`standardize_geotiff`.
+    ``label`` (the file's path) names the file in every error."""
+    try:
+        bands3, georef, nodata = decode_geotiff_bands(data)
+    except (ValueError, NotImplementedError, struct.error) as ex:
+        ex.add_note(f"while decoding {label}")
+        raise
+    nb = bands3.shape[0]
+    if band is not None and not 1 <= band <= nb:
+        raise ValueError(f"{label}: band {band} out of range 1..{nb}")
+    grids = []
+    for b in range(1, nb + 1) if band is None else (band,):
+        vals = bands3[b - 1]
+        if nodata is not None:
+            vals = np.where(vals == nodata, np.nan, vals)
+        grids.append((b, vals))
+    return grids, georef
+
+
 def decode_geotiff(data: bytes, band: int | None = None):
     """→ (values float64 [h, w], (origin_x, origin_y, sx, sy), nodata).
 
@@ -898,6 +925,21 @@ def encode_pixels(
     NaN values (NULLs) encode as the nodata sentinel."""
     lon_u = np.sort(pd.unique(lon))
     lat_u = np.sort(pd.unique(lat))
+    w, h, sx, sy, origin_x, origin_y = centre_lattice(lon_u, lat_u)
+    grid = np.full((h, w), nodata, dtype="float64")
+    xi = np.rint((lon - lon_u[0]) / sx).astype(np.int64)
+    yi = np.rint((lat_u[-1] - lat) / sy).astype(np.int64)
+    grid[yi, xi] = np.where(np.isnan(vals), nodata, vals)
+    return encode_geotiff(
+        grid, origin_x, origin_y, sx, nodata=nodata, pixel_deg_y=sy,
+        compress=compress, tile=tile,
+    )
+
+
+def centre_lattice(lon_u: np.ndarray, lat_u: np.ndarray):
+    """Ascending distinct pixel-centre axes → (w, h, sx, sy, origin_x,
+    origin_y) of the lattice they sit on: the georef rule shared by
+    :func:`encode_pixels` and :func:`standardize_geotiff`."""
     # two-step pitch inference: the minimum spacing finds the true cell
     # count even with dropped rows/columns, then span ÷ (count − 1)
     # averages out per-center float noise that a single min-diff carries
@@ -907,15 +949,58 @@ def encode_pixels(
     h = int(round((lat_u[-1] - lat_u[0]) / sy0)) + 1 if len(lat_u) > 1 else 1
     sx = float(lon_u[-1] - lon_u[0]) / (w - 1) if w > 1 else 1.0
     sy = float(lat_u[-1] - lat_u[0]) / (h - 1) if h > 1 else 1.0
-    origin_x = float(lon_u[0]) - sx / 2.0
-    origin_y = float(lat_u[-1]) + sy / 2.0
-    grid = np.full((h, w), nodata, dtype="float64")
-    xi = np.rint((lon - lon_u[0]) / sx).astype(np.int64)
-    yi = np.rint((lat_u[-1] - lat) / sy).astype(np.int64)
-    grid[yi, xi] = np.where(np.isnan(vals), nodata, vals)
+    return w, h, sx, sy, float(lon_u[0]) - sx / 2.0, float(lat_u[-1]) + sy / 2.0
+
+
+def standardize_geotiff(
+    data: bytes,
+    band: int,
+    lon: tuple[float, float],
+    lat: tuple[float, float],
+    label: str,
+) -> bytes | None:
+    """Entry-2 for one file, in array form: decode band ``band``, clip it
+    to the extent and encode it as ZSTD, 128×128-tiled f8 with nodata
+    -9999. None when no pixel centre falls inside the extent. ``label``
+    (the file's path) names the file in decode errors.
+
+    The clip is a row/column slice: a column is kept when its centre lon
+    ``ox + (x + 0.5) * sx`` lies in ``lon`` and a row when its centre lat
+    ``oy - (y + 0.5) * sy`` lies in ``lat``, both bounds inclusive (the
+    centres and the ``between`` test of the pixel-row path,
+    :func:`sources.raster.clip_extent`). The bytes equal
+    :func:`encode_pixels` over that path's clipped rows: the kept centre
+    axes go through the same :func:`centre_lattice`, and the slice is
+    already the grid it would scatter into."""
+    nodata, compress, tile = -9999.0, "zstd", 128
+    [(_, grid)], (ox, oy, sx, sy) = decode_band_grids(data, band, label)
+    h, w = grid.shape
+    lon_c = ox + (np.arange(w) + 0.5) * sx
+    lat_c = oy - (np.arange(h) + 0.5) * sy
+    xs = np.flatnonzero((lon_c >= lon[0]) & (lon_c <= lon[1]))
+    ys = np.flatnonzero((lat_c >= lat[0]) & (lat_c <= lat[1]))
+    if not len(xs) or not len(ys):
+        return None
+    # columns run west → east and rows north → south, whatever the signs
+    # of the file's pixel scale
+    if sx < 0:
+        xs = xs[::-1]
+    if sy < 0:
+        ys = ys[::-1]
+    cells = grid[np.ix_(ys, xs)]
+    if sx == 0 or sy == 0:
+        # a zero pixel scale stacks an axis's centres on one point, so
+        # the slice is not the lattice: place the pixels as the
+        # pixel-row path does
+        yy, xx = np.meshgrid(lat_c[ys], lon_c[xs], indexing="ij")
+        return encode_pixels(
+            xx.ravel(), yy.ravel(), cells.ravel(), nodata=nodata,
+            compress=compress, tile=tile,
+        )
+    _, _, psx, psy, west, north = centre_lattice(lon_c[xs], lat_c[ys][::-1])
     return encode_geotiff(
-        grid, origin_x, origin_y, sx, nodata=nodata, pixel_deg_y=sy,
-        compress=compress, tile=tile,
+        np.where(np.isnan(cells), nodata, cells), west, north, psx,
+        nodata=nodata, pixel_deg_y=psy, compress=compress, tile=tile,
     )
 
 
@@ -956,21 +1041,13 @@ def pixel_decode_fn(band: int | None = None):
     def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             for fpath, content in zip(pdf["path"], pdf["content"]):
-                bands3, (ox, oy, sx, sy), nodata = decode_geotiff_bands(
-                    bytes(content)
+                grids, (ox, oy, sx, sy) = decode_band_grids(
+                    bytes(content), band, fpath
                 )
-                nb, h, w = bands3.shape
-                if band is not None and not 1 <= band <= nb:
-                    raise ValueError(
-                        f"{fpath}: band {band} out of range 1..{nb}"
-                    )
-                sel = range(1, nb + 1) if band is None else (band,)
+                h, w = grids[0][1].shape
                 yy, xx = np.mgrid[0:h, 0:w]
                 stem = fpath.rsplit("/", 1)[-1].rsplit(".", 1)[0]
-                for b in sel:
-                    vals = bands3[b - 1].ravel()
-                    if nodata is not None:
-                        vals = np.where(vals == nodata, np.nan, vals)
+                for b, grid in grids:
                     yield pd.DataFrame(
                         {
                             "raster_id": stem,
@@ -979,7 +1056,7 @@ def pixel_decode_fn(band: int | None = None):
                             "x": xx.ravel().astype("int32"),
                             "lon": ox + (xx.ravel() + 0.5) * sx,
                             "lat": oy - (yy.ravel() + 0.5) * sy,
-                            "val": vals,
+                            "val": grid.ravel(),
                         }
                     )
 

@@ -58,8 +58,13 @@ def _read_bytes(path: str) -> bytes:
     s3a/s3n scheme aliases map to pyarrow's s3. Unsupported schemes
     raise a clear error instead of executor-side FileNotFoundError.
     """
-    if "://" not in path or path.startswith("file://"):
-        with open(path.removeprefix("file://"), "rb") as f:
+    if path.startswith("file:"):
+        # Hadoop's qualified local form is file:/abs (binaryFile's
+        # ``path`` column); file:///abs and file://host/abs also occur
+        rest = path[len("file:"):]
+        path = rest[rest.find("/", 2):] if rest.startswith("//") else rest
+    if "://" not in path:
+        with open(path, "rb") as f:
             return f.read()
     uri = path
     scheme, rest = uri.split("://", 1)
@@ -84,8 +89,8 @@ class GeoTiffReader(DataSourceReader):
     def __init__(self, options: dict):
         self._path = options.get("path")
         # explicit pre-pruned file list (comma-joined) — lets callers
-        # that already know the pending subset (e.g. the standardize
-        # job's ledger prune) skip scheduling decode work for the rest
+        # that already know the pending subset skip scheduling decode
+        # work for the rest
         self._files = options.get("files")
         if not self._path and not self._files:
             raise ValueError("geotiff source requires a load(path) glob")
@@ -124,25 +129,17 @@ class GeoTiffReader(DataSourceReader):
         import numpy as np
         import pyarrow as pa
 
-        from sids_data_pipeline_spark.sources.geotiff import decode_geotiff_bands
+        from sids_data_pipeline_spark.sources.geotiff import decode_band_grids
 
-        bands3, (ox, oy, sx, sy), nodata = decode_geotiff_bands(
-            _read_bytes(partition.path)
+        grids, (ox, oy, sx, sy) = decode_band_grids(
+            _read_bytes(partition.path), partition.band, partition.path
         )
-        nb, h, w = bands3.shape
-        band = partition.band
-        if band is not None and not 1 <= band <= nb:
-            raise ValueError(
-                f"{partition.path}: band {band} out of range 1..{nb}"
-            )
+        h, w = grids[0][1].shape
         yy, xx = np.mgrid[0:h, 0:w]
         xs = xx.ravel()
         ys = yy.ravel()
         stem = os.path.basename(partition.path).rsplit(".", 1)[0]
-        for b in range(1, nb + 1) if band is None else (band,):
-            vals = bands3[b - 1].ravel()
-            if nodata is not None:
-                vals = np.where(vals == nodata, np.nan, vals)
+        for b, grid in grids:
             yield pa.RecordBatch.from_pydict(
                 {
                     "raster_id": np.repeat(stem, h * w),
@@ -151,7 +148,7 @@ class GeoTiffReader(DataSourceReader):
                     "x": xs.astype("int32"),
                     "lon": ox + (xs + 0.5) * sx,
                     "lat": oy - (ys + 0.5) * sy,
-                    "val": vals,
+                    "val": grid.ravel(),
                 }
             )
 
@@ -179,6 +176,21 @@ def register(spark) -> None:
 class _WrittenFiles(WriterCommitMessage):
     def __init__(self, files: tuple):
         self.files = files
+
+
+def require_local_dir(path: str) -> None:
+    """Refuse a remote output directory. GeoTIFF files are written from
+    executor Python workers, which have no JVM gateway: files written
+    with os/open there would land on executor-local disks and silently
+    vanish from a remote URI estate. Remote estates export through
+    geotiff.export_geotiff + storage.fs_write_bytes (driver-coordinated
+    Hadoop FS), like the repo's other sinks."""
+    if "://" in path:
+        raise ValueError(
+            "geotiff writer writes executor-local files; remote URIs "
+            f"({path!r}) are not supported — use "
+            "export_geotiff() + fs_write_bytes() instead"
+        )
 
 
 def _replace_with(path: str, data: bytes) -> None:
@@ -226,18 +238,7 @@ class GeoTiffWriter(DataSourceArrowWriter):
         self._path = options.get("path")
         if not self._path:
             raise ValueError("geotiff writer requires a save(path) directory")
-        if "://" in self._path:
-            # write() runs in executor Python workers, which have no JVM
-            # gateway — files written with os/open there would land on
-            # executor-local disks and silently vanish from a remote URI
-            # estate. Refuse explicitly; remote estates should export via
-            # geotiff.export_geotiff + storage.fs_write_bytes (driver-
-            # coordinated Hadoop FS), mirroring the repo's other sinks.
-            raise ValueError(
-                "geotiff writer writes executor-local files; remote URIs "
-                f"({self._path!r}) are not supported — use "
-                "export_geotiff() + fs_write_bytes() instead"
-            )
+        require_local_dir(self._path)
         self._nodata = float(options.get("nodata", -9999.0))
         self._compress = options.get("compress")
         self._tile = int(options["tile"]) if "tile" in options else None

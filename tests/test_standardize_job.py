@@ -3,9 +3,17 @@
 from __future__ import annotations
 
 import numpy as np
+import pytest
 
 from sids_data_pipeline_spark.jobs.standardize import run_standardize_job
-from sids_data_pipeline_spark.sources.geotiff import decode_geotiff, encode_geotiff
+from sids_data_pipeline_spark.sources.geotiff import (
+    decode_geotiff,
+    encode_geotiff,
+    encode_pixels,
+    standardize_geotiff,
+)
+from sids_data_pipeline_spark.sources.geotiff_datasource import register
+from sids_data_pipeline_spark.sources.raster import clip_extent, select_band
 
 
 def _write_fixture(path, stem, base=0.0):
@@ -129,3 +137,195 @@ def test_standardize_fully_clipped_raster_not_processed(spark, tmp_path):
     )
     assert res2 == {"processed": [], "skipped": ["inside"]}
     assert not (out / "far.tif").exists()
+
+
+# --- array form: parity with the pixel-row path -----------------------------
+
+def _grid(h, w, base=0.0):
+    return np.arange(h * w, dtype="float64").reshape(h, w) + base
+
+
+def _nodata_grid():
+    vals = _grid(6, 7)
+    vals[1, 2] = vals[4, 0] = -1.0
+    vals[2, 5] = np.nan
+    return vals
+
+
+# name -> (values, (origin_x, origin_y, pixel_deg), encode kwargs, band,
+#          lon, lat, empty)
+_PARITY = {
+    # every clip bound sits exactly on a pixel centre (all binary
+    # fractions, so the centres are exact): inclusive on all four edges
+    "centres_on_every_edge": (
+        _grid(8, 8), (0.0, 1.0, 0.125), {}, 1,
+        (0.1875, 0.6875), (0.3125, 0.8125), False,
+    ),
+    "file_nodata_and_nan": (
+        _nodata_grid(), (0.0, 0.6, 0.1), {"nodata": -1.0}, 1,
+        (0.0, 0.55), (0.0, 0.6), False,
+    ),
+    "one_row": (_grid(1, 9), (0.0, 0.1, 0.1), {}, 1, (0.1, 0.7), (0.0, 1.0), False),
+    "one_column": (
+        _grid(9, 1), (0.3, 0.9, 0.1), {}, 1, (0.0, 1.0), (0.15, 0.75), False,
+    ),
+    "band2_of_3": (
+        np.stack([_grid(5, 6, 100.0 * b) for b in (1, 2, 3)]),
+        (0.0, 0.5, 0.1), {"compress": "deflate", "planar": True}, 2,
+        (0.1, 0.45), (0.0, 0.35), False,
+    ),
+    "partly_outside": (
+        _grid(10, 12), (-0.35, 0.65, 0.1), {"compress": "deflate", "tile": 4}, 1,
+        (0.0, 0.5), (0.0, 0.45), False,
+    ),
+    # columns of a zero lon scale share one centre: the pixel-row path
+    # scatters them into one column, last pixel winning
+    "zero_lon_scale": (
+        _grid(4, 5), (0.2, 0.4, 0.0), {"pixel_deg_y": 0.1}, 1,
+        (0.0, 0.5), (0.0, 0.3), False,
+    ),
+    "wholly_outside": (
+        _grid(8, 8), (50.0, 0.8, 0.1), {}, 1, (0.0, 0.45), (0.0, 0.8), True,
+    ),
+}
+
+
+@pytest.mark.parametrize("case", sorted(_PARITY))
+def test_array_standardize_bytes_equal_pixel_row_encode(spark, tmp_path, case):
+    """standardize_geotiff gives the bytes encode_pixels gives over the
+    clip_extent(select_band(...)) pixel rows of the same file, and None
+    where those rows are empty."""
+    values, (ox, oy, px), kw, band, lon, lat, empty = _PARITY[case]
+    path = tmp_path / f"{case}.tif"
+    path.write_bytes(encode_geotiff(values, ox, oy, px, **kw))
+    register(spark)
+    rows = clip_extent(
+        select_band(spark.read.format("geotiff").load(str(path)), band),
+        lon=lon, lat=lat,
+    ).toPandas()
+    got = standardize_geotiff(path.read_bytes(), band, lon, lat, str(path))
+    assert rows.empty == empty
+    if empty:
+        assert got is None
+        return
+    want = encode_pixels(
+        rows["lon"].to_numpy(), rows["lat"].to_numpy(),
+        rows["val"].to_numpy(dtype="float64"), compress="zstd", tile=128,
+    )
+    assert got == want
+
+
+def test_standardize_packs_several_files_per_task(spark, tmp_path):
+    """An estate with more files than defaultParallelism: Spark's file
+    split rule packs several files into one task, and every file is
+    still written and reported."""
+    src = tmp_path / "in"
+    src.mkdir()
+    stems = [f"r{i:02d}" for i in range(3 * spark.sparkContext.defaultParallelism + 1)]
+    for i, stem in enumerate(stems):
+        _write_fixture(src, stem, 100.0 * i)
+    files = sorted(str(p) for p in src.iterdir())
+    assert spark.read.format("binaryFile").load(files).rdd.getNumPartitions() < len(files)
+    out = tmp_path / "out"
+    ledger = str(tmp_path / "ledger")
+
+    res = run_standardize_job(
+        spark, str(src / "*.tif"), str(out), ledger,
+        lon=(0.0, 0.45), lat=(0.0, 0.8),
+    )
+    assert res == {"processed": stems, "skipped": []}
+    for i, stem in enumerate(stems):
+        vals, _, _ = decode_geotiff((out / f"{stem}.tif").read_bytes())
+        assert np.array_equal(vals, _grid(8, 8, 100.0 * i)[:, :5]), stem
+    assert sorted(r.raster_id for r in spark.read.parquet(ledger).collect()) == stems
+
+
+def test_standardize_file_names_with_glob_metacharacters(spark, tmp_path):
+    """Listed files load as themselves, even when their names hold Hadoop
+    glob metacharacters or spaces."""
+    src = tmp_path / "in"
+    src.mkdir()
+    stems = ["a b", "r[1]", "x{y}"]
+    for stem in stems:
+        _write_fixture(src, stem)
+    out = tmp_path / "out"
+    res = run_standardize_job(
+        spark, str(src / "*.tif"), str(out), str(tmp_path / "ledger"),
+        lon=(0.0, 0.45), lat=(0.0, 0.8),
+    )
+    assert res == {"processed": stems, "skipped": []}
+    assert sorted(p.name for p in out.iterdir()) == [f"{s}.tif" for s in stems]
+
+
+# --- contracts ---------------------------------------------------------------
+
+def test_standardize_ledger_without_raster_id_raises(spark, tmp_path):
+    """A ledger that exists but has no raster_id column is an error, not
+    an empty ledger that would reprocess every raster."""
+    from pyspark.errors import AnalysisException
+
+    src = tmp_path / "in"
+    src.mkdir()
+    _write_fixture(src, "r1")
+    ledger = str(tmp_path / "ledger")
+    spark.createDataFrame([("r1",)], "id string").write.parquet(ledger)
+    with pytest.raises(AnalysisException):
+        run_standardize_job(spark, str(src / "*.tif"), str(tmp_path / "out"), ledger)
+    assert not (tmp_path / "out").exists()
+
+
+def test_standardize_ledger_without_data_file_reads_as_empty(spark, tmp_path):
+    """A first ledger append killed before its commit leaves only Spark's
+    ``_temporary`` directory; the rerun processes every raster."""
+    src = tmp_path / "in"
+    src.mkdir()
+    _write_fixture(src, "r1")
+    ledger = tmp_path / "ledger"
+    (ledger / "_temporary" / "0").mkdir(parents=True)
+    res = run_standardize_job(
+        spark, str(src / "*.tif"), str(tmp_path / "out"), str(ledger)
+    )
+    assert res == {"processed": ["r1"], "skipped": []}
+
+
+def test_standardize_refuses_remote_out_dir_before_decode(spark, tmp_path):
+    """A remote out_dir raises ValueError before any file is decoded (the
+    undecodable input would otherwise fail the job differently), and
+    nothing is written or ledgered."""
+    src = tmp_path / "in"
+    src.mkdir()
+    _write_fixture(src, "r1")
+    (src / "junk.tif").write_bytes(b"not a tiff")
+    with pytest.raises(ValueError, match="remote URIs"):
+        run_standardize_job(
+            spark, str(src / "*.tif"), "s3a://bucket/std", str(tmp_path / "ledger")
+        )
+    assert sorted(p.name for p in tmp_path.iterdir()) == ["in"]
+
+
+def test_standardize_truncated_tiff_fails_naming_the_file(spark, tmp_path):
+    """A truncated input fails the job with an error naming the file,
+    and leaves no output or temp file for it and no ledger rows."""
+    src = tmp_path / "in"
+    src.mkdir()
+    _write_fixture(src, "good")
+    data = encode_geotiff(_grid(8, 8), 0.0, 0.8, 0.1, compress="deflate")
+    (src / "cut.tif").write_bytes(data[: len(data) // 2])
+    out = tmp_path / "out"
+    ledger = tmp_path / "ledger"
+    with pytest.raises(Exception, match="cut.tif"):
+        run_standardize_job(spark, str(src / "*.tif"), str(out), str(ledger))
+    assert not list(out.glob("*cut.tif*"))
+    assert not ledger.exists()
+
+
+def test_read_bytes_accepts_hadoop_file_uris(tmp_path):
+    """Spark's qualified ``file:/abs`` path form (binaryFile's ``path``
+    column), ``file:///abs`` and ``file://host/abs`` read the local
+    file."""
+    from sids_data_pipeline_spark.sources.geotiff_datasource import _read_bytes
+
+    p = tmp_path / "a b.tif"
+    p.write_bytes(b"payload")
+    for form in (str(p), f"file:{p}", f"file://{p}", f"file://localhost{p}"):
+        assert _read_bytes(form) == b"payload", form

@@ -24,6 +24,8 @@ echo "$staged" | grep -q "operators/windows.py" \
     && q="$q events_session"
 echo "$staged" | grep -q "operators/multimodal.py" \
     && q="$q multimodal_features"
+echo "$staged" | grep -q "sources/geotiff.py\|sources/geotiff_datasource.py\|jobs/standardize.py" \
+    && q="$q raster_geotiff_ingest source_geotiff_datasource"
 echo "$staged" | grep -q "plans/relational.py" \
     && q="$q pricing_summary sql_shipping_priority window_rank"
 
