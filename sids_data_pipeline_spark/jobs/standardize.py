@@ -10,10 +10,9 @@ from decode to write:
 
 - Pruning is a driver-side listing: the input files whose stems are in
   the Parquet ledger are dropped BEFORE any decode work is scheduled.
-- The pending files are listed through ``binaryFile`` with only their
-  ``path`` selected, so Spark packs them into tasks by its own file
-  split rule (``spark.sql.files.maxPartitionBytes``,
-  ``openCostInBytes``, default parallelism) and the JVM reads no bytes.
+- The driver's pending path list is split into
+  ``min(len(pending), defaultParallelism)`` contiguous slices, one task
+  each; the JVM reads no bytes and every listed file reaches a task.
 - One ``mapInArrow`` kernel standardizes every file of its task
   (:func:`geotiff.standardize_geotiff`: decode, band select, clip as a
   row/column slice, ZSTD 128-tiled encode) and writes it through a temp
@@ -52,12 +51,6 @@ def _ledgered_ids(spark: SparkSession, ledger_path: str) -> set[str]:
             raise
         return set()
     return {r.raster_id for r in ledger.select("raster_id").distinct().collect()}
-
-
-def _hadoop_literal(path: str) -> str:
-    """Escape Hadoop glob metacharacters so a listed file name loads as
-    itself."""
-    return "".join("\\" + c if c in "\\[]{}*?" else c for c in path)
 
 
 def _standardize_kernel(out_dir, band, lon, lat):
@@ -136,10 +129,12 @@ def run_standardize_job(
     if not pending_files:
         return {"processed": [], "skipped": skipped}
 
+    sc = spark.sparkContext
+    paths = sc.parallelize(
+        [(f,) for f in pending_files], min(len(pending_files), sc.defaultParallelism)
+    )
     written = (
-        spark.read.format("binaryFile")
-        .load([_hadoop_literal(f) for f in pending_files])
-        .select("path")
+        spark.createDataFrame(paths, "path string")
         .mapInArrow(_standardize_kernel(out_dir, band, lon, lat), "raster_id string")
         .collect()
     )

@@ -962,7 +962,8 @@ def standardize_geotiff(
     """Entry-2 for one file, in array form: decode band ``band``, clip it
     to the extent and encode it as ZSTD, 128×128-tiled f8 with nodata
     -9999. None when no pixel centre falls inside the extent. ``label``
-    (the file's path) names the file in decode errors.
+    (the file's path) names the file in every error; a zero pixel scale
+    is refused as malformed.
 
     The clip is a row/column slice: a column is kept when its centre lon
     ``ox + (x + 0.5) * sx`` lies in ``lon`` and a row when its centre lat
@@ -974,6 +975,8 @@ def standardize_geotiff(
     already the grid it would scatter into."""
     nodata, compress, tile = -9999.0, "zstd", 128
     [(_, grid)], (ox, oy, sx, sy) = decode_band_grids(data, band, label)
+    if sx == 0 or sy == 0:
+        raise ValueError(f"{label}: malformed TIFF: zero ModelPixelScale")
     h, w = grid.shape
     lon_c = ox + (np.arange(w) + 0.5) * sx
     lat_c = oy - (np.arange(h) + 0.5) * sy
@@ -988,15 +991,6 @@ def standardize_geotiff(
     if sy < 0:
         ys = ys[::-1]
     cells = grid[np.ix_(ys, xs)]
-    if sx == 0 or sy == 0:
-        # a zero pixel scale stacks an axis's centres on one point, so
-        # the slice is not the lattice: place the pixels as the
-        # pixel-row path does
-        yy, xx = np.meshgrid(lat_c[ys], lon_c[xs], indexing="ij")
-        return encode_pixels(
-            xx.ravel(), yy.ravel(), cells.ravel(), nodata=nodata,
-            compress=compress, tile=tile,
-        )
     _, _, psx, psy, west, north = centre_lattice(lon_c[xs], lat_c[ys][::-1])
     return encode_geotiff(
         np.where(np.isnan(cells), nodata, cells), west, north, psx,

@@ -59,10 +59,9 @@ def _read_bytes(path: str) -> bytes:
     raise a clear error instead of executor-side FileNotFoundError.
     """
     if path.startswith("file:"):
-        # Hadoop's qualified local form is file:/abs (binaryFile's
-        # ``path`` column); file:///abs and file://host/abs also occur
-        rest = path[len("file:"):]
-        path = rest[rest.find("/", 2):] if rest.startswith("//") else rest
+        # Hadoop's qualified local form is file:/abs (what globStatus
+        # returns for a file: pattern); file:///abs also occurs
+        path = "/" + path[len("file:"):].lstrip("/")
     if "://" not in path:
         with open(path, "rb") as f:
             return f.read()

@@ -178,12 +178,6 @@ _PARITY = {
         _grid(10, 12), (-0.35, 0.65, 0.1), {"compress": "deflate", "tile": 4}, 1,
         (0.0, 0.5), (0.0, 0.45), False,
     ),
-    # columns of a zero lon scale share one centre: the pixel-row path
-    # scatters them into one column, last pixel winning
-    "zero_lon_scale": (
-        _grid(4, 5), (0.2, 0.4, 0.0), {"pixel_deg_y": 0.1}, 1,
-        (0.0, 0.5), (0.0, 0.3), False,
-    ),
     "wholly_outside": (
         _grid(8, 8), (50.0, 0.8, 0.1), {}, 1, (0.0, 0.45), (0.0, 0.8), True,
     ),
@@ -215,24 +209,42 @@ def test_array_standardize_bytes_equal_pixel_row_encode(spark, tmp_path, case):
     assert got == want
 
 
+def test_array_standardize_refuses_zero_pixel_scale(tmp_path):
+    """A zero ModelPixelScale stacks an axis's pixel centres on one point;
+    the array path refuses the file as malformed, naming it."""
+    data = encode_geotiff(_grid(4, 5), 0.2, 0.4, 0.0, pixel_deg_y=0.1)
+    with pytest.raises(ValueError, match="flat.tif: .*zero ModelPixelScale"):
+        standardize_geotiff(data, 1, (0.0, 0.5), (0.0, 0.3), "/in/flat.tif")
+
+
 def test_standardize_packs_several_files_per_task(spark, tmp_path):
-    """An estate with more files than defaultParallelism: Spark's file
-    split rule packs several files into one task, and every file is
-    still written and reported."""
+    """An estate with more files than defaultParallelism: no stage runs
+    more than defaultParallelism tasks, so tasks hold several files, and
+    every file is still written and reported."""
+    sc = spark.sparkContext
     src = tmp_path / "in"
     src.mkdir()
-    stems = [f"r{i:02d}" for i in range(3 * spark.sparkContext.defaultParallelism + 1)]
+    stems = [f"r{i:02d}" for i in range(3 * sc.defaultParallelism + 1)]
     for i, stem in enumerate(stems):
         _write_fixture(src, stem, 100.0 * i)
-    files = sorted(str(p) for p in src.iterdir())
-    assert spark.read.format("binaryFile").load(files).rdd.getNumPartitions() < len(files)
     out = tmp_path / "out"
     ledger = str(tmp_path / "ledger")
 
-    res = run_standardize_job(
-        spark, str(src / "*.tif"), str(out), ledger,
-        lon=(0.0, 0.45), lat=(0.0, 0.8),
-    )
+    sc.setJobGroup("standardize-packing", "standardize-packing")
+    try:
+        res = run_standardize_job(
+            spark, str(src / "*.tif"), str(out), ledger,
+            lon=(0.0, 0.45), lat=(0.0, 0.8),
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    tracker = sc.statusTracker()
+    tasks = [
+        tracker.getStageInfo(stage).numTasks
+        for job in tracker.getJobIdsForGroup("standardize-packing")
+        for stage in tracker.getJobInfo(job).stageIds
+    ]
+    assert tasks and max(tasks) <= sc.defaultParallelism < len(stems)
     assert res == {"processed": stems, "skipped": []}
     for i, stem in enumerate(stems):
         vals, _, _ = decode_geotiff((out / f"{stem}.tif").read_bytes())
@@ -241,11 +253,12 @@ def test_standardize_packs_several_files_per_task(spark, tmp_path):
 
 
 def test_standardize_file_names_with_glob_metacharacters(spark, tmp_path):
-    """Listed files load as themselves, even when their names hold Hadoop
-    glob metacharacters or spaces."""
+    """Every listed file is standardized under its own name, even when
+    the name holds Hadoop glob metacharacters or spaces, or starts with
+    ``_`` (which Spark's file sources treat as hidden)."""
     src = tmp_path / "in"
     src.mkdir()
-    stems = ["a b", "r[1]", "x{y}"]
+    stems = ["_r1", "a b", "r[1]", "x{y}"]
     for stem in stems:
         _write_fixture(src, stem)
     out = tmp_path / "out"
@@ -320,12 +333,26 @@ def test_standardize_truncated_tiff_fails_naming_the_file(spark, tmp_path):
 
 
 def test_read_bytes_accepts_hadoop_file_uris(tmp_path):
-    """Spark's qualified ``file:/abs`` path form (binaryFile's ``path``
-    column), ``file:///abs`` and ``file://host/abs`` read the local
-    file."""
+    """Spark's qualified ``file:/abs`` path form and ``file:///abs`` read
+    the local file."""
     from sids_data_pipeline_spark.sources.geotiff_datasource import _read_bytes
 
     p = tmp_path / "a b.tif"
     p.write_bytes(b"payload")
-    for form in (str(p), f"file:{p}", f"file://{p}", f"file://localhost{p}"):
+    for form in (str(p), f"file:{p}", f"file://{p}"):
         assert _read_bytes(form) == b"payload", form
+
+
+def test_standardize_file_uri_input_glob(spark, tmp_path):
+    """A ``file://`` input glob lists through Hadoop globStatus, whose
+    ``file:/abs`` paths the kernel reads."""
+    src = tmp_path / "in"
+    src.mkdir()
+    _write_fixture(src, "r1")
+    out = tmp_path / "out"
+    res = run_standardize_job(
+        spark, f"file://{src}/*.tif", str(out), str(tmp_path / "ledger"),
+        lon=(0.0, 0.45), lat=(0.0, 0.8),
+    )
+    assert res == {"processed": ["r1"], "skipped": []}
+    assert (out / "r1.tif").exists()
