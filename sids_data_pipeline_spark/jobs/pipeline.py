@@ -147,7 +147,6 @@ def run_pipeline(
     raster_ids: list[str],
     out_dir: str,
     stats: tuple[str, ...] = ("mean",),
-    how: str = "broadcast",
     max_zoom: int = 6,
     max_features_per_tile: int = 64,
     zones_df: DataFrame | None = None,
@@ -247,7 +246,7 @@ def run_pipeline(
         pixels = standardize_pixels(
             _union([synthetic_raster(spark, r) for r in pend_r])
         )
-    all_stats = zonal_stats(zones, pixels, stats=stats, how=how)
+    all_stats = zonal_stats(zones, pixels, stats=stats)
     # P8 gate: only pending pairs get written (a completed pair's stats
     # may coexist in the frame when its raster is shared with a pending one)
     gated = all_stats.withColumnsRenamed(

@@ -33,24 +33,14 @@ import os
 
 from pyspark.sql import SparkSession
 
+from sids_data_pipeline_spark.operators import manifest
 from sids_data_pipeline_spark.sources.raster import CLIP_LAT, CLIP_LON
 
 
 def _ledgered_ids(spark: SparkSession, ledger_path: str) -> set[str]:
-    """The raster ids in the ledger; empty on a first run. Only a
-    missing ledger, or one holding no data file yet (a first append
-    killed before its commit), reads as empty: a ledger that exists but
-    lacks ``raster_id`` raises rather than silently reprocessing every
-    raster."""
-    from pyspark.errors import AnalysisException
-
-    try:
-        ledger = spark.read.parquet(ledger_path)
-    except AnalysisException as ex:
-        if ex.getCondition() not in ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"):
-            raise
-        return set()
-    return {r.raster_id for r in ledger.select("raster_id").distinct().collect()}
+    """The raster ids in the ledger (manifest.read_ledger's read rule)."""
+    ledger = manifest.read_ledger(spark, ledger_path, ("raster_id",))
+    return {r.raster_id for r in ledger.collect()}
 
 
 def _standardize_kernel(out_dir, band, lon, lat):

@@ -378,11 +378,11 @@ def near_duplicates_minhash(
     if max_bucket is not None and sig.limit(max_bucket + 1).count() <= max_bucket:
         # A band bucket can never hold more docs than exist, so with
         # ≤ max_bucket docs the cap is a no-op BY CONSTRUCTION — skip the
-        # bucket-size aggregate + broadcast anti-join (r8 A/B,
-        # tools/ab_dedup.py: always-on cap cost +73% steady-state at
-        # sf0.1). The probe is a bounded limit+count that doubles as the
-        # cache materialization of the persisted signature, so it adds no
-        # extra pass; at corpus scale (n_docs ≫ max_bucket) it stops at
+        # bucket-size aggregate + broadcast anti-join (r8 A/B, README
+        # "Round 8": always-on cap cost +73% steady-state at sf0.1). The
+        # probe is a bounded limit+count that doubles as the cache
+        # materialization of the persisted signature, so it adds no extra
+        # pass; at corpus scale (n_docs ≫ max_bucket) it stops at
         # max_bucket+1 rows and the real cap path runs.
         max_bucket = None
     cand = lsh_candidate_pairs(sig.drop("_toks"), num_hashes, bands, max_bucket)

@@ -61,23 +61,27 @@ def record_done(
     completed.select(*PAIR_COLS).write.mode("append").parquet(ledger_path)
 
 
-def read_ledger(spark: SparkSession, ledger_path: str) -> DataFrame:
-    """S7: the completion ledger as a DataFrame (empty if none yet).
+def read_ledger(
+    spark: SparkSession, ledger_path: str, cols: tuple[str, ...] = PAIR_COLS
+) -> DataFrame:
+    """S7: the ``cols`` of the completion ledger as a DataFrame.
 
-    Only a PATH_NOT_FOUND-style AnalysisException means "no ledger yet";
-    any other failure (corrupt footer, permissions, schema drift) must
-    surface — an empty fallback there would silently disable
-    incrementality and re-run ALL completed work. No os.path fast path:
-    scheme-less paths resolve against Hadoop defaultFS, not the driver's
-    local disk.
+    Only a missing ledger, or one holding no data file yet (a first
+    append killed before its commit), reads as empty; that empty frame
+    is a local relation, so collecting it runs no Spark job. Any other
+    failure (corrupt footer, permissions) surfaces, and a ledger that
+    exists but lacks one of ``cols`` is schema drift and raises — an
+    empty fallback there would silently disable incrementality and re-run
+    ALL completed work. No os.path fast path: scheme-less paths resolve
+    against Hadoop defaultFS, not the driver's local disk.
     """
     from pyspark.errors import AnalysisException
 
-    empty = "v_id string, r_id string"
     try:
         ledger = spark.read.parquet(ledger_path)
-    except AnalysisException:  # path does not exist yet
-        return spark.createDataFrame([], empty)
-    # outside the except: a ledger that EXISTS but lacks the pair
-    # columns is schema drift and must raise, not read as empty
-    return ledger.select(*PAIR_COLS)
+    except AnalysisException as ex:
+        if ex.getCondition() not in ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"):
+            raise
+        nulls = ", ".join(f"CAST(NULL AS STRING) AS `{c}`" for c in cols)
+        return spark.sql(f"SELECT {nulls} WHERE FALSE")
+    return ledger.select(*cols)

@@ -11,21 +11,22 @@ as a Spark plan: spatial filter-and-refine join → groupBy aggregation →
 left join back to zones (NULL mean for zones with no pixels — LEFT-join
 semantics of stats.py:11) → orderBy (stats.py:17).
 
-Two join strategies, equal by construction (property-tested):
+One spatial join, whose branch follows from the zone count (both
+property-tested equal):
 
-- ``how="broadcast"`` — zones are dimension-sized (admin boundaries; the
-  reference broadcasts them implicitly by importing vectors once and
-  streaming rasters past them, ``pipeline/processing/__main__.py:13-23``).
-  The exploded zone-cell table broadcasts and pixels probe it with a
-  BroadcastHashJoin on the cell key (hash probe, not a nested loop over
-  zones), then an Arrow-batched numpy point-in-polygon kernel refines. No
-  shuffle of the pixel table at all until the (tiny) per-fid aggregate.
+- up to ``BROADCAST_ZONE_LIMIT`` zones — dimension-sized (admin
+  boundaries; the reference broadcasts them implicitly by importing
+  vectors once and streaming rasters past them,
+  ``pipeline/processing/__main__.py:13-23``). The exploded zone-cell table
+  broadcasts and pixels probe it with a BroadcastHashJoin on the cell key
+  (hash probe, not a nested loop over zones), then an Arrow-batched numpy
+  point-in-polygon kernel refines. No shuffle of the pixel table at all
+  until the (tiny) per-fid aggregate.
 
-- ``how="grid"`` — the 100 TB path when zones are also large. Each pixel
-  gets a coarse grid-cell key; each zone explodes to the cells its bbox
-  covers; the join is a plain equi-join on the cell key, which Catalyst
-  executes as a shuffled hash join with AQE skew splitting — the Spark
-  analogue of the reference's GIST index probe
+- above it — the 100 TB path where zones are also large. Each zone
+  explodes to the cells its bbox covers on the executors, and the join on
+  the cell key runs as a shuffled hash join with AQE skew splitting — the
+  Spark analogue of the reference's GIST index probe
   (``pipeline/processing/inputs.py:16``). Aggregation is two-level
   (partial per cell, final per fid) and pixels shuffle once.
 
@@ -54,8 +55,8 @@ from sids_data_pipeline_spark.functions import geo
 
 _LOG = logging.getLogger(__name__)
 
-# Max zone rows the broadcast strategy will collect to the driver before
-# auto-falling-back to the distributed grid strategy. 10⁵ admin-boundary
+# Max zone rows spatial_join collects to the driver for its broadcast
+# branch; above it the join runs distributed. 10⁵ admin-boundary
 # geometries ≈ low hundreds of MB — safely inside driver memory; anything
 # bigger is not a dimension table.
 BROADCAST_ZONE_LIMIT = 100_000
@@ -119,264 +120,6 @@ def _zone_bboxes(zones: DataFrame) -> DataFrame:
     )
 
 
-def _broadcast_spatial_join(
-    zones: DataFrame, pixels: DataFrame, cell_deg: float
-) -> DataFrame | None:
-    """Broadcast strategy with a driver-built zone index; returns None
-    when zones exceed BROADCAST_ZONE_LIMIT (caller falls back to grid).
-
-    ``broadcast`` already implies the zones fit in memory (the reference
-    makes the same assumption by importing vectors once up front), so the
-    operator collects the dimension table ONCE, computes bboxes + cell
-    keys driver-side with the numpy kernel, and broadcasts (a) the
-    exploded cell table for the hash join and (b) a (vector_id, fid) →
-    WKB map for refinement. Pixels then carry only two small key columns
-    into the join — no per-row WKB bytes cross the Arrow boundary, and
-    each Python worker parses each geometry once (cached).
-    """
-    # Bounded collect: the limit caps driver memory AND doubles as the
-    # oversize probe — no separate count job. None = over the cap, and
-    # spatial_join falls back to the distributed grid strategy.
-    rows = (
-        zones.select("vector_id", "fid", "geometry")
-        .limit(BROADCAST_ZONE_LIMIT + 1)
-        .collect()
-    )
-    if len(rows) > BROADCAST_ZONE_LIMIT:
-        return None
-    cell = float(cell_deg)
-    cell_rows = []
-    geo_map = {}
-    all_rect = True
-    for r in rows:
-        wkb = bytes(r.geometry)
-        geo_map[(r.vector_id, r.fid)] = wkb
-        polys = geo.parse_wkb(wkb)  # parse once: bbox + rect flag
-        all_rect = all_rect and geo.polys_rect(polys) is not None
-        xmin, ymin, xmax, ymax = geo.polys_bbox(polys)
-        for cx in range(int(np.floor(xmin / cell)), int(np.floor(xmax / cell)) + 1):
-            for cy in range(int(np.floor(ymin / cell)), int(np.floor(ymax / cell)) + 1):
-                cell_rows.append((r.vector_id, r.fid, cx, cy, xmin, ymin, xmax, ymax))
-    spark = zones.sparkSession
-    zc = spark.createDataFrame(
-        pd.DataFrame(
-            cell_rows,
-            columns=["vector_id", "fid", "_cx", "_cy", "xmin", "ymin", "xmax", "ymax"],
-        ),
-        "vector_id string, fid long, _cx long, _cy long, "
-        "xmin double, ymin double, xmax double, ymax double",
-    ).coalesce(1)
-
-    px = pixels.withColumn(
-        "_cx", F.floor(F.col("lon") / cell).cast("long")
-    ).withColumn("_cy", F.floor(F.col("lat") / cell).cast("long"))
-
-    if all_rect:
-        # Rectangle fast path: for an axis-aligned box the ray-casting
-        # kernel reduces exactly to a half-open bbox test (geo.wkb_rect),
-        # so the whole join stays in whole-stage codegen — no Arrow
-        # transfer, no Python workers, identical results.
-        joined = px.join(F.broadcast(zc), ["_cx", "_cy"], "inner").filter(
-            (F.col("lon") >= F.col("xmin"))
-            & (F.col("lon") < F.col("xmax"))
-            & (F.col("lat") >= F.col("ymin"))
-            & (F.col("lat") < F.col("ymax"))
-        )
-        return joined.drop("xmin", "ymin", "xmax", "ymax", "_cx", "_cy")
-
-    geo_bc = spark.sparkContext.broadcast(geo_map)
-
-    @F.pandas_udf(BooleanType())
-    def contains_bc(vid: pd.Series, fid: pd.Series, lon: pd.Series, lat: pd.Series) -> pd.Series:
-        cache: dict = {}
-        out = np.zeros(len(vid), dtype=bool)
-        lon_v = lon.to_numpy(dtype=np.float64)
-        lat_v = lat.to_numpy(dtype=np.float64)
-        keys = pd.Series(list(zip(vid, fid)))
-        codes, uniques = pd.factorize(keys)
-        for gi, key in enumerate(uniques):
-            polys = cache.get(key)
-            if polys is None:
-                polys = cache[key] = geo.parse_wkb(geo_bc.value[key])
-            mask = codes == gi
-            out[mask] = geo.points_in_polygons(polys, lon_v[mask], lat_v[mask])
-        return pd.Series(out)
-
-    joined = px.join(F.broadcast(zc), ["_cx", "_cy"], "inner").filter(
-        F.col("lon").between(F.col("xmin"), F.col("xmax"))
-        & F.col("lat").between(F.col("ymin"), F.col("ymax"))
-    )
-    refined = joined.filter(contains_bc("vector_id", "fid", "lon", "lat"))
-    return refined.drop("xmin", "ymin", "xmax", "ymax", "_cx", "_cy")
-
-
-def spatial_join(
-    zones: DataFrame,
-    pixels: DataFrame,
-    how: str = "broadcast",
-    cell_deg: float = 0.5,
-) -> DataFrame:
-    """Inner spatial join: pixel rows × zone keys where the pixel center
-    falls inside the zone geometry (J1 filter-and-refine). Returns the
-    pixel columns plus (vector_id, fid).
-
-    Both strategies are grid-cell EQUI-joins (hash-joinable — never a
-    nested-loop over zones): pixels get a cell key from their coordinates,
-    zones explode to the cells their bbox covers, and a bbox filter plus
-    the exact containment UDF refine the candidates. The strategies differ
-    only in where the join runs: ``broadcast`` ships the (small) exploded
-    zone-cell table to every pixel partition — zero pixel shuffle, a
-    BroadcastHashJoin probe per pixel; ``grid`` shuffles both sides on the
-    cell key for the case where zones are also large, and AQE splits
-    skewed cells (coastline-dense zones).
-    """
-    if how == "broadcast":
-        # Driver-OOM guard: ``broadcast`` collects zone geometries to the
-        # driver, which is only safe for dimension-sized zone tables. The
-        # collect inside is bounded at BROADCAST_ZONE_LIMIT+1 rows (the
-        # limit doubles as the probe — no separate count job); above the
-        # cap it returns None and we fall back to the grid strategy,
-        # which computes the same result with zones distributed.
-        joined = _broadcast_spatial_join(zones, pixels, float(cell_deg))
-        if joined is not None:
-            return joined
-        _LOG.warning(
-            "spatial_join(how='broadcast'): zone table exceeds %d rows; "
-            "falling back to how='grid' (identical semantics, distributed "
-            "zones)",
-            BROADCAST_ZONE_LIMIT,
-        )
-        how = "grid"
-    if how != "grid":
-        raise ValueError(f"how must be 'broadcast' or 'grid', got {how!r}")
-    cell = float(cell_deg)
-    px = pixels.withColumn(
-        "_cx", F.floor(F.col("lon") / cell).cast("long")
-    ).withColumn("_cy", F.floor(F.col("lat") / cell).cast("long"))
-    # Explode each zone to the grid cells its bbox covers. Zone count ×
-    # covered cells stays small relative to pixels.
-    zc = _zone_bboxes(zones).withColumn(
-        "_cx",
-        F.explode(
-            F.sequence(
-                F.floor(F.col("xmin") / cell).cast("long"),
-                F.floor(F.col("xmax") / cell).cast("long"),
-            )
-        ),
-    ).withColumn(
-        "_cy",
-        F.explode(
-            F.sequence(
-                F.floor(F.col("ymin") / cell).cast("long"),
-                F.floor(F.col("ymax") / cell).cast("long"),
-            )
-        ),
-    )
-    joined = px.join(zc, ["_cx", "_cy"], "inner")
-    drop_cols = (
-        "xmin", "ymin", "xmax", "ymax", "_cx", "_cy", "_is_rect",
-        "name", "geometry",
-    )
-    # Rectangle zones refine with the exact half-open bbox predicate
-    # (geo.wkb_rect — bit-identical to the ray-casting kernel), entirely
-    # inside whole-stage codegen; only non-rectangle candidates pay the
-    # Arrow transfer of (geometry, lon, lat) into the Python kernel. The
-    # two branches share the same shuffle exchanges (ReusedExchange), so
-    # pixels still shuffle once.
-    rect = joined.filter(
-        F.col("_is_rect")
-        & (F.col("lon") >= F.col("xmin"))
-        & (F.col("lon") < F.col("xmax"))
-        & (F.col("lat") >= F.col("ymin"))
-        & (F.col("lat") < F.col("ymax"))
-    ).drop(*drop_cols)
-    poly = (
-        joined.filter(
-            (~F.col("_is_rect"))
-            & F.col("lon").between(F.col("xmin"), F.col("xmax"))
-            & F.col("lat").between(F.col("ymin"), F.col("ymax"))
-        )
-        .filter(_contains_udf("geometry", "lon", "lat"))
-        .drop(*drop_cols)
-    )
-    # Drop the zone payload (name + the heavy WKB blob) so downstream
-    # plans don't carry geometry bytes through shuffles.
-    return rect.unionByName(poly)
-
-
-def zonal_stats(
-    zones: DataFrame,
-    pixels: DataFrame,
-    stats: Sequence[str] = ("mean",),
-    how: str = "broadcast",
-    cell_deg: float = 0.5,
-    keep_attrs: Iterable[str] = (),
-) -> DataFrame:
-    """Zonal statistics per (vector_id, raster_id, fid).
-
-    Natural superset of the reference (which computes only AVG,
-    stats.py:14): any subset of SUPPORTED_STATS. Output is left-joined back
-    to the zone list so empty zones appear with NULL stats, ordered by key
-    (stats.py:17 ORDER BY).
-    """
-    for s in stats:
-        if s not in _STAT_EXPRS:
-            raise ValueError(f"unsupported stat {s!r}; choose from {SUPPORTED_STATS}")
-
-    # Zones are the dimension side and feed two subtrees (the spatial join
-    # and the result universe): persist so the source — which may be an
-    # expensive ingest — materializes once per job.
-    zones = track(zones.persist(StorageLevel.MEMORY_AND_DISK))
-    matched = spatial_join(zones, pixels, how=how, cell_deg=cell_deg)
-    aggs: list[Column] = [_STAT_EXPRS[s]().alias(s) for s in stats]
-    per_zone = matched.groupBy("vector_id", "raster_id", "fid").agg(*aggs)
-
-    # Re-attach to the full zone x raster universe (J2 equi left join,
-    # reference vector.py:9-12) so zones with no intersecting pixels
-    # surface with NULLs. raster list is tiny → broadcast cross join.
-    rasters = pixels.select("raster_id").distinct()
-    universe = zones.select("vector_id", "fid", *keep_attrs).crossJoin(
-        F.broadcast(rasters)
-    )
-    out = universe.join(per_zone, ["vector_id", "raster_id", "fid"], "left")
-    if "count" in stats:
-        # rasterstats/GDAL convention: zones with no pixels report count=0,
-        # not NULL (mean/sum/min/max keep NULL).
-        out = out.withColumn("count", F.coalesce(F.col("count"), F.lit(0)))
-    return out.orderBy("vector_id", "raster_id", "fid")
-
-
-def _collect_rects(zones: DataFrame, op_name: str):
-    """Driver-side rect extraction shared by the weighted/touched rect
-    operators (dimension-sized zones, same contract as the broadcast
-    strategy): (fid, xmin, ymin, xmax, ymax) rows, raising on any
-    non-rectangle geometry. Bounded collect (BROADCAST_ZONE_LIMIT) —
-    larger zone tables belong to the distributed clip-kernel path
-    (:func:`zonal_weighted`), which never collects."""
-    rows = (
-        zones.select("fid", "geometry")
-        .limit(BROADCAST_ZONE_LIMIT + 1)
-        .collect()
-    )
-    if len(rows) > BROADCAST_ZONE_LIMIT:
-        raise ValueError(
-            f"{op_name}: > {BROADCAST_ZONE_LIMIT} zones; use "
-            "zonal_weighted (distributed grid path, no driver collect)"
-        )
-    rects = []
-    for r in rows:
-        rect = geo.wkb_rect(bytes(r.geometry))
-        if rect is None:
-            raise ValueError(
-                f"{op_name}: zone fid={r.fid} is not an axis-aligned "
-                "rectangle; use the clip kernel path (zonal_weighted)"
-            )
-        rects.append((r.fid, *[float(v) for v in rect]))
-    return zones.sparkSession.createDataFrame(
-        rects, "fid long, xmin double, ymin double, xmax double, ymax double"
-    )
-
-
 def _pixel_cells(pixels: DataFrame, cell: float) -> DataFrame:
     """Attach the coarse grid-cell key each pixel CENTER falls in — the
     probe side of every zonal equi-join (one key per pixel, so a
@@ -411,6 +154,227 @@ def _explode_bbox_cells(df: DataFrame, cell: float, pad: float) -> DataFrame:
                 F.floor((F.col("ymax") + pad) / cell).cast("long"),
             )
         ),
+    )
+
+
+def _in_rect() -> Column:
+    """Half-open pixel-center-in-bbox test. For a hole-free axis-aligned
+    rectangle (geo.wkb_rect) it is exactly the ray-casting kernel's
+    answer, evaluated in whole-stage codegen."""
+    return (
+        (F.col("lon") >= F.col("xmin"))
+        & (F.col("lon") < F.col("xmax"))
+        & (F.col("lat") >= F.col("ymin"))
+        & (F.col("lat") < F.col("ymax"))
+    )
+
+
+def _in_bbox() -> Column:
+    """Closed bbox prefilter ahead of the exact containment kernel."""
+    return (
+        F.col("lon").between(F.col("xmin"), F.col("xmax"))
+        & F.col("lat").between(F.col("ymin"), F.col("ymax"))
+    )
+
+
+def _broadcast_spatial_join(rows: list, pixels: DataFrame, cell: float) -> DataFrame:
+    """Broadcast branch: ``rows`` are the collected (vector_id, fid,
+    geometry) zone rows. Bboxes and cell keys are computed driver-side,
+    and two things broadcast: (a) the exploded cell table for the hash
+    join and (b) a (vector_id, fid) → WKB map for refinement. Pixels then
+    carry only two small key columns into the join — no per-row WKB
+    bytes cross the Arrow boundary, and each Python worker parses each
+    geometry once (cached).
+    """
+    cell_rows = []
+    geo_map = {}
+    all_rect = True
+    for r in rows:
+        wkb = bytes(r.geometry)
+        geo_map[(r.vector_id, r.fid)] = wkb
+        polys = geo.parse_wkb(wkb)  # parse once: bbox + rect flag
+        all_rect = all_rect and geo.polys_rect(polys) is not None
+        xmin, ymin, xmax, ymax = geo.polys_bbox(polys)
+        for cx in range(int(np.floor(xmin / cell)), int(np.floor(xmax / cell)) + 1):
+            for cy in range(int(np.floor(ymin / cell)), int(np.floor(ymax / cell)) + 1):
+                cell_rows.append((r.vector_id, r.fid, cx, cy, xmin, ymin, xmax, ymax))
+    spark = pixels.sparkSession
+    zc = spark.createDataFrame(
+        pd.DataFrame(
+            cell_rows,
+            columns=["vector_id", "fid", "_cx", "_cy", "xmin", "ymin", "xmax", "ymax"],
+        ),
+        "vector_id string, fid long, _cx long, _cy long, "
+        "xmin double, ymin double, xmax double, ymax double",
+    ).coalesce(1)
+    joined = _pixel_cells(pixels, cell).join(F.broadcast(zc), ["_cx", "_cy"], "inner")
+
+    if all_rect:
+        # Rectangle fast path: the whole join stays in whole-stage
+        # codegen — no Arrow transfer, no Python workers.
+        joined = joined.filter(_in_rect())
+        return joined.drop("xmin", "ymin", "xmax", "ymax", "_cx", "_cy")
+
+    geo_bc = spark.sparkContext.broadcast(geo_map)
+
+    @F.pandas_udf(BooleanType())
+    def contains_bc(vid: pd.Series, fid: pd.Series, lon: pd.Series, lat: pd.Series) -> pd.Series:
+        cache: dict = {}
+        out = np.zeros(len(vid), dtype=bool)
+        lon_v = lon.to_numpy(dtype=np.float64)
+        lat_v = lat.to_numpy(dtype=np.float64)
+        keys = pd.Series(list(zip(vid, fid)))
+        codes, uniques = pd.factorize(keys)
+        for gi, key in enumerate(uniques):
+            polys = cache.get(key)
+            if polys is None:
+                polys = cache[key] = geo.parse_wkb(geo_bc.value[key])
+            mask = codes == gi
+            out[mask] = geo.points_in_polygons(polys, lon_v[mask], lat_v[mask])
+        return pd.Series(out)
+
+    refined = joined.filter(_in_bbox()).filter(
+        contains_bc("vector_id", "fid", "lon", "lat")
+    )
+    return refined.drop("xmin", "ymin", "xmax", "ymax", "_cx", "_cy")
+
+
+def _distributed_spatial_join(
+    zones: DataFrame, pixels: DataFrame, cell: float
+) -> DataFrame:
+    """Distributed branch: zone bboxes are computed on the executors, the
+    exploded zone-cell table joins the pixel cell keys in a shuffled hash
+    join (AQE splits skewed cells), and nothing is collected."""
+    joined = _pixel_cells(pixels, cell).join(
+        _explode_bbox_cells(_zone_bboxes(zones), cell, pad=0.0),
+        ["_cx", "_cy"],
+        "inner",
+    )
+    # Drop the zone payload (name + the heavy WKB blob) so downstream
+    # plans don't carry geometry bytes through shuffles.
+    drop_cols = (
+        "xmin", "ymin", "xmax", "ymax", "_cx", "_cy", "_is_rect",
+        "name", "geometry",
+    )
+    # Rectangle zones refine with the half-open bbox predicate inside
+    # whole-stage codegen; only non-rectangle candidates pay the Arrow
+    # transfer of (geometry, lon, lat) into the Python kernel. The two
+    # branches share the same shuffle exchanges (ReusedExchange), so
+    # pixels still shuffle once.
+    rect = joined.filter(F.col("_is_rect") & _in_rect()).drop(*drop_cols)
+    poly = (
+        joined.filter(~F.col("_is_rect") & _in_bbox())
+        .filter(_contains_udf("geometry", "lon", "lat"))
+        .drop(*drop_cols)
+    )
+    return rect.unionByName(poly)
+
+
+def spatial_join(
+    zones: DataFrame,
+    pixels: DataFrame,
+    cell_deg: float = 0.5,
+) -> DataFrame:
+    """Inner spatial join: pixel rows × zone keys where the pixel center
+    falls inside the zone geometry (J1 filter-and-refine). Returns the
+    pixel columns plus (vector_id, fid).
+
+    A grid-cell EQUI-join (hash-joinable — never a nested loop over
+    zones): pixels get a cell key from their coordinates, zones explode
+    to the cells their bbox covers, and a bbox filter plus the exact
+    containment test refine the candidates. Where the join runs follows
+    from the zone count, read by one bounded collect while the plan is
+    built: up to BROADCAST_ZONE_LIMIT zones broadcast to every pixel
+    partition (zero pixel shuffle, a BroadcastHashJoin probe per pixel);
+    above it both sides shuffle on the cell key, with zones distributed.
+    """
+    cell = float(cell_deg)
+    # The limit caps driver memory AND is the zone-count probe — no
+    # separate count job.
+    rows = (
+        zones.select("vector_id", "fid", "geometry")
+        .limit(BROADCAST_ZONE_LIMIT + 1)
+        .collect()
+    )
+    if len(rows) <= BROADCAST_ZONE_LIMIT:
+        _LOG.info("spatial_join: %d zones, broadcast branch", len(rows))
+        return _broadcast_spatial_join(rows, pixels, cell)
+    _LOG.info(
+        "spatial_join: more than %d zones, distributed branch",
+        BROADCAST_ZONE_LIMIT,
+    )
+    return _distributed_spatial_join(zones, pixels, cell)
+
+
+def zonal_stats(
+    zones: DataFrame,
+    pixels: DataFrame,
+    stats: Sequence[str] = ("mean",),
+    cell_deg: float = 0.5,
+    keep_attrs: Iterable[str] = (),
+) -> DataFrame:
+    """Zonal statistics per (vector_id, raster_id, fid).
+
+    Natural superset of the reference (which computes only AVG,
+    stats.py:14): any subset of SUPPORTED_STATS. Output is left-joined back
+    to the zone list so empty zones appear with NULL stats, ordered by key
+    (stats.py:17 ORDER BY).
+    """
+    for s in stats:
+        if s not in _STAT_EXPRS:
+            raise ValueError(f"unsupported stat {s!r}; choose from {SUPPORTED_STATS}")
+
+    # Zones are the dimension side and feed two subtrees (the spatial join
+    # and the result universe): persist so the source — which may be an
+    # expensive ingest — materializes once per job.
+    zones = track(zones.persist(StorageLevel.MEMORY_AND_DISK))
+    matched = spatial_join(zones, pixels, cell_deg=cell_deg)
+    aggs: list[Column] = [_STAT_EXPRS[s]().alias(s) for s in stats]
+    per_zone = matched.groupBy("vector_id", "raster_id", "fid").agg(*aggs)
+
+    # Re-attach to the full zone x raster universe (J2 equi left join,
+    # reference vector.py:9-12) so zones with no intersecting pixels
+    # surface with NULLs. raster list is tiny → broadcast cross join.
+    rasters = pixels.select("raster_id").distinct()
+    universe = zones.select("vector_id", "fid", *keep_attrs).crossJoin(
+        F.broadcast(rasters)
+    )
+    out = universe.join(per_zone, ["vector_id", "raster_id", "fid"], "left")
+    if "count" in stats:
+        # rasterstats/GDAL convention: zones with no pixels report count=0,
+        # not NULL (mean/sum/min/max keep NULL).
+        out = out.withColumn("count", F.coalesce(F.col("count"), F.lit(0)))
+    return out.orderBy("vector_id", "raster_id", "fid")
+
+
+def _collect_rects(zones: DataFrame, op_name: str):
+    """Driver-side rect extraction shared by the weighted/touched rect
+    operators (dimension-sized zones, same contract as spatial_join's
+    broadcast branch): (fid, xmin, ymin, xmax, ymax) rows, raising on any
+    non-rectangle geometry. Bounded collect (BROADCAST_ZONE_LIMIT) —
+    larger zone tables belong to the distributed clip-kernel path
+    (:func:`zonal_weighted`), which never collects."""
+    rows = (
+        zones.select("fid", "geometry")
+        .limit(BROADCAST_ZONE_LIMIT + 1)
+        .collect()
+    )
+    if len(rows) > BROADCAST_ZONE_LIMIT:
+        raise ValueError(
+            f"{op_name}: > {BROADCAST_ZONE_LIMIT} zones; use "
+            "zonal_weighted (distributed grid path, no driver collect)"
+        )
+    rects = []
+    for r in rows:
+        rect = geo.wkb_rect(bytes(r.geometry))
+        if rect is None:
+            raise ValueError(
+                f"{op_name}: zone fid={r.fid} is not an axis-aligned "
+                "rectangle; use the clip kernel path (zonal_weighted)"
+            )
+        rects.append((r.fid, *[float(v) for v in rect]))
+    return zones.sparkSession.createDataFrame(
+        rects, "fid long, xmin double, ymin double, xmax double, ymax double"
     )
 
 
@@ -455,10 +419,10 @@ def zonal_weighted_rects(
     int64 bound: w_e6·val_cents ≤ 1e6·|val|·100 — fine through ~9e10
     cents; at larger magnitudes move the products to DECIMAL(38,0).
 
-    Scale shape: zones are dimension-sized (same contract as the
-    broadcast strategy) → the rects explode to padded grid cells and
+    Scale shape: zones are dimension-sized (same contract as
+    spatial_join's broadcast branch) → the rects explode to padded grid cells and
     pixels probe them with a Broadcast HASH join on the cell key (the
-    same shape as spatial_join's broadcast path — per-pixel cost is
+    same shape as that branch — per-pixel cost is
     O(1), not O(|zones|) as the former cross-join-with-filter BNLJ
     was); pixels never shuffle; the aggregate is map-side combined on
     the tiny fid key.
@@ -511,7 +475,7 @@ def zonal_weighted(
     covers, and pixels probe on the cell key — a BroadcastHashJoin for
     dimension-sized zone tables (bounded probe decides), a shuffled
     hash equi-join with AQE skew splitting above BROADCAST_ZONE_LIMIT
-    (the same grid economics as spatial_join(how='grid') / the
+    (the same grid economics as spatial_join's distributed branch / the
     reference's GIST probe, pipeline/processing/inputs.py:16). Either
     way per-pixel cost is O(1) in the zone count, never the O(|zones|)
     nested loop of the former cross-join formulation. A JVM bbox

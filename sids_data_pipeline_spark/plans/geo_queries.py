@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from sids_data_pipeline_spark.functions import geo
-from sids_data_pipeline_spark.operators import manifest
+from sids_data_pipeline_spark.operators import manifest, zonal
 from sids_data_pipeline_spark.operators.zonal import zonal_stats
 from sids_data_pipeline_spark.plans.base import Query
 from sids_data_pipeline_spark.sources.raster import (
@@ -200,13 +200,30 @@ def _zonal_sql(vector_id: str, raster_id: str, stats: tuple[str, ...]) -> str:
     )
 
 
-def _zonal_query(vector_id: str, raster_id: str, stats: tuple[str, ...], how: str):
+def _zonal_query(vector_id: str, raster_id: str, stats: tuple[str, ...]):
     def run(spark: SparkSession, sf_dir: str) -> DataFrame:
         zones = fixture_zones(spark, vector_id)
         pixels = synthetic_raster(spark, raster_id)
-        return zonal_stats(zones, pixels, stats=stats, how=how)
+        return zonal_stats(zones, pixels, stats=stats)
 
     return run
+
+
+def _distributed(run):
+    """Pin ``run``'s spatial join to its distributed branch, so the
+    oracle covers the path large zone tables take: at a zone limit of 0
+    every zone table is over it. The branch is chosen while the plan is
+    built, so the limit is back at its value before the plan runs."""
+
+    def pinned(spark: SparkSession, sf_dir: str) -> DataFrame:
+        limit = zonal.BROADCAST_ZONE_LIMIT
+        zonal.BROADCAST_ZONE_LIMIT = 0
+        try:
+            return run(spark, sf_dir)
+        finally:
+            zonal.BROADCAST_ZONE_LIMIT = limit
+
+    return pinned
 
 
 # --- benchmark-scale zonal (1M pixels) -----------------------------------------
@@ -245,22 +262,17 @@ px AS (
 """
 
 
-def _zonal_large_factory(how: str):
-    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from sids_data_pipeline_spark.schemas import ZONES
-        from sids_data_pipeline_spark.sources.raster import synthetic_raster_scaled
+def _zonal_large(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from sids_data_pipeline_spark.schemas import ZONES
+    from sids_data_pipeline_spark.sources.raster import synthetic_raster_scaled
 
-        zone_pdf = pd.DataFrame(
-            [("zones_large", fid, name, wkb) for fid, name, wkb in _large_zone_rows()],
-            columns=[f.name for f in ZONES.fields],
-        )
-        zones = spark.createDataFrame(zone_pdf, ZONES).coalesce(1)
-        pixels = synthetic_raster_scaled(spark, _LARGE_N)
-        return zonal_stats(
-            zones, pixels, stats=("mean", "count"), how=how, cell_deg=8.0
-        )
-
-    return run
+    zone_pdf = pd.DataFrame(
+        [("zones_large", fid, name, wkb) for fid, name, wkb in _large_zone_rows()],
+        columns=[f.name for f in ZONES.fields],
+    )
+    zones = spark.createDataFrame(zone_pdf, ZONES).coalesce(1)
+    pixels = synthetic_raster_scaled(spark, _LARGE_N)
+    return zonal_stats(zones, pixels, stats=("mean", "count"), cell_deg=8.0)
 
 
 QUERIES_LARGE_SQL = _zonal_sql_for(
@@ -3922,14 +3934,14 @@ QUERIES: list[Query] = [
     ),
     Query(
         "zonal_mean_broadcast",
-        _zonal_query("zones_grid", "rast_gradient", ("mean",), "broadcast"),
+        _zonal_query("zones_grid", "rast_gradient", ("mean",)),
         _zonal_sql("zones_grid", "rast_gradient", ("mean",)),
         doc="J1+A1+O1: zonal mean, broadcast filter-and-refine path",
         tags=("geo", "zonal"),
     ),
     Query(
         "zonal_mean_grid",
-        _zonal_query("zones_grid", "rast_gradient", ("mean",), "grid"),
+        _distributed(_zonal_query("zones_grid", "rast_gradient", ("mean",))),
         _zonal_sql("zones_grid", "rast_gradient", ("mean",)),
         doc="J1 grid-cell equi-join path (the 100 TB strategy), same oracle",
         tags=("geo", "zonal"),
@@ -3940,7 +3952,6 @@ QUERIES: list[Query] = [
             "zones_grid",
             "rast_nodata",
             ("mean", "count", "sum", "min", "max", "median"),
-            "broadcast",
         ),
         _zonal_sql(
             "zones_grid", "rast_nodata", ("mean", "count", "sum", "min", "max", "median")
@@ -3950,14 +3961,14 @@ QUERIES: list[Query] = [
     ),
     Query(
         "zonal_mean_large",
-        _zonal_large_factory("grid"),
+        _distributed(_zonal_large),
         QUERIES_LARGE_SQL,
         doc="J1 at bench scale: 1M-pixel raster, grid path (kernel throughput)",
         tags=("geo", "zonal", "bench"),
     ),
     Query(
         "zonal_large_broadcast",
-        _zonal_large_factory("broadcast"),
+        _zonal_large,
         QUERIES_LARGE_SQL,
         doc="J1 at bench scale, broadcast path: driver-built zone index, "
         "keys-only refine (no per-row WKB transfer)",
@@ -3965,7 +3976,7 @@ QUERIES: list[Query] = [
     ),
     Query(
         "zonal_polygons",
-        _zonal_query("zones_overlap", "rast_checker", ("mean", "count"), "grid"),
+        _distributed(_zonal_query("zones_overlap", "rast_checker", ("mean", "count"))),
         _zonal_sql("zones_overlap", "rast_checker", ("mean", "count")),
         doc="F6 containment on real polygons (triangle with hole, overlaps, sub-pixel)",
         tags=("geo", "zonal"),

@@ -7,10 +7,9 @@ canonical raster form is a Parquet pixel table (schemas.PIXELS) partitioned
 by ``raster_id``; at 100 TB the table additionally partitions on a coarse
 lat/lon grid so spatial predicates prune whole files.
 
-``ingest_geotiff`` delegates to the REAL pure-numpy codec in
-sources/geotiff.py (strip/tiled, raw/deflate/ZSTD — no GDAL needed for
-the standardized profile); ``synthetic_raster`` provides the
-deterministic fixtures from FIXTURES.md §B1 used by tests and queries.
+GeoTIFF files decode in sources/geotiff.py; ``synthetic_raster``
+provides the deterministic fixtures from FIXTURES.md §B1 used by tests
+and queries.
 """
 
 from __future__ import annotations
@@ -111,34 +110,6 @@ def select_band(pixels: DataFrame, band: int) -> DataFrame:
     """Band selection (reference P4: gdal_translate -b,
     batch/processing/raster.py:34) — pushed-down filter on the band column."""
     return pixels.filter(F.col("band") == band)
-
-
-def ingest_geotiff(
-    spark: SparkSession,
-    path_glob: str,
-    band: int = 1,
-    target_epsg: int = 4326,
-) -> DataFrame:
-    """GeoTIFF → pixel DataFrame (S5, distributed).
-
-    Delegates to the pure-numpy codec (sources/geotiff.py): binaryFile
-    scan → mapInPandas decode → long-format PIXELS rows. Covers the
-    reference's full standardised profile — single band, strip or
-    128×128 tiled layout, raw/deflate/ZSTD chunks
-    (``batch/processing/raster.py:7-8,20-38``) — with no GDAL; other
-    codecs raise with a clear message. ``target_epsg`` other than 4326
-    applies functions/crs.reproject_pixels (built-in 4326↔3857 and
-    4326↔UTM-zone closed forms).
-    """
-    from sids_data_pipeline_spark.functions.crs import reproject_pixels
-    from sids_data_pipeline_spark.sources.geotiff import (
-        ingest_geotiff as _ingest,
-    )
-
-    pixels = _ingest(spark, path_glob, band=band)
-    if target_epsg != 4326:
-        pixels = reproject_pixels(pixels, src_epsg=4326, dst_epsg=target_epsg)
-    return pixels
 
 
 def standardize_pixels(pixels: DataFrame, band: int = 1) -> DataFrame:
@@ -358,7 +329,6 @@ def rasterize(
     res: tuple[float, float],
     size: tuple[int, int],
     burn_col: str | None = None,
-    how: str = "broadcast",
     cell_deg: float = 0.5,
 ) -> DataFrame:
     """gdal_rasterize parity (center rule): burn vector features onto a
@@ -403,7 +373,7 @@ def rasterize(
             "lat": F.lit(origin[1]) + (F.col("y") + F.lit(0.5)) * F.lit(res[1]),
         }
     )
-    hit = spatial_join(zones, tgt, how=how, cell_deg=cell_deg)
+    hit = spatial_join(zones, tgt, cell_deg=cell_deg)
     won = hit.groupBy("x", "y").agg(F.max("fid").alias("fid"))
     if burn_col is None:
         return won.select("x", "y", F.col("fid").alias("burn"))

@@ -63,6 +63,37 @@ def test_rerun_idempotency(spark, vectors, rasters, tmp_path):
     assert pending3 == {("v3", "r1"), ("v3", "r2"), ("v3", "r3")}
 
 
+@pytest.mark.parametrize("layout", ["missing", "temporary_only"])
+def test_first_run_ledger_reads_empty_without_a_job(spark, tmp_path, layout):
+    """No ledger yet, or one whose first append died before its commit
+    (only ``_temporary``): the ledger reads as empty and collecting it
+    schedules no Spark job."""
+    ledger = tmp_path / "ledger"
+    if layout == "temporary_only":
+        (ledger / "_temporary" / "0").mkdir(parents=True)
+    done = manifest.read_ledger(spark, str(ledger))
+    sc = spark.sparkContext
+    group = f"first-run-ledger-{layout}"
+    sc.setJobGroup(group, group)
+    try:
+        rows = done.collect()
+    finally:
+        sc.setJobGroup(None, None)
+    assert rows == []
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+
+
+def test_ledger_read_surfaces_other_analysis_errors(spark, tmp_path):
+    """A ledger that exists but lacks the requested columns is schema
+    drift, not a first run."""
+    from pyspark.errors import AnalysisException
+
+    ledger = str(tmp_path / "ledger")
+    spark.createDataFrame([("r1",)], "id string").write.parquet(ledger)
+    with pytest.raises(AnalysisException):
+        manifest.read_ledger(spark, ledger)
+
+
 def test_list_datasets_stems(spark, tmp_path):
     """S1: directory listing -> id DataFrame, stem projected, non-dataset
     files ignored, no content fetched."""

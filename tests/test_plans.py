@@ -69,15 +69,18 @@ def test_shipping_priority_plan_shape(spark, sf_dir, catalog):
 def test_zonal_broadcast_is_hash_join(spark):
     zones = fixture_zones(spark, "zones_grid")
     px = synthetic_raster(spark, "rast_gradient")
-    plan = _plan(spatial_join(zones, px, how="broadcast"))
+    plan = _plan(spatial_join(zones, px))
     assert "BroadcastHashJoin" in plan
     assert "BroadcastNestedLoopJoin" not in plan
 
 
-def test_zonal_grid_is_equi_join(spark):
+def test_zonal_grid_is_equi_join(spark, monkeypatch):
+    from sids_data_pipeline_spark.operators import zonal
+
+    monkeypatch.setattr(zonal, "BROADCAST_ZONE_LIMIT", 0)  # distributed branch
     zones = fixture_zones(spark, "zones_grid")
     px = synthetic_raster(spark, "rast_gradient")
-    plan = _plan(spatial_join(zones, px, how="grid"))
+    plan = _plan(spatial_join(zones, px))
     assert "NestedLoop" not in plan
 
 

@@ -13,6 +13,7 @@ import math
 import numpy as np
 import pytest
 
+from sids_data_pipeline_spark.operators import zonal
 from sids_data_pipeline_spark.sources.raster import (
     GRID_N,
     PIXEL_DEG,
@@ -239,7 +240,7 @@ def test_rasterize_burns_fids_center_rule(spark):
     assert got == want
 
 
-def test_rasterize_attribute_burn_and_grid_parity(spark):
+def test_rasterize_attribute_burn_and_grid_parity(spark, monkeypatch):
     zones = _zone_df(
         spark,
         [
@@ -252,11 +253,11 @@ def test_rasterize_attribute_burn_and_grid_parity(spark):
         burn_col="name",
     ).collect()
     assert {r.burn for r in named} == {"a", "b"}
-    # the grid strategy computes the identical raster
+    # the spatial join's distributed branch (zone limit 0) computes the
+    # identical raster
     bc = rasterize(zones, origin=(0.0, 0.0), res=(1.0, 1.0), size=(10, 10))
-    gr = rasterize(
-        zones, origin=(0.0, 0.0), res=(1.0, 1.0), size=(10, 10), how="grid"
-    )
+    monkeypatch.setattr(zonal, "BROADCAST_ZONE_LIMIT", 0)
+    gr = rasterize(zones, origin=(0.0, 0.0), res=(1.0, 1.0), size=(10, 10))
     assert sorted(map(tuple, bc.collect())) == sorted(map(tuple, gr.collect()))
 
 
@@ -350,9 +351,10 @@ def test_warp_negative_resolution_north_up(spark):
         assert b[(x, H - 1 - y)] == pytest.approx(v, abs=1e-9)
 
 
-def test_rasterize_grid_strategy_with_polygon_refine(spark):
-    """how='grid' must agree with the broadcast strategy on NON-RECT
-    geometry too (the ray-cast refine path): the holed triangle."""
+def test_rasterize_grid_strategy_with_polygon_refine(spark, monkeypatch):
+    """The distributed branch must agree with the broadcast branch on
+    NON-RECT geometry too (the ray-cast refine path): the holed
+    triangle."""
     from sids_data_pipeline_spark.sources.raster import GRID_N, PIXEL_DEG
     from sids_data_pipeline_spark.sources.vector import fixture_zones
 
@@ -361,9 +363,7 @@ def test_rasterize_grid_strategy_with_polygon_refine(spark):
         origin=(0.0, 0.0), res=(PIXEL_DEG, PIXEL_DEG), size=(GRID_N, GRID_N)
     )
     bc = {(r.x, r.y): r.burn for r in rasterize(zones, **kw).collect()}
-    gr = {
-        (r.x, r.y): r.burn
-        for r in rasterize(zones, how="grid", **kw).collect()
-    }
+    monkeypatch.setattr(zonal, "BROADCAST_ZONE_LIMIT", 0)
+    gr = {(r.x, r.y): r.burn for r in rasterize(zones, **kw).collect()}
     assert bc == gr
     assert 4 in set(bc.values())  # the holed triangle actually burned

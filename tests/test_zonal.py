@@ -13,6 +13,7 @@ import pandas as pd
 import pytest
 
 from sids_data_pipeline_spark.functions import geo
+from sids_data_pipeline_spark.operators import zonal
 from sids_data_pipeline_spark.operators.zonal import spatial_join, zonal_stats
 from sids_data_pipeline_spark.sources.raster import numpy_pixels, synthetic_raster
 from sids_data_pipeline_spark.sources.vector import (
@@ -22,6 +23,13 @@ from sids_data_pipeline_spark.sources.vector import (
 
 RASTERS = ["rast_gradient", "rast_checker", "rast_nodata"]
 VECTORS = ["zones_grid", "zones_overlap"]
+
+# spatial_join's two branches, chosen by the zone limit it reads while the
+# plan is built: at the default these fixtures broadcast, at 0 the join
+# runs distributed on the cell key
+BRANCHES = pytest.mark.parametrize(
+    "zone_limit", [zonal.BROADCAST_ZONE_LIMIT, 0], ids=["broadcast", "grid"]
+)
 
 
 def oracle_zonal(vector_id: str, raster_id: str) -> pd.DataFrame:
@@ -49,12 +57,15 @@ def oracle_zonal(vector_id: str, raster_id: str) -> pd.DataFrame:
 
 @pytest.mark.parametrize("vector_id", VECTORS)
 @pytest.mark.parametrize("raster_id", RASTERS)
-@pytest.mark.parametrize("how", ["broadcast", "grid"])
-def test_zonal_matches_numpy_oracle(spark, vector_id, raster_id, how):
+@BRANCHES
+def test_zonal_matches_numpy_oracle(
+    spark, monkeypatch, vector_id, raster_id, zone_limit
+):
+    monkeypatch.setattr(zonal, "BROADCAST_ZONE_LIMIT", zone_limit)
     zones = fixture_zones(spark, vector_id)
     pixels = synthetic_raster(spark, raster_id)
     got = (
-        zonal_stats(zones, pixels, stats=("mean", "count"), how=how)
+        zonal_stats(zones, pixels, stats=("mean", "count"))
         .toPandas()
         .sort_values("fid")
         .reset_index(drop=True)
@@ -78,25 +89,23 @@ def test_empty_zone_yields_null_mean(spark):
     assert not pd.isna(out.loc[1, "mean"])
 
 
-def test_broadcast_and_grid_paths_agree_multi_raster(spark):
-    """Property: the two join strategies are the same operator."""
+def test_broadcast_and_grid_paths_agree_multi_raster(spark, monkeypatch):
+    """Property: both branches of the spatial join (default zone limit
+    and 0) are the same operator."""
     zones = fixture_zones(spark, "zones_overlap")
     pixels = synthetic_raster(spark, "rast_gradient").unionByName(
         synthetic_raster(spark, "rast_checker")
     )
-    a = (
-        zonal_stats(zones, pixels, stats=("mean", "count", "sum"), how="broadcast")
-        .toPandas()
-        .sort_values(["vector_id", "raster_id", "fid"])
-        .reset_index(drop=True)
-    )
-    b = (
-        zonal_stats(zones, pixels, stats=("mean", "count", "sum"), how="grid")
-        .toPandas()
-        .sort_values(["vector_id", "raster_id", "fid"])
-        .reset_index(drop=True)
-    )
-    pd.testing.assert_frame_equal(a, b)
+    outs = []
+    for zone_limit in (zonal.BROADCAST_ZONE_LIMIT, 0):
+        monkeypatch.setattr(zonal, "BROADCAST_ZONE_LIMIT", zone_limit)
+        outs.append(
+            zonal_stats(zones, pixels, stats=("mean", "count", "sum"))
+            .toPandas()
+            .sort_values(["vector_id", "raster_id", "fid"])
+            .reset_index(drop=True)
+        )
+    pd.testing.assert_frame_equal(outs[0], outs[1])
 
 
 def test_spatial_join_keeps_pixel_columns(spark):
@@ -107,8 +116,8 @@ def test_spatial_join_keeps_pixel_columns(spark):
         assert c in joined.columns
 
 
-@pytest.mark.parametrize("how", ["broadcast", "grid"])
-def test_rect_fast_path_equals_kernel_path(spark, how):
+@BRANCHES
+def test_rect_fast_path_equals_kernel_path(spark, monkeypatch, zone_limit):
     """A rectangle zone (half-open fast path) and the same rectangle
     encoded with an extra collinear vertex (defeats geo.wkb_rect, forcing
     the Python kernel) must produce identical zonal stats — including
@@ -126,6 +135,7 @@ def test_rect_fast_path_equals_kernel_path(spark, how):
     )
     assert geo.wkb_rect(rect_wkb) == box and geo.wkb_rect(collinear) is None
 
+    monkeypatch.setattr(zonal, "BROADCAST_ZONE_LIMIT", zone_limit)
     pixels = synthetic_raster(spark, "rast_gradient")
     outs = []
     for wkb in (rect_wkb, collinear):
@@ -136,7 +146,7 @@ def test_rect_fast_path_equals_kernel_path(spark, how):
             ZONES,
         )
         outs.append(
-            zonal_stats(zones, pixels, stats=("mean", "count", "sum"), how=how)
+            zonal_stats(zones, pixels, stats=("mean", "count", "sum"))
             .toPandas()
             .drop(columns=["vector_id"])
         )
@@ -144,29 +154,22 @@ def test_rect_fast_path_equals_kernel_path(spark, how):
     assert outs[0]["count"].iloc[0] > 0
 
 
-def test_broadcast_falls_back_to_grid_above_zone_limit(spark, monkeypatch, caplog):
-    """Driver-OOM guard: a zone table above BROADCAST_ZONE_LIMIT silently
-    switches how='broadcast' to the distributed grid strategy with the
-    same results (cap shrunk so the test stays small)."""
+def test_distributed_branch_runs_above_zone_limit(spark, monkeypatch, caplog):
+    """Driver-OOM guard: a zone table above BROADCAST_ZONE_LIMIT takes the
+    distributed branch, which matches the broadcast result (cap shrunk so
+    the test stays small)."""
     import logging
-
-    from sids_data_pipeline_spark.operators import zonal
 
     zones = fixture_zones(spark, "zones_grid")
     pixels = synthetic_raster(spark, "rast_gradient")
-    n_zones = zones.count()
-    monkeypatch.setattr(zonal, "BROADCAST_ZONE_LIMIT", n_zones - 1)
-    with caplog.at_level(logging.WARNING, logger=zonal.__name__):
-        fallback = zonal.zonal_stats(
-            zones, pixels, stats=("mean", "count"), how="broadcast"
-        ).toPandas()
-    assert any("falling back to how='grid'" in m for m in caplog.messages)
-    direct = zonal.zonal_stats(
-        zones, pixels, stats=("mean", "count"), how="grid"
-    ).toPandas()
+    broadcast = zonal_stats(zones, pixels, stats=("mean", "count")).toPandas()
+    monkeypatch.setattr(zonal, "BROADCAST_ZONE_LIMIT", zones.count() - 1)
+    with caplog.at_level(logging.INFO, logger=zonal.__name__):
+        distributed = zonal_stats(zones, pixels, stats=("mean", "count")).toPandas()
+    assert any("distributed branch" in m for m in caplog.messages)
     pd.testing.assert_frame_equal(
-        fallback.sort_values("fid").reset_index(drop=True),
-        direct.sort_values("fid").reset_index(drop=True),
+        broadcast.sort_values("fid").reset_index(drop=True),
+        distributed.sort_values("fid").reset_index(drop=True),
     )
 
 

@@ -37,6 +37,7 @@ def main() -> None:
 
     from sids_data_pipeline_spark.functions import geo
     from sids_data_pipeline_spark.operators import dedup
+    from sids_data_pipeline_spark.operators import zonal as zonal_op
     from sids_data_pipeline_spark.operators.zonal import zonal_stats
     from sids_data_pipeline_spark.schemas import ZONES
     from sids_data_pipeline_spark.session import get_spark
@@ -63,21 +64,27 @@ def main() -> None:
             ).coalesce(1)
 
         zonal = {}
-        # 10240² = 104.9M px: one decade past the 4096² point, confirming the
-        # ns/px asymptote holds at the scale a single executor would own on a
-        # 1000-node 100 TB run. reps drop to 2 past 16M px to bound wall time.
-        for n in (512, 1024, 2048, 4096, 10240):
-            px = synthetic_raster_scaled(spark, n)
-            zs = zones_for(n)
-            sec = _steady(
-                lambda: zonal_stats(zs, px, stats=("mean", "count"), how="grid",
-                                    cell_deg=float(n) * 0.1 / 2).count(),
-                reps=2 if n > 4096 else 3,
-            )
-            zonal[f"{n * n:,} px"] = {
-                "sec": round(sec, 3),
-                "ns_per_px": round(sec / (n * n) * 1e9, 1),
-            }
+        # A zone limit of 0 pins spatial_join's distributed branch (it is
+        # read while each plan is built). 10240² = 104.9M px: one decade
+        # past the 4096² point, confirming the ns/px asymptote holds at the
+        # scale a single executor would own on a 1000-node 100 TB run. reps
+        # drop to 2 past 16M px to bound wall time.
+        limit, zonal_op.BROADCAST_ZONE_LIMIT = zonal_op.BROADCAST_ZONE_LIMIT, 0
+        try:
+            for n in (512, 1024, 2048, 4096, 10240):
+                px = synthetic_raster_scaled(spark, n)
+                zs = zones_for(n)
+                sec = _steady(
+                    lambda: zonal_stats(zs, px, stats=("mean", "count"),
+                                        cell_deg=float(n) * 0.1 / 2).count(),
+                    reps=2 if n > 4096 else 3,
+                )
+                zonal[f"{n * n:,} px"] = {
+                    "sec": round(sec, 3),
+                    "ns_per_px": round(sec / (n * n) * 1e9, 1),
+                }
+        finally:
+            zonal_op.BROADCAST_ZONE_LIMIT = limit
         out["zonal_grid"] = zonal
 
         # --- weighted zonal (clip kernel, cell-key equi-join): n×n pixels ----
