@@ -7,10 +7,18 @@ GeoJSONL export, tippecanoe tiles, upload, ledger}. The per-dataset
 *task* parallelism (multiprocessing.Pool, ``utils.py:47-57``) becomes
 *data* parallelism here: ONE zonal-stats job computes every pending
 (vector, raster) pair at once — zones and pixels each union into a single
-DataFrame keyed by vector_id/raster_id, the spatial join handles all
-pairs in one pass, and only the per-pair sink writes loop on the driver
-(output tilesets are per-pair directories, exactly like the reference's
-blob layout).
+DataFrame keyed by vector_id/raster_id, and the spatial join handles all
+pairs in one pass.
+
+The sinks run in the same job: the stats rows, joined to their zone
+geometry, are split by pair into ``min(pairs, defaultParallelism)``
+tasks, and one ``mapInArrow`` kernel writes each pair where its rows
+are — ``{pair}/export.geojsonl``, the ``{pair}/tiles`` pyramid and,
+last, the tippecanoe-compatible marker (output tilesets are per-pair
+directories, exactly like the reference's blob layout). Like the
+reference, which writes locally and then uploads
+(``pipeline/processing/utils.py:26-34``), ``out_dir`` must be local or
+shared POSIX storage.
 
 Idempotency is the reference's signature behavior (``data.py:26-40``):
 pending = crossJoin − ledger; a re-run after completion does zero work
@@ -19,7 +27,10 @@ pending = crossJoin − ledger; a re-run after completion does zero work
 
 from __future__ import annotations
 
+import itertools
+import json
 import os
+import shutil
 from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
@@ -29,6 +40,10 @@ from sids_data_pipeline_spark import lifecycle
 from sids_data_pipeline_spark.operators import manifest
 from sids_data_pipeline_spark.operators.zonal import zonal_stats
 from sids_data_pipeline_spark.sinks import geojsonl, tiles
+from sids_data_pipeline_spark.sources.geotiff_datasource import (
+    _replace_with,
+    require_local_dir,
+)
 from sids_data_pipeline_spark.sources.raster import synthetic_raster, standardize_pixels
 from sids_data_pipeline_spark.sources.vector import fixture_zones
 
@@ -37,108 +52,99 @@ def _union(dfs: list[DataFrame]) -> DataFrame:
     return reduce(lambda a, b: a.unionByName(b), dfs)
 
 
-def _fanout_partition_dirs(
-    spark: SparkSession, stage_dir: str, pair_keys: list[str], dest
-) -> None:
-    """Move each pair's partition directory of a partitioned write to
-    its per-pair destination ``dest(K)`` (metadata-only renames — no
-    Spark jobs); pairs with no rows (no partition directory) get an
-    empty destination directory so every pending pair materializes
-    output.
+def _pair_runs(batches):
+    """(pair_key, pyarrow.Table) for each run of one key in batches
+    sorted by ``pair_key``; a run may span batches, and only one pair's
+    rows are held at a time."""
+    import pyarrow as pa
 
-    The stage is LISTED rather than probed by constructed name: Spark
-    Hive-escapes special characters in partition directory names (an id
-    containing ':' lands as ``pair_key=...%3A...``), so building the
-    expected path from the raw key would miss the data and silently
-    delete it with the stage. Unescaping is the %XX decode
-    (urllib.unquote — Hive's escapePathName inverse); an unexpected
-    partition aborts the fan-out instead of being dropped."""
-    import os as _os
-    from urllib.parse import unquote
+    key, parts = None, []
+    for batch in batches:
+        start = 0
+        for k, run in itertools.groupby(batch.column("pair_key").to_pylist()):
+            n = sum(1 for _ in run)
+            if parts and k != key:
+                yield key, pa.Table.from_batches(parts)
+                parts = []
+            key = k
+            parts.append(batch.slice(start, n))
+            start += n
+    if parts:
+        yield key, pa.Table.from_batches(parts)
 
-    from sids_data_pipeline_spark.sources.storage import (
-        fs_delete,
-        fs_listdir,
-        fs_mkdirs,
-        fs_rename,
+
+def _write_pair_data(out_dir, key, feats, stats, max_zoom, max_features_per_tile):
+    """Clear and rewrite one pair's ``export.geojsonl`` (one part file)
+    and ``tiles`` pyramid (one ``z=Z/x=X`` parquet file per column of
+    tiles) from its ``feats`` rows, None meaning none. Returns the
+    pair's bounds (w, s, e, n), or None without rows."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from sids_data_pipeline_spark.functions import geo
+
+    pair = os.path.join(out_dir, key)
+    for d in (os.path.join(pair, "export.geojsonl"), os.path.join(pair, "tiles")):
+        if os.path.isdir(d):
+            shutil.rmtree(d)
+        os.makedirs(d)
+    if feats is None:
+        return None
+    feats = feats.sort_by("fid")
+    lines = geojsonl.arrow_feature_lines(feats, ("fid", *stats))
+    _replace_with(
+        os.path.join(pair, "export.geojsonl", "part-00000.txt"),
+        "".join(f"{line}\n" for line in lines).encode("utf-8"),
+    )
+    bbox = np.array([geo.wkb_bbox(b) for b in feats.column("geometry").to_pylist()])
+    rows = tiles.tileset_rows(
+        feats.select(["fid", *stats, "geometry"]).to_pandas(), bbox,
+        max_zoom, max_features_per_tile,
+    )
+    for (z, x), group in itertools.groupby(rows, key=lambda r: r[:2]):
+        _, _, ys, pbfs = zip(*group)
+        buf = pa.BufferOutputStream()
+        # min/max statistics of ``pbf`` would store every tile twice more
+        pq.write_table(
+            pa.table({"y": pa.array(ys, pa.int32()), "pbf": pa.array(pbfs, pa.binary())}),
+            buf, compression="zstd", write_statistics=["y"], store_schema=False,
+        )
+        _replace_with(
+            os.path.join(pair, "tiles", f"z={z}", f"x={x}", "part-00000.parquet"),
+            buf.getvalue().to_pybytes(),
+        )
+    return tuple(float(v) for v in (*bbox[:, :2].min(axis=0), *bbox[:, 2:].max(axis=0)))
+
+
+def _write_pair_marker(out_dir, key, bounds, max_zoom, stats):
+    """The pair's tippecanoe-compatible completion marker (P6), written
+    after all of its data."""
+    meta = tiles.tileset_metadata(
+        key, max_zoom=max_zoom, bounds=bounds,
+        fields={"fid": "Number", **{s: "Number" for s in stats}},
+    )
+    _replace_with(
+        os.path.join(out_dir, key, "tiles", "_tileset_metadata.json"),
+        json.dumps(meta, separators=(",", ":")).encode("utf-8"),
     )
 
-    expected = set(pair_keys)
-    found: dict[str, str] = {}
-    for name in fs_listdir(spark, stage_dir):
-        if not name.startswith("pair_key="):
-            continue  # _SUCCESS and friends
-        key = unquote(name[len("pair_key="):])
-        if key not in expected:
-            raise ValueError(
-                f"unexpected partition {name!r} in {stage_dir}; refusing "
-                "to fan out (would drop data)"
+
+def _sink_kernel(out_dir, stats, max_zoom, max_features_per_tile):
+    """mapInArrow kernel: rows sorted by ``pair_key`` → each pair's
+    files, marker last; yields the keys it wrote."""
+
+    def kernel(batches):
+        import pyarrow as pa
+
+        for key, feats in _pair_runs(batches):
+            bounds = _write_pair_data(
+                out_dir, key, feats, stats, max_zoom, max_features_per_tile
             )
-        found[key] = stage_dir.rstrip("/") + "/" + name
-    for key in pair_keys:
-        dst = dest(key)
-        fs_delete(spark, dst)
-        if key in found:
-            fs_rename(spark, found[key], dst)
-        else:
-            fs_mkdirs(spark, dst)
-    fs_delete(spark, stage_dir)
+            _write_pair_marker(out_dir, key, bounds, max_zoom, stats)
+            yield pa.RecordBatch.from_pydict({"pair_key": pa.array([key], pa.string())})
 
-
-def _write_pair_geojsonl(
-    spark: SparkSession,
-    stats_with_geom: DataFrame,
-    out_dir: str,
-    pair_keys: list[str],
-    property_cols: tuple[str, ...],
-) -> None:
-    """K1 for every pair in ONE job: feature lines keyed by pair_key,
-    one partitioned text write, then per-pair renames to the reference's
-    ``{pair}/export.geojsonl`` layout."""
-    stage = os.path.join(out_dir, "_geojsonl_stage")
-    lines = geojsonl.to_geojsonl(
-        stats_with_geom, property_cols=property_cols, keep_cols=("pair_key",)
-    )
-    lines.write.mode("overwrite").partitionBy("pair_key").text(stage)
-    _fanout_partition_dirs(
-        spark, stage, pair_keys,
-        lambda k: os.path.join(out_dir, k, "export.geojsonl"),
-    )
-
-
-def _write_pair_tilesets(
-    spark: SparkSession,
-    encoded: DataFrame,
-    out_dir: str,
-    pair_keys: list[str],
-    max_zoom: int,
-    bounds: dict[str, tuple] | None = None,
-    fields: dict[str, str] | None = None,
-) -> None:
-    """K2 for every pair in ONE job: the (pair_key, z, x, y, pbf) table
-    writes once partitioned by (pair_key, z, x); renames restore the
-    per-pair ``{pair}/tiles`` pyramids and the tippecanoe-compatible
-    completion markers (P6) fan out from the manifest — plain filesystem
-    ops, zero extra jobs."""
-    import json as _json
-
-    from sids_data_pipeline_spark.sinks.tiles import _write_marker, tileset_metadata
-
-    stage = os.path.join(out_dir, "_tiles_stage")
-    encoded.write.mode("overwrite").partitionBy("pair_key", "z", "x").parquet(stage)
-    _fanout_partition_dirs(
-        spark, stage, pair_keys, lambda k: os.path.join(out_dir, k, "tiles")
-    )
-    for key in pair_keys:
-        meta = tileset_metadata(
-            key, max_zoom=max_zoom,
-            bounds=(bounds or {}).get(key), fields=fields,
-        )
-        _write_marker(
-            spark,
-            os.path.join(out_dir, key, "tiles", "_tileset_metadata.json"),
-            _json.dumps(meta, separators=(",", ":")),
-        )
+    return kernel
 
 
 def run_pipeline(
@@ -161,10 +167,13 @@ def run_pipeline(
     standardize job's canonical store read back via
     ``spark.read.format("geotiff")``) and the plan shape is identical.
     Externally supplied frames are filtered to the PENDING ids, so the
-    incremental skip prunes their scan too.
+    incremental skip prunes their scan too. A remote ``out_dir`` raises
+    ``ValueError`` before any Spark job: the sinks write from executor
+    Python workers.
     """
     from collections import namedtuple
 
+    require_local_dir(out_dir)
     ledger_path = os.path.join(out_dir, "_ledger")
 
     # The manifest is driver-sized BY CONSTRUCTION — ids arrive as Python
@@ -223,10 +232,13 @@ def run_pipeline(
     if not pending_rows:
         return {"pending": 0, "outputs": []}
     # rebuild the pending manifest from the surviving rows so the compute
-    # gate and the ledger record exactly what gets written
+    # gate and the ledger record exactly what gets written; each pair's
+    # _slot is the sink task that writes it
+    outputs = [r.pair_key for r in pending_rows]
+    n_tasks = min(len(outputs), spark.sparkContext.defaultParallelism)
     pending = spark.createDataFrame(
-        [(r.v_id, r.r_id, r.pair_key) for r in pending_rows],
-        "v_id string, r_id string, pair_key string",
+        [(r.v_id, r.r_id, r.pair_key, i % n_tasks) for i, r in enumerate(pending_rows)],
+        "v_id string, r_id string, pair_key string, _slot int",
     )
 
     pend_v = sorted({r.v_id for r in pending_rows})
@@ -248,71 +260,40 @@ def run_pipeline(
         )
     all_stats = zonal_stats(zones, pixels, stats=stats)
     # P8 gate: only pending pairs get written (a completed pair's stats
-    # may coexist in the frame when its raster is shared with a pending one)
+    # may coexist in the frame when its raster is shared with a pending
+    # one); the inner join with the one-row-per-pair manifest also brings
+    # each row's pair_key and _slot
     gated = all_stats.withColumnsRenamed(
         {"vector_id": "v_id", "raster_id": "r_id"}
-    ).join(pending.select("v_id", "r_id"), ["v_id", "r_id"], "left_semi")
-    from sids_data_pipeline_spark.operators.zonal import _zone_bboxes
-
-    # bbox columns feed tile assignment/density-drop; the WKB geometry
-    # rides along so the tile encoder cuts TRUE polygon rings per tile
-    # (the reference's tippecanoe geometry, tiles.py:16-29) instead of
-    # bbox rectangles.
-    stats_with_geom = _zone_bboxes(
-        gated.join(
-            zones.withColumnsRenamed({"vector_id": "v_id"}).select(
-                "v_id", "fid", "geometry"
-            ),
-            ["v_id", "fid"],
+    ).join(pending, ["v_id", "r_id"])
+    # the WKB geometry rides along so the tile encoder cuts TRUE polygon
+    # rings per tile (the reference's tippecanoe geometry, tiles.py:16-29)
+    feats = gated.join(
+        zones.withColumnsRenamed({"vector_id": "v_id"}).select("v_id", "fid", "geometry"),
+        ["v_id", "fid"],
+    ).select("_slot", "pair_key", "fid", "geometry", *stats)
+    # repartitionById places each pair on its own slot's task: hash
+    # partitioning could stack pairs on one task, and a post-shuffle
+    # groupBy would be coalesced by AQE into a single task
+    written = {
+        r.pair_key
+        for r in feats.repartitionById(n_tasks, "_slot")
+        .sortWithinPartitions("pair_key")
+        .mapInArrow(
+            _sink_kernel(out_dir, stats, max_zoom, max_features_per_tile),
+            "pair_key string",
         )
-    )
-    # pair_key joins the frame so BOTH sinks write every pair in ONE
-    # partitioned job each (constant Spark-job count vs pair count — a
-    # 1000-pair estate is 2 writes, not 2000 sequential actions); the
-    # reference's per-pair blob layout is restored by metadata-only
-    # renames of the partition directories.
-    stats_with_geom = stats_with_geom.withColumn(
-        "pair_key", F.concat_ws("_", "v_id", "r_id")
-    )
-    # Persist ONCE above the two sink actions: without this the spatial
-    # join + aggregate lineage would execute once per write.
-    stats_with_geom = lifecycle.track(stats_with_geom.persist())
-
-    outputs = [r.pair_key for r in pending_rows]
-    _write_pair_geojsonl(
-        spark, stats_with_geom, out_dir, outputs, property_cols=("fid", *stats)
-    )
-    feats = stats_with_geom.select(
-        "pair_key", "fid", "geometry", *stats, "xmin", "ymin", "xmax", "ymax"
-    )
-    tiled = tiles.drop_densest(
-        tiles.assign_tiles(feats, max_zoom=max_zoom),
-        max_features_per_tile,
-        extra_keys=("pair_key",),
-    )
-    encoded = tiles.encode_tiles(
-        tiled, ["fid", *stats, "geometry"], geometry_col="geometry",
-        max_zoom=max_zoom, extra_keys=("pair_key",),
-    )
-    # per-pair extent for the tippecanoe-compatible markers: one tiny
-    # aggregate over the persisted frame (constant job count)
-    pair_bounds = {
-        r.pair_key: (r.w, r.s, r.e, r.n)
-        for r in stats_with_geom.groupBy("pair_key").agg(
-            F.min("xmin").alias("w"), F.min("ymin").alias("s"),
-            F.max("xmax").alias("e"), F.max("ymax").alias("n"),
-        ).collect()
+        .collect()
     }
-    _write_pair_tilesets(
-        spark, encoded, out_dir, outputs, max_zoom=max_zoom,
-        bounds=pair_bounds,
-        fields={"fid": "Number", **{s: "Number" for s in stats}},
-    )
+    # a pair without stats rows still gets its (empty) outputs and marker
+    for key in outputs:
+        if key not in written:
+            _write_pair_data(out_dir, key, None, stats, max_zoom, max_features_per_tile)
+            _write_pair_marker(out_dir, key, None, max_zoom, stats)
 
     manifest.record_done(spark, ledger_path, pending)
-    # release the top-level persist AND the operator-internal ones
-    # (zonal_stats pins the zone table) — repeated invocations in one
-    # session must not accumulate dead caches
-    lifecycle.release(stats_with_geom)
+    # release the operator-internal persists (zonal_stats pins the zone
+    # table) — repeated invocations in one session must not accumulate
+    # dead caches
     lifecycle.release_tracked()
     return {"pending": len(pending_rows), "outputs": outputs}

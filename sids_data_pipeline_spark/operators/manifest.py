@@ -66,22 +66,22 @@ def read_ledger(
 ) -> DataFrame:
     """S7: the ``cols`` of the completion ledger as a DataFrame.
 
-    Only a missing ledger, or one holding no data file yet (a first
-    append killed before its commit), reads as empty; that empty frame
-    is a local relation, so collecting it runs no Spark job. Any other
-    failure (corrupt footer, permissions) surfaces, and a ledger that
-    exists but lacks one of ``cols`` is schema drift and raises — an
-    empty fallback there would silently disable incrementality and re-run
-    ALL completed work. No os.path fast path: scheme-less paths resolve
-    against Hadoop defaultFS, not the driver's local disk.
+    A driver-side Hadoop FileSystem listing decides first: a missing
+    ledger, or one holding no entry Spark would read (only ``_temporary``
+    from a first append killed before its commit), is an empty local
+    relation, built without any read, so collecting it runs no Spark
+    job. Any read failure after that (corrupt footer, permissions)
+    surfaces, and a ledger that lacks one of ``cols`` is schema drift and
+    raises — an empty fallback there would silently disable
+    incrementality and re-run ALL completed work. No os.path fast path:
+    scheme-less paths resolve against Hadoop defaultFS, not the driver's
+    local disk.
     """
-    from pyspark.errors import AnalysisException
-
-    try:
-        ledger = spark.read.parquet(ledger_path)
-    except AnalysisException as ex:
-        if ex.getCondition() not in ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"):
-            raise
+    hpath = spark._jvm.org.apache.hadoop.fs.Path(ledger_path)
+    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    if not fs.exists(hpath) or all(
+        st.getPath().getName().startswith(("_", ".")) for st in fs.listStatus(hpath)
+    ):
         nulls = ", ".join(f"CAST(NULL AS STRING) AS `{c}`" for c in cols)
         return spark.sql(f"SELECT {nulls} WHERE FALSE")
-    return ledger.select(*cols)
+    return spark.read.parquet(ledger_path).select(*cols)

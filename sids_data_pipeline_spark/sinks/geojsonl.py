@@ -6,12 +6,15 @@ via ogr2ogr GeoJSONSeq (reference ``pipeline/processing/vector.py:29-37``:
 is a DataFrame write: geometry decodes WKB → GeoJSON inside an
 Arrow-batched pandas UDF (executor-side, streaming batches — never a
 driver collect), properties serialize JVM-side via ``to_json``, and the
-text writer shards across partitions like any Spark output.
+text writer shards across partitions like any Spark output. The Entry-1
+pipeline builds the same lines inside its per-pair Arrow task
+(:func:`arrow_feature_lines`).
 """
 
 from __future__ import annotations
 
 import json
+import math
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -21,24 +24,41 @@ from pyspark.sql.types import StringType
 from sids_data_pipeline_spark.functions import geo
 
 
+def _feature_line(wkb: bytes | None, props: dict) -> str:
+    """One compact GeoJSON feature line (compact separators mirror the
+    reference's json.dump(separators=(',',':')) utility,
+    pipeline/processing/utils.py:17-19)."""
+    if wkb is None:
+        # GeoJSON allows a null geometry (RFC 7946 §3.2) — emit it
+        # rather than crashing the write on a geometry-less row
+        feat = {"type": "Feature", "geometry": None, "properties": props}
+        return json.dumps(feat, separators=(",", ":"), sort_keys=True)
+    # the ONE serialization lives in geo.geojson_feature — the oracle's
+    # geometry_json_len math depends on it exactly
+    return geo.geojson_feature(bytes(wkb), props)
+
+
 @F.pandas_udf(StringType())
 def _feature_udf(wkb: pd.Series, props_json: pd.Series) -> pd.Series:
-    """One compact GeoJSON feature line per row (compact separators mirror
-    the reference's json.dump(separators=(',',':')) utility,
-    pipeline/processing/utils.py:17-19)."""
-    out = []
-    for b, pj in zip(wkb, props_json):
-        props = json.loads(pj) if pj else {}
-        if b is None:
-            # GeoJSON allows a null geometry (RFC 7946 §3.2) — emit it
-            # rather than crashing the write on a geometry-less row
-            feat = {"type": "Feature", "geometry": None, "properties": props}
-            out.append(json.dumps(feat, separators=(",", ":"), sort_keys=True))
-        else:
-            # the ONE serialization lives in geo.geojson_feature — the
-            # oracle's geometry_json_len math depends on it exactly
-            out.append(geo.geojson_feature(bytes(b), props))
-    return pd.Series(out)
+    return pd.Series(
+        [_feature_line(b, json.loads(pj) if pj else {}) for b, pj in zip(wkb, props_json)]
+    )
+
+
+def arrow_feature_lines(table, property_cols: tuple[str, ...]) -> list[str]:
+    """:func:`to_geojsonl`'s lines for the rows of a ``pyarrow.Table``
+    with WKB in ``geometry``, built without Spark: null properties stay,
+    and a non-finite float becomes the string Spark's ``to_json`` writes
+    for it."""
+    def prop(v):
+        if isinstance(v, float) and not math.isfinite(v):
+            return "NaN" if v != v else ("Infinity" if v > 0 else "-Infinity")
+        return v
+
+    return [
+        _feature_line(r["geometry"], {c: prop(r[c]) for c in property_cols})
+        for r in table.to_pylist()
+    ]
 
 
 def to_geojsonl(

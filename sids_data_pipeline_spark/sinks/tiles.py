@@ -23,6 +23,8 @@ Spark-first equivalents:
   byte-parity with tippecanoe is not a goal (SURVEY.md §7).
 - **upload (K3)** is the write itself: ``partitionBy(z, x)`` to any
   Hadoop-supported URI; ``metadata.json`` sidecar completes the P6 loop.
+- **one tileset in memory** (:func:`tileset_rows`) runs the same three
+  steps without Spark, for the Entry-1 pipeline's per-pair Arrow task.
 """
 
 from __future__ import annotations
@@ -321,6 +323,45 @@ def encode_tiles(
     )
 
 
+def tileset_rows(
+    features: pd.DataFrame,
+    bbox: np.ndarray,
+    max_zoom: int,
+    max_features_per_tile: int,
+) -> list[tuple[int, int, int, bytes]]:
+    """``encode_tiles(drop_densest(assign_tiles(...)))`` for ONE tileset
+    held in memory, as sorted (z, x, y, pbf) rows: the slippy ranges of
+    :func:`_tile_x`/:func:`_tile_y` in NumPy, the same (area desc, fid
+    asc) drop order and the same encoder. ``features`` holds the encoded
+    feature columns in order, WKB in ``geometry``; ``bbox`` is their
+    (n, 4) xmin, ymin, xmax, ymax."""
+    encode = _make_tile_encoder("geometry", max_zoom)
+    xmin, ymin, xmax, ymax = bbox.T
+    rank = np.lexsort((features["fid"].to_numpy(), -(xmax - xmin) * (ymax - ymin)))
+
+    def tile_y(lat, n):
+        t = np.tan(np.radians(lat))
+        return np.floor((1.0 - np.log(t + np.sqrt(t * t + 1.0)) / math.pi) / 2.0 * n)
+
+    out = []
+    for z in range(max_zoom + 1):
+        n = 2.0 ** z
+        clamp = lambda v: np.clip(v, 0, n - 1).astype(np.int64)  # noqa: E731
+        x0, x1 = (clamp(np.floor((v + 180.0) / 360.0 * n)) for v in (xmin, xmax))
+        y0, y1 = clamp(tile_y(ymax, n)), clamp(tile_y(ymin, n))
+        kept: dict[tuple[int, int], list[int]] = {}
+        for i in rank:
+            for x in range(x0[i], x1[i] + 1):
+                for y in range(y0[i], y1[i] + 1):
+                    members = kept.setdefault((x, y), [])
+                    if len(members) < max_features_per_tile:
+                        members.append(i)
+        for (x, y), members in sorted(kept.items()):
+            pdf = features.iloc[members].assign(z=z, x=x, y=y)
+            out.append((z, x, y, encode(pdf)["pbf"].iloc[0]))
+    return out
+
+
 def tileset_metadata(
     name: str,
     max_zoom: int = MAX_ZOOM,
@@ -384,9 +425,11 @@ def write_tileset(
         name, max_zoom=max_zoom, min_zoom=min_zoom, bounds=bounds,
         fields=fields,
     )
+    from sids_data_pipeline_spark.sources.storage import fs_write_text
+
     # leading underscore: Spark data-source listings ignore _*/.* files,
     # so the marker coexists with the parquet parts (like _SUCCESS)
-    _write_marker(
+    fs_write_text(
         tiles.sparkSession,
         os.path.join(path, "_tileset_metadata.json"),
         json.dumps(meta, separators=(",", ":")),
@@ -397,25 +440,6 @@ def read_tileset(spark: SparkSession, path: str) -> DataFrame:
     """Read a tileset back; partition pruning serves single-tile lookups
     (``WHERE z = .. AND x = ..`` touches one directory)."""
     return spark.read.parquet(path)
-
-
-def _write_marker(spark: SparkSession, path: str, content: str) -> None:
-    """Write a small text marker through the Hadoop filesystem for
-    remote URIs (local open() would fail after the parquet write already
-    succeeded, leaving the P6 loop unable to close), plain open()
-    locally."""
-    if "://" in path:
-        jvm = spark._jvm
-        hpath = jvm.org.apache.hadoop.fs.Path(path)
-        fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-        out = fs.create(hpath, True)
-        try:
-            out.write(bytearray(content.encode("utf-8")))
-        finally:
-            out.close()
-    else:
-        with open(path, "w") as fh:
-            fh.write(content)
 
 
 def tileset_markers(out_dir: str) -> set[str]:

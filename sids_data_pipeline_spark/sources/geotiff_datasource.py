@@ -178,17 +178,16 @@ class _WrittenFiles(WriterCommitMessage):
 
 
 def require_local_dir(path: str) -> None:
-    """Refuse a remote output directory. GeoTIFF files are written from
+    """Refuse a remote output directory. The GeoTIFF writer, the
+    standardize job and the pipeline's sinks write their files from
     executor Python workers, which have no JVM gateway: files written
     with os/open there would land on executor-local disks and silently
-    vanish from a remote URI estate. Remote estates export through
-    geotiff.export_geotiff + storage.fs_write_bytes (driver-coordinated
-    Hadoop FS), like the repo's other sinks."""
+    vanish from a remote URI estate."""
     if "://" in path:
         raise ValueError(
-            "geotiff writer writes executor-local files; remote URIs "
-            f"({path!r}) are not supported — use "
-            "export_geotiff() + fs_write_bytes() instead"
+            "output files are written with os/open from executor Python "
+            f"workers; remote URIs ({path!r}) are not supported — write to "
+            "a local or shared POSIX directory and upload it from there"
         )
 
 

@@ -52,27 +52,6 @@ def fs_write_text(spark: SparkSession, path: str, content: str) -> None:
             fh.write(content)
 
 
-def fs_write_bytes(spark: SparkSession, path: str, content: bytes) -> None:
-    """Binary sibling of :func:`fs_write_text` — writes payload bytes
-    (e.g. an encoded GeoTIFF) to any Hadoop-supported URI; local paths
-    use plain open()."""
-    if "://" in path:
-        jvm = spark._jvm
-        hpath = jvm.org.apache.hadoop.fs.Path(path)
-        fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-        out = fs.create(hpath, True)
-        try:
-            out.write(bytearray(content))
-        finally:
-            out.close()
-    else:
-        import os
-
-        os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
-        with open(path, "wb") as fh:
-            fh.write(content)
-
-
 def hadoop_glob(spark: SparkSession, pattern: str) -> list[str]:
     """Expand a glob PATTERN on any Hadoop-supported URI in ONE
     ``globStatus`` round-trip, returning the matching FILE paths sorted.
@@ -114,19 +93,6 @@ def fs_delete(spark: SparkSession, path: str) -> bool:
         os.remove(path)
         return True
     return False
-
-
-def fs_mkdirs(spark: SparkSession, path: str) -> None:
-    """Create a directory (and parents) on any Hadoop-supported URI."""
-    if "://" in path:
-        jvm = spark._jvm
-        hpath = jvm.org.apache.hadoop.fs.Path(path)
-        fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-        fs.mkdirs(hpath)
-    else:
-        import os
-
-        os.makedirs(path, exist_ok=True)
 
 
 def fs_listdir(spark: SparkSession, path: str) -> list[str]:

@@ -64,19 +64,25 @@ def test_rerun_idempotency(spark, vectors, rasters, tmp_path):
 
 
 @pytest.mark.parametrize("layout", ["missing", "temporary_only"])
-def test_first_run_ledger_reads_empty_without_a_job(spark, tmp_path, layout):
+def test_first_run_ledger_reads_empty_without_a_job(spark, tmp_path, layout, monkeypatch):
     """No ledger yet, or one whose first append died before its commit
-    (only ``_temporary``): the ledger reads as empty and collecting it
-    schedules no Spark job."""
+    (only ``_temporary``): the ledger reads as empty without a parquet
+    read, and neither reading nor collecting it schedules a Spark job."""
+    from pyspark.sql.readwriter import DataFrameReader
+
     ledger = tmp_path / "ledger"
     if layout == "temporary_only":
         (ledger / "_temporary" / "0").mkdir(parents=True)
-    done = manifest.read_ledger(spark, str(ledger))
+
+    def no_read(self, *paths, **options):
+        raise AssertionError(f"parquet read of {paths}")
+
+    monkeypatch.setattr(DataFrameReader, "parquet", no_read)
     sc = spark.sparkContext
     group = f"first-run-ledger-{layout}"
     sc.setJobGroup(group, group)
     try:
-        rows = done.collect()
+        rows = manifest.read_ledger(spark, str(ledger)).collect()
     finally:
         sc.setJobGroup(None, None)
     assert rows == []

@@ -121,12 +121,22 @@ def test_pipeline_tiles_carry_true_rings(spark, tmp_path):
     assert seen_hole, "triangle-with-hole zone never decoded with its hole"
 
 
+def _stage_infos(spark, group):
+    """StageInfo of every stage of every job run under ``group`` (a
+    stage a job listed but skipped may have no info)."""
+    st = spark.sparkContext.statusTracker()
+    ids = sorted(
+        {s for j in st.getJobIdsForGroup(group) for s in st.getJobInfo(j).stageIds}
+    )
+    return [i for i in map(st.getStageInfo, ids) if i is not None]
+
+
 def test_pipeline_single_write_constant_job_count(spark, tmp_path, monkeypatch):
-    """Verdict r6 'Next round #6': the sinks write ONCE partitioned by
-    pair_key (constant Spark-job count vs pair count) and the per-pair
-    layout is restored by metadata renames. A 4-pair run must launch no
-    more jobs than a 1-pair run (+ a small constant), every pair_dir must
-    exist, and the whole run persists the lineage exactly once."""
+    """The sinks write every pair in ONE job (constant Spark-job count
+    vs pair count). A 4-pair run must
+    launch no more jobs than a 1-pair run (+ a small constant), every
+    pair dir must exist, nothing is persisted for the sinks, and the
+    sink stage runs one task per pair up to defaultParallelism."""
     import sids_data_pipeline_spark.jobs.pipeline as pl
 
     tracked = []
@@ -159,17 +169,29 @@ def test_pipeline_single_write_constant_job_count(spark, tmp_path, monkeypatch):
         spark, ["zones_grid", "zones_overlap"],
         ["rast_gradient", "rast_checker"], out4, stats=("mean",),
     ), "jcount-four-pair")
-    assert len(tracked) == 1  # one persist for the whole run
+    assert tracked == []  # the sinks persist nothing
     # constant job count: the 4-pair estate costs the same writes as 1
     # pair (broadcast/AQE variation allows a tiny slack, never 4x)
     assert j4 <= j1 + 3, (j1, j4)
+    # the sink is the last stage the pipeline's collect ran (the ledger
+    # append after it is a parquet write)
+    sink = [
+        s for s in _stage_infos(spark, "jcount-four-pair")
+        if s.name.startswith("collect at") and "pipeline.py" in s.name
+    ][-1]
+    assert sink.numTasks == min(4, spark.sparkContext.defaultParallelism), sink
     import os as _os
 
     for pair in ("zones_grid_rast_gradient", "zones_overlap_rast_checker"):
         assert _os.path.isdir(_os.path.join(out4, pair, "export.geojsonl"))
         assert tiles.tileset_complete(_os.path.join(out4, pair, "tiles"))
-    assert not _os.path.exists(_os.path.join(out4, "_tiles_stage"))
-    assert not _os.path.exists(_os.path.join(out4, "_geojsonl_stage"))
+    assert sorted(_os.listdir(out4)) == [
+        "_ledger",
+        "zones_grid_rast_checker",
+        "zones_grid_rast_gradient",
+        "zones_overlap_rast_checker",
+        "zones_overlap_rast_gradient",
+    ]
 
 
 def test_curation_job_action_economy_and_input_signature(spark, tmp_path, monkeypatch):
@@ -276,46 +298,194 @@ def test_pipeline_consumes_standardized_store(spark, tmp_path):
         assert feats[0]["properties"]["mean"] == want
 
 
-def test_fanout_unescapes_hive_partition_names(spark, tmp_path):
-    """Spark Hive-escapes special chars in partition dir names
-    (':' -> %3A); the fan-out must list-and-unescape rather than probe
-    constructed paths, or escaped pairs silently lose their data."""
-    import os
+def _zones(vector_id, fixture="zones_grid"):
+    from sids_data_pipeline_spark.sources.vector import FIXTURE_BUILDERS
 
-    from sids_data_pipeline_spark.jobs.pipeline import _fanout_partition_dirs
+    return [(vector_id, fid, name, wkb) for fid, name, wkb in FIXTURE_BUILDERS[fixture]()]
 
-    stage = str(tmp_path / "stage")
-    df = spark.createDataFrame(
-        [("zones_r:v2", 1), ("plain_key", 2)], "pair_key string, v int"
-    )
-    df.write.mode("overwrite").partitionBy("pair_key").parquet(stage)
+
+def _export_lines(pair_dir):
+    lines = []
+    for part in sorted(os.listdir(os.path.join(pair_dir, "export.geojsonl"))):
+        with open(os.path.join(pair_dir, "export.geojsonl", part)) as f:
+            lines += f.read().splitlines()
+    return lines
+
+
+def test_pipeline_pair_id_with_colon_lands_in_literal_dir(spark, tmp_path):
+    """A ':' in an id (which Hive-style partition names would escape to
+    %3A) lands in the literal ``{v}_{r}`` directory, with its data."""
+    import pyarrow.parquet as pq
+
+    from sids_data_pipeline_spark.schemas import ZONES
+
+    zones = spark.createDataFrame(_zones("zones:v2"), ZONES)
+    out = tmp_path / "out"
+    res = run_pipeline(spark, ["zones:v2"], ["rast_gradient"], str(out), zones_df=zones)
+    assert res["outputs"] == ["zones:v2_rast_gradient"]
+    assert sorted(p.name for p in out.iterdir()) == ["_ledger", "zones:v2_rast_gradient"]
+    pair = out / "zones:v2_rast_gradient"
+    assert len(_export_lines(str(pair))) == 4
+    assert pq.read_table(str(pair / "tiles" / "z=0" / "x=0")).num_rows == 1
+    assert tiles.tileset_markers(str(out)) == {"zones:v2_rast_gradient"}
+
+
+def test_pipeline_pair_without_stats_rows_gets_empty_outputs(spark, tmp_path):
+    """A pending pair with no stats rows — a vector whose zones are
+    filtered away, or a raster id with no pixel rows — still gets an
+    empty export dir, a tiles dir, a marker without bounds and a ledger
+    row."""
+    from sids_data_pipeline_spark.operators import manifest
+    from sids_data_pipeline_spark.schemas import ZONES
+    from sids_data_pipeline_spark.sources.raster import synthetic_raster
+
+    zones = spark.createDataFrame(_zones("zA"), ZONES)  # no zones for zB
+    pixels = synthetic_raster(spark, "rast_gradient")  # none for rast_checker
     out = str(tmp_path / "out")
-    keys = ["zones_r:v2", "plain_key", "empty_pair"]
-    _fanout_partition_dirs(
-        spark, stage, keys, lambda k: os.path.join(out, k, "data")
+    res = run_pipeline(
+        spark, ["zA", "zB"], ["rast_gradient", "rast_checker"], out,
+        zones_df=zones, pixels_df=pixels,
     )
-    for k in ("zones_r:v2", "plain_key"):
-        dst = os.path.join(out, k, "data")
-        assert any(f.endswith(".parquet") for f in os.listdir(dst)), k
-    assert os.path.isdir(os.path.join(out, "empty_pair", "data"))
-    assert not os.path.exists(stage)
+    assert res["pending"] == 4
+    for pair in ("zB_rast_gradient", "zB_rast_checker", "zA_rast_checker"):
+        pair_dir = os.path.join(out, pair)
+        assert os.listdir(os.path.join(pair_dir, "export.geojsonl")) == [], pair
+        assert os.listdir(os.path.join(pair_dir, "tiles")) == ["_tileset_metadata.json"]
+        with open(os.path.join(pair_dir, "tiles", "_tileset_metadata.json")) as f:
+            assert "bounds" not in json.loads(f.read())
+    # the raster with pixels still exports every zone (NULL means and all)
+    assert len(_export_lines(os.path.join(out, "zA_rast_gradient"))) == 4
+    ledger = manifest.read_ledger(spark, os.path.join(out, "_ledger")).collect()
+    assert sorted((r.v_id, r.r_id) for r in ledger) == [
+        ("zA", "rast_checker"), ("zA", "rast_gradient"),
+        ("zB", "rast_checker"), ("zB", "rast_gradient"),
+    ]
 
 
-def test_fanout_rejects_unexpected_partition(spark, tmp_path):
-    import os
+def test_pipeline_sink_kernel_matches_column_operators(spark, tmp_path):
+    """The kernel's tile rows equal encode_tiles(drop_densest(
+    assign_tiles(...))) and its lines equal to_geojsonl, over the
+    fixture zones plus a feature at lon=180, one south of the Mercator
+    cutoff and 70 same-tile features (more than the 64 cap, with area
+    ties), with NULL, NaN and infinite means."""
+    import math
 
-    import pytest as _pytest
+    import numpy as np
+    import pyarrow as pa
 
-    from sids_data_pipeline_spark.jobs.pipeline import _fanout_partition_dirs
+    from sids_data_pipeline_spark.functions import geo
+    from sids_data_pipeline_spark.jobs.pipeline import _write_pair_data
+    from sids_data_pipeline_spark.sinks import geojsonl
 
-    stage = str(tmp_path / "stage")
-    spark.createDataFrame([("rogue", 1)], "pair_key string, v int") \
-        .write.mode("overwrite").partitionBy("pair_key").parquet(stage)
-    with _pytest.raises(ValueError, match="unexpected partition"):
-        _fanout_partition_dirs(
-            spark, stage, ["expected"],
-            lambda k: os.path.join(str(tmp_path), "out", k),
-        )
+    feats = [(fid, wkb) for _, fid, _, wkb in _zones("v", "zones_overlap")]
+    feats += [(101, geo.box_wkb(179.5, 0.5, 180.0, 1.5)),
+              (102, geo.box_wkb(10.0, -89.0, 11.0, -87.0))]
+    for i in range(70):  # dyadic sizes repeat every 7 features: exact area ties
+        x, y, w = 20.0 + (i % 10) * 0.25, 5.0 + (i // 10) * 0.25, (1 + i % 7) / 128
+        feats.append((200 + i, geo.box_wkb(x, y, x + w, y + w)))
+    means = [float(i) for i in range(len(feats))]
+    means[:4] = [None, math.nan, math.inf, -math.inf]
+    rows = [
+        (fid, wkb, mean, *geo.wkb_bbox(wkb))
+        for (fid, wkb), mean in zip(feats, means)
+    ]
+    df = spark.createDataFrame(
+        rows,
+        "fid long, geometry binary, mean double, "
+        "xmin double, ymin double, xmax double, ymax double",
+    )
+    want_tiles = sorted(
+        (r.z, r.x, r.y, bytes(r.pbf))
+        for r in tiles.encode_tiles(
+            tiles.drop_densest(tiles.assign_tiles(df, max_zoom=5), 64),
+            ["fid", "mean", "geometry"], geometry_col="geometry", max_zoom=5,
+        ).collect()
+    )
+    want_lines = sorted(r.value for r in geojsonl.to_geojsonl(df).collect())
+
+    table = pa.table({
+        "pair_key": ["p"] * len(rows),
+        "fid": pa.array([r[0] for r in rows], pa.int64()),
+        "geometry": pa.array([r[1] for r in rows], pa.binary()),
+        "mean": pa.array(means, pa.float64()),
+    })
+    bounds = _write_pair_data(str(tmp_path), "p", table, ("mean",), 5, 64)
+    got_tiles = sorted(
+        (r.z, r.x, r.y, bytes(r.pbf))
+        for r in tiles.read_tileset(spark, str(tmp_path / "p" / "tiles")).collect()
+    )
+    assert got_tiles == want_tiles
+    assert any(x == 2 ** z - 1 for z, x, _, _ in got_tiles if z > 0)  # lon=180 clamps
+    assert any(y == 2 ** z - 1 for z, _, y, _ in got_tiles if z > 0)  # past the cutoff
+    assert sorted(_export_lines(str(tmp_path / "p"))) == want_lines
+    bbox = np.array([r[3:] for r in rows])
+    assert bounds == (*bbox[:, :2].min(axis=0), *bbox[:, 2:].max(axis=0))
+
+
+def test_pipeline_crash_before_marker_converges_on_rerun(spark, tmp_path, monkeypatch):
+    """A failure injected before one pair's marker fails the run with
+    no ledger rows; the rerun converges to outputs byte-identical to a
+    clean run, with each pair in the ledger exactly once."""
+    import pytest
+
+    import sids_data_pipeline_spark.jobs.pipeline as pl
+    from sids_data_pipeline_spark.operators import manifest
+
+    vectors, rasters = ["zones_grid", "zones_overlap"], ["rast_gradient", "rast_checker"]
+    clean, crashed = str(tmp_path / "clean"), str(tmp_path / "crashed")
+    run_pipeline(spark, vectors, rasters, clean)
+
+    write_marker = pl._write_pair_marker
+
+    def crash_before_marker(out_dir, key, *args):
+        # the kernel is pickled with this global, so the crash happens
+        # in the executor's Python worker, after the pair's data files
+        if key == "zones_overlap_rast_checker":
+            raise RuntimeError("injected crash before the marker")
+        write_marker(out_dir, key, *args)
+
+    monkeypatch.setattr(pl, "_write_pair_marker", crash_before_marker)
+    with pytest.raises(Exception, match="injected crash"):
+        run_pipeline(spark, vectors, rasters, crashed)
+    monkeypatch.undo()
+    assert manifest.read_ledger(spark, os.path.join(crashed, "_ledger")).collect() == []
+    assert os.listdir(os.path.join(crashed, "zones_overlap_rast_checker", "tiles"))
+    assert "zones_overlap_rast_checker" not in tiles.tileset_markers(crashed)
+
+    run_pipeline(spark, vectors, rasters, crashed)
+
+    def tree(root):
+        out = {}
+        for d, _, names in os.walk(root):
+            if "_ledger" in os.path.relpath(d, root).split(os.sep):
+                continue
+            for n in names:
+                with open(os.path.join(d, n), "rb") as f:
+                    out[os.path.relpath(os.path.join(d, n), root)] = f.read()
+        return out
+
+    assert tree(crashed) == tree(clean)
+    ledger = manifest.read_ledger(spark, os.path.join(crashed, "_ledger")).collect()
+    assert sorted((r.v_id, r.r_id) for r in ledger) == sorted(
+        (v, r) for v in vectors for r in rasters
+    )
+
+
+def test_pipeline_refuses_remote_out_dir_before_any_job(spark, tmp_path, monkeypatch):
+    """The sinks write with os/open from Python workers, so a remote
+    out_dir raises before any Spark job, and nothing is written."""
+    import pytest
+
+    monkeypatch.chdir(tmp_path)
+    sc = spark.sparkContext
+    sc.setJobGroup("pipeline-remote-out", "pipeline-remote-out")
+    try:
+        with pytest.raises(ValueError, match="remote URIs"):
+            run_pipeline(spark, ["zones_grid"], ["rast_gradient"], "s3a://bucket/out")
+    finally:
+        sc.setJobGroup(None, None)
+    assert sc.statusTracker().getJobIdsForGroup("pipeline-remote-out") == []
+    assert list(tmp_path.iterdir()) == []
 
 
 def test_marker_heal_one_listing_regardless_of_pairs(spark, tmp_path, monkeypatch):
