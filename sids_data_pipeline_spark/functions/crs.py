@@ -99,20 +99,6 @@ def _bind(values: dict[str, "Column"], body) -> Column:
     )[0]
 
 
-def _bind_pair(values: dict[str, "Column"], body) -> tuple[Column, Column]:
-    """:func:`_bind` for (lon, lat)-style pair producers: ``body``
-    returns a 2-tuple; each returned Column carries one full copy of the
-    bound computation (a fixed 2×, replacing the reference-count
-    multiplier)."""
-    packed = _bind(
-        values,
-        lambda **kw: F.struct(
-            body(**kw)[0].alias("a"), body(**kw)[1].alias("b")
-        ),
-    )
-    return packed["a"], packed["b"]
-
-
 def lonlat_to_utm(
     lon: Column, lat: Column, zone: int, south: bool = False
 ) -> tuple[Column, Column]:

@@ -281,56 +281,63 @@ def polys_rect(polys: list[Polygon]) -> tuple[float, float, float, float] | None
 # --- ring clipping + simplification (tile geometry support) ------------------
 
 
-def clip_ring_rect(
-    ring: np.ndarray, xmin: float, ymin: float, xmax: float, ymax: float
-) -> np.ndarray:
-    """Sutherland–Hodgman clip of a closed ring against an axis-aligned
-    rectangle. Input/output are (n, 2) float64 arrays with first == last
-    vertex; an empty (0, 2) array means the ring lies entirely outside.
+def _clip_open_ring(
+    pts: list[tuple[float, float]],
+    xmin: float, ymin: float, xmax: float, ymax: float,
+) -> list[tuple[float, float]]:
+    """Sutherland–Hodgman clip of an open ring of float tuples against an
+    axis-aligned rectangle: the one clipper behind :func:`clip_ring_rect`
+    (MVT tiles) and :func:`clip_ring_box_area2` (zonal weights).
 
-    This is the tile-clipping half of what tippecanoe does when cutting
-    features into tiles (reference ``pipeline/processing/tiles.py:16-29``
-    delegates it to the tippecanoe binary); here it is a small numpy
-    kernel shared by the MVT encoder and its correctness oracle.
-    """
-    arr = np.asarray(ring, dtype=np.float64)
-    # plain tuples in the inner loop: per-element numpy scalar indexing
-    # is several times slower than tuple access, and this runs per ring
-    # per tile per zoom in the MVT encoder
-    pts = [(float(x), float(y)) for x, y in arr]
-    if pts and pts[0] == pts[-1]:
-        pts = pts[:-1]  # operate on the open ring, re-close at the end
-
+    Plain tuples in the inner loop: per-element numpy scalar indexing is
+    several times slower than tuple access, and this runs per ring per
+    tile per zoom in the MVT encoder; a NumPy mask-and-interleave pass
+    is slower still on rings of a few to a dozen vertices."""
     # (axis, bound, keep_leq): clip half-planes in a fixed order so the
     # output vertex sequence is deterministic
-    planes = (
+    for axis, bound, keep_leq in (
         (0, xmin, False),  # x >= xmin
         (0, xmax, True),   # x <= xmax
         (1, ymin, False),  # y >= ymin
         (1, ymax, True),   # y <= ymax
-    )
-    for axis, bound, keep_leq in planes:
+    ):
         if not pts:
             break
+        other_axis = 1 - axis
         out: list[tuple[float, float]] = []
-        for i in range(len(pts)):
-            cur = pts[i]
-            prv = pts[i - 1]
+        prv = pts[-1]
+        prv_in = (prv[axis] <= bound) if keep_leq else (prv[axis] >= bound)
+        for cur in pts:
             cur_in = (cur[axis] <= bound) if keep_leq else (cur[axis] >= bound)
-            prv_in = (prv[axis] <= bound) if keep_leq else (prv[axis] >= bound)
             if cur_in != prv_in:
                 # edge crosses the plane: interpolate the intersection on
                 # the *other* axis (the clipped axis lands exactly on bound)
                 t = (bound - prv[axis]) / (cur[axis] - prv[axis])
-                other = prv[1 - axis] + t * (cur[1 - axis] - prv[1 - axis])
+                other = prv[other_axis] + t * (cur[other_axis] - prv[other_axis])
                 out.append((bound, other) if axis == 0 else (other, bound))
             if cur_in:
                 out.append(cur)
+            prv, prv_in = cur, cur_in
         pts = out
+    return pts
+
+
+def clip_ring_rect(
+    ring: np.ndarray, xmin: float, ymin: float, xmax: float, ymax: float
+) -> np.ndarray:
+    """Clip a closed ring against an axis-aligned rectangle. Input/output
+    are (n, 2) float64 arrays with first == last vertex; an empty (0, 2)
+    array means the ring lies entirely outside.
+
+    This is the tile-clipping half of what tippecanoe does when cutting
+    features into tiles (reference ``pipeline/processing/tiles.py:16-29``
+    delegates it to the tippecanoe binary), shared by the MVT encoder and
+    its correctness oracle.
+    """
+    pts = _clip_open_ring(ring_open_tuples(ring), xmin, ymin, xmax, ymax)
     if len(pts) < 3:
         return np.empty((0, 2), dtype=np.float64)
-    arr_out = np.asarray(pts, dtype=np.float64)
-    return np.vstack([arr_out, arr_out[:1]])
+    return np.asarray(pts + pts[:1], dtype=np.float64)
 
 
 def _dp_keep(pts: np.ndarray, first: int, last: int, tol: float, keep: np.ndarray):
@@ -522,36 +529,11 @@ def wkb_area_sphere_m2(wkb: bytes) -> int:
     return total
 
 
-def _clip_ring_halfplane(pts: list, inside, intersect) -> list:
-    """One Sutherland–Hodgman pass: keep the part of the ring on the
-    `inside` side of a boundary; `intersect` maps an (in, out) edge to
-    its boundary crossing.
-
-    NOTE: :func:`clip_ring_rect` above is the numpy twin of the same
-    algorithm specialized to tile windows (the MVT path) — a behavioral
-    tweak here (degenerate edges, boundary epsilon) must be mirrored
-    there, or the tile path and the zonal-weight path will disagree."""
-    out: list = []
-    n = len(pts)
-    for i in range(n):
-        cur, prv = pts[i], pts[i - 1]
-        cin, pin = inside(cur), inside(prv)
-        if cin:
-            if not pin:
-                out.append(intersect(prv, cur))
-            out.append(cur)
-        elif pin:
-            out.append(intersect(prv, cur))
-    return out
-
-
 def ring_open_tuples(ring) -> list[tuple[float, float]]:
-    """Ring → open (no closing vertex) list of float tuples — the
-    precomputed form :func:`clip_ring_box_area2` consumes. The closing
-    vertex strips only when actually present (an unconditional [:-1]
-    silently dropped a real vertex of an open ring, diverging from
-    clip_ring_rect). Cache this per zone in per-pixel hot paths: the
-    conversion is O(vertices) and was previously rebuilt per pixel."""
+    """Ring → open (no closing vertex) list of float tuples, the form
+    :func:`_clip_open_ring` works on. The closing vertex strips only when
+    actually present, so an open ring keeps all its vertices. Cache this
+    per zone in per-pixel hot paths: the conversion is O(vertices)."""
     arr = np.asarray(ring, dtype=np.float64)
     pts = [(float(x), float(y)) for x, y in arr]
     if pts and pts[0] == pts[-1]:
@@ -560,33 +542,16 @@ def ring_open_tuples(ring) -> list[tuple[float, float]]:
 
 
 def clip_ring_box_area2(ring, x0: float, y0: float, x1: float, y1: float) -> float:
-    """Twice the signed area of ring ∩ [x0,x1]×[y0,y1] via Sutherland–
-    Hodgman clipping (convex clip window ⇒ exact for any simple ring).
-    Used for region-weighted zonal statistics: the weight of a boundary
-    pixel is its clipped area over the cell area. ``ring`` may be a
-    numpy/tuple ring (converted per call) or a pre-converted open tuple
-    list from :func:`ring_open_tuples` (zero conversion — the per-pixel
-    hot-path form)."""
-    if isinstance(ring, list) and (not ring or isinstance(ring[0], tuple)):
-        pts = ring
-    else:
-        pts = ring_open_tuples(ring)
-
-    def ix_v(xb):
-        return lambda p, q: (xb, p[1] + (q[1] - p[1]) * (xb - p[0]) / (q[0] - p[0]))
-
-    def ix_h(yb):
-        return lambda p, q: (p[0] + (q[0] - p[0]) * (yb - p[1]) / (q[1] - p[1]), yb)
-
-    for inside, intersect in (
-        (lambda p: p[0] >= x0, ix_v(x0)),
-        (lambda p: p[0] <= x1, ix_v(x1)),
-        (lambda p: p[1] >= y0, ix_h(y0)),
-        (lambda p: p[1] <= y1, ix_h(y1)),
-    ):
-        pts = _clip_ring_halfplane(pts, inside, intersect)
-        if not pts:
-            return 0.0
+    """Twice the signed area of ring ∩ [x0,x1]×[y0,y1]: the shoelace of
+    :func:`_clip_open_ring` (convex clip window ⇒ exact for any simple
+    ring). Used for region-weighted zonal statistics: the weight of a
+    boundary pixel is its clipped area over the cell area. ``ring`` may
+    be a numpy/tuple ring (converted per call) or a pre-converted open
+    tuple list from :func:`ring_open_tuples` (zero conversion — the
+    per-pixel hot-path form)."""
+    if not (isinstance(ring, list) and (not ring or isinstance(ring[0], tuple))):
+        ring = ring_open_tuples(ring)
+    pts = _clip_open_ring(ring, x0, y0, x1, y1)
     area2 = 0.0
     for (ax, ay), (bx, by) in zip(pts, pts[1:] + pts[:1]):
         area2 += ax * by - bx * ay

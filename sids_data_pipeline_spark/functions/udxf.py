@@ -4,8 +4,8 @@
 The reference's extension points are process-level function chains
 (reference ``pipeline/processing/__main__.py:13-17``); the Spark
 equivalents are function-level. Besides the pandas scalar UDFs
-(zonal kernel) and applyInPandas/mapInPandas group kernels (GeoTIFF
-encode, as-of join) used throughout, this module exercises the remaining
+(zonal kernel) and applyInPandas/mapInPandas group kernels (as-of
+join) used throughout, this module exercises the remaining
 two extension classes as first-class, catalog-registered operators:
 
 - :class:`SentenceSplit` — a **Python UDTF**

@@ -84,8 +84,3 @@ def temp_views(spark: SparkSession, **dfs: DataFrame) -> Iterator[None]:
         yield
     finally:
         drop_views(spark, *dfs)
-
-
-def clear_cache(spark: SparkSession) -> None:
-    """Session-wide cache flush (the reference's clean_all, cleanup.py:54-58)."""
-    spark.catalog.clearCache()

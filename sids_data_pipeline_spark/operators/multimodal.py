@@ -25,7 +25,7 @@ parse raises (corrupt media should be loud, same contract as the
 GeoTIFF codec).
 
 Generalizes the reference's binary ingestion pattern (GeoTIFF bytes →
-pixels via ``binaryFile`` + mapInPandas, SURVEY.md §2a S5); here the
+pixels via ``binaryFile`` + mapInArrow, SURVEY.md §2a S5); here the
 payloads are arbitrary media instead of rasters.
 """
 

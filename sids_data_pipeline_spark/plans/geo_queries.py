@@ -73,7 +73,7 @@ def _cached_fixture_dir(key: str, filename: str, arr_fn, **encode_kw) -> str:
     """One process-cached temp directory per fixture key, holding a
     deterministic GeoTIFF written once. Cached so repeated catalog/gate/
     bench invocations reuse one directory instead of leaking a fresh
-    mkdtemp per run, and so every scan path (mapInPandas ingest AND the
+    mkdtemp per run, and so every scan path (mapInArrow ingest AND the
     registered DataSource) reads the SAME bytes."""
     import os
     import tempfile
@@ -381,7 +381,7 @@ FROM m
 def _geotiff_ingest_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S5 end-to-end: encode the gradient fixture in the reference's own
     output profile (ZSTD + 128×128 tiles, batch/processing/raster.py:7-8)
-    and ingest it distributed (binaryFile → mapInPandas). Deterministic
+    and ingest it distributed (binaryFile → mapInArrow). Deterministic
     array → the oracle recomputes the same lattice from range()."""
     from sids_data_pipeline_spark.sources.geotiff import ingest_geotiff
 

@@ -47,6 +47,9 @@ DEFAULT_TILE_BUFFER = 80
 # one rendered pixel at a 256-px tile: extent / 256. Applied only below the
 # max zoom (tippecanoe --simplify-only-low-zooms, reference tiles.py:23)
 DEFAULT_SIMPLIFY_TOL = 16.0
+# the Web Mercator latitude limit (tippecanoe's too): the poles project to
+# infinity, so latitudes clamp here before the slippy y math
+MAX_MERCATOR_LAT = 85.0511287798066
 
 
 def _tile_x(lon, z):
@@ -83,7 +86,11 @@ def assign_tiles(
     clamp = lambda v: F.least(F.greatest(v, F.lit(0)), nmax)  # noqa: E731
     x0, x1 = clamp(_tile_x(xmin, zc)), clamp(_tile_x(xmax, zc))
     # slippy y grows southward: ymax (north) maps to the smaller y index
-    y0, y1 = clamp(_tile_y(ymax, zc)), clamp(_tile_y(ymin, zc))
+    clamp_lat = lambda v: F.least(  # noqa: E731
+        F.greatest(v, F.lit(-MAX_MERCATOR_LAT)), F.lit(MAX_MERCATOR_LAT)
+    )
+    y0 = clamp(_tile_y(clamp_lat(ymax), zc))
+    y1 = clamp(_tile_y(clamp_lat(ymin), zc))
     return (
         with_z.withColumn("x", F.explode(F.sequence(x0, x1)))
         .withColumn("y", F.explode(F.sequence(y0, y1)))
@@ -125,7 +132,7 @@ def _local_coords(z: int, x: int, y: int, xmin, ymin, xmax, ymax, extent: int):
         return round(((lon + 180.0) / 360.0 * n - x) * extent)
 
     def ly(lat):
-        t = math.tan(math.radians(lat))
+        t = math.tan(math.radians(min(max(lat, -MAX_MERCATOR_LAT), MAX_MERCATOR_LAT)))
         merc = (1.0 - math.log(t + math.sqrt(t * t + 1.0)) / math.pi) / 2.0
         return round((merc * n - y) * extent)
 
@@ -136,16 +143,21 @@ def _local_coords(z: int, x: int, y: int, xmin, ymin, xmax, ymax, extent: int):
     return [(x0, y0), (x1, y0), (x1, y1), (x0, y1), (x0, y0)]
 
 
+def _mercator_y(lat: np.ndarray) -> np.ndarray:
+    """Latitudes → Web Mercator y in [0, 1], 0 at the north limit: the
+    NumPy form of :func:`_tile_y`'s math, latitudes clamped first."""
+    t = np.tan(np.radians(np.clip(lat, -MAX_MERCATOR_LAT, MAX_MERCATOR_LAT)))
+    return (1.0 - np.log(t + np.sqrt(t * t + 1.0)) / math.pi) / 2.0
+
+
 def _project_ring(z: int, x: int, y: int, ring: np.ndarray, extent: int) -> np.ndarray:
     """Vectorised lon/lat ring → tile-local float coordinates (same slippy
     math as :func:`_local_coords`, unrounded)."""
     n = 2.0 ** z
-    lon, lat = ring[:, 0], ring[:, 1]
-    t = np.tan(np.radians(lat))
-    merc = (1.0 - np.log(t + np.sqrt(t * t + 1.0)) / math.pi) / 2.0
-    return np.column_stack(
-        (((lon + 180.0) / 360.0 * n - x) * extent, (merc * n - y) * extent)
-    )
+    return np.column_stack((
+        ((ring[:, 0] + 180.0) / 360.0 * n - x) * extent,
+        (_mercator_y(ring[:, 1]) * n - y) * extent,
+    ))
 
 
 def geometry_tile_rings(
@@ -339,16 +351,12 @@ def tileset_rows(
     xmin, ymin, xmax, ymax = bbox.T
     rank = np.lexsort((features["fid"].to_numpy(), -(xmax - xmin) * (ymax - ymin)))
 
-    def tile_y(lat, n):
-        t = np.tan(np.radians(lat))
-        return np.floor((1.0 - np.log(t + np.sqrt(t * t + 1.0)) / math.pi) / 2.0 * n)
-
     out = []
     for z in range(max_zoom + 1):
         n = 2.0 ** z
         clamp = lambda v: np.clip(v, 0, n - 1).astype(np.int64)  # noqa: E731
         x0, x1 = (clamp(np.floor((v + 180.0) / 360.0 * n)) for v in (xmin, xmax))
-        y0, y1 = clamp(tile_y(ymax, n)), clamp(tile_y(ymin, n))
+        y0, y1 = (clamp(np.floor(_mercator_y(v) * n)) for v in (ymax, ymin))
         kept: dict[tuple[int, int], list[int]] = {}
         for i in rank:
             for x in range(x0[i], x1[i] + 1):

@@ -19,11 +19,16 @@ sample bytes. This module implements that subset in pure numpy:
 - :func:`encode_geotiff` — the matching writer (K5): single-band
   float64, one strip or ``tile=N`` tiled layout, ModelPixelScale +
   ModelTiepoint georef.
-- :func:`ingest_geotiff` — the DISTRIBUTED ingest: ``binaryFile`` scan →
-  ``mapInPandas`` decode → long-format PIXELS rows. One task per file,
-  payloads never touch the driver; at 100 TB the parallelism is file
-  count and the output partitions by raster_id + coarse grid
-  (sources/storage.write_pixels_partitioned).
+- :func:`pixel_batches` — the one pixel-row builder: one file's bytes →
+  long-format PIXELS Arrow batches. The registered ``geotiff`` source
+  (geotiff_datasource) and :func:`ingest_geotiff` both yield from it.
+- :func:`ingest_geotiff` — the DISTRIBUTED ingest for any Hadoop
+  filesystem and for streaming: ``binaryFile`` scan → ``mapInArrow``
+  over :func:`pixel_batches`. Payloads never touch the driver; at 100 TB
+  the parallelism is file count and the output partitions by raster_id
+  + coarse grid (sources/storage.write_pixels_partitioned).
+- :func:`encode_pixels` — one raster's pixel-centre columns → GeoTIFF
+  bytes, the encode step of the registered ``geotiff`` writer.
 - :func:`standardize_geotiff` — Entry-2 for one file in array form:
   decode, band select, clip as a row/column slice, ZSTD 128-tiled
   encode; no pixel rows (the standardize job's per-file step).
@@ -602,8 +607,7 @@ def decode_band_grids(data: bytes, band: int | None, label: str):
     """Decode one GeoTIFF → ([(band, values float64 [h, w]), ...],
     (origin_x, origin_y, sx, sy)) for the 1-based ``band``, or for every
     band when it is None, with the file's nodata cells as NaN. The one
-    decode step of the pixel-row readers (:func:`pixel_decode_fn`, the
-    registered ``geotiff`` source) and of :func:`standardize_geotiff`.
+    decode step of :func:`pixel_batches` and :func:`standardize_geotiff`.
     ``label`` (the file's path) names the file in every error."""
     try:
         bands3, georef, nodata = decode_geotiff_bands(data)
@@ -620,6 +624,34 @@ def decode_band_grids(data: bytes, band: int | None, label: str):
             vals = np.where(vals == nodata, np.nan, vals)
         grids.append((b, vals))
     return grids, georef
+
+
+def pixel_batches(
+    data: bytes, band: int | None, path: str
+) -> Iterator["pa.RecordBatch"]:
+    """One GeoTIFF's bytes → PIXELS record batches, one per band (the
+    1-based ``band``, or every band when it is None), with pixel-centre
+    coordinates; ``raster_id`` is the stem of ``path``. The one pixel-row
+    builder: the registered ``geotiff`` source and
+    :func:`pixels_from_files` both yield from it."""
+    import pyarrow as pa
+
+    grids, (ox, oy, sx, sy) = decode_band_grids(data, band, path)
+    h, w = grids[0][1].shape
+    ys, xs = np.divmod(np.arange(h * w), w)
+    stem = os.path.basename(path).rsplit(".", 1)[0]
+    for b, grid in grids:
+        yield pa.RecordBatch.from_pydict(
+            {
+                "raster_id": np.repeat(stem, h * w),
+                "band": np.full(h * w, b, dtype="int32"),
+                "y": ys.astype("int32"),
+                "x": xs.astype("int32"),
+                "lon": ox + (xs + 0.5) * sx,
+                "lat": oy - (ys + 0.5) * sy,
+                "val": grid.ravel(),
+            }
+        )
 
 
 def decode_geotiff(data: bytes, band: int | None = None):
@@ -870,38 +902,6 @@ def encode_geotiff(
     return b"".join(out)
 
 
-def encode_pixel_group(
-    pdf: "pd.DataFrame",
-    nodata: float = -9999.0,
-    compress: str | None = None,
-    tile: int | None = None,
-) -> bytes:
-    """One raster's long-format pixel rows → encoded GeoTIFF bytes: the
-    pandas face of :func:`encode_pixels`, used by the applyInPandas sink
-    (:func:`export_geotiff`)."""
-    if "band" in pdf.columns:
-        require_single_band(pdf["band"].dropna().unique())
-    return encode_pixels(
-        pdf["lon"].to_numpy(),
-        pdf["lat"].to_numpy(),
-        pdf["val"].to_numpy(dtype="float64"),
-        nodata=nodata,
-        compress=compress,
-        tile=tile,
-    )
-
-
-def require_single_band(bands) -> None:
-    """Raise unless ``bands`` (one raster's distinct non-null band
-    values) names at most one band: the encoders write single-band
-    files."""
-    if len(bands) > 1:
-        raise ValueError(
-            "pixel GeoTIFF encode writes single-band files; split by band "
-            f"first (got bands {sorted(bands)})"
-        )
-
-
 def encode_pixels(
     lon: np.ndarray,
     lat: np.ndarray,
@@ -911,8 +911,8 @@ def encode_pixels(
     tile: int | None = None,
 ) -> bytes:
     """One raster's pixel-centre coordinates and float64 values →
-    encoded GeoTIFF bytes. Shared by :func:`encode_pixel_group` and the
-    registered write-path data source (geotiff_datasource).
+    encoded GeoTIFF bytes: the encode step of the registered
+    ``write.format("geotiff")`` sink (geotiff_datasource.GeoTiffWriter).
 
     Places rows/cols by COORDINATE position, not by y/x index
     convention: ingest_geotiff's y grows southward while
@@ -998,63 +998,19 @@ def standardize_geotiff(
     )
 
 
-def export_geotiff(
-    pixels: DataFrame,
-    nodata: float = -9999.0,
-    compress: str | None = None,
-    tile: int | None = None,
-) -> DataFrame:
-    """K5 sink: pixel DataFrame → one encoded GeoTIFF per raster_id.
-    Pass ``compress='zstd', tile=128`` for the reference's standardized
-    output profile (batch/processing/raster.py:7-8).
+def pixels_from_files(files: DataFrame, band: int | None = None) -> DataFrame:
+    """``binaryFile`` rows (batch or streaming) → PIXELS: one
+    ``mapInArrow`` task decodes each file's ``content`` through
+    :func:`pixel_batches`. Shared by :func:`ingest_geotiff` and
+    ``streaming.jobs.streaming_raster_ingest``."""
 
-    applyInPandas groups by raster (one file per raster is inherent to
-    the output format, so the group = the file); each group pivots its
-    long-format rows back to the 2-D grid, infers the georef from the
-    coordinate lattice, and emits (raster_id, tiff binary). NULL values
-    encode as the nodata sentinel. Round-trips through decode_geotiff
-    (tested). The caller writes the payloads wherever its storage lives.
-    """
+    def decode(batches):
+        for batch in batches:
+            paths = batch.column("path").to_pylist()
+            for path, content in zip(paths, batch.column("content")):
+                yield from pixel_batches(content.as_py(), band, path)
 
-    def encode(pdf: pd.DataFrame) -> pd.DataFrame:
-        rid = pdf["raster_id"].iloc[0]
-        data = encode_pixel_group(pdf, nodata=nodata, compress=compress, tile=tile)
-        return pd.DataFrame([{"raster_id": rid, "tiff": data}])
-
-    return pixels.groupBy("raster_id").applyInPandas(
-        encode, "raster_id string, tiff binary"
-    )
-
-
-def pixel_decode_fn(band: int | None = None):
-    """The executor-side (path, content) → PIXELS decode generator,
-    shared by the batch ingest (:func:`ingest_geotiff`) and the
-    Structured Streaming wrapper (streaming.jobs.streaming_raster_
-    ingest) so the two paths cannot drift semantically."""
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for fpath, content in zip(pdf["path"], pdf["content"]):
-                grids, (ox, oy, sx, sy) = decode_band_grids(
-                    bytes(content), band, fpath
-                )
-                h, w = grids[0][1].shape
-                yy, xx = np.mgrid[0:h, 0:w]
-                stem = fpath.rsplit("/", 1)[-1].rsplit(".", 1)[0]
-                for b, grid in grids:
-                    yield pd.DataFrame(
-                        {
-                            "raster_id": stem,
-                            "band": np.int32(b),
-                            "y": yy.ravel().astype("int32"),
-                            "x": xx.ravel().astype("int32"),
-                            "lon": ox + (xx.ravel() + 0.5) * sx,
-                            "lat": oy - (yy.ravel() + 0.5) * sy,
-                            "val": grid.ravel(),
-                        }
-                    )
-
-    return decode
+    return files.select("path", "content").mapInArrow(decode, PIXELS)
 
 
 def ingest_geotiff(
@@ -1063,17 +1019,15 @@ def ingest_geotiff(
     band: int | None = None,
 ) -> DataFrame:
     """Distributed GeoTIFF → PIXELS: binaryFile scan (one row per file,
-    content never driver-collected) → mapInPandas decode → long-format
+    content never driver-collected) → ``mapInArrow`` decode → long-format
     pixel rows with centre coordinates. raster_id is the file stem —
-    the reference's blob-name id convention (data.py:12).
+    the reference's blob-name id convention (data.py:12). This is the
+    route for any Hadoop filesystem (wasbs/abfs); the registered
+    ``geotiff`` source reads local and ``pyarrow.fs`` paths.
 
     ``band=None`` emits every band of a multi-band file (1-based band
     column); ``band=k`` selects one band at decode time — the P4 band
     selection of the reference's ``gdal_translate -b {band}``
     (batch/processing/raster.py:34), applied before any rows material-
     ize. Single-band files emit band=1 either way."""
-
-    files = spark.read.format("binaryFile").load(path_glob)
-    return files.select("path", "content").mapInPandas(
-        pixel_decode_fn(band), PIXELS
-    )
+    return pixels_from_files(spark.read.format("binaryFile").load(path_glob), band)

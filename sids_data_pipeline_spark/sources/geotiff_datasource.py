@@ -1,13 +1,15 @@
 """GeoTIFF as a first-class Spark data source (Spark 4 Python
 DataSource API): ``spark.read.format("geotiff").load(glob)``.
 
-This is the idiomatic-Spark face of S5 (SURVEY.md §2a): instead of the
-two-step binaryFile → mapInPandas composition (:func:`geotiff.ingest_
-geotiff`, kept as the pipeline-internal path), the codec plugs into the
-planner itself — the source reports its schema, plans one input
-partition per raster file at the driver (a listing, no decode), and each
-executor partition decodes only its own file via the pure-numpy codec
-and streams Arrow batches back. Registration is per-session::
+This is the idiomatic-Spark face of S5 (SURVEY.md §2a) for local and
+``pyarrow.fs`` paths; :func:`geotiff.ingest_geotiff` (binaryFile →
+mapInArrow) is the route for any Hadoop filesystem (wasbs/abfs) and for
+streaming. Both build their rows with :func:`geotiff.pixel_batches`.
+Here the codec plugs into the planner itself — the source reports its
+schema, plans one input partition per raster file at the driver (a
+listing, no decode), and each executor partition decodes only its own
+file via the pure-numpy codec and streams Arrow batches back.
+Registration is per-session::
 
     from sids_data_pipeline_spark.sources.geotiff_datasource import register
     register(spark)
@@ -125,31 +127,11 @@ class GeoTiffReader(DataSourceReader):
         return [_FilePartition(p, self._band) for p in paths]
 
     def read(self, partition: _FilePartition) -> Iterator[tuple]:
-        import numpy as np
-        import pyarrow as pa
+        from sids_data_pipeline_spark.sources.geotiff import pixel_batches
 
-        from sids_data_pipeline_spark.sources.geotiff import decode_band_grids
-
-        grids, (ox, oy, sx, sy) = decode_band_grids(
+        yield from pixel_batches(
             _read_bytes(partition.path), partition.band, partition.path
         )
-        h, w = grids[0][1].shape
-        yy, xx = np.mgrid[0:h, 0:w]
-        xs = xx.ravel()
-        ys = yy.ravel()
-        stem = os.path.basename(partition.path).rsplit(".", 1)[0]
-        for b, grid in grids:
-            yield pa.RecordBatch.from_pydict(
-                {
-                    "raster_id": np.repeat(stem, h * w),
-                    "band": np.full(h * w, b, dtype="int32"),
-                    "y": ys.astype("int32"),
-                    "x": xs.astype("int32"),
-                    "lon": ox + (xs + 0.5) * sx,
-                    "lat": oy - (ys + 0.5) * sy,
-                    "val": grid.ravel(),
-                }
-            )
 
 
 class GeoTiffDataSource(DataSource):
@@ -265,9 +247,12 @@ class GeoTiffWriter(DataSourceArrowWriter):
                 )
             group = table.filter(pc.equal(ids, rid))
             if "band" in group.column_names:
-                geotiff.require_single_band(
-                    pc.unique(group.column("band")).drop_null().to_pylist()
-                )
+                bands = pc.unique(group.column("band")).drop_null().to_pylist()
+                if len(bands) > 1:
+                    raise ValueError(
+                        f"geotiff writer: {rid} holds bands {sorted(bands)}; "
+                        "files are single-band, split by band first"
+                    )
             data = geotiff.encode_pixels(
                 group.column("lon").to_numpy(),
                 group.column("lat").to_numpy(),

@@ -680,14 +680,14 @@ def streaming_raster_ingest(
     incrementality ledger — Spark tracks processed files exactly-once,
     so a re-run ingests only files that arrived since the last drain (no
     manifest anti-join needed on this path). The executor decode is the
-    SAME generator as the batch ingest (geotiff.pixel_decode_fn), so the
-    two paths cannot drift. Runs with Trigger.AvailableNow
+    batch ingest's own ``mapInArrow`` over ``geotiff.pixel_batches``
+    (:func:`geotiff.pixels_from_files`), so the two paths cannot drift.
+    Runs with Trigger.AvailableNow
     (drain-and-stop — the reference's batch cadence); a deployment
     wanting continuous tailing drops the trigger and sets
     ``max_files_per_trigger`` to bound per-batch decode work.
     """
-    from sids_data_pipeline_spark.schemas import PIXELS
-    from sids_data_pipeline_spark.sources.geotiff import pixel_decode_fn
+    from sids_data_pipeline_spark.sources.geotiff import pixels_from_files
 
     # streaming sources need the schema pinned; binaryFile's is fixed
     reader = spark.readStream.format("binaryFile").schema(
@@ -696,9 +696,7 @@ def streaming_raster_ingest(
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
     files = reader.load(input_glob)
-    pixels = files.select("path", "content").mapInPandas(
-        pixel_decode_fn(band), PIXELS
-    )
+    pixels = pixels_from_files(files, band)
     q = (
         pixels.writeStream.format("parquet")
         .option("path", out_dir)

@@ -142,6 +142,20 @@ def test_clip_ring_rect_cases():
     # clip window entirely inside the ring: the window itself comes back
     win = geo.clip_ring_rect(square, 2, 2, 8, 8)
     assert {tuple(p) for p in win[:-1]} == {(2, 2), (8, 2), (8, 8), (2, 8)}
+    # a vertex exactly on a clip edge counts as inside; the crossing of
+    # its outgoing edge lands on that vertex again
+    on_edge = np.array([(0.0, 0.0), (10.0, 0.0), (5.0, 5.0), (0.0, 0.0)])
+    assert geo.clip_ring_rect(on_edge, 5, -5, 15, 15).tolist() == [
+        [5, 5], [5, 0], [10, 0], [5, 5], [5, 5]
+    ]
+    # a zero-length edge never crosses a plane, so no division by zero
+    repeat = np.array(
+        [(0.0, 0.0), (10.0, 0.0), (10.0, 0.0), (10.0, 10.0), (0.0, 10.0),
+         (0.0, 0.0)]
+    )
+    assert geo.clip_ring_rect(repeat, 5, -5, 15, 15).tolist() == [
+        [5, 0], [10, 0], [10, 0], [10, 10], [5, 10], [5, 0]
+    ]
 
 
 def test_simplify_ring_drops_collinear_and_small_detail():
@@ -205,6 +219,11 @@ def test_clip_area_rect_matches_closed_form():
         wy = max(0.0, min(3.0, y1) - max(1.0, y0))
         got = geo.clip_ring_box_area2(rect, x0, y0, x1, y1) / 2.0
         assert abs(got - wx * wy) < 1e-12, box
+    # a vertex exactly on a clip edge, and a zero-length edge
+    on_edge = [(0.0, 0.0), (10.0, 0.0), (5.0, 5.0), (0.0, 0.0)]
+    assert geo.clip_ring_box_area2(on_edge, 5, -5, 15, 15) == 25.0
+    repeat = [(0.0, 0.0), (10.0, 0.0), (10.0, 0.0), (10.0, 10.0), (0.0, 10.0)]
+    assert geo.clip_ring_box_area2(repeat, 5, -5, 15, 15) == 100.0
 
 
 def test_clip_area_triangle_hand_computed():

@@ -1,5 +1,5 @@
 """Real ingest round-trips: GeoTIFF (pure-numpy codec, distributed via
-binaryFile + mapInPandas) and GeoPackage (stdlib sqlite3) — the S5/S6
+binaryFile + mapInArrow) and GeoPackage (stdlib sqlite3) — the S5/S6
 paths that previously required GDAL, now live for the engine's
 standardised profiles. Ends with the full chain: write GeoTIFF + GPKG →
 ingest both → zonal stats equals the fixture-path result."""
@@ -147,12 +147,25 @@ def test_geopackage_roundtrip(spark, tmp_path):
         assert np.array_equal(want[0][0], have[0][0])
 
 
-def test_export_geotiff_roundtrip(spark, gradient_array):
+def _sink(pixels, out, **options) -> dict[str, bytes]:
+    """Write ``pixels`` through the registered ``geotiff`` sink into
+    ``out``; → {raster_id: file bytes}."""
+    from sids_data_pipeline_spark.sources.geotiff_datasource import register
+
+    register(pixels.sparkSession)
+    writer = pixels.repartition("raster_id").write.format("geotiff")
+    for key, value in options.items():
+        writer = writer.option(key, str(value))
+    writer.mode("overwrite").save(str(out))
+    return {p.stem: p.read_bytes() for p in sorted(out.glob("*.tif"))}
+
+
+def test_geotiff_sink_roundtrip(spark, tmp_path, gradient_array):
     """K5: pixels → GeoTIFF → decode reproduces values and georef."""
     pixels = synthetic_raster(spark, "rast_gradient")
-    out = geotiff.export_geotiff(pixels).collect()
-    assert len(out) == 1 and out[0].raster_id == "rast_gradient"
-    values, (ox, oy, sx, sy), nodata = geotiff.decode_geotiff(bytes(out[0].tiff))
+    out = _sink(pixels, tmp_path / "out")
+    assert list(out) == ["rast_gradient"]
+    values, (ox, oy, sx, sy), nodata = geotiff.decode_geotiff(out["rast_gradient"])
     assert values.shape == (GRID_N, GRID_N)
     # row 0 is the northern edge; flipping recovers the fixture layout
     assert np.array_equal(values[::-1], gradient_array)
@@ -161,11 +174,11 @@ def test_export_geotiff_roundtrip(spark, gradient_array):
     assert nodata == -9999.0
 
 
-def test_export_geotiff_nodata(spark):
+def test_geotiff_sink_nodata(spark, tmp_path):
     """NULL pixels encode as the nodata sentinel and come back as NaN."""
     pixels = synthetic_raster(spark, "rast_nodata")
-    out = geotiff.export_geotiff(pixels).collect()[0]
-    values, _, nodata = geotiff.decode_geotiff(bytes(out.tiff))
+    out = _sink(pixels, tmp_path / "out")["rast_nodata"]
+    values, _, nodata = geotiff.decode_geotiff(out)
     n_nodata = int((values == nodata).sum())
     n_null = synthetic_raster(spark, "rast_nodata").filter("val IS NULL").count()
     assert n_nodata == n_null > 0
@@ -215,13 +228,13 @@ def test_ingest_then_export_preserves_orientation(spark, tmp_path, gradient_arra
         )
     )
     pixels = geotiff.ingest_geotiff(spark, str(tif))
-    out = geotiff.export_geotiff(pixels).collect()[0]
-    values, (ox, oy, sx, sy), _ = geotiff.decode_geotiff(bytes(out.tiff))
+    out = _sink(pixels, tmp_path / "out")["rast_orient"]
+    values, (ox, oy, sx, sy), _ = geotiff.decode_geotiff(out)
     assert np.array_equal(values, gradient_array[::-1])
     assert abs(ox) < 1e-9 and abs(oy - GRID_N * PIXEL_DEG) < 1e-9
 
 
-def test_export_geotiff_non_square_pixels(spark):
+def test_geotiff_sink_non_square_pixels(spark, tmp_path):
     """sy != sx must be encoded in ModelPixelScale (not sx twice)."""
     rows = [
         ("r", 1, y, x, 0.05 + 0.1 * x, 0.1 + 0.2 * y, float(10 * y + x))
@@ -232,8 +245,8 @@ def test_export_geotiff_non_square_pixels(spark):
         rows,
         "raster_id string, band int, y int, x int, lon double, lat double, val double",
     )
-    out = geotiff.export_geotiff(pixels).collect()[0]
-    values, (ox, oy, sx, sy), _ = geotiff.decode_geotiff(bytes(out.tiff))
+    out = _sink(pixels, tmp_path / "out")["r"]
+    values, (ox, oy, sx, sy), _ = geotiff.decode_geotiff(out)
     assert abs(sx - 0.1) < 1e-12 and abs(sy - 0.2) < 1e-12
     assert abs(ox) < 1e-12 and abs(oy - 0.6) < 1e-12
     # row 0 = northernmost = fixture y=2
@@ -257,18 +270,20 @@ def test_geotiff_deflate_roundtrip(gradient_array):
         geotiff.encode_geotiff(gradient_array, 0.0, 6.4, 0.1, compress="jpeg")
 
 
-def test_export_geotiff_reference_profile(spark, gradient_array):
+def test_geotiff_sink_reference_profile(spark, tmp_path, gradient_array):
     """K5 with the reference output profile (ZSTD + 128 tiles) decodes
     back to the same grid."""
     pixels = synthetic_raster(spark, "rast_gradient")
-    out = geotiff.export_geotiff(pixels, compress="zstd", tile=128).collect()
-    values, _, _ = geotiff.decode_geotiff(bytes(out[0].tiff))
+    out = _sink(pixels, tmp_path / "out", compress="zstd", tile=128)
+    values, _, _ = geotiff.decode_geotiff(out["rast_gradient"])
     assert np.array_equal(values[::-1], gradient_array)
 
 
 def test_geotiff_datasource_partitions_per_file(spark, tmp_path):
     """The registered format plans one partition per raster file and
-    matches the mapInPandas ingest path row-for-row."""
+    matches the binaryFile ingest path row-for-row on every PIXELS
+    column, for single-band files and for a 3-band file read with no
+    band and with band 2."""
     import numpy as np
 
     from sids_data_pipeline_spark.sources.geotiff import (
@@ -282,17 +297,28 @@ def test_geotiff_datasource_partitions_per_file(spark, tmp_path):
         (tmp_path / f"{stem}.tif").write_bytes(
             encode_geotiff(arr, origin_x=0.0, origin_y=0.4, pixel_deg=0.1)
         )
+    rgb = tmp_path / "rgb"
+    rgb.mkdir()
+    (rgb / "rgb.tif").write_bytes(
+        encode_geotiff(_rgb_array(), origin_x=1.0, origin_y=0.5, pixel_deg=0.1)
+    )
     register(spark)
     ds = spark.read.format("geotiff").load(str(tmp_path / "*.tif"))
     assert ds.rdd.getNumPartitions() == 2
-    got = sorted(
-        (r.raster_id, r.x, r.y, r.val) for r in ds.collect()
-    )
-    want = sorted(
-        (r.raster_id, r.x, r.y, r.val)
-        for r in ingest_geotiff(spark, str(tmp_path / "*.tif")).collect()
-    )
-    assert got == want
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.collect())
+
+    for glob, band in ((tmp_path / "*.tif", None), (rgb / "*.tif", None),
+                       (rgb / "*.tif", 2)):
+        reader = spark.read.format("geotiff")
+        if band is not None:
+            reader = reader.option("band", str(band))
+        got = rows(reader.load(str(glob)))
+        want = rows(ingest_geotiff(spark, str(glob), band=band))
+        assert got == want and len(got) > 0, (glob, band)
+    assert {r[1] for r in got} == {2}
+    assert len(rows(spark.read.format("geotiff").load(str(rgb / "*.tif")))) == 3 * 35
 
     import pytest as _pytest
 
@@ -460,9 +486,9 @@ def _writer_pixels(spark):
     return spark.createDataFrame(rows, PIXELS)
 
 
-def test_geotiff_writer_bytes_match_encode_pixel_group(spark, tmp_path):
-    """The Arrow write path emits exactly the bytes encode_pixel_group
-    gives for the same rows, and no file for the zero-row partitions a
+def test_geotiff_writer_bytes_match_encode_pixels(spark, tmp_path):
+    """The Arrow write path emits exactly the bytes encode_pixels gives
+    for the same rows' NumPy columns, and no file for the zero-row partitions a
     16-way repartition of two rasters leaves."""
     from sids_data_pipeline_spark.sources.geotiff_datasource import register
 
@@ -475,7 +501,13 @@ def test_geotiff_writer_bytes_match_encode_pixel_group(spark, tmp_path):
     assert sorted(p.name for p in out.iterdir()) == ["r1.tif", "r2.tif"]
     pdf = px.toPandas()
     for stem, group in pdf.groupby("raster_id"):
-        want = geotiff.encode_pixel_group(group, compress="zstd", tile=128)
+        want = geotiff.encode_pixels(
+            group["lon"].to_numpy(),
+            group["lat"].to_numpy(),
+            group["val"].to_numpy(dtype="float64"),
+            compress="zstd",
+            tile=128,
+        )
         assert (out / f"{stem}.tif").read_bytes() == want, stem
 
 
@@ -510,6 +542,22 @@ def test_geotiff_writer_append_refuses_existing_file(spark, tmp_path):
             "raster_id"
         ).write.format("geotiff").mode("append").save(str(out))
     assert (out / "r1.tif").read_bytes() == b"keep"
+
+
+def test_geotiff_writer_refuses_multiband_raster(spark, tmp_path):
+    """A raster whose rows carry more than one band is refused: the
+    sink writes single-band files."""
+    from sids_data_pipeline_spark.sources.geotiff_datasource import register
+
+    register(spark)
+    px = _writer_pixels(spark).filter("raster_id = 'r2'")
+    two_bands = px.unionByName(px.selectExpr("raster_id", "2 AS band", "y", "x",
+                                             "lon", "lat", "val"))
+    with pytest.raises(Exception, match="single-band"):
+        two_bands.repartition("raster_id").write.format("geotiff").mode(
+            "overwrite"
+        ).save(str(tmp_path / "out"))
+    assert not list((tmp_path / "out").glob("*.tif"))
 
 
 def _arrow_pixels(stem="r1"):

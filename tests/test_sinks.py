@@ -311,6 +311,40 @@ def test_assign_tiles_clamps_to_valid_slippy_range(spark):
     assert any(r.z == 2 and r.x == 3 for r in rows)
 
 
+def test_polar_bbox_lands_in_southern_row(spark):
+    """A bbox touching latitude -90 lands only in the southern tile row
+    at each zoom, in the Spark and the NumPy tiling alike, and its rings
+    project to finite tile coordinates (latitudes clamp to the Mercator
+    limit instead of projecting to infinity)."""
+    import numpy as np
+    import pandas as pd
+
+    from sids_data_pipeline_spark.functions import geo, mvt
+
+    bbox = (10.0, -90.0, 11.0, -89.0)
+    southern = {(z, 2 ** z - 1) for z in range(3)}
+    feats = spark.createDataFrame(
+        [(1, *bbox)],
+        "fid long, xmin double, ymin double, xmax double, ymax double",
+    )
+    rows = tiles.assign_tiles(feats, max_zoom=2).collect()
+    assert {(r.z, r.y) for r in rows} == southern
+    wkb = geo.box_wkb(*bbox)
+    got = tiles.tileset_rows(
+        pd.DataFrame({"fid": [1], "geometry": [wkb]}), np.array([bbox]), 2, 64
+    )
+    assert {(z, y) for z, _, y, _ in got} == southern
+    lo, hi = -tiles.DEFAULT_TILE_BUFFER, mvt.DEFAULT_EXTENT + tiles.DEFAULT_TILE_BUFFER
+    crossing = geo.box_wkb(10.0, -90.0, 11.0, -80.0)  # spans the limit
+    for z, x, y, _ in got:
+        for g in (wkb, crossing):
+            for ring in tiles.geometry_tile_rings(g, z, x, y):
+                assert all(lo <= c <= hi for pt in ring for c in pt), (z, ring)
+    assert tiles.geometry_tile_rings(crossing, 2, 2, 3)
+    # the bbox-only encode path clamps the same way
+    assert tiles._local_coords(2, 2, 3, *bbox, mvt.DEFAULT_EXTENT)[0] == (455, 4096)
+
+
 def test_mvt_skips_degenerate_rings():
     """Empty and sub-3-point polygon rings (clip/simplify collapse) are
     skipped, not encoded as spec-invalid command streams."""

@@ -24,14 +24,20 @@ echo "$staged" | grep -q "operators/windows.py" \
     && q="$q events_session"
 echo "$staged" | grep -q "operators/multimodal.py" \
     && q="$q multimodal_features"
+echo "$staged" | grep -q "functions/geo.py\|operators/vector_clip.py" \
+    && q="$q tiles_encode_rings vector_clip_extent"
 echo "$staged" | grep -q "sources/geotiff.py\|sources/geotiff_datasource.py\|jobs/standardize.py" \
-    && q="$q raster_geotiff_ingest source_geotiff_datasource"
+    && q="$q raster_geotiff_ingest source_geotiff_datasource raster_bigtiff_ingest raster_lzw_ingest raster_multiband_band2"
+echo "$staged" | grep -q "streaming/jobs.py" \
+    && q="$q raster_geotiff_ingest"
 echo "$staged" | grep -q "jobs/pipeline.py\|sinks/tiles.py\|sinks/geojsonl.py" \
     && q="$q pipeline_end_to_end tiles_encode_rings"
 echo "$staged" | grep -q "plans/relational.py" \
     && q="$q pricing_summary sql_shipping_priority window_rank"
 
 [ -z "$q" ] && exit 0
+# several gates may name the same query; measure each once
+q=$(printf '%s\n' $q | sort -u | tr '\n' ' ')
 
 echo "benchgate: staged hot-path files -> gating:$q" >&2
 # shellcheck disable=SC2086
