@@ -33,6 +33,7 @@ import os
 import shutil
 from functools import reduce
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -225,7 +226,7 @@ def run_pipeline(
             spark,
             ledger_path,
             spark.createDataFrame(
-                [(r.v_id, r.r_id, r.pair_key) for r in marker_done],
+                pd.DataFrame(marker_done, columns=Pair._fields),
                 "v_id string, r_id string, pair_key string",
             ),
         )
@@ -233,11 +234,15 @@ def run_pipeline(
         return {"pending": 0, "outputs": []}
     # rebuild the pending manifest from the surviving rows so the compute
     # gate and the ledger record exactly what gets written; each pair's
-    # _slot is the sink task that writes it
+    # _slot is the sink task that writes it. Driver-built frames come
+    # from pandas: a LocalTableScan, where a Python list would be an RDD
+    # scan that starts a Python worker for every job reading it
     outputs = [r.pair_key for r in pending_rows]
     n_tasks = min(len(outputs), spark.sparkContext.defaultParallelism)
     pending = spark.createDataFrame(
-        [(r.v_id, r.r_id, r.pair_key, i % n_tasks) for i, r in enumerate(pending_rows)],
+        pd.DataFrame(pending_rows, columns=Pair._fields).assign(
+            _slot=[i % n_tasks for i in range(len(pending_rows))]
+        ),
         "v_id string, r_id string, pair_key string, _slot int",
     )
 
@@ -293,7 +298,7 @@ def run_pipeline(
 
     manifest.record_done(spark, ledger_path, pending)
     # release the operator-internal persists (zonal_stats pins the zone
-    # table) — repeated invocations in one session must not accumulate
-    # dead caches
+    # table above BROADCAST_ZONE_LIMIT) — repeated invocations in one
+    # session must not accumulate dead caches
     lifecycle.release_tracked()
     return {"pending": len(pending_rows), "outputs": outputs}

@@ -7,21 +7,32 @@ Re-expresses the reference's semantic core (reference
     FROM {vector} a LEFT JOIN {raster} b ON ST_Intersects(a.geom, b.geom)
     GROUP BY a.fid ORDER BY a.fid
 
-as a Spark plan: spatial filter-and-refine join → groupBy aggregation →
-left join back to zones (NULL mean for zones with no pixels — LEFT-join
+as a Spark plan: spatial filter-and-refine join → groupBy aggregation
+over every zone × raster (NULL stats for zones with no pixels — LEFT-join
 semantics of stats.py:11) → orderBy (stats.py:17).
 
-One spatial join, whose branch follows from the zone count (both
-property-tested equal):
+One spatial join, whose branch follows from the zone count read by one
+bounded collect (all branches property-tested equal):
 
 - up to ``BROADCAST_ZONE_LIMIT`` zones — dimension-sized (admin
   boundaries; the reference broadcasts them implicitly by importing
   vectors once and streaming rasters past them,
-  ``pipeline/processing/__main__.py:13-23``). The exploded zone-cell table
-  broadcasts and pixels probe it with a BroadcastHashJoin on the cell key
-  (hash probe, not a nested loop over zones), then an Arrow-batched numpy
-  point-in-polygon kernel refines. No shuffle of the pixel table at all
-  until the (tiny) per-fid aggregate.
+  ``pipeline/processing/__main__.py:13-23``). Pixels never shuffle before
+  the (tiny) per-fid aggregate.
+
+  - When any zone is not a hole-free axis-aligned rectangle, one
+    ``mapInArrow`` kernel runs over the pixel frame. The driver builds a
+    zone index from the collected rows (parsed polygons, bboxes, rect
+    flags and a (cx, cy) grid-cell → zones map) and broadcasts it; the
+    kernel looks each pixel's cell up (O(candidates) per pixel, not
+    O(zones)), applies the bbox prefilter and the NumPy ray-casting
+    test, and emits the matches. For ``zonal_stats`` the same pass also
+    emits the zone × raster universe as ``val = NULL`` rows, so every
+    raster is decoded once and no join builds the universe.
+  - When every zone is a rectangle, the zone-cell table broadcasts and
+    pixels probe it with a BroadcastHashJoin on the cell key, refined by
+    the half-open bbox test — all in whole-stage codegen, no Python
+    worker.
 
 - above it — the 100 TB path where zones are also large. Each zone
   explodes to the cells its bbox covers on the executors, and the join on
@@ -40,7 +51,7 @@ NULL stat.
 from __future__ import annotations
 
 import logging
-from typing import Iterable, Sequence
+from typing import NamedTuple, Sequence
 
 import numpy as np
 import pandas as pd
@@ -177,66 +188,187 @@ def _in_bbox() -> Column:
     )
 
 
-def _broadcast_spatial_join(rows: list, pixels: DataFrame, cell: float) -> DataFrame:
-    """Broadcast branch: ``rows`` are the collected (vector_id, fid,
-    geometry) zone rows. Bboxes and cell keys are computed driver-side,
-    and two things broadcast: (a) the exploded cell table for the hash
-    join and (b) a (vector_id, fid) → WKB map for refinement. Pixels then
-    carry only two small key columns into the join — no per-row WKB
-    bytes cross the Arrow boundary, and each Python worker parses each
-    geometry once (cached).
-    """
-    cell_rows = []
-    geo_map = {}
-    all_rect = True
-    for r in rows:
-        wkb = bytes(r.geometry)
-        geo_map[(r.vector_id, r.fid)] = wkb
-        polys = geo.parse_wkb(wkb)  # parse once: bbox + rect flag
-        all_rect = all_rect and geo.polys_rect(polys) is not None
-        xmin, ymin, xmax, ymax = geo.polys_bbox(polys)
+class _ZoneIndex(NamedTuple):
+    """The collected zones of the broadcast branch: per zone its keys,
+    parsed polygons, bbox and rect flag, and the (cx, cy) grid cells
+    every zone bbox covers → the indices of those zones."""
+
+    vector_id: list
+    fid: list
+    polys: list
+    bbox: np.ndarray  # (n, 4) xmin, ymin, xmax, ymax
+    rect: np.ndarray  # (n,) bool: hole-free axis-aligned rectangle
+    cells: dict
+
+
+def _zone_index(zones: DataFrame, cell: float) -> _ZoneIndex | None:
+    """The bounded zone collect: the index of at most
+    BROADCAST_ZONE_LIMIT zones (broadcast branch), or None above it
+    (distributed branch). The limit caps driver memory AND is the
+    zone-count probe — no separate count job."""
+    rows = (
+        zones.select("vector_id", "fid", "geometry")
+        .limit(BROADCAST_ZONE_LIMIT + 1)
+        .collect()
+    )
+    if len(rows) > BROADCAST_ZONE_LIMIT:
+        _LOG.info(
+            "spatial_join: more than %d zones, distributed branch",
+            BROADCAST_ZONE_LIMIT,
+        )
+        return None
+    _LOG.info("spatial_join: %d zones, broadcast branch", len(rows))
+    polys, bbox, rect, cells = [], [], [], {}
+    for z, r in enumerate(rows):
+        p = geo.parse_wkb(bytes(r.geometry))  # parse once: bbox + rect flag
+        xmin, ymin, xmax, ymax = geo.polys_bbox(p)
+        polys.append(p)
+        bbox.append((xmin, ymin, xmax, ymax))
+        rect.append(geo.polys_rect(p) is not None)
+        # the same floor(coord / cell) rule as _pixel_cells
         for cx in range(int(np.floor(xmin / cell)), int(np.floor(xmax / cell)) + 1):
             for cy in range(int(np.floor(ymin / cell)), int(np.floor(ymax / cell)) + 1):
-                cell_rows.append((r.vector_id, r.fid, cx, cy, xmin, ymin, xmax, ymax))
-    spark = pixels.sparkSession
-    zc = spark.createDataFrame(
+                cells.setdefault((cx, cy), []).append(z)
+    return _ZoneIndex(
+        [r.vector_id for r in rows],
+        [r.fid for r in rows],
+        polys,
+        np.array(bbox, dtype=np.float64).reshape(-1, 4),
+        np.array(rect, dtype=bool),
+        cells,
+    )
+
+
+def _rect_spatial_join(index: _ZoneIndex, pixels: DataFrame, cell: float) -> DataFrame:
+    """Broadcast branch for all-rectangle zones: the zone-cell table
+    broadcasts, pixels probe it with a BroadcastHashJoin on the cell key
+    and the half-open bbox test refines — the whole join stays in
+    whole-stage codegen, with no Arrow transfer and no Python worker."""
+    zc = pixels.sparkSession.createDataFrame(
         pd.DataFrame(
-            cell_rows,
+            [
+                (index.vector_id[z], index.fid[z], cx, cy, *index.bbox[z])
+                for (cx, cy), zs in index.cells.items()
+                for z in zs
+            ],
             columns=["vector_id", "fid", "_cx", "_cy", "xmin", "ymin", "xmax", "ymax"],
         ),
         "vector_id string, fid long, _cx long, _cy long, "
         "xmin double, ymin double, xmax double, ymax double",
     ).coalesce(1)
-    joined = _pixel_cells(pixels, cell).join(F.broadcast(zc), ["_cx", "_cy"], "inner")
-
-    if all_rect:
-        # Rectangle fast path: the whole join stays in whole-stage
-        # codegen — no Arrow transfer, no Python workers.
-        joined = joined.filter(_in_rect())
-        return joined.drop("xmin", "ymin", "xmax", "ymax", "_cx", "_cy")
-
-    geo_bc = spark.sparkContext.broadcast(geo_map)
-
-    @F.pandas_udf(BooleanType())
-    def contains_bc(vid: pd.Series, fid: pd.Series, lon: pd.Series, lat: pd.Series) -> pd.Series:
-        cache: dict = {}
-        out = np.zeros(len(vid), dtype=bool)
-        lon_v = lon.to_numpy(dtype=np.float64)
-        lat_v = lat.to_numpy(dtype=np.float64)
-        keys = pd.Series(list(zip(vid, fid)))
-        codes, uniques = pd.factorize(keys)
-        for gi, key in enumerate(uniques):
-            polys = cache.get(key)
-            if polys is None:
-                polys = cache[key] = geo.parse_wkb(geo_bc.value[key])
-            mask = codes == gi
-            out[mask] = geo.points_in_polygons(polys, lon_v[mask], lat_v[mask])
-        return pd.Series(out)
-
-    refined = joined.filter(_in_bbox()).filter(
-        contains_bc("vector_id", "fid", "lon", "lat")
+    return (
+        _pixel_cells(pixels, cell)
+        .join(F.broadcast(zc), ["_cx", "_cy"], "inner")
+        .filter(_in_rect())
+        .drop("xmin", "ymin", "xmax", "ymax", "_cx", "_cy")
     )
-    return refined.drop("xmin", "ymin", "xmax", "ymax", "_cx", "_cy")
+
+
+def _match_points(
+    index: _ZoneIndex, lon: np.ndarray, lat: np.ndarray, cell: float
+) -> tuple[np.ndarray, np.ndarray]:
+    """(row, zone) index pairs of the points whose coordinates fall
+    inside a zone, ordered by row. Candidates come from each point's
+    ``floor(coord / cell)`` key in ``index.cells``, so the cost per point
+    is O(candidates), not O(zones); a rectangle zone refines with the
+    half-open rule of :func:`_in_rect`, any other with the closed bbox
+    prefilter and the ray-casting kernel. Rows with a NULL (NaN) or
+    infinite coordinate match nothing."""
+    ok = np.flatnonzero(np.isfinite(lon) & np.isfinite(lat))
+    x, y = lon[ok], lat[ok]
+    cx = np.floor(x / cell).astype(np.int64)
+    cy = np.floor(y / cell).astype(np.int64)
+    order = np.lexsort((cy, cx))  # stable: rows ascend within a cell
+    scx, scy = cx[order], cy[order]
+    brk = np.flatnonzero((scx[1:] != scx[:-1]) | (scy[1:] != scy[:-1])) + 1
+    by_zone: dict[int, list] = {}
+    for s, e in zip(np.r_[0, brk], np.r_[brk, len(order)]):
+        if s == e:
+            continue
+        for z in index.cells.get((int(scx[s]), int(scy[s])), ()):
+            by_zone.setdefault(z, []).append(order[s:e])
+    rows, zs = [np.empty(0, np.int64)], [np.empty(0, np.int64)]
+    for z, parts in by_zone.items():
+        p = np.concatenate(parts)
+        px, py = x[p], y[p]
+        x0, y0, x1, y1 = index.bbox[z]
+        if index.rect[z]:
+            hit = (px >= x0) & (px < x1) & (py >= y0) & (py < y1)
+        else:
+            hit = (px >= x0) & (px <= x1) & (py >= y0) & (py <= y1)
+            hit[hit] = geo.points_in_polygons(index.polys[z], px[hit], py[hit])
+        rows.append(ok[p[hit]])
+        zs.append(np.full(int(hit.sum()), z, dtype=np.int64))
+    rows, zs = np.concatenate(rows), np.concatenate(zs)
+    o = np.argsort(rows, kind="stable")
+    return rows[o], zs[o]
+
+
+def _kernel_spatial_join(
+    index: _ZoneIndex, zones: DataFrame, pixels: DataFrame, cell: float,
+    universe: bool = False,
+) -> DataFrame:
+    """Broadcast branch with any non-rectangle zone: one mapInArrow
+    kernel over the pixel frame, with the zone index shipped as a
+    broadcast variable. Each batch yields its matched rows (the pixel
+    columns plus the zone's vector_id, fid) in input order. With
+    ``universe``, each task ends with one row per zone × raster_id it
+    saw, NULL in every other pixel column."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructField, StructType
+
+    spark = pixels.sparkSession
+    out = StructType(
+        [StructField(f.name, f.dataType, f.nullable or universe) for f in pixels.schema]
+        + [
+            StructField("vector_id", zones.schema["vector_id"].dataType),
+            StructField("fid", zones.schema["fid"].dataType),
+        ]
+    )
+    large = spark.conf.get("spark.sql.execution.arrow.useLargeVarTypes", "false")
+    schema = to_arrow_schema(out, prefers_large_types=large.lower() == "true")
+    index_bc = spark.sparkContext.broadcast(index)
+
+    def kernel(batches):
+        import pyarrow as pa
+
+        idx = index_bc.value
+        vid = pa.array(idx.vector_id, schema.field("vector_id").type)
+        fid = pa.array(idx.fid, schema.field("fid").type)
+        seen: dict = {}
+        for batch in batches:
+            lon = np.asarray(batch.column("lon").to_numpy(zero_copy_only=False), np.float64)
+            if universe:
+                rid = batch.column("raster_id")
+                seen.update(dict.fromkeys(rid.unique().to_pylist()))
+                if rid.null_count:
+                    # as in the universe join, a NULL raster_id meets no
+                    # (zone, raster) row: its zones keep NULL stats
+                    lon = np.where(rid.is_null().to_numpy(zero_copy_only=False), np.nan, lon)
+            rows, zs = _match_points(
+                idx,
+                lon,
+                np.asarray(batch.column("lat").to_numpy(zero_copy_only=False), np.float64),
+                cell,
+            )
+            if len(rows):
+                yield pa.RecordBatch.from_arrays(
+                    [*batch.take(pa.array(rows)).columns, vid.take(zs), fid.take(zs)],
+                    schema=schema,
+                )
+        n = len(vid)
+        for rid in seen:
+            cols = {
+                "raster_id": pa.repeat(pa.scalar(rid, schema.field("raster_id").type), n),
+                "vector_id": vid,
+                "fid": fid,
+            }
+            yield pa.RecordBatch.from_arrays(
+                [cols[f.name] if f.name in cols else pa.nulls(n, f.type) for f in schema],
+                schema=schema,
+            )
+
+    return pixels.mapInArrow(kernel, out)
 
 
 def _distributed_spatial_join(
@@ -279,31 +411,28 @@ def spatial_join(
     falls inside the zone geometry (J1 filter-and-refine). Returns the
     pixel columns plus (vector_id, fid).
 
-    A grid-cell EQUI-join (hash-joinable — never a nested loop over
-    zones): pixels get a cell key from their coordinates, zones explode
-    to the cells their bbox covers, and a bbox filter plus the exact
-    containment test refine the candidates. Where the join runs follows
-    from the zone count, read by one bounded collect while the plan is
-    built: up to BROADCAST_ZONE_LIMIT zones broadcast to every pixel
-    partition (zero pixel shuffle, a BroadcastHashJoin probe per pixel);
-    above it both sides shuffle on the cell key, with zones distributed.
+    Candidates come from a grid-cell key (never a nested loop over
+    zones): each pixel's ``floor(coord / cell_deg)`` cell meets the cells
+    a zone's bbox covers, and a bbox test plus the exact containment test
+    refine them. The branch follows from the zone count, read by one
+    bounded collect while the plan is built:
+
+    - up to BROADCAST_ZONE_LIMIT zones, pixels never shuffle. When every
+      zone is an axis-aligned rectangle, pixels probe the broadcast
+      zone-cell table in a BroadcastHashJoin refined by the half-open
+      bbox test, all in codegen. Otherwise one mapInArrow kernel over the
+      pixel frame looks the cell up in a broadcast (cx, cy) → zones map
+      and refines in NumPy.
+    - above it, both sides shuffle on the cell key, with zones
+      distributed.
     """
     cell = float(cell_deg)
-    # The limit caps driver memory AND is the zone-count probe — no
-    # separate count job.
-    rows = (
-        zones.select("vector_id", "fid", "geometry")
-        .limit(BROADCAST_ZONE_LIMIT + 1)
-        .collect()
-    )
-    if len(rows) <= BROADCAST_ZONE_LIMIT:
-        _LOG.info("spatial_join: %d zones, broadcast branch", len(rows))
-        return _broadcast_spatial_join(rows, pixels, cell)
-    _LOG.info(
-        "spatial_join: more than %d zones, distributed branch",
-        BROADCAST_ZONE_LIMIT,
-    )
-    return _distributed_spatial_join(zones, pixels, cell)
+    index = _zone_index(zones, cell)
+    if index is None:
+        return _distributed_spatial_join(zones, pixels, cell)
+    if index.rect.all():
+        return _rect_spatial_join(index, pixels, cell)
+    return _kernel_spatial_join(index, zones, pixels, cell)
 
 
 def zonal_stats(
@@ -311,40 +440,57 @@ def zonal_stats(
     pixels: DataFrame,
     stats: Sequence[str] = ("mean",),
     cell_deg: float = 0.5,
-    keep_attrs: Iterable[str] = (),
 ) -> DataFrame:
     """Zonal statistics per (vector_id, raster_id, fid).
 
     Natural superset of the reference (which computes only AVG,
-    stats.py:14): any subset of SUPPORTED_STATS. Output is left-joined back
-    to the zone list so empty zones appear with NULL stats, ordered by key
-    (stats.py:17 ORDER BY).
+    stats.py:14): any subset of SUPPORTED_STATS, ordered by key
+    (stats.py:17 ORDER BY). Every zone × every raster_id of ``pixels``
+    is a row (LEFT-join semantics, stats.py:11): a zone no pixel centre
+    falls in gets NULL stats and ``count`` 0 (rasterstats/GDAL).
+
+    With any non-rectangle zone at or under BROADCAST_ZONE_LIMIT, that
+    universe comes from the match kernel itself: each task also emits a
+    ``val = NULL`` row per zone × raster_id it saw, which every
+    aggregate ignores, so the pixel frame is read once and nothing is
+    persisted. Otherwise the matches are left-joined to the cross
+    product of the zone keys and the distinct raster_ids.
     """
     for s in stats:
         if s not in _STAT_EXPRS:
             raise ValueError(f"unsupported stat {s!r}; choose from {SUPPORTED_STATS}")
-
-    # Zones are the dimension side and feed two subtrees (the spatial join
-    # and the result universe): persist so the source — which may be an
-    # expensive ingest — materializes once per job.
-    zones = track(zones.persist(StorageLevel.MEMORY_AND_DISK))
-    matched = spatial_join(zones, pixels, cell_deg=cell_deg)
     aggs: list[Column] = [_STAT_EXPRS[s]().alias(s) for s in stats]
-    per_zone = matched.groupBy("vector_id", "raster_id", "fid").agg(*aggs)
-
+    keys = ["vector_id", "raster_id", "fid"]
+    cell = float(cell_deg)
+    index = _zone_index(zones, cell)
+    if index is None:
+        # zones feed the join and the universe: persist so an expensive
+        # zone source materializes once per job
+        zones = track(zones.persist(StorageLevel.MEMORY_AND_DISK))
+        matched = _distributed_spatial_join(zones, pixels, cell)
+        zone_keys = zones.select("vector_id", "fid")
+    elif index.rect.all():
+        matched = _rect_spatial_join(index, pixels, cell)
+        # the zone keys are on the driver already
+        zone_keys = pixels.sparkSession.createDataFrame(
+            pd.DataFrame({"vector_id": index.vector_id, "fid": index.fid}),
+            zones.select("vector_id", "fid").schema,
+        )
+    else:
+        matched = _kernel_spatial_join(
+            index, zones, pixels.select("raster_id", "lon", "lat", "val"), cell,
+            universe=True,
+        )
+        return matched.groupBy(*keys).agg(*aggs).orderBy(*keys)
+    per_zone = matched.groupBy(*keys).agg(*aggs)
     # Re-attach to the full zone x raster universe (J2 equi left join,
     # reference vector.py:9-12) so zones with no intersecting pixels
     # surface with NULLs. raster list is tiny → broadcast cross join.
     rasters = pixels.select("raster_id").distinct()
-    universe = zones.select("vector_id", "fid", *keep_attrs).crossJoin(
-        F.broadcast(rasters)
-    )
-    out = universe.join(per_zone, ["vector_id", "raster_id", "fid"], "left")
+    out = zone_keys.crossJoin(F.broadcast(rasters)).join(per_zone, keys, "left")
     if "count" in stats:
-        # rasterstats/GDAL convention: zones with no pixels report count=0,
-        # not NULL (mean/sum/min/max keep NULL).
         out = out.withColumn("count", F.coalesce(F.col("count"), F.lit(0)))
-    return out.orderBy("vector_id", "raster_id", "fid")
+    return out.orderBy(*keys)
 
 
 def _collect_rects(zones: DataFrame, op_name: str):

@@ -173,6 +173,173 @@ def test_distributed_branch_runs_above_zone_limit(spark, monkeypatch, caplog):
     )
 
 
+# --- broadcast branch: the match kernel ---------------------------------------
+
+# Pixel centres sit on exact binary fractions ((x + 0.5) / 8), so zone
+# vertices and bbox edges can lie exactly on them.
+_PX = 0.125
+
+
+def _edge_case_zones(spark):
+    """A mixed rect + polygon zone set over the 8×8 grid of
+    :func:`_edge_case_pixels`: a triangle whose vertices are pixel centres
+    (so its bbox edges run through pixel centres), a rectangle with edges
+    on pixel centres, a holed square overlapping both, and a triangle no
+    pixel reaches."""
+    from sids_data_pipeline_spark.schemas import ZONES
+
+    c = lambda k: (k + 0.5) * _PX  # noqa: E731 — centre of pixel k
+    rows = [
+        (1, geo.multipolygon_wkb([[[(c(1), c(1)), (c(6), c(1)), (c(1), c(6)), (c(1), c(1))]]])),
+        (2, geo.box_wkb(c(2), c(2), c(5), c(5))),
+        (3, geo.multipolygon_wkb([[
+            [(0.5, 0.5), (1.0, 0.5), (1.0, 1.0), (0.5, 1.0), (0.5, 0.5)],
+            [(0.625, 0.625), (0.625, 0.875), (0.875, 0.875), (0.875, 0.625), (0.625, 0.625)],
+        ]])),
+        (4, geo.multipolygon_wkb([[[(20.0, 20.0), (21.0, 20.0), (20.0, 21.0), (20.0, 20.0)]]])),
+    ]
+    return spark.createDataFrame(
+        pd.DataFrame(
+            [("v", fid, f"z{fid}", wkb) for fid, wkb in rows],
+            columns=[f.name for f in ZONES.fields],
+        ),
+        ZONES,
+    )
+
+
+def _edge_case_pixels(spark):
+    """(pandas, Spark) twins of one pixel frame. ``r_in``: the 8×8 grid
+    over [0, 1]² with some NULL values and three rows with a NULL lon
+    and/or lat; ``r_miss``: four pixels far from every zone; and one
+    pixel inside zones 1 and 2 with a NULL raster_id."""
+    from sids_data_pipeline_spark.schemas import PIXELS
+
+    rows = []
+    for y in range(8):
+        for x in range(8):
+            val = None if (x + y) % 7 == 3 else float(x + 8 * y)
+            rows.append(("r_in", 1, y, x, (x + 0.5) * _PX, (y + 0.5) * _PX, val))
+    rows += [
+        ("r_in", 1, 9, 0, None, 0.3125, 5.0),
+        ("r_in", 1, 9, 1, 0.3125, None, 6.0),
+        ("r_in", 1, 9, 2, None, None, 7.0),
+    ]
+    rows += [("r_miss", 1, 0, x, 50.0 + x * _PX, 50.0, 1.0) for x in range(4)]
+    rows.append((None, 1, 0, 0, 0.375, 0.375, 1.0))
+    pdf = pd.DataFrame(rows, columns=[f.name for f in PIXELS.fields])
+    return pdf, spark.createDataFrame(pdf, PIXELS)
+
+
+def _stats_oracle(zones: pd.DataFrame, pix: pd.DataFrame) -> pd.DataFrame:
+    """Every SUPPORTED_STATS per zone × raster from NumPy on the driver."""
+    out = []
+    for rid, rp in pix.groupby("raster_id"):
+        ok = rp.lon.notna() & rp.lat.notna()
+        lon = rp.lon[ok].to_numpy(dtype=float)
+        lat = rp.lat[ok].to_numpy(dtype=float)
+        val = rp.val[ok].to_numpy(dtype=float)
+        for _, z in zones.iterrows():
+            inside = geo.points_in_polygons(geo.parse_wkb(bytes(z.geometry)), lon, lat)
+            v = val[inside]
+            v = v[~np.isnan(v)]
+            out.append({
+                "vector_id": z.vector_id, "raster_id": rid, "fid": z.fid,
+                "mean": v.mean() if v.size else None,
+                "count": v.size,
+                "sum": v.sum() if v.size else None,
+                "min": v.min() if v.size else None,
+                "max": v.max() if v.size else None,
+                "stddev": v.std(ddof=1) if v.size > 1 else None,
+                "median": float(np.median(v)) if v.size else None,
+            })
+    return pd.DataFrame(out).sort_values(["raster_id", "fid"]).reset_index(drop=True)
+
+
+def test_kernel_matches_distributed_and_oracle_on_edge_cases(spark, monkeypatch):
+    """The broadcast branch's match kernel equals the distributed branch
+    (limit 0) and a NumPy oracle for every stat: pixel centres on a bbox
+    edge and on a vertex, NULL lon/lat rows, a zone no pixel reaches, a
+    raster that misses every zone, and a mixed rect + polygon zone set.
+    A pixel with a NULL raster_id pairs with no (zone, raster) row in
+    either branch."""
+    zones = _edge_case_zones(spark)
+    pdf, pixels = _edge_case_pixels(spark)
+    outs = []
+    for zone_limit in (zonal.BROADCAST_ZONE_LIMIT, 0):
+        monkeypatch.setattr(zonal, "BROADCAST_ZONE_LIMIT", zone_limit)
+        outs.append(
+            zonal_stats(zones, pixels, stats=zonal.SUPPORTED_STATS)
+            .toPandas()
+            .sort_values(["raster_id", "fid"])
+            .reset_index(drop=True)
+        )
+    kernel, distributed = outs
+    pd.testing.assert_frame_equal(kernel, distributed, check_exact=False, rtol=1e-12)
+    assert kernel.loc[kernel.raster_id.isna(), "count"].tolist() == [0] * 4
+    kernel = kernel[kernel.raster_id.notna()].reset_index(drop=True)
+
+    want = _stats_oracle(zones.toPandas(), pdf)
+    assert kernel[["raster_id", "fid"]].values.tolist() == want[["raster_id", "fid"]].values.tolist()
+    assert kernel["count"].tolist() == want["count"].tolist()
+    for s in ("mean", "sum", "min", "max", "stddev", "median"):
+        for g, w in zip(kernel[s], want[s]):
+            if pd.isna(w):
+                assert pd.isna(g), s
+            else:
+                assert g == pytest.approx(w, rel=1e-12), s
+    # the unreachable zone and the missing raster are rows with count 0
+    assert kernel.loc[kernel.fid == 4, "count"].tolist() == [0, 0]
+    assert kernel.loc[kernel.raster_id == "r_miss", "count"].tolist() == [0] * 4
+    assert (kernel.loc[(kernel.raster_id == "r_in") & (kernel.fid < 4), "count"] > 0).all()
+
+
+def test_kernel_join_matches_distributed_join(spark, monkeypatch):
+    """spatial_join itself: the kernel returns exactly the distributed
+    branch's (pixel, zone) rows, with the same columns."""
+    zones = _edge_case_zones(spark)
+    _, pixels = _edge_case_pixels(spark)
+    outs = []
+    for zone_limit in (zonal.BROADCAST_ZONE_LIMIT, 0):
+        monkeypatch.setattr(zonal, "BROADCAST_ZONE_LIMIT", zone_limit)
+        joined = spatial_join(zones, pixels)
+        assert joined.columns == [*pixels.columns, "vector_id", "fid"]
+        outs.append(
+            joined.toPandas().sort_values(["raster_id", "y", "x", "fid"]).reset_index(drop=True)
+        )
+    pd.testing.assert_frame_equal(outs[0], outs[1])
+    assert len(outs[0]) > 0
+
+
+def test_kernel_path_reads_geotiff_scan_once(spark, tmp_path):
+    """Over a format("geotiff") scan with non-rectangle zones, zonal_stats
+    plans one scan of the files (no second decode for the raster list)
+    and no per-row Python UDF."""
+    from sids_data_pipeline_spark.sources import geotiff
+    from sids_data_pipeline_spark.sources.geotiff_datasource import register
+
+    arr = np.arange(64, dtype=np.float64).reshape(8, 8)
+    for name in ("a", "b"):
+        (tmp_path / f"{name}.tif").write_bytes(geotiff.encode_geotiff(arr, 0.0, 1.0, _PX))
+    register(spark)
+    pixels = spark.read.format("geotiff").load(f"{tmp_path}/*.tif")
+    out = zonal_stats(_edge_case_zones(spark), pixels, stats=("mean", "count"))
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("BatchScan geotiff") == 1, plan
+    assert "ArrowEvalPython" not in plan and plan.count("MapInArrow") == 1
+    got = out.toPandas()
+    assert sorted(got.raster_id.unique()) == ["a", "b"] and len(got) == 8
+
+
+def test_kernel_path_tracks_no_persist(spark):
+    """The broadcast kernel builds the result universe in its own pass:
+    no zone persist to release afterwards."""
+    from sids_data_pipeline_spark import lifecycle
+
+    before = list(lifecycle._TRACKED)
+    zonal_stats(_edge_case_zones(spark), _edge_case_pixels(spark)[1]).collect()
+    assert lifecycle._TRACKED == before
+
+
 def test_weighted_rects_hand_computed(spark):
     """2x2 grid of unit-value pixels; a rect covering exactly one half
     of one pixel cell gets w_e6=500000 and the exact weighted mean."""

@@ -20,6 +20,8 @@ echo "$staged" | grep -q "operators/similarity.py" \
     && q="$q similarity_topk"
 echo "$staged" | grep -q "operators/zonal.py\|functions/geo.py" \
     && q="$q zonal_mean_large zonal_large_broadcast"
+echo "$staged" | grep -q "operators/zonal.py" \
+    && q="$q raster_burn pipeline_end_to_end"
 echo "$staged" | grep -q "operators/windows.py" \
     && q="$q events_session"
 echo "$staged" | grep -q "operators/multimodal.py" \
