@@ -5,21 +5,28 @@ This is the idiomatic-Spark face of S5 (SURVEY.md §2a) for local and
 ``pyarrow.fs`` paths; :func:`geotiff.ingest_geotiff` (binaryFile →
 mapInArrow) is the route for any Hadoop filesystem (wasbs/abfs) and for
 streaming. Both build their rows with :func:`geotiff.pixel_batches`.
-Here the codec plugs into the planner itself — the source reports its
-schema, plans one input partition per raster file at the driver (a
-listing, no decode), and each executor partition decodes only its own
-file via the pure-numpy codec and streams Arrow batches back.
+Here the codec plugs into the planner itself: the source reports its
+schema, lists the files with their sizes (no decode) and packs them into
+input partitions; each partition decodes its files one after another
+with the pure-numpy codec and streams Arrow batches back.
 Registration is per-session::
 
     from sids_data_pipeline_spark.sources.geotiff_datasource import register
     register(spark)
     px = spark.read.format("geotiff").option("band", "1").load("/data/*.tif")
 
-Scale shape: partition planning is O(files) driver-side metadata; decode
-is executor-side and embarrassingly parallel per file (the reference's
-per-file multiprocessing Pool, utils.py:47-57, recast as source
-partitions). Sub-file (tile-strip) partitions are the natural extension
-for multi-GB rasters — the planner hook is already per-partition.
+Planning runs in a Python planner worker, which has no SparkSession and
+no JVM gateway: ``file:`` and plain paths are listed with Python glob,
+other URIs through ``pyarrow.fs``, and :func:`register` hands the
+session's task slots and ``spark.sql.files.maxPartitionBytes`` to the
+reader. A scan plans ``min(files, max(slots, ceil(total bytes /
+maxPartitionBytes)))`` partitions, filled longest file first. A small
+estate is one task per slot, since each Python task costs a fixed
+fraction of a second before it decodes a byte; rasters that fill
+maxPartitionBytes on their own keep one partition per file, the
+reference's per-file multiprocessing Pool (utils.py:47-57) recast as
+source partitions. Sub-file (tile-strip) partitions are the natural
+extension for multi-GB rasters.
 
 Matches reference ``batch/processing/raster.py:22-38`` (per-file GDAL
 standardization) as a declarative scan.
@@ -27,7 +34,9 @@ standardization) as a declarative scan.
 
 from __future__ import annotations
 
+import fnmatch
 import glob as _glob
+import heapq
 import itertools
 import os
 from typing import Iterator, Sequence
@@ -43,10 +52,36 @@ from pyspark.sql.datasource import (
 from sids_data_pipeline_spark.schemas import PIXELS
 
 
-class _FilePartition(InputPartition):
-    def __init__(self, path: str, band: int | None):
-        self.path = path
+class _FilesPartition(InputPartition):
+    def __init__(self, paths: list[str], band: int | None):
+        self.paths = paths
         self.band = band
+
+
+def _local(path: str) -> str:
+    """Hadoop's qualified local form is file:/abs (what globStatus
+    returns for a file: pattern); file:///abs also occurs."""
+    return "/" + path[len("file:"):].lstrip("/") if path.startswith("file:") else path
+
+
+def _filesystem(uri: str):
+    """``(pyarrow filesystem, path within it)`` for a remote URI; Hadoop's
+    s3a/s3n scheme aliases map to pyarrow's s3. Unsupported schemes
+    raise a clear error instead of executor-side FileNotFoundError."""
+    scheme, rest = uri.split("://", 1)
+    if scheme in ("s3a", "s3n"):
+        uri = f"s3://{rest}"
+    try:
+        from pyarrow import fs as pafs
+
+        return pafs.FileSystem.from_uri(uri)
+    except Exception as ex:
+        raise NotImplementedError(
+            f"geotiff source: remote scheme {scheme!r} is not readable "
+            "from executor Python workers (no JVM gateway; pyarrow.fs "
+            f"rejected {uri!r}: {ex}) — copy to local/s3 storage or "
+            "ingest via binaryFile + ingest_geotiff instead"
+        ) from ex
 
 
 def _read_bytes(path: str) -> bytes:
@@ -56,38 +91,94 @@ def _read_bytes(path: str) -> bytes:
     gateway — the Hadoop FileSystem is unreachable there (the reason
     :class:`GeoTiffWriter` refuses remote save paths). Remote READS go
     through ``pyarrow.fs`` instead, which opens s3:// (and gs://,
-    hdfs:// where libhdfs is present) natively from Python; Hadoop's
-    s3a/s3n scheme aliases map to pyarrow's s3. Unsupported schemes
-    raise a clear error instead of executor-side FileNotFoundError.
+    hdfs:// where libhdfs is present) natively from Python.
     """
-    if path.startswith("file:"):
-        # Hadoop's qualified local form is file:/abs (what globStatus
-        # returns for a file: pattern); file:///abs also occurs
-        path = "/" + path[len("file:"):].lstrip("/")
+    path = _local(path)
     if "://" not in path:
         with open(path, "rb") as f:
             return f.read()
-    uri = path
-    scheme, rest = uri.split("://", 1)
-    if scheme in ("s3a", "s3n"):
-        uri = f"s3://{rest}"
-    try:
-        from pyarrow import fs as pafs
-
-        filesystem, fs_path = pafs.FileSystem.from_uri(uri)
-    except Exception as ex:
-        raise NotImplementedError(
-            f"geotiff source: remote scheme {scheme!r} is not readable "
-            "from executor Python workers (no JVM gateway; pyarrow.fs "
-            f"rejected {uri!r}: {ex}) — copy to local/s3 storage or "
-            "ingest via binaryFile + ingest_geotiff instead"
-        ) from ex
+    filesystem, fs_path = _filesystem(path)
     with filesystem.open_input_stream(fs_path) as f:
         return f.read()
 
 
+def _file_size(path: str) -> int:
+    path = _local(path)
+    if "://" not in path:
+        return os.path.getsize(path)
+    filesystem, fs_path = _filesystem(path)
+    info = filesystem.get_file_info(fs_path)
+    if not info.is_file:
+        raise FileNotFoundError(f"geotiff: no file {path!r}")
+    return info.size
+
+
+def _glob_remote(filesystem, base: str, root: str, pattern: str) -> list[tuple[str, int]]:
+    """``(root/rel, size)`` of each file under ``base`` in ``filesystem``
+    whose path ``rel`` below ``base`` matches the glob ``pattern``, one
+    ``fnmatch`` per path component, so that, as in Python glob, ``*``
+    stops at ``/`` and a name starting with ``.`` needs a pattern that
+    does."""
+    from pyarrow import fs as pafs
+
+    parts = pattern.split("/")
+    infos = filesystem.get_file_info(
+        pafs.FileSelector(base, recursive=len(parts) > 1, allow_not_found=True)
+    )
+    out = []
+    for info in infos:
+        rel = info.path[len(base):].lstrip("/").split("/")
+        if (
+            info.type == pafs.FileType.File
+            and len(rel) == len(parts)
+            and all(
+                fnmatch.fnmatchcase(r, p) and (p[:1] == "." or r[:1] != ".")
+                for r, p in zip(rel, parts)
+            )
+        ):
+            out.append((f"{root}/{'/'.join(rel)}", info.size))
+    return out
+
+
+def _list_files(pattern: str) -> list[tuple[str, int]]:
+    """``(path, size)`` of every FILE matching the glob ``pattern``,
+    sorted by path: ``file:`` and plain paths through Python glob, other
+    URIs through ``pyarrow.fs``. Runs where planning runs, in a Python
+    worker without a JVM gateway, so Hadoop's ``globStatus`` is out of
+    reach."""
+    pattern = _local(pattern)
+    if "://" not in pattern:
+        return sorted(
+            (p, os.path.getsize(p)) for p in _glob.glob(pattern) if os.path.isfile(p)
+        )
+    wild = next((i for i, ch in enumerate(pattern) if ch in "*?["), None)
+    if wild is None:
+        return [(pattern, _file_size(pattern))]
+    root = pattern[: pattern.rfind("/", 0, wild)]
+    if "://" not in root:
+        raise ValueError(f"geotiff: glob in the host or bucket of {pattern!r}")
+    filesystem, base = _filesystem(root)
+    return sorted(_glob_remote(filesystem, base, root, pattern[len(root) + 1:]))
+
+
+def _pack(files: list[tuple[str, int]], slots: int, max_bytes: int) -> list[list[str]]:
+    """Split ``(path, size)`` files into ``min(files, max(slots,
+    ceil(total / max_bytes)))`` partitions, longest file first into the
+    partition holding the fewest bytes (then the fewest files); each
+    partition's paths come back sorted."""
+    total = sum(size for _, size in files)
+    n = min(len(files), max(slots, -(-total // max_bytes)))
+    heap = [(0, 0, i) for i in range(n)]
+    parts: list[list[str]] = [[] for _ in range(n)]
+    for path, size in sorted(files, key=lambda f: (-f[1], f[0])):
+        load, count, i = heapq.heappop(heap)
+        parts[i].append(path)
+        heapq.heappush(heap, (load + size, count + 1, i))
+    return [sorted(p) for p in parts]
+
+
 class GeoTiffReader(DataSourceReader):
-    def __init__(self, options: dict):
+    def __init__(self, options: dict, slots: int, max_partition_bytes: int):
         self._path = options.get("path")
         # explicit pre-pruned file list (comma-joined) — lets callers
         # that already know the pending subset skip scheduling decode
@@ -101,40 +192,36 @@ class GeoTiffReader(DataSourceReader):
         self._band = int(options["band"]) if "band" in options else None
         if self._band is not None and self._band < 1:
             raise ValueError(f"band must be >= 1, got {self._band}")
+        self._slots = slots
+        self._max_partition_bytes = max_partition_bytes
 
     def partitions(self) -> Sequence[InputPartition]:
         if self._files:
-            paths = sorted(p for p in self._files.split(",") if p)
-        elif "://" in self._path:
-            # planning runs on the DRIVER, where the JVM gateway exists:
-            # remote globs expand in one Hadoop globStatus round-trip
-            # (executor-side decode then reads bytes via pyarrow.fs)
-            from pyspark.sql import SparkSession
-
-            from sids_data_pipeline_spark.sources.storage import hadoop_glob
-
-            spark = SparkSession.getActiveSession()
-            if spark is None:
-                raise RuntimeError(
-                    "geotiff source: remote glob planning needs an active "
-                    "SparkSession"
-                )
-            paths = hadoop_glob(spark, self._path)
+            files = sorted(
+                (p, _file_size(p)) for p in self._files.split(",") if p
+            )
         else:
-            paths = sorted(_glob.glob(self._path))
-        if not paths:
+            files = _list_files(self._path)
+        if not files:
             raise FileNotFoundError(f"geotiff: no files match {self._path!r}")
-        return [_FilePartition(p, self._band) for p in paths]
+        return [
+            _FilesPartition(paths, self._band)
+            for paths in _pack(files, self._slots, self._max_partition_bytes)
+        ]
 
-    def read(self, partition: _FilePartition) -> Iterator[tuple]:
+    def read(self, partition: _FilesPartition) -> Iterator[tuple]:
         from sids_data_pipeline_spark.sources.geotiff import pixel_batches
 
-        yield from pixel_batches(
-            _read_bytes(partition.path), partition.band, partition.path
-        )
+        for path in partition.paths:
+            yield from pixel_batches(_read_bytes(path), partition.band, path)
 
 
 class GeoTiffDataSource(DataSource):
+    # the task slots and spark.sql.files.maxPartitionBytes of the session
+    # the format is registered in; register() sets both
+    slots: int
+    max_partition_bytes: int
+
     @classmethod
     def name(cls) -> str:
         return "geotiff"
@@ -143,15 +230,28 @@ class GeoTiffDataSource(DataSource):
         return PIXELS
 
     def reader(self, schema) -> GeoTiffReader:
-        return GeoTiffReader(self.options)
+        return GeoTiffReader(self.options, self.slots, self.max_partition_bytes)
 
     def writer(self, schema, overwrite: bool):
         return GeoTiffWriter(self.options, overwrite)
 
 
 def register(spark) -> None:
-    """Idempotent per-session registration of the ``geotiff`` format."""
-    spark.dataSource.register(GeoTiffDataSource)
+    """Idempotent per-session registration of the ``geotiff`` format.
+
+    Planning runs in a Python worker that cannot ask the session, so the
+    registered class carries the session's ``defaultParallelism`` and
+    ``spark.sql.files.maxPartitionBytes`` as read now; cloudpickle ships
+    a class defined in a function by value. Register again after
+    changing either."""
+
+    class SessionGeoTiffDataSource(GeoTiffDataSource):
+        slots = spark.sparkContext.defaultParallelism
+        max_partition_bytes = (
+            spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
+        )
+
+    spark.dataSource.register(SessionGeoTiffDataSource)
 
 
 class _WrittenFiles(WriterCommitMessage):

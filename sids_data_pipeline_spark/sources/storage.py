@@ -55,10 +55,11 @@ def fs_write_text(spark: SparkSession, path: str, content: str) -> None:
 def hadoop_glob(spark: SparkSession, pattern: str) -> list[str]:
     """Expand a glob PATTERN on any Hadoop-supported URI in ONE
     ``globStatus`` round-trip, returning the matching FILE paths sorted.
-    Local (no-scheme) patterns use Python glob. The single shared
-    implementation for every remote listing in the repo (standardize
-    input scan, tileset-marker heal, geotiff source planning) so
-    scheme/metachar semantics cannot drift between call sites."""
+    Local (no-scheme) patterns use Python glob. The shared driver-side
+    listing (standardize input scan, tileset-marker heal), so
+    scheme/metachar semantics cannot drift between those call sites;
+    the geotiff source plans in a Python worker without the JVM and
+    lists through ``pyarrow.fs`` instead."""
     if "://" not in pattern:
         import glob as globmod
         import os

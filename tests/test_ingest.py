@@ -280,10 +280,10 @@ def test_geotiff_sink_reference_profile(spark, tmp_path, gradient_array):
 
 
 def test_geotiff_datasource_partitions_per_file(spark, tmp_path):
-    """The registered format plans one partition per raster file and
-    matches the binaryFile ingest path row-for-row on every PIXELS
-    column, for single-band files and for a 3-band file read with no
-    band and with band 2."""
+    """With fewer files than task slots, the registered format plans one
+    partition per raster file; it matches the binaryFile ingest path
+    row-for-row on every PIXELS column, for single-band files and for a
+    3-band file read with no band and with band 2."""
     import numpy as np
 
     from sids_data_pipeline_spark.sources.geotiff import (
@@ -304,6 +304,7 @@ def test_geotiff_datasource_partitions_per_file(spark, tmp_path):
     )
     register(spark)
     ds = spark.read.format("geotiff").load(str(tmp_path / "*.tif"))
+    # fewer files than task slots: each file is a partition of its own
     assert ds.rdd.getNumPartitions() == 2
 
     def rows(df):
@@ -324,6 +325,88 @@ def test_geotiff_datasource_partitions_per_file(spark, tmp_path):
 
     with _pytest.raises(Exception, match="no files match"):
         spark.read.format("geotiff").load(str(tmp_path / "nope-*.tif")).collect()
+
+
+def _partition_bytes(df, sizes: dict) -> list[int]:
+    """Sorted byte totals of the files each partition of a geotiff scan
+    read, from the raster ids it emitted."""
+    from pyspark.sql import functions as F
+
+    got: dict = {}
+    for r in df.select(F.spark_partition_id().alias("p"), "raster_id").distinct().collect():
+        got[r.p] = got.get(r.p, 0) + sizes[r.raster_id]
+    return sorted(got.values())
+
+
+def test_geotiff_datasource_packs_files_into_task_slots(spark, tmp_path):
+    """More files than task slots: the scan plans defaultParallelism
+    partitions whose byte totals are those of longest-first packing,
+    and its rows equal ingest_geotiff's, from a plain path and from a
+    file:// glob. With spark.sql.files.maxPartitionBytes below every
+    file, each file is a partition of its own (the large-raster plan)."""
+    from sids_data_pipeline_spark.sources.geotiff import encode_geotiff, ingest_geotiff
+    from sids_data_pipeline_spark.sources.geotiff_datasource import register
+
+    slots = spark.sparkContext.defaultParallelism
+    sizes = {}
+    for i in range(slots + 3):
+        arr = np.arange(3 * (i + 1) ** 2, dtype="float64").reshape(3 * (i + 1), i + 1)
+        data = encode_geotiff(arr, origin_x=float(i), origin_y=1.0, pixel_deg=0.1)
+        (tmp_path / f"r{i}.tif").write_bytes(data)
+        sizes[f"r{i}"] = len(data)
+    want_totals = [0] * slots
+    for size in sorted(sizes.values(), reverse=True):
+        want_totals[want_totals.index(min(want_totals))] += size
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.collect())
+
+    glob = str(tmp_path / "*.tif")
+    want = rows(ingest_geotiff(spark, glob))
+    register(spark)
+    ds = spark.read.format("geotiff").load(glob)
+    assert ds.rdd.getNumPartitions() == slots
+    assert _partition_bytes(ds, sizes) == sorted(want_totals)
+    assert rows(ds) == want and len(want) > 0
+    assert rows(spark.read.format("geotiff").load(f"file://{glob}")) == want
+
+    key = "spark.sql.files.maxPartitionBytes"
+    old = spark.conf.get(key)
+    try:
+        spark.conf.set(key, "1")
+        register(spark)
+        ds = spark.read.format("geotiff").load(glob)
+        assert ds.rdd.getNumPartitions() == len(sizes)
+        assert _partition_bytes(ds, sizes) == sorted(sizes.values())
+        assert rows(ds) == want
+    finally:
+        spark.conf.set(key, old)
+        register(spark)
+
+
+def test_geotiff_remote_glob_lists_through_pyarrow(tmp_path):
+    """The listing for remote URIs matches one glob component at a time
+    as Python glob does (``*`` stops at ``/`` and skips dot-files) and
+    returns the files' sizes, here through pyarrow's local filesystem."""
+    from pyarrow import fs as pafs
+
+    from sids_data_pipeline_spark.sources.geotiff_datasource import _glob_remote, _list_files
+
+    for rel in ("a/x.tif", "a/y.txt", "a/.h.tif", "b/z.tif", "b/deep/w.tif", "top.tif"):
+        (tmp_path / rel).parent.mkdir(parents=True, exist_ok=True)
+        (tmp_path / rel).write_bytes(b"0" * len(rel))
+    base = str(tmp_path)
+    got = sorted(_glob_remote(pafs.LocalFileSystem(), base, "mem://root", "*/*.tif"))
+    assert got == [("mem://root/a/x.tif", 7), ("mem://root/b/z.tif", 7)]
+    assert _glob_remote(pafs.LocalFileSystem(), base, "mem://root", "*.tif") == [
+        ("mem://root/top.tif", 7)
+    ]
+    assert _glob_remote(pafs.LocalFileSystem(), base, "mem://root", "a/.*") == [
+        ("mem://root/a/.h.tif", 8)
+    ]
+    assert _list_files(f"file://{base}/*/*.tif") == [
+        (f"{base}/a/x.tif", 7), (f"{base}/b/z.tif", 7)
+    ]
 
 
 def test_geotiff_datasource_rejects_band_out_of_range(spark, tmp_path):

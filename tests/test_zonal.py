@@ -330,6 +330,55 @@ def test_kernel_path_reads_geotiff_scan_once(spark, tmp_path):
     assert sorted(got.raster_id.unique()) == ["a", "b"] and len(got) == 8
 
 
+def test_kernel_on_tasks_that_read_several_rasters(spark, tmp_path):
+    """zonal_stats over a packed format("geotiff") scan, where one task
+    reads several rasters and one of them misses every zone, equals the
+    NumPy oracle with exactly one row per zone × raster; the missing
+    raster's rows have count 0 and NULL stats."""
+    from pyspark.sql import functions as F
+
+    from sids_data_pipeline_spark.sources import geotiff
+    from sids_data_pipeline_spark.sources.geotiff_datasource import register
+
+    slots = spark.sparkContext.defaultParallelism
+    names = [f"r{i}" for i in range(slots)]
+    for i, name in enumerate(names):
+        arr = np.arange(64, dtype=np.float64).reshape(8, 8) + 100.0 * i
+        (tmp_path / f"{name}.tif").write_bytes(geotiff.encode_geotiff(arr, 0.0, 1.0, _PX))
+    # the smallest file: longest-first packing puts it with another raster
+    (tmp_path / "miss.tif").write_bytes(geotiff.encode_geotiff(np.ones((2, 2)), 50.0, 51.0, _PX))
+    register(spark)
+    pixels = spark.read.format("geotiff").load(f"{tmp_path}/*.tif")
+    per_task = {
+        r.p: r.n
+        for r in pixels.groupBy(F.spark_partition_id().alias("p"))
+        .agg(F.countDistinct("raster_id").alias("n"))
+        .collect()
+    }
+    miss_task = pixels.filter("raster_id = 'miss'").select(F.spark_partition_id()).first()[0]
+    assert len(per_task) == slots and per_task[miss_task] >= 2
+
+    zones = _edge_case_zones(spark)
+    got = (
+        zonal_stats(zones, pixels, stats=zonal.SUPPORTED_STATS)
+        .toPandas()
+        .sort_values(["raster_id", "fid"])
+        .reset_index(drop=True)
+    )
+    want = _stats_oracle(zones.toPandas(), pixels.toPandas())
+    assert got[["raster_id", "fid"]].values.tolist() == want[["raster_id", "fid"]].values.tolist()
+    assert len(got) == 4 * (slots + 1)
+    assert got["count"].tolist() == want["count"].tolist()
+    for s in ("mean", "sum", "min", "max", "stddev", "median"):
+        for g, w in zip(got[s], want[s]):
+            if pd.isna(w):
+                assert pd.isna(g), s
+            else:
+                assert g == pytest.approx(w, rel=1e-12), s
+    miss = got[got.raster_id == "miss"]
+    assert miss["count"].tolist() == [0] * 4 and miss["mean"].isna().all()
+
+
 def test_kernel_path_tracks_no_persist(spark):
     """The broadcast kernel builds the result universe in its own pass:
     no zone persist to release afterwards."""

@@ -22,6 +22,9 @@ echo "$staged" | grep -q "operators/zonal.py\|functions/geo.py" \
     && q="$q zonal_mean_large zonal_large_broadcast"
 echo "$staged" | grep -q "operators/zonal.py" \
     && q="$q raster_burn pipeline_end_to_end"
+# the geotiff reader sets the task shape the Entry-1 zonal kernel runs in
+echo "$staged" | grep -q "sources/geotiff_datasource.py" \
+    && q="$q zonal_mean_large"
 echo "$staged" | grep -q "operators/windows.py" \
     && q="$q events_session"
 echo "$staged" | grep -q "operators/multimodal.py" \
