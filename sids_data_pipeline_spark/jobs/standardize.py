@@ -10,9 +10,10 @@ from decode to write:
 
 - Pruning is a driver-side listing: the input files whose stems are in
   the Parquet ledger are dropped BEFORE any decode work is scheduled.
-- The driver's pending path list is split into
-  ``min(len(pending), defaultParallelism)`` contiguous slices, one task
-  each; the JVM reads no bytes and every listed file reaches a task.
+- The driver's pending path list is split by
+  :func:`geotiff_datasource.slice_files` (the geotiff scan's rule) into
+  ``min(len(pending), defaultParallelism)`` slices, one task each; the
+  JVM reads no bytes and every listed file reaches a task.
 - One ``mapInArrow`` kernel standardizes every file of its task
   (:func:`geotiff.standardize_geotiff`: decode, band select, clip as a
   row/column slice, ZSTD 128-tiled encode) and writes it through a temp
@@ -100,7 +101,10 @@ def run_standardize_job(
     writes). The ``ledger_path`` is plain Spark parquet and may live
     anywhere.
     """
-    from sids_data_pipeline_spark.sources.geotiff_datasource import require_local_dir
+    from sids_data_pipeline_spark.sources.geotiff_datasource import (
+        require_local_dir,
+        slice_files,
+    )
     from sids_data_pipeline_spark.sources.storage import hadoop_glob
 
     require_local_dir(out_dir)
@@ -120,9 +124,8 @@ def run_standardize_job(
         return {"processed": [], "skipped": skipped}
 
     sc = spark.sparkContext
-    paths = sc.parallelize(
-        [(f,) for f in pending_files], min(len(pending_files), sc.defaultParallelism)
-    )
+    slices = slice_files(pending_files, sc.defaultParallelism)
+    paths = sc.parallelize(slices, len(slices)).flatMap(lambda s: [(f,) for f in s])
     written = (
         spark.createDataFrame(paths, "path string")
         .mapInArrow(_standardize_kernel(out_dir, band, lon, lat), "raster_id string")

@@ -1117,11 +1117,10 @@ FROM (SELECT unnest(range({n * n})) AS i) t
 def _geotiff_datasource_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S5 through the Spark 4 Python DataSource API: the codec as a
     planner-integrated format (`spark.read.format("geotiff")`), the
-    files packed into at most one source partition per task slot unless
-    they fill spark.sql.files.maxPartitionBytes. Same lattice oracle as
-    the mapInPandas ingest path — the two scan styles must be
-    value-identical (they now literally read the same cached fixture
-    bytes)."""
+    files sliced into at most one source partition per task slot. Same
+    lattice oracle as the mapInPandas ingest path — the two scan styles
+    must be value-identical (they now literally read the same cached
+    fixture bytes)."""
     from sids_data_pipeline_spark.sources.geotiff_datasource import register
 
     register(spark)
@@ -3853,9 +3852,8 @@ QUERIES: list[Query] = [
         _geotiff_datasource_query,
         _geotiff_ingest_sql(),
         doc="S5 via the Spark 4 Python DataSource API: geotiff as a "
-            "registered format, files packed longest-first into one "
-            "partition per task slot (one per file once they fill "
-            "maxPartitionBytes), Arrow batches executor-side; "
+            "registered format, files sliced into at most one "
+            "partition per task slot, Arrow batches executor-side; "
             "value-identical to the ingest path",
         tags=("geo", "source"),
     ),

@@ -6,9 +6,9 @@ This is the idiomatic-Spark face of S5 (SURVEY.md §2a) for local and
 mapInArrow) is the route for any Hadoop filesystem (wasbs/abfs) and for
 streaming. Both build their rows with :func:`geotiff.pixel_batches`.
 Here the codec plugs into the planner itself: the source reports its
-schema, lists the files with their sizes (no decode) and packs them into
-input partitions; each partition decodes its files one after another
-with the pure-numpy codec and streams Arrow batches back.
+schema, lists the files (no decode) and slices them into input
+partitions; each partition decodes its files one after another with the
+pure-numpy codec and streams Arrow batches back.
 Registration is per-session::
 
     from sids_data_pipeline_spark.sources.geotiff_datasource import register
@@ -16,16 +16,16 @@ Registration is per-session::
     px = spark.read.format("geotiff").option("band", "1").load("/data/*.tif")
 
 Planning runs in a Python planner worker, which has no SparkSession and
-no JVM gateway: ``file:`` and plain paths are listed with Python glob,
-other URIs through ``pyarrow.fs``, and :func:`register` hands the
-session's task slots and ``spark.sql.files.maxPartitionBytes`` to the
-reader. A scan plans ``min(files, max(slots, ceil(total bytes /
-maxPartitionBytes)))`` partitions, filled longest file first. A small
-estate is one task per slot, since each Python task costs a fixed
-fraction of a second before it decodes a byte; rasters that fill
-maxPartitionBytes on their own keep one partition per file, the
-reference's per-file multiprocessing Pool (utils.py:47-57) recast as
-source partitions. Sub-file (tile-strip) partitions are the natural
+no JVM gateway: plain paths are listed with Python glob, URIs (``file:``
+included) one path component at a time through ``pyarrow.fs``, and
+:func:`register` hands the session's task slots to the reader. The
+files are sliced by :func:`slice_files`, the rule Entry-2's standardize
+job also uses: at most one partition per task slot, since each Python
+task costs a fixed fraction of a second before it decodes a byte. Where
+the slot count is not known at planning time (a cluster manager without
+``spark.default.parallelism``), each file keeps a partition of its own,
+the reference's per-file multiprocessing Pool (utils.py:47-57) recast
+as source partitions. Sub-file (tile-strip) partitions are the natural
 extension for multi-GB rasters.
 
 Matches reference ``batch/processing/raster.py:22-38`` (per-file GDAL
@@ -36,7 +36,6 @@ from __future__ import annotations
 
 import fnmatch
 import glob as _glob
-import heapq
 import itertools
 import os
 from typing import Iterator, Sequence
@@ -56,6 +55,17 @@ class _FilesPartition(InputPartition):
     def __init__(self, paths: list[str], band: int | None):
         self.paths = paths
         self.band = band
+
+
+def slice_files(paths: list[str], slots: int) -> list[list[str]]:
+    """Split ``paths`` into ``min(len(paths), slots)`` slices, one task
+    each, dealing the sorted paths round-robin so that neighbouring
+    files, which often differ little in size, land in different tasks.
+    The one task-slicing rule for raster files: the geotiff scan and the
+    standardize job both use it."""
+    n = min(len(paths), slots)
+    ordered = sorted(paths)
+    return [ordered[i::n] for i in range(n)]
 
 
 def _local(path: str) -> str:
@@ -102,83 +112,76 @@ def _read_bytes(path: str) -> bytes:
         return f.read()
 
 
-def _file_size(path: str) -> int:
-    path = _local(path)
-    if "://" not in path:
-        return os.path.getsize(path)
-    filesystem, fs_path = _filesystem(path)
-    info = filesystem.get_file_info(fs_path)
-    if not info.is_file:
-        raise FileNotFoundError(f"geotiff: no file {path!r}")
-    return info.size
-
-
-def _glob_remote(filesystem, base: str, root: str, pattern: str) -> list[tuple[str, int]]:
-    """``(root/rel, size)`` of each file under ``base`` in ``filesystem``
-    whose path ``rel`` below ``base`` matches the glob ``pattern``, one
-    ``fnmatch`` per path component, so that, as in Python glob, ``*``
-    stops at ``/`` and a name starting with ``.`` needs a pattern that
-    does."""
+def _glob_remote(filesystem, base: str, root: str, pattern: str) -> list[str]:
+    """``root/rel`` for each file under ``base`` in ``filesystem`` whose
+    path ``rel`` below ``base`` matches the glob ``pattern``. The walk
+    goes one pattern component per level, as Hadoop's ``globStatus``
+    does: a wildcard component lists its directories (not recursively),
+    a literal one is looked up; every component but the last must name
+    a directory and the last a file. A component matches as in
+    ``globStatus``: ``*`` stops at ``/`` and also matches names that
+    start with ``.``, and ``[^...]`` negates."""
     from pyarrow import fs as pafs
 
+    level = [("", base)]
     parts = pattern.split("/")
-    infos = filesystem.get_file_info(
-        pafs.FileSelector(base, recursive=len(parts) > 1, allow_not_found=True)
-    )
-    out = []
-    for info in infos:
-        rel = info.path[len(base):].lstrip("/").split("/")
-        if (
-            info.type == pafs.FileType.File
-            and len(rel) == len(parts)
-            and all(
-                fnmatch.fnmatchcase(r, p) and (p[:1] == "." or r[:1] != ".")
-                for r, p in zip(rel, parts)
-            )
-        ):
-            out.append((f"{root}/{'/'.join(rel)}", info.size))
-    return out
+    for depth, part in enumerate(parts):
+        want = pafs.FileType.File if depth == len(parts) - 1 else pafs.FileType.Directory
+        part = part.replace("[^", "[!")
+        wild = any(ch in part for ch in "*?[")
+        found = []
+        for rel, path in level:
+            if wild:
+                infos = filesystem.get_file_info(
+                    pafs.FileSelector(path, allow_not_found=True)
+                )
+            else:
+                infos = [filesystem.get_file_info(f"{path.rstrip('/')}/{part}")]
+            found += [
+                (f"{rel}/{info.base_name}", info.path)
+                for info in infos
+                if info.type == want and fnmatch.fnmatchcase(info.base_name, part)
+            ]
+        level = found
+    return sorted(root + rel for rel, _ in level)
 
 
-def _list_files(pattern: str) -> list[tuple[str, int]]:
-    """``(path, size)`` of every FILE matching the glob ``pattern``,
-    sorted by path: ``file:`` and plain paths through Python glob, other
-    URIs through ``pyarrow.fs``. Runs where planning runs, in a Python
-    worker without a JVM gateway, so Hadoop's ``globStatus`` is out of
-    reach."""
-    pattern = _local(pattern)
-    if "://" not in pattern:
-        return sorted(
-            (p, os.path.getsize(p)) for p in _glob.glob(pattern) if os.path.isfile(p)
+def _list_files(pattern: str) -> list[str]:
+    """Every FILE matching the glob ``pattern``, sorted. Runs where
+    planning runs, in a Python worker without a JVM gateway, so Hadoop's
+    ``globStatus`` is out of reach; for a plain path or a
+    ``scheme://`` URI it selects what :func:`storage.hadoop_glob` (the
+    standardize job's lister) selects. Plain paths go through Python
+    glob, as there; URIs, ``file:`` included, through
+    :func:`_glob_remote`. Hadoop's
+    ``{a,b}`` alternation and ``\\`` escapes are refused rather than
+    matched differently."""
+    if "://" not in pattern and not pattern.startswith("file:"):
+        return sorted(p for p in _glob.glob(pattern) if os.path.isfile(p))
+    if "{" in pattern or "\\" in pattern:
+        raise ValueError(
+            f"geotiff: {pattern!r} uses glob alternation or escapes, which "
+            "the source does not expand; list the files with a plain glob "
+            "or pass them through the `files` option"
         )
-    wild = next((i for i, ch in enumerate(pattern) if ch in "*?["), None)
-    if wild is None:
-        return [(pattern, _file_size(pattern))]
-    root = pattern[: pattern.rfind("/", 0, wild)]
+    local = pattern.startswith("file:")
+    if local:
+        pattern = _local(pattern)
+    wild = next((i for i, ch in enumerate(pattern) if ch in "*?["), len(pattern))
+    cut = pattern.rfind("/", 0, wild)
+    root, rest = pattern[:cut], pattern[cut + 1:]
+    if local:
+        from pyarrow import fs as pafs
+
+        return _glob_remote(pafs.LocalFileSystem(), root or "/", root, rest)
     if "://" not in root:
         raise ValueError(f"geotiff: glob in the host or bucket of {pattern!r}")
     filesystem, base = _filesystem(root)
-    return sorted(_glob_remote(filesystem, base, root, pattern[len(root) + 1:]))
-
-
-def _pack(files: list[tuple[str, int]], slots: int, max_bytes: int) -> list[list[str]]:
-    """Split ``(path, size)`` files into ``min(files, max(slots,
-    ceil(total / max_bytes)))`` partitions, longest file first into the
-    partition holding the fewest bytes (then the fewest files); each
-    partition's paths come back sorted."""
-    total = sum(size for _, size in files)
-    n = min(len(files), max(slots, -(-total // max_bytes)))
-    heap = [(0, 0, i) for i in range(n)]
-    parts: list[list[str]] = [[] for _ in range(n)]
-    for path, size in sorted(files, key=lambda f: (-f[1], f[0])):
-        load, count, i = heapq.heappop(heap)
-        parts[i].append(path)
-        heapq.heappush(heap, (load + size, count + 1, i))
-    return [sorted(p) for p in parts]
+    return _glob_remote(filesystem, base, root, rest)
 
 
 class GeoTiffReader(DataSourceReader):
-    def __init__(self, options: dict, slots: int, max_partition_bytes: int):
+    def __init__(self, options: dict, slots: int | None):
         self._path = options.get("path")
         # explicit pre-pruned file list (comma-joined) — lets callers
         # that already know the pending subset skip scheduling decode
@@ -193,20 +196,17 @@ class GeoTiffReader(DataSourceReader):
         if self._band is not None and self._band < 1:
             raise ValueError(f"band must be >= 1, got {self._band}")
         self._slots = slots
-        self._max_partition_bytes = max_partition_bytes
 
     def partitions(self) -> Sequence[InputPartition]:
         if self._files:
-            files = sorted(
-                (p, _file_size(p)) for p in self._files.split(",") if p
-            )
+            paths = [p for p in self._files.split(",") if p]
         else:
-            files = _list_files(self._path)
-        if not files:
+            paths = _list_files(self._path)
+        if not paths:
             raise FileNotFoundError(f"geotiff: no files match {self._path!r}")
         return [
-            _FilesPartition(paths, self._band)
-            for paths in _pack(files, self._slots, self._max_partition_bytes)
+            _FilesPartition(s, self._band)
+            for s in slice_files(paths, self._slots or len(paths))
         ]
 
     def read(self, partition: _FilesPartition) -> Iterator[tuple]:
@@ -217,10 +217,9 @@ class GeoTiffReader(DataSourceReader):
 
 
 class GeoTiffDataSource(DataSource):
-    # the task slots and spark.sql.files.maxPartitionBytes of the session
-    # the format is registered in; register() sets both
-    slots: int
-    max_partition_bytes: int
+    # the task slots of the session the format is registered in, or None
+    # (one partition per file); register() sets it
+    slots: int | None = None
 
     @classmethod
     def name(cls) -> str:
@@ -230,26 +229,33 @@ class GeoTiffDataSource(DataSource):
         return PIXELS
 
     def reader(self, schema) -> GeoTiffReader:
-        return GeoTiffReader(self.options, self.slots, self.max_partition_bytes)
+        return GeoTiffReader(self.options, self.slots)
 
     def writer(self, schema, overwrite: bool):
         return GeoTiffWriter(self.options, overwrite)
+
+
+def planned_slots(sc) -> int | None:
+    """The task slots a scan can plan for, fixed for the life of the
+    SparkContext ``sc``, or None where no such number exists. In local
+    mode and wherever ``spark.default.parallelism`` is set,
+    ``defaultParallelism`` is fixed at start. Under a cluster manager it
+    otherwise counts the executor cores registered so far (at least 2),
+    which grow after start and under dynamic allocation."""
+    if sc.master.startswith("local") or sc.getConf().contains("spark.default.parallelism"):
+        return sc.defaultParallelism
+    return None
 
 
 def register(spark) -> None:
     """Idempotent per-session registration of the ``geotiff`` format.
 
     Planning runs in a Python worker that cannot ask the session, so the
-    registered class carries the session's ``defaultParallelism`` and
-    ``spark.sql.files.maxPartitionBytes`` as read now; cloudpickle ships
-    a class defined in a function by value. Register again after
-    changing either."""
+    registered class carries :func:`planned_slots`; cloudpickle ships a
+    class defined in a function by value."""
 
     class SessionGeoTiffDataSource(GeoTiffDataSource):
-        slots = spark.sparkContext.defaultParallelism
-        max_partition_bytes = (
-            spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
-        )
+        slots = planned_slots(spark.sparkContext)
 
     spark.dataSource.register(SessionGeoTiffDataSource)
 

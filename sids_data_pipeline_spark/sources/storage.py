@@ -57,9 +57,12 @@ def hadoop_glob(spark: SparkSession, pattern: str) -> list[str]:
     ``globStatus`` round-trip, returning the matching FILE paths sorted.
     Local (no-scheme) patterns use Python glob. The shared driver-side
     listing (standardize input scan, tileset-marker heal), so
-    scheme/metachar semantics cannot drift between those call sites;
-    the geotiff source plans in a Python worker without the JVM and
-    lists through ``pyarrow.fs`` instead."""
+    scheme/metachar semantics cannot drift between those call sites.
+    The geotiff source plans in a Python worker without the JVM and
+    lists URIs through ``pyarrow.fs``
+    (``geotiff_datasource._list_files``), one component per level with
+    the same matching, except that it refuses ``{a,b}`` alternation and
+    ``\\`` escapes, which only this lister expands."""
     if "://" not in pattern:
         import glob as globmod
         import os

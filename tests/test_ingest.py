@@ -304,8 +304,9 @@ def test_geotiff_datasource_partitions_per_file(spark, tmp_path):
     )
     register(spark)
     ds = spark.read.format("geotiff").load(str(tmp_path / "*.tif"))
-    # fewer files than task slots: each file is a partition of its own
-    assert ds.rdd.getNumPartitions() == 2
+    # one partition per task slot, at most one per file: 2 files plan 2
+    # partitions wherever the session has 2 slots or more
+    assert ds.rdd.getNumPartitions() == min(2, spark.sparkContext.defaultParallelism)
 
     def rows(df):
         return sorted(tuple(r) for r in df.collect())
@@ -327,36 +328,22 @@ def test_geotiff_datasource_partitions_per_file(spark, tmp_path):
         spark.read.format("geotiff").load(str(tmp_path / "nope-*.tif")).collect()
 
 
-def _partition_bytes(df, sizes: dict) -> list[int]:
-    """Sorted byte totals of the files each partition of a geotiff scan
-    read, from the raster ids it emitted."""
+def test_geotiff_datasource_slices_files_into_task_slots(spark, tmp_path):
+    """More files than task slots: the scan plans defaultParallelism
+    partitions holding the slices of slice_files, and its rows equal
+    ingest_geotiff's, from a plain path and from a file:// glob."""
     from pyspark.sql import functions as F
 
-    got: dict = {}
-    for r in df.select(F.spark_partition_id().alias("p"), "raster_id").distinct().collect():
-        got[r.p] = got.get(r.p, 0) + sizes[r.raster_id]
-    return sorted(got.values())
-
-
-def test_geotiff_datasource_packs_files_into_task_slots(spark, tmp_path):
-    """More files than task slots: the scan plans defaultParallelism
-    partitions whose byte totals are those of longest-first packing,
-    and its rows equal ingest_geotiff's, from a plain path and from a
-    file:// glob. With spark.sql.files.maxPartitionBytes below every
-    file, each file is a partition of its own (the large-raster plan)."""
     from sids_data_pipeline_spark.sources.geotiff import encode_geotiff, ingest_geotiff
     from sids_data_pipeline_spark.sources.geotiff_datasource import register
 
     slots = spark.sparkContext.defaultParallelism
-    sizes = {}
-    for i in range(slots + 3):
+    stems = [f"r{i:02d}" for i in range(slots + 3)]
+    for i, stem in enumerate(stems):
         arr = np.arange(3 * (i + 1) ** 2, dtype="float64").reshape(3 * (i + 1), i + 1)
-        data = encode_geotiff(arr, origin_x=float(i), origin_y=1.0, pixel_deg=0.1)
-        (tmp_path / f"r{i}.tif").write_bytes(data)
-        sizes[f"r{i}"] = len(data)
-    want_totals = [0] * slots
-    for size in sorted(sizes.values(), reverse=True):
-        want_totals[want_totals.index(min(want_totals))] += size
+        (tmp_path / f"{stem}.tif").write_bytes(
+            encode_geotiff(arr, origin_x=float(i), origin_y=1.0, pixel_deg=0.1)
+        )
 
     def rows(df):
         return sorted(tuple(r) for r in df.collect())
@@ -366,47 +353,75 @@ def test_geotiff_datasource_packs_files_into_task_slots(spark, tmp_path):
     register(spark)
     ds = spark.read.format("geotiff").load(glob)
     assert ds.rdd.getNumPartitions() == slots
-    assert _partition_bytes(ds, sizes) == sorted(want_totals)
+    got: dict = {}
+    for r in ds.select(F.spark_partition_id().alias("p"), "raster_id").distinct().collect():
+        got.setdefault(r.p, set()).add(r.raster_id)
+    assert sorted(map(sorted, got.values())) == sorted(stems[i::slots] for i in range(slots))
     assert rows(ds) == want and len(want) > 0
     assert rows(spark.read.format("geotiff").load(f"file://{glob}")) == want
 
-    key = "spark.sql.files.maxPartitionBytes"
-    old = spark.conf.get(key)
-    try:
-        spark.conf.set(key, "1")
-        register(spark)
-        ds = spark.read.format("geotiff").load(glob)
-        assert ds.rdd.getNumPartitions() == len(sizes)
-        assert _partition_bytes(ds, sizes) == sorted(sizes.values())
-        assert rows(ds) == want
-    finally:
-        spark.conf.set(key, old)
-        register(spark)
+
+def test_geotiff_datasource_one_partition_per_file_without_fixed_slots(spark, tmp_path):
+    """A session whose slot count can still change (a cluster manager
+    without spark.default.parallelism) plans one partition per file;
+    local mode and a set spark.default.parallelism plan to that count."""
+    from types import SimpleNamespace
+
+    from pyspark import SparkConf
+
+    from sids_data_pipeline_spark.sources.geotiff_datasource import (
+        GeoTiffReader,
+        planned_slots,
+        slice_files,
+    )
+
+    sc = spark.sparkContext
+    assert planned_slots(sc) == sc.defaultParallelism
+    conf = SparkConf(loadDefaults=False)
+    yarn = SimpleNamespace(master="yarn", defaultParallelism=2, getConf=lambda: conf)
+    assert planned_slots(yarn) is None
+    conf.set("spark.default.parallelism", "2")
+    assert planned_slots(yarn) == 2
+
+    for stem in ("c", "a", "d", "b", "e"):
+        (tmp_path / f"{stem}.tif").write_bytes(b"")
+    paths = [str(tmp_path / f"{s}.tif") for s in "abcde"]
+    glob = str(tmp_path / "*.tif")
+    assert [p.paths for p in GeoTiffReader({"path": glob}, None).partitions()] == [
+        [p] for p in paths
+    ]
+    assert [p.paths for p in GeoTiffReader({"path": glob}, 2).partitions()] == [
+        paths[0::2], paths[1::2]
+    ]
+    assert slice_files(paths[::-1], 9) == [[p] for p in paths]
 
 
-def test_geotiff_remote_glob_lists_through_pyarrow(tmp_path):
-    """The listing for remote URIs matches one glob component at a time
-    as Python glob does (``*`` stops at ``/`` and skips dot-files) and
-    returns the files' sizes, here through pyarrow's local filesystem."""
+def test_geotiff_uri_glob_walks_one_component_per_level(tmp_path):
+    """URI globs match one component per directory level with Hadoop
+    globStatus rules (``*`` stops at ``/`` and matches dot-files,
+    ``[^...]`` negates), here through pyarrow's local filesystem and a
+    file:// URI; alternation is refused."""
     from pyarrow import fs as pafs
 
     from sids_data_pipeline_spark.sources.geotiff_datasource import _glob_remote, _list_files
 
-    for rel in ("a/x.tif", "a/y.txt", "a/.h.tif", "b/z.tif", "b/deep/w.tif", "top.tif"):
+    for rel in ("a/x.tif", "a/y.txt", "a/.h.tif", "b/z.tif", "b/deep/w.tif",
+                "b/deep/v.tif", "top.tif"):
         (tmp_path / rel).parent.mkdir(parents=True, exist_ok=True)
-        (tmp_path / rel).write_bytes(b"0" * len(rel))
+        (tmp_path / rel).write_bytes(b"")
     base = str(tmp_path)
-    got = sorted(_glob_remote(pafs.LocalFileSystem(), base, "mem://root", "*/*.tif"))
-    assert got == [("mem://root/a/x.tif", 7), ("mem://root/b/z.tif", 7)]
-    assert _glob_remote(pafs.LocalFileSystem(), base, "mem://root", "*.tif") == [
-        ("mem://root/top.tif", 7)
-    ]
-    assert _glob_remote(pafs.LocalFileSystem(), base, "mem://root", "a/.*") == [
-        ("mem://root/a/.h.tif", 8)
-    ]
-    assert _list_files(f"file://{base}/*/*.tif") == [
-        (f"{base}/a/x.tif", 7), (f"{base}/b/z.tif", 7)
-    ]
+
+    def glob(pattern):
+        return _glob_remote(pafs.LocalFileSystem(), base, "mem://bucket", pattern)
+
+    assert glob("*/*.tif") == ["mem://bucket/a/.h.tif", "mem://bucket/a/x.tif", "mem://bucket/b/z.tif"]
+    assert glob("*.tif") == ["mem://bucket/top.tif"]
+    assert glob("*/deep/[^v]*") == ["mem://bucket/b/deep/w.tif"]
+    assert glob("b/deep") == [] and glob("nope/*.tif") == []
+    assert _list_files(f"file://{base}/[ab]/[!.]*.tif") == [f"{base}/a/x.tif", f"{base}/b/z.tif"]
+    assert _list_files(f"file://{base}/top.tif") == [f"{base}/top.tif"]
+    with pytest.raises(ValueError, match="alternation"):
+        _list_files(f"file://{base}/{{a,b}}/*.tif")
 
 
 def test_geotiff_datasource_rejects_band_out_of_range(spark, tmp_path):

@@ -331,10 +331,11 @@ def test_kernel_path_reads_geotiff_scan_once(spark, tmp_path):
 
 
 def test_kernel_on_tasks_that_read_several_rasters(spark, tmp_path):
-    """zonal_stats over a packed format("geotiff") scan, where one task
-    reads several rasters and one of them misses every zone, equals the
-    NumPy oracle with exactly one row per zone × raster; the missing
-    raster's rows have count 0 and NULL stats."""
+    """zonal_stats over a format("geotiff") scan with more files than
+    task slots, where one task reads several rasters and one of them
+    misses every zone, equals the NumPy oracle with exactly one row per
+    zone × raster; the missing raster's rows have count 0 and NULL
+    stats."""
     from pyspark.sql import functions as F
 
     from sids_data_pipeline_spark.sources import geotiff
@@ -345,7 +346,7 @@ def test_kernel_on_tasks_that_read_several_rasters(spark, tmp_path):
     for i, name in enumerate(names):
         arr = np.arange(64, dtype=np.float64).reshape(8, 8) + 100.0 * i
         (tmp_path / f"{name}.tif").write_bytes(geotiff.encode_geotiff(arr, 0.0, 1.0, _PX))
-    # the smallest file: longest-first packing puts it with another raster
+    # first in sorted order: slice_files deals it into a task with another raster
     (tmp_path / "miss.tif").write_bytes(geotiff.encode_geotiff(np.ones((2, 2)), 50.0, 51.0, _PX))
     register(spark)
     pixels = spark.read.format("geotiff").load(f"{tmp_path}/*.tif")
