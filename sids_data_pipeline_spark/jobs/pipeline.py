@@ -41,10 +41,7 @@ from sids_data_pipeline_spark import lifecycle
 from sids_data_pipeline_spark.operators import manifest
 from sids_data_pipeline_spark.operators.zonal import zonal_stats
 from sids_data_pipeline_spark.sinks import geojsonl, tiles
-from sids_data_pipeline_spark.sources.geotiff_datasource import (
-    _replace_with,
-    require_local_dir,
-)
+from sids_data_pipeline_spark.sources.storage import require_local_dir, write_bytes
 from sids_data_pipeline_spark.sources.raster import synthetic_raster, standardize_pixels
 from sids_data_pipeline_spark.sources.vector import fixture_zones
 
@@ -94,7 +91,7 @@ def _write_pair_data(out_dir, key, feats, stats, max_zoom, max_features_per_tile
         return None
     feats = feats.sort_by("fid")
     lines = geojsonl.arrow_feature_lines(feats, ("fid", *stats))
-    _replace_with(
+    write_bytes(
         os.path.join(pair, "export.geojsonl", "part-00000.txt"),
         "".join(f"{line}\n" for line in lines).encode("utf-8"),
     )
@@ -111,7 +108,7 @@ def _write_pair_data(out_dir, key, feats, stats, max_zoom, max_features_per_tile
             pa.table({"y": pa.array(ys, pa.int32()), "pbf": pa.array(pbfs, pa.binary())}),
             buf, compression="zstd", write_statistics=["y"], store_schema=False,
         )
-        _replace_with(
+        write_bytes(
             os.path.join(pair, "tiles", f"z={z}", f"x={x}", "part-00000.parquet"),
             buf.getvalue().to_pybytes(),
         )
@@ -125,7 +122,7 @@ def _write_pair_marker(out_dir, key, bounds, max_zoom, stats):
         key, max_zoom=max_zoom, bounds=bounds,
         fields={"fid": "Number", **{s: "Number" for s in stats}},
     )
-    _replace_with(
+    write_bytes(
         os.path.join(out_dir, key, "tiles", "_tileset_metadata.json"),
         json.dumps(meta, separators=(",", ":")).encode("utf-8"),
     )
@@ -174,7 +171,7 @@ def run_pipeline(
     """
     from collections import namedtuple
 
-    require_local_dir(out_dir)
+    local_out = require_local_dir(out_dir)
     ledger_path = os.path.join(out_dir, "_ledger")
 
     # The manifest is driver-sized BY CONSTRUCTION — ids arrive as Python
@@ -211,7 +208,7 @@ def run_pipeline(
     # existence probe — constant filesystem round-trips vs pair count.
     all_pending = [p for p in all_pairs if (p.v_id, p.r_id) not in done_set]
     # nothing pending → skip even the single listing
-    complete_keys = tiles.tileset_markers(out_dir) if all_pending else set()
+    complete_keys = tiles.tileset_markers(local_out) if all_pending else set()
     pending_rows, marker_done = [], []
     for r in all_pending:
         if r.pair_key in complete_keys:
@@ -285,7 +282,7 @@ def run_pipeline(
         for r in feats.repartitionById(n_tasks, "_slot")
         .sortWithinPartitions("pair_key")
         .mapInArrow(
-            _sink_kernel(out_dir, stats, max_zoom, max_features_per_tile),
+            _sink_kernel(local_out, stats, max_zoom, max_features_per_tile),
             "pair_key string",
         )
         .collect()
@@ -293,8 +290,8 @@ def run_pipeline(
     # a pair without stats rows still gets its (empty) outputs and marker
     for key in outputs:
         if key not in written:
-            _write_pair_data(out_dir, key, None, stats, max_zoom, max_features_per_tile)
-            _write_pair_marker(out_dir, key, None, max_zoom, stats)
+            _write_pair_data(local_out, key, None, stats, max_zoom, max_features_per_tile)
+            _write_pair_marker(local_out, key, None, max_zoom, stats)
 
     manifest.record_done(spark, ledger_path, pending)
     # release the operator-internal persists (zonal_stats pins the zone

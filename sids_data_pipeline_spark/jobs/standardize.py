@@ -53,19 +53,16 @@ def _standardize_kernel(out_dir, band, lon, lat):
         import pyarrow as pa
 
         from sids_data_pipeline_spark.sources.geotiff import standardize_geotiff
-        from sids_data_pipeline_spark.sources.geotiff_datasource import (
-            _read_bytes,
-            _replace_with,
-        )
+        from sids_data_pipeline_spark.sources.storage import read_bytes, write_bytes
 
         for batch in batches:
             written = []
             for path in batch.column("path").to_pylist():
-                data = standardize_geotiff(_read_bytes(path), band, lon, lat, path)
+                data = standardize_geotiff(read_bytes(path), band, lon, lat, path)
                 if data is None:
                     continue
                 stem = os.path.splitext(os.path.basename(path))[0]
-                _replace_with(os.path.join(out_dir, f"{stem}.tif"), data)
+                write_bytes(os.path.join(out_dir, f"{stem}.tif"), data)
                 written.append(stem)
             yield pa.RecordBatch.from_pydict(
                 {"raster_id": pa.array(written, pa.string())}
@@ -92,31 +89,29 @@ def run_standardize_job(
     raster with no pixel centre inside it is neither written nor
     processed, so a later run with a wider extent still picks it up.
 
-    Remote estates: ``input_glob`` may be a remote URI — listing goes
-    through Hadoop globStatus (driver-side) and executor decode reads
-    bytes via ``pyarrow.fs`` (s3/gs/hdfs where pyarrow supports the
-    scheme; see ``geotiff_datasource._read_bytes``). ``out_dir`` must be
-    LOCAL/shared-posix and a remote one raises ``ValueError`` before any
-    work (executor workers have no JVM gateway to the Hadoop FS for
-    writes). The ``ledger_path`` is plain Spark parquet and may live
-    anywhere.
+    Paths: ``input_glob`` may be a plain glob, a ``file:`` URI or a
+    remote URI. It is listed by :func:`storage.list_files`, the lister
+    of ``format("geotiff")``, so both entries select the same files from
+    one glob; executor decode reads bytes through
+    :func:`storage.read_bytes` (``pyarrow.fs`` for s3/gs/hdfs, where
+    pyarrow supports the scheme). ``out_dir`` must name a local or
+    shared-POSIX directory (plain or ``file:``); a remote one raises
+    ``ValueError`` before any work, since executor workers have no JVM
+    gateway to the Hadoop FS for writes. The ``ledger_path`` is plain
+    Spark parquet and may live anywhere.
     """
-    from sids_data_pipeline_spark.sources.geotiff_datasource import (
-        require_local_dir,
-        slice_files,
-    )
-    from sids_data_pipeline_spark.sources.storage import hadoop_glob
+    from sids_data_pipeline_spark.sources.geotiff_datasource import slice_files
+    from sids_data_pipeline_spark.sources.storage import list_files, require_local_dir
 
-    require_local_dir(out_dir)
+    local_out = require_local_dir(out_dir)
     done_ids = _ledgered_ids(spark, ledger_path)
 
     # Prune BEFORE decode: raster_id is the filename stem, so a
-    # driver-side LISTING decides pending-ness without scheduling any
-    # decode work — local paths via glob, remote URIs via Hadoop
-    # FileSystem.globStatus (metadata only). `skipped` is the ledger ∩
-    # THIS input's rasters (the docstring contract) — the ledger may
-    # span other input directories.
-    files = hadoop_glob(spark, input_glob)
+    # driver-side LISTING (metadata only) decides pending-ness without
+    # scheduling any decode work. `skipped` is the ledger ∩ THIS input's
+    # rasters (the docstring contract) — the ledger may span other input
+    # directories.
+    files = list_files(input_glob)
     stems = {os.path.splitext(os.path.basename(f))[0]: f for f in files}
     skipped = sorted(s for s in stems if s in done_ids)
     pending_files = [f for s, f in stems.items() if s not in done_ids]
@@ -128,7 +123,7 @@ def run_standardize_job(
     paths = sc.parallelize(slices, len(slices)).flatMap(lambda s: [(f,) for f in s])
     written = (
         spark.createDataFrame(paths, "path string")
-        .mapInArrow(_standardize_kernel(out_dir, band, lon, lat), "raster_id string")
+        .mapInArrow(_standardize_kernel(local_out, band, lon, lat), "raster_id string")
         .collect()
     )
     processed = sorted(r.raster_id for r in written)

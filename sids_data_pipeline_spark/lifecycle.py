@@ -41,10 +41,7 @@ def release_tracked() -> None:
     call at any point: unpersisting only drops cached blocks; any plan
     still referencing them recomputes correctly."""
     for df in _TRACKED:
-        try:
-            df.unpersist()
-        except Exception:
-            pass
+        df.unpersist()
     _TRACKED.clear()
 
 
@@ -52,10 +49,7 @@ def release(*dfs: DataFrame) -> None:
     """Unpersist DataFrames cached by operators (blocking=False: eviction
     proceeds asynchronously, callers never wait on cleanup)."""
     for df in dfs:
-        try:
-            df.unpersist()
-        except Exception:
-            pass
+        df.unpersist()
         try:
             _TRACKED.remove(df)
         except ValueError:

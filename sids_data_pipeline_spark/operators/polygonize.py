@@ -41,17 +41,6 @@ from pyspark.sql import types as T
 
 from sids_data_pipeline_spark.functions.geo import multipolygon_wkb
 
-_EDGE_SCHEMA = T.StructType(
-    [
-        T.StructField("region", T.LongType()),
-        T.StructField("x1", T.IntegerType()),
-        T.StructField("y1", T.IntegerType()),
-        T.StructField("x2", T.IntegerType()),
-        T.StructField("y2", T.IntegerType()),
-    ]
-)
-
-
 def boundary_edges(labeled: DataFrame, region_col: str = "region") -> DataFrame:
     """Directed boundary unit edges (region on the left) from a labeled
     pixel table (x, y, region). Corner convention: pixel (x, y) owns the

@@ -158,36 +158,6 @@ ZONES = T.StructType(
     ]
 )
 
-# Zonal-stats result (reference CREATE TABLE {v}_{r} (fid, mean),
-# pipeline/processing/stats.py:5-17).
-ZONAL_STATS = T.StructType(
-    [
-        T.StructField("vector_id", T.StringType()),
-        T.StructField("raster_id", T.StringType()),
-        T.StructField("fid", T.LongType()),
-        T.StructField("mean", T.DoubleType()),
-    ]
-)
-
-# Work manifest (reference's dict rows, pipeline/processing/data.py:12-23).
-MANIFEST = T.StructType(
-    [
-        T.StructField("side", T.StringType()),
-        T.StructField("id", T.StringType()),
-        T.StructField("path", T.StringType()),
-    ]
-)
-
-# Tileset (reference tippecanoe z/x/y.pbf output, pipeline/processing/tiles.py:16-29).
-TILES = T.StructType(
-    [
-        T.StructField("z", T.IntegerType()),
-        T.StructField("x", T.IntegerType()),
-        T.StructField("y", T.IntegerType()),
-        T.StructField("pbf", T.BinaryType()),
-    ]
-)
-
 # Multimodal assets: opaque binary payload + typed metadata (EXT E4).
 ASSETS = T.StructType(
     [

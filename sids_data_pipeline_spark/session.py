@@ -118,9 +118,8 @@ def get_spark(
         **(extra_conf or {}),
     }
     for k, v in runtime.items():
-        try:
+        # static confs (e.g. driver memory) can't change post-start
+        if spark.conf.isModifiable(k):
             spark.conf.set(k, v)
-        except Exception:
-            pass  # static confs (e.g. driver memory) can't change post-start
     spark.sparkContext.setLogLevel("WARN")
     return spark

@@ -29,16 +29,18 @@ Spark-first equivalents:
 
 from __future__ import annotations
 
+import glob
 import json
 import math
 import os
-import re as _re
 from typing import Iterable
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+
+from sids_data_pipeline_spark.sources.storage import exists, fs_write_text, list_files
 
 MAX_ZOOM = 10  # reference tippecanoe -z10 (tiles.py:22-24)
 # tippecanoe's default --buffer=5 is 5/256 of the tile span; at the default
@@ -433,8 +435,6 @@ def write_tileset(
         name, max_zoom=max_zoom, min_zoom=min_zoom, bounds=bounds,
         fields=fields,
     )
-    from sids_data_pipeline_spark.sources.storage import fs_write_text
-
     # leading underscore: Spark data-source listings ignore _*/.* files,
     # so the marker coexists with the parquet parts (like _SUCCESS)
     fs_write_text(
@@ -452,41 +452,18 @@ def read_tileset(spark: SparkSession, path: str) -> DataFrame:
 
 def tileset_markers(out_dir: str) -> set[str]:
     """Pair keys under ``out_dir`` whose tileset marker exists, from ONE
-    listing — local glob or a single Hadoop ``globStatus`` call — instead
-    of one existence probe per pair. The P6 lost-ledger heal scan stays
-    O(1) filesystem round-trips no matter how many pairs the estate
-    holds (reference data.py:26-40 probes per pair because its shell
-    loop is already per-pair; at 10⁵ pairs one listing wins)."""
-    from sids_data_pipeline_spark.sources.storage import hadoop_glob
-
-    if "://" in out_dir:
-        spark = SparkSession.getActiveSession()
-        if spark is None:
-            raise RuntimeError("tileset_markers(URI) needs an active SparkSession")
-        # Hadoop glob metachars in the literal prefix are escaped with
-        # backslash (the Hadoop GlobPattern convention)
-        prefix = _re.sub(r"([\[\]{}?*\\])", r"\\\1", out_dir)
-    else:
-        import glob as globmod
-
-        spark = None
-        prefix = globmod.escape(out_dir)
-    pattern = os.path.join(prefix, "*", "tiles", "_tileset_metadata.json")
-    paths = hadoop_glob(spark, pattern)
+    :func:`storage.list_files` listing instead of one existence probe
+    per pair. The P6 lost-ledger heal scan stays O(1) filesystem
+    round-trips no matter how many pairs the estate holds (reference
+    data.py:26-40 probes per pair because its shell loop is already
+    per-pair; at 10⁵ pairs one listing wins)."""
+    pattern = os.path.join(glob.escape(out_dir), "*", "tiles", "_tileset_metadata.json")
     return {
-        os.path.basename(os.path.dirname(os.path.dirname(p))) for p in paths
+        os.path.basename(os.path.dirname(os.path.dirname(p)))
+        for p in list_files(pattern)
     }
 
 
 def tileset_complete(path: str) -> bool:
-    """P6 existence probe (reference data.py:33-35) — Hadoop FS for
-    remote URIs, os.path locally."""
-    marker = os.path.join(path, "_tileset_metadata.json")
-    if "://" in marker:
-        spark = SparkSession.getActiveSession()
-        if spark is None:
-            raise RuntimeError("tileset_complete(URI) needs an active SparkSession")
-        hpath = spark._jvm.org.apache.hadoop.fs.Path(marker)
-        fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-        return fs.exists(hpath)
-    return os.path.exists(marker)
+    """P6 existence probe (reference data.py:33-35)."""
+    return exists(os.path.join(path, "_tileset_metadata.json"))

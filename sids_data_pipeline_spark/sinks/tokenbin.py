@@ -11,8 +11,9 @@ Scale shape: shards are token-budgeted by construction
 shard is the unit of both write parallelism and memory —
 ``applyInPandas`` over the shard groups hands each executor worker one
 bounded group, which it serializes with numpy and writes through
-``pyarrow.fs`` (remote schemes work from executor Python workers, which
-have no JVM gateway; same pattern as sources/geotiff_datasource).
+:func:`storage.write_bytes` (local and ``file:`` paths with os, remote
+schemes through ``pyarrow.fs``, since executor Python workers have no
+JVM gateway).
 Reading back is a ``binaryFile`` scan + Arrow-batched decode — one task
 per shard file, no driver involvement.
 
@@ -22,7 +23,6 @@ EXT surface, SURVEY.md §2b E8.
 
 from __future__ import annotations
 
-import os
 import re
 
 import numpy as np
@@ -30,38 +30,12 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from sids_data_pipeline_spark.sources.storage import write_bytes
+
 _SHARD_RE = re.compile(r"shard-(\d+)\.bin$")
 # uint32 tokens: any practical vocabulary (BPE vocabs are < 2^21) fits;
 # the writer REJECTS out-of-range ids rather than silently truncating.
 _TOKEN_MAX = (1 << 32) - 1
-
-
-def _write_bytes(path: str, data: bytes) -> None:
-    """Executor-side byte write: plain open() for local paths,
-    pyarrow.fs for remote schemes (s3a/s3n alias to s3) — executor
-    Python workers have no JVM gateway for the Hadoop FS."""
-    if "://" not in path or path.startswith("file://"):
-        local = path.removeprefix("file://")
-        os.makedirs(os.path.dirname(local), exist_ok=True)
-        with open(local, "wb") as f:
-            f.write(data)
-        return
-    uri = path
-    scheme, rest = uri.split("://", 1)
-    if scheme in ("s3a", "s3n"):
-        uri = f"s3://{rest}"
-    try:
-        from pyarrow import fs as pafs
-
-        filesystem, fs_path = pafs.FileSystem.from_uri(uri)
-    except Exception as ex:
-        raise NotImplementedError(
-            f"tokenbin sink: remote scheme {scheme!r} is not writable "
-            f"from executor Python workers (pyarrow.fs rejected {uri!r}: "
-            f"{ex}) — write to local/s3 storage"
-        ) from ex
-    with filesystem.open_output_stream(fs_path) as f:
-        f.write(data)
 
 
 def write_token_shards(
@@ -96,7 +70,7 @@ def write_token_shards(
                 f"[{flat.min()}, {flat.max()}]"
             )
         path = f"{out_dir}{sep}shard-{sid:08d}.bin"
-        _write_bytes(path, flat.astype("<u4").tobytes())
+        write_bytes(path, flat.astype("<u4").tobytes())
         return pd.DataFrame(
             {
                 "shard_id": [sid],

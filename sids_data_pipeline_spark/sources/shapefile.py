@@ -57,6 +57,7 @@ from sids_data_pipeline_spark.functions.geo import (
     ring_signed_area,
 )
 from sids_data_pipeline_spark.schemas import ZONES
+from sids_data_pipeline_spark.sources.storage import exists, read_bytes, write_bytes
 
 # shape-type constants (ESRI TD page 4); Z/M variants share the XY prefix
 SHP_NULL = 0
@@ -334,31 +335,10 @@ def prj_to_epsg(wkt: str) -> int | None:
     return None
 
 
-def _sidecar(path: str, ext: str) -> str:
+def sidecar(path: str, ext: str) -> str:
+    """The path of ``path``'s sidecar file with extension ``ext``."""
     root, _ = os.path.splitext(path)
     return root + ext
-
-
-def _read_bytes(path: str) -> bytes:
-    """Local or remote (URI) read — same pyarrow-fs contract as the
-    GeoTIFF source: unknown schemes are refused loudly, never guessed.
-    The reference fetches shapefile sidecar sets from blob storage
-    (pipeline/processing/download.py:14-17); this is that fetch."""
-    from sids_data_pipeline_spark.sources.geotiff_datasource import (
-        _read_bytes as _rb,
-    )
-
-    return _rb(path)
-
-
-def _exists(path: str) -> bool:
-    if "://" not in path or path.startswith("file://"):
-        return os.path.exists(path.removeprefix("file://"))
-    try:
-        _read_bytes(path)
-        return True
-    except (FileNotFoundError, OSError):
-        return False
 
 
 # --- public read API -----------------------------------------------------------
@@ -394,13 +374,13 @@ def read_shapefile(path: str, encoding: str | None = None) -> pd.DataFrame:
     ``fid`` (OGR-style 0-based record index), one column per .dbf field,
     and ``geometry`` (WKB bytes, canonical winding). dbf-deleted rows
     are skipped; a missing .dbf yields fid+geometry only."""
-    dbf_path = _sidecar(path, ".dbf")
-    cpg_path = _sidecar(path, ".cpg")
+    dbf_path = sidecar(path, ".dbf")
+    cpg_path = sidecar(path, ".cpg")
     geoms, names, rows, deleted = _shp_parts(
-        _read_bytes(path),
-        _read_bytes(dbf_path) if _exists(dbf_path) else None,
-        _read_bytes(cpg_path).decode("ascii", errors="replace")
-        if encoding is None and _exists(cpg_path)
+        read_bytes(path),
+        read_bytes(dbf_path) if exists(dbf_path) else None,
+        read_bytes(cpg_path).decode("ascii", errors="replace")
+        if encoding is None and exists(cpg_path)
         else None,
         encoding,
     )
@@ -468,15 +448,15 @@ def resolve_src_epsg(
     needed), or raises — a missing .prj without ``assume_wgs84``, a
     non-4326 .prj without ``reproject``, and an unregistered projection
     all refuse loudly; the engine never guesses datums."""
-    prj_path = _sidecar(path, ".prj")
-    if not _exists(prj_path) and not assume_wgs84:
+    prj_path = sidecar(path, ".prj")
+    if not exists(prj_path) and not assume_wgs84:
         raise ValueError(
             f"{path}: no .prj sidecar — the engine does not guess datums; "
             "pass assume_wgs84=True to declare the coordinates WGS-84, or "
             "supply the .prj"
         )
-    if _exists(prj_path):
-        wkt = _read_bytes(prj_path).decode("ascii", errors="replace")
+    if exists(prj_path):
+        wkt = read_bytes(prj_path).decode("ascii", errors="replace")
         epsg = prj_to_epsg(wkt)
         if epsg != 4326 and reproject and epsg is not None:
             from sids_data_pipeline_spark.functions.crs import (
@@ -528,16 +508,16 @@ def ingest_shapefile(
     the streaming drop-folder twin shares :func:`zone_records` /
     :func:`resolve_src_epsg` but parses executor-side."""
     src_epsg = resolve_src_epsg(path, reproject=reproject, assume_wgs84=assume_wgs84)
-    dbf_path = _sidecar(path, ".dbf")
-    dbf_bytes = _read_bytes(dbf_path) if _exists(dbf_path) else None
-    cpg_path = _sidecar(path, ".cpg")
+    dbf_path = sidecar(path, ".dbf")
+    dbf_bytes = read_bytes(dbf_path) if exists(dbf_path) else None
+    cpg_path = sidecar(path, ".cpg")
     cpg_text = (
-        _read_bytes(cpg_path).decode("ascii", errors="replace")
-        if _exists(cpg_path)
+        read_bytes(cpg_path).decode("ascii", errors="replace")
+        if exists(cpg_path)
         else None
     )
     out = zone_records(
-        _read_bytes(path), dbf_bytes, cpg_text, vector_id,
+        read_bytes(path), dbf_bytes, cpg_text, vector_id,
         name_col=name_col, encoding=encoding,
     )
     zones = spark.createDataFrame(out, ZONES).coalesce(1)
@@ -616,41 +596,34 @@ def write_shapefile(
             + struct.pack("<4d", 0.0, 0.0, 0.0, 0.0)
         )
 
-    shx_entries = []
-    with open(path, "wb") as fh:
-        fh.write(_header(50 + body_words))
-        off_words = 50
-        for i, content in enumerate(shp_records):
-            clen = len(content) // 2
-            shx_entries.append(struct.pack(">ii", off_words, clen))
-            fh.write(struct.pack(">ii", i + 1, clen) + content)
-            off_words += 4 + clen
-    with open(_sidecar(path, ".shx"), "wb") as fh:
-        fh.write(_header(50 + 4 * len(shx_entries)) + b"".join(shx_entries))
+    shp, shx_entries = [_header(50 + body_words)], []
+    off_words = 50
+    for i, content in enumerate(shp_records):
+        clen = len(content) // 2
+        shx_entries.append(struct.pack(">ii", off_words, clen))
+        shp.append(struct.pack(">ii", i + 1, clen) + content)
+        off_words += 4 + clen
+    write_bytes(path, b"".join(shp))
+    write_bytes(
+        sidecar(path, ".shx"), _header(50 + 4 * len(shx_entries)) + b"".join(shx_entries)
+    )
 
     # .dbf: one C(80) name field; deterministic header date
     names = [(name or "") for _fid, name, _wkb in records]
     flen = 80
     hlen = 32 + 32 + 1
     rlen = 1 + flen
-    with open(_sidecar(path, ".dbf"), "wb") as fh:
-        fh.write(
-            struct.pack(
-                "<B3BIHH20x", 0x03, 95, 7, 26, len(names), hlen, rlen
-            )
-        )
-        fh.write(
-            name_field.encode("ascii")[:10].ljust(11, b"\x00")
-            + b"C"
-            + b"\x00" * 4
-            + bytes([flen, 0])
-            + b"\x00" * 14
-        )
-        fh.write(b"\x0d")
-        for nm in names:
-            fh.write(b" " + nm.encode("utf-8")[:flen].ljust(flen, b" "))
-        fh.write(b"\x1a")
-    with open(_sidecar(path, ".prj"), "w", encoding="ascii") as fh:
-        fh.write(_WGS84_PRJ)
-    with open(_sidecar(path, ".cpg"), "w", encoding="ascii") as fh:
-        fh.write("UTF-8")
+    dbf = [
+        struct.pack("<B3BIHH20x", 0x03, 95, 7, 26, len(names), hlen, rlen),
+        name_field.encode("ascii")[:10].ljust(11, b"\x00")
+        + b"C"
+        + b"\x00" * 4
+        + bytes([flen, 0])
+        + b"\x00" * 14,
+        b"\x0d",
+        *(b" " + nm.encode("utf-8")[:flen].ljust(flen, b" ") for nm in names),
+        b"\x1a",
+    ]
+    write_bytes(sidecar(path, ".dbf"), b"".join(dbf))
+    write_bytes(sidecar(path, ".prj"), _WGS84_PRJ.encode("ascii"))
+    write_bytes(sidecar(path, ".cpg"), b"UTF-8")

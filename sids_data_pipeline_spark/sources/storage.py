@@ -1,7 +1,27 @@
-"""Storage layouts for 100 TB scale: bucketed tables and spatially
-partitioned pixel stores.
+"""Where a path points, how Python reads and writes it, and the storage
+layouts for 100 TB scale.
 
-Two layouts the engine standardises (SURVEY.md §7 "hardening"):
+**Paths.** This module is the one place that decides what a path string
+names and how Python opens it; every Python-side read, write, existence
+probe and listing in the package goes through it:
+
+- :func:`local_path` classifies a path. A plain path, Hadoop's qualified
+  ``file:/abs`` (the form Spark prints) and ``file:///abs`` name a local
+  file; any other ``scheme://`` is remote.
+- :func:`read_bytes`, :func:`write_bytes`, :func:`exists` and
+  :func:`list_files` serve executor Python workers, which have no JVM
+  gateway: local paths go through ``os`` and Python glob, remote URIs
+  through ``pyarrow.fs`` (Hadoop's s3a/s3n alias to s3).
+- :func:`require_local_dir` guards the output directories that
+  executors fill with ``os``/``open``.
+- The driver-side ``fs_*`` helpers keep the Hadoop ``FileSystem`` for
+  remote URIs, so ledgers and markers land wherever Spark writes data.
+
+Spark-side reads and writes (parquet ledgers, bucketed tables) resolve
+through Hadoop and are not routed here.
+
+**Layouts.** Two layouts the engine standardises (SURVEY.md §7
+"hardening"):
 
 - :func:`write_bucketed` / :func:`bucketed_join_ready` — hash-bucketed
   tables: two tables bucketed by the same key into the same bucket count
@@ -22,11 +42,184 @@ Two layouts the engine standardises (SURVEY.md §7 "hardening"):
 
 from __future__ import annotations
 
+import fnmatch
+import glob
+import os
+import shutil
+import uuid
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 DEFAULT_BUCKETS = 32
 PIXEL_PART_DEG = 10.0  # coarse partition-cell size (degrees)
+
+
+def local_path(path: str) -> str | None:
+    """The local filesystem path ``path`` names, or None for a remote
+    URI. A plain path is returned as is; ``file:/abs`` and
+    ``file:///abs`` both give ``/abs``."""
+    if path.startswith("file:"):
+        return "/" + path[len("file:"):].lstrip("/")
+    return None if "://" in path else path
+
+
+def _filesystem(uri: str):
+    """``(pyarrow filesystem, path within it)`` for a remote URI; Hadoop's
+    s3a/s3n scheme aliases map to pyarrow's s3. A scheme pyarrow cannot
+    open raises a clear error instead of a later FileNotFoundError."""
+    from pyarrow import fs as pafs
+
+    scheme, rest = uri.split("://", 1)
+    if scheme in ("s3a", "s3n"):
+        uri = f"s3://{rest}"
+    try:
+        return pafs.FileSystem.from_uri(uri)
+    except Exception as ex:
+        raise NotImplementedError(
+            f"remote scheme {scheme!r} is not reachable from Python workers "
+            f"(no JVM gateway; pyarrow.fs rejected {uri!r}: {ex}) — copy the "
+            "data to local or s3 storage, or read it through Spark's "
+            "binaryFile source"
+        ) from ex
+
+
+def read_bytes(path: str) -> bytes:
+    """The whole file at ``path``: local disk, or a remote URI through
+    ``pyarrow.fs`` (s3, and gs/hdfs where pyarrow supports them)."""
+    local = local_path(path)
+    if local is not None:
+        with open(local, "rb") as f:
+            return f.read()
+    filesystem, fs_path = _filesystem(path)
+    with filesystem.open_input_stream(fs_path) as f:
+        return f.read()
+
+
+def write_bytes(path: str, data: bytes) -> None:
+    """Write ``data`` to ``path``. Locally it goes through a hidden
+    sibling temp file and ``os.replace`` (parent directories created):
+    readers see either the old file or the whole new one, and a failed
+    write leaves neither a partial target nor the temp file. A remote
+    URI is written as one ``pyarrow.fs`` output stream."""
+    local = local_path(path)
+    if local is None:
+        filesystem, fs_path = _filesystem(path)
+        with filesystem.open_output_stream(fs_path) as f:
+            f.write(data)
+        return
+    d, name = os.path.split(local)
+    os.makedirs(d, exist_ok=True)
+    tmp = os.path.join(d, f".{name}.{uuid.uuid4().hex}.tmp")
+    try:
+        with open(tmp, "wb") as f:
+            f.write(data)
+        os.replace(tmp, local)
+    except BaseException:
+        try:
+            os.remove(tmp)
+        except FileNotFoundError:
+            pass
+        raise
+
+
+def exists(path: str) -> bool:
+    """Whether a file or directory exists at ``path``."""
+    local = local_path(path)
+    if local is not None:
+        return os.path.exists(local)
+    from pyarrow import fs as pafs
+
+    filesystem, fs_path = _filesystem(path)
+    return filesystem.get_file_info(fs_path).type != pafs.FileType.NotFound
+
+
+def _glob_walk(filesystem, base: str, root: str, pattern: str) -> list[str]:
+    """``root/rel`` for each file under ``base`` in ``filesystem`` whose
+    path ``rel`` below ``base`` matches the glob ``pattern``. The walk
+    goes one pattern component per level, as Hadoop's ``globStatus``
+    does: a wildcard component lists its directories (not recursively),
+    a literal one is looked up; every component but the last must name
+    a directory and the last a file. A component matches as in
+    ``globStatus``: ``*`` stops at ``/`` and also matches names that
+    start with ``.``, and ``[^...]`` negates."""
+    from pyarrow import fs as pafs
+
+    level = [("", base)]
+    parts = pattern.split("/")
+    for depth, part in enumerate(parts):
+        want = pafs.FileType.File if depth == len(parts) - 1 else pafs.FileType.Directory
+        part = part.replace("[^", "[!")
+        wild = any(ch in part for ch in "*?[")
+        found = []
+        for rel, path in level:
+            if wild:
+                infos = filesystem.get_file_info(
+                    pafs.FileSelector(path, allow_not_found=True)
+                )
+            else:
+                infos = [filesystem.get_file_info(f"{path.rstrip('/')}/{part}")]
+            found += [
+                (f"{rel}/{info.base_name}", info.path)
+                for info in infos
+                if info.type == want and fnmatch.fnmatchcase(info.base_name, part)
+            ]
+        level = found
+    return sorted(root + rel for rel, _ in level)
+
+
+def list_files(pattern: str) -> list[str]:
+    """Every FILE matching the glob ``pattern``, sorted: the one lister
+    of the package. It runs where Hadoop's ``globStatus`` is out of
+    reach (the geotiff source plans in a Python worker) and on the
+    driver alike, so every entry selects the same files from one glob.
+    A plain path goes through Python glob. A URI, ``file:`` included,
+    is walked by :func:`_glob_walk`; a ``file:`` URI yields local
+    paths. Hadoop's ``{a,b}`` alternation and ``\\`` escapes are
+    refused in a URI rather than matched differently."""
+    local = local_path(pattern)
+    if local == pattern:  # a plain path
+        return sorted(p for p in glob.glob(pattern) if os.path.isfile(p))
+    if "{" in pattern or "\\" in pattern:
+        raise ValueError(
+            f"{pattern!r} uses glob alternation or escapes, which URI "
+            "listing does not expand; list the files with a plain glob"
+        )
+    if local is not None:
+        pattern = local
+    wild = next((i for i, ch in enumerate(pattern) if ch in "*?["), len(pattern))
+    cut = pattern.rfind("/", 0, wild)
+    root, rest = pattern[:cut], pattern[cut + 1:]
+    if local is not None:
+        from pyarrow import fs as pafs
+
+        return _glob_walk(pafs.LocalFileSystem(), root or "/", root, rest)
+    if "://" not in root:
+        raise ValueError(f"glob in the host or bucket of {pattern!r}")
+    filesystem, base = _filesystem(root)
+    return _glob_walk(filesystem, base, root, rest)
+
+
+def require_local_dir(path: str) -> str:
+    """The local directory ``path`` names; a remote one is refused. The
+    GeoTIFF writer, the standardize job and the pipeline's sinks write
+    their files with os/open from executor Python workers, which have no
+    JVM gateway: files written there for a remote URI would land on
+    executor-local disks and vanish from the estate."""
+    local = local_path(path)
+    if local is None:
+        raise ValueError(
+            "output files are written with os/open from executor Python "
+            f"workers; remote URIs ({path!r}) are not supported — write to "
+            "a local or shared POSIX directory and upload it from there"
+        )
+    return local
+
+
+def _hadoop_fs(spark: SparkSession, path: str):
+    """``(Hadoop FileSystem, Path)`` for a remote URI, from the driver."""
+    hpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return hpath.getFileSystem(spark._jsc.hadoopConfiguration()), hpath
 
 
 def fs_write_text(spark: SparkSession, path: str, content: str) -> None:
@@ -35,66 +228,41 @@ def fs_write_text(spark: SparkSession, path: str, content: str) -> None:
     use plain open(); remote URIs go through the Hadoop FileSystem API,
     so a job whose data writes land on s3a://... can close its
     completion loop there too."""
-    if "://" in path:
-        jvm = spark._jvm
-        hpath = jvm.org.apache.hadoop.fs.Path(path)
-        fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    local = local_path(path)
+    if local is None:
+        fs, hpath = _hadoop_fs(spark, path)
         out = fs.create(hpath, True)
         try:
             out.write(bytearray(content.encode("utf-8")))
         finally:
             out.close()
     else:
-        import os
-
-        os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
-        with open(path, "w") as fh:
+        os.makedirs(os.path.dirname(local) or ".", exist_ok=True)
+        with open(local, "w") as fh:
             fh.write(content)
 
 
 def hadoop_glob(spark: SparkSession, pattern: str) -> list[str]:
-    """Expand a glob PATTERN on any Hadoop-supported URI in ONE
-    ``globStatus`` round-trip, returning the matching FILE paths sorted.
-    Local (no-scheme) patterns use Python glob. The shared driver-side
-    listing (standardize input scan, tileset-marker heal), so
-    scheme/metachar semantics cannot drift between those call sites.
-    The geotiff source plans in a Python worker without the JVM and
-    lists URIs through ``pyarrow.fs``
-    (``geotiff_datasource._list_files``), one component per level with
-    the same matching, except that it refuses ``{a,b}`` alternation and
-    ``\\`` escapes, which only this lister expands."""
-    if "://" not in pattern:
-        import glob as globmod
-        import os
-
-        return sorted(p for p in globmod.glob(pattern) if os.path.isfile(p))
-    jvm = spark._jvm
-    hglob = jvm.org.apache.hadoop.fs.Path(pattern)
-    fs = hglob.getFileSystem(spark._jsc.hadoopConfiguration())
-    statuses = fs.globStatus(hglob)
-    return sorted(
-        str(st.getPath()) for st in (statuses or []) if st.isFile()
-    )
+    """:func:`list_files` under the name of the former Hadoop
+    ``globStatus`` lister, which perfbench's standardize probe still
+    imports; ``spark`` is unused."""
+    return list_files(pattern)
 
 
 def fs_delete(spark: SparkSession, path: str) -> bool:
     """Recursively delete a file/directory on any Hadoop-supported URI;
     returns True when something was removed. Local paths use shutil."""
-    if "://" in path:
-        jvm = spark._jvm
-        hpath = jvm.org.apache.hadoop.fs.Path(path)
-        fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    local = local_path(path)
+    if local is None:
+        fs, hpath = _hadoop_fs(spark, path)
         if fs.exists(hpath):
             return bool(fs.delete(hpath, True))
         return False
-    import os
-    import shutil
-
-    if os.path.isdir(path):
-        shutil.rmtree(path)
+    if os.path.isdir(local):
+        shutil.rmtree(local)
         return True
-    if os.path.exists(path):
-        os.remove(path)
+    if os.path.exists(local):
+        os.remove(local)
         return True
     return False
 
@@ -102,18 +270,15 @@ def fs_delete(spark: SparkSession, path: str) -> bool:
 def fs_listdir(spark: SparkSession, path: str) -> list[str]:
     """Child entry NAMES of a directory on any Hadoop-supported URI
     (empty list when the directory does not exist)."""
-    if "://" in path:
-        jvm = spark._jvm
-        hpath = jvm.org.apache.hadoop.fs.Path(path)
-        fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    local = local_path(path)
+    if local is None:
+        fs, hpath = _hadoop_fs(spark, path)
         if not fs.exists(hpath):
             return []
         return [st.getPath().getName() for st in fs.listStatus(hpath)]
-    import os
-
-    if not os.path.isdir(path):
+    if not os.path.isdir(local):
         return []
-    return os.listdir(path)
+    return os.listdir(local)
 
 
 def fs_rename(spark: SparkSession, src: str, dst: str) -> None:
@@ -121,11 +286,10 @@ def fs_rename(spark: SparkSession, src: str, dst: str) -> None:
     URI (parent dirs created). The fan-out primitive for single-write
     jobs: one partitioned Spark write, then per-partition renames that
     cost no Spark jobs."""
-    if "://" in src or "://" in dst:
-        jvm = spark._jvm
-        hsrc = jvm.org.apache.hadoop.fs.Path(src)
-        hdst = jvm.org.apache.hadoop.fs.Path(dst)
-        fs = hsrc.getFileSystem(spark._jsc.hadoopConfiguration())
+    lsrc, ldst = local_path(src), local_path(dst)
+    if lsrc is None or ldst is None:
+        fs, hsrc = _hadoop_fs(spark, src)
+        hdst = spark._jvm.org.apache.hadoop.fs.Path(dst)
         fs.mkdirs(hdst.getParent())
         # Hadoop rename refuses an existing destination (unlike POSIX
         # os.rename, which atomically replaces) — clear it first. Remote
@@ -137,21 +301,19 @@ def fs_rename(spark: SparkSession, src: str, dst: str) -> None:
         if not fs.rename(hsrc, hdst):
             raise IOError(f"rename failed: {src} -> {dst}")
     else:
-        import os
-
-        os.makedirs(os.path.dirname(dst) or ".", exist_ok=True)
-        os.rename(src, dst)
+        os.makedirs(os.path.dirname(ldst) or ".", exist_ok=True)
+        os.rename(lsrc, ldst)
 
 
 def fs_read_text(spark: SparkSession, path: str) -> str | None:
     """Read a small text file from any Hadoop-supported URI; None when it
     does not exist (the probe half of :func:`fs_write_text`)."""
-    if "://" in path:
-        jvm = spark._jvm
-        hpath = jvm.org.apache.hadoop.fs.Path(path)
-        fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    local = local_path(path)
+    if local is None:
+        fs, hpath = _hadoop_fs(spark, path)
         if not fs.exists(hpath):
             return None
+        jvm = spark._jvm
         stream = fs.open(hpath)
         try:
             reader = jvm.java.io.BufferedReader(
@@ -165,11 +327,9 @@ def fs_read_text(spark: SparkSession, path: str) -> str | None:
             return "\n".join(lines)
         finally:
             stream.close()
-    import os
-
-    if not os.path.exists(path):
+    if not os.path.exists(local):
         return None
-    with open(path) as fh:
+    with open(local) as fh:
         return fh.read()
 
 
@@ -203,9 +363,7 @@ def write_bucketed(
         # against fs.defaultFS (HDFS on a real cluster), which only the
         # Hadoop FileSystem API honors — fs_delete's scheme-less branch
         # assumes driver-local disk, correct for markers but not here.
-        jvm = spark._jvm
-        hpath = jvm.org.apache.hadoop.fs.Path(path)
-        fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
+        fs, hpath = _hadoop_fs(spark, path)
         if fs.exists(hpath):
             fs.delete(hpath, True)
     writer = (
@@ -270,14 +428,14 @@ def compact_files(
     Writes to ``path + '.compact'`` then atomically renames over the
     original (the original is moved aside and deleted on success), so a
     concurrent reader sees either the old or the new layout, never a
-    partial mix. Returns {files_before, files_after, bytes}.
+    partial mix. Returns {files_before, files_after, bytes}. The
+    listing and the renames run on the driver with ``os``, so ``path``
+    must name a local or shared-POSIX directory.
     """
-    import os
-    import shutil
-
+    local = require_local_dir(path).rstrip("/")
     total = 0
     files_before = 0
-    for root, _dirs, names in os.walk(path):
+    for root, _dirs, names in os.walk(local):
         for n in names:
             if n.endswith(".parquet"):
                 files_before += 1
@@ -294,13 +452,12 @@ def compact_files(
         )
     else:
         df.repartition(int(n_files)).write.mode("overwrite").parquet(tmp)
-    old = path.rstrip("/") + ".old"
-    os.rename(path, old)
-    os.rename(tmp, path)
-    shutil.rmtree(old)
+    os.rename(local, local + ".old")
+    os.rename(local + ".compact", local)
+    shutil.rmtree(local + ".old")
     files_after = sum(
         1
-        for root, _d, names in os.walk(path)
+        for root, _d, names in os.walk(local)
         for n in names
         if n.endswith(".parquet")
     )

@@ -58,17 +58,18 @@ def _load_events(spark: SparkSession, path: str) -> DataFrame:
 
 def _events_ts_is_nanos(path: str) -> bool:
     """True when the parquet footer declares ``ts`` as nanosecond
-    precision. Footer-only read; on any probe failure assume the modern
-    micros layout (the plain read then fails loudly if that's wrong)."""
-    try:
-        import pyarrow.dataset as ds
-        import pyarrow.types as pat
+    precision. Footer-only read; when the footer cannot be probed (a
+    missing or non-parquet path, a scheme pyarrow cannot open, no ``ts``
+    column) assume the modern micros layout: the plain read then fails
+    loudly if that's wrong."""
+    import pyarrow.dataset as ds
+    import pyarrow.types as pat
 
-        schema = ds.dataset(path, format="parquet").schema
-        field = schema.field("ts")
-        return pat.is_timestamp(field.type) and field.type.unit == "ns"
-    except Exception:
+    try:
+        field = ds.dataset(path, format="parquet").schema.field("ts")
+    except (OSError, ValueError, KeyError):
         return False
+    return pat.is_timestamp(field.type) and field.type.unit == "ns"
 
 
 def load_tables(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> dict[str, DataFrame]:

@@ -58,10 +58,7 @@ def data_batches_only(spark: SparkSession):
     on exit either way.
     """
     key = "spark.sql.streaming.noDataMicroBatches.enabled"
-    try:
-        old = spark.conf.get(key)
-    except Exception:
-        old = None
+    old = spark.conf.get(key, None)
     spark.conf.set(key, "false")
     try:
         yield
@@ -881,11 +878,8 @@ def streaming_vector_ingest(
     zones_schema = "vector_id string, fid long, name string, geometry binary"
 
     def process(batch: DataFrame, batch_id: int) -> None:
-        from sids_data_pipeline_spark.sources.shapefile import (
-            _exists,
-            _sidecar,
-            resolve_src_epsg,
-        )
+        from sids_data_pipeline_spark.sources.shapefile import resolve_src_epsg, sidecar
+        from sids_data_pipeline_spark.sources.storage import exists, local_path
 
         bspark = batch.sparkSession
         paths = [r.path for r in batch.select("path").distinct().collect()]
@@ -914,10 +908,14 @@ def streaming_vector_ingest(
         parts = []
         shp_meta: dict[str, tuple[str, int]] = {}  # path -> (vector_id, epsg)
         for path in sorted(paths):
-            local = path.removeprefix("file:")
-            stem = os.path.splitext(os.path.basename(local))[0]
-            ext = os.path.splitext(local)[1].lower()
+            stem = os.path.splitext(os.path.basename(path))[0]
+            ext = os.path.splitext(path)[1].lower()
             if ext == ".gpkg":
+                local = local_path(path)
+                if local is None:
+                    raise ValueError(
+                        f"{path}: GeoPackages are read with sqlite3 from local disk"
+                    )
                 parts.append(
                     ingest_geopackage(
                         bspark, local, vector_id=stem, reproject=reproject
@@ -936,7 +934,7 @@ def streaming_vector_ingest(
                 # .shp last, after its sidecars — then this is a no-op.)
                 missing = [
                     e for e in (".prj", ".dbf")
-                    if not _exists(_sidecar(local, e))
+                    if not exists(sidecar(path, e))
                 ]
                 if missing:
                     raise ValueError(
@@ -946,7 +944,7 @@ def streaming_vector_ingest(
                         "last, after its sidecars"
                     )
                 shp_meta[path] = (
-                    stem, resolve_src_epsg(local, reproject=reproject)
+                    stem, resolve_src_epsg(path, reproject=reproject)
                 )
             elif ext in (".shx", ".dbf", ".prj", ".cpg"):
                 continue  # sidecars ride along with their .shp
@@ -957,24 +955,19 @@ def streaming_vector_ingest(
             meta = dict(shp_meta)  # tiny: one entry per dropped layer
 
             def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-                from sids_data_pipeline_spark.sources.shapefile import (
-                    _exists as ex,
-                    _read_bytes as rb,
-                    _sidecar as sc,
-                    zone_records,
-                )
+                from sids_data_pipeline_spark.sources.shapefile import sidecar, zone_records
+                from sids_data_pipeline_spark.sources.storage import exists, read_bytes
 
                 for pdf in batches:
                     for path, content in zip(pdf["path"], pdf["content"]):
                         vector_id, _epsg = meta[path]
-                        loc = path.removeprefix("file:")
-                        dbf = sc(loc, ".dbf")
-                        cpg = sc(loc, ".cpg")
+                        dbf = sidecar(path, ".dbf")
+                        cpg = sidecar(path, ".cpg")
                         rec = zone_records(
                             bytes(content),
-                            rb(dbf) if ex(dbf) else None,
-                            rb(cpg).decode("ascii", errors="replace")
-                            if ex(cpg) else None,
+                            read_bytes(dbf) if exists(dbf) else None,
+                            read_bytes(cpg).decode("ascii", errors="replace")
+                            if exists(cpg) else None,
                             vector_id,
                         )
                         yield rec

@@ -399,11 +399,9 @@ def test_geotiff_datasource_one_partition_per_file_without_fixed_slots(spark, tm
 def test_geotiff_uri_glob_walks_one_component_per_level(tmp_path):
     """URI globs match one component per directory level with Hadoop
     globStatus rules (``*`` stops at ``/`` and matches dot-files,
-    ``[^...]`` negates), here through pyarrow's local filesystem and a
-    file:// URI; alternation is refused."""
-    from pyarrow import fs as pafs
-
-    from sids_data_pipeline_spark.sources.geotiff_datasource import _glob_remote, _list_files
+    ``[^...]`` negates), here through a file:// URI, which lists local
+    paths; alternation is refused."""
+    from sids_data_pipeline_spark.sources.storage import list_files
 
     for rel in ("a/x.tif", "a/y.txt", "a/.h.tif", "b/z.tif", "b/deep/w.tif",
                 "b/deep/v.tif", "top.tif"):
@@ -412,16 +410,16 @@ def test_geotiff_uri_glob_walks_one_component_per_level(tmp_path):
     base = str(tmp_path)
 
     def glob(pattern):
-        return _glob_remote(pafs.LocalFileSystem(), base, "mem://bucket", pattern)
+        return list_files(f"file://{base}/{pattern}")
 
-    assert glob("*/*.tif") == ["mem://bucket/a/.h.tif", "mem://bucket/a/x.tif", "mem://bucket/b/z.tif"]
-    assert glob("*.tif") == ["mem://bucket/top.tif"]
-    assert glob("*/deep/[^v]*") == ["mem://bucket/b/deep/w.tif"]
+    assert glob("*/*.tif") == [f"{base}/a/.h.tif", f"{base}/a/x.tif", f"{base}/b/z.tif"]
+    assert glob("*.tif") == [f"{base}/top.tif"]
+    assert glob("*/deep/[^v]*") == [f"{base}/b/deep/w.tif"]
     assert glob("b/deep") == [] and glob("nope/*.tif") == []
-    assert _list_files(f"file://{base}/[ab]/[!.]*.tif") == [f"{base}/a/x.tif", f"{base}/b/z.tif"]
-    assert _list_files(f"file://{base}/top.tif") == [f"{base}/top.tif"]
+    assert list_files(f"file://{base}/[ab]/[!.]*.tif") == [f"{base}/a/x.tif", f"{base}/b/z.tif"]
+    assert list_files(f"file://{base}/top.tif") == [f"{base}/top.tif"]
     with pytest.raises(ValueError, match="alternation"):
-        _list_files(f"file://{base}/{{a,b}}/*.tif")
+        list_files(f"file://{base}/{{a,b}}/*.tif")
 
 
 def test_geotiff_datasource_rejects_band_out_of_range(spark, tmp_path):

@@ -224,7 +224,7 @@ def test_curation_job_action_economy_and_input_signature(spark, tmp_path, monkey
     # count: the input-signature count + the LSH bucket-cap skip probe
     # (a bounded limit+count over the persisted signature that doubles
     # as its cache materialization — restored in round 8 after the
-    # always-on cap measured +73% steady-state, README "Round 8");
+    # always-on cap measured +73% steady-state, CHANGES.md "Round 8");
     # collect: one pack_shards partition-totals list per split (3) + the
     # empty-output guard's take(1) on the PERSISTED frame + ONE report
     # aggregate. The write is the only action executing the curation

@@ -335,17 +335,17 @@ def test_standardize_truncated_tiff_fails_naming_the_file(spark, tmp_path):
 def test_read_bytes_accepts_hadoop_file_uris(tmp_path):
     """Spark's qualified ``file:/abs`` path form and ``file:///abs`` read
     the local file."""
-    from sids_data_pipeline_spark.sources.geotiff_datasource import _read_bytes
+    from sids_data_pipeline_spark.sources.storage import read_bytes
 
     p = tmp_path / "a b.tif"
     p.write_bytes(b"payload")
     for form in (str(p), f"file:{p}", f"file://{p}"):
-        assert _read_bytes(form) == b"payload", form
+        assert read_bytes(form) == b"payload", form
 
 
 def test_standardize_file_uri_input_glob(spark, tmp_path):
-    """A ``file://`` input glob lists through Hadoop globStatus, whose
-    ``file:/abs`` paths the kernel reads."""
+    """A ``file://`` input glob lists through storage.list_files, whose
+    local paths the kernel reads."""
     src = tmp_path / "in"
     src.mkdir()
     _write_fixture(src, "r1")

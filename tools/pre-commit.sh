@@ -35,6 +35,9 @@ echo "$staged" | grep -q "sources/geotiff.py\|sources/geotiff_datasource.py\|job
     && q="$q raster_geotiff_ingest source_geotiff_datasource raster_bigtiff_ingest raster_lzw_ingest raster_multiband_band2"
 echo "$staged" | grep -q "streaming/jobs.py" \
     && q="$q raster_geotiff_ingest"
+# sources/storage.py holds every Python-side read, write, probe and listing
+echo "$staged" | grep -q "sources/storage.py\|sinks/tokenbin.py\|sources/shapefile.py" \
+    && q="$q source_geotiff_datasource raster_geotiff_ingest sink_tokenbin_roundtrip vector_shapefile_ingest streaming_vector_ingest streaming_cdc_upsert"
 echo "$staged" | grep -q "jobs/pipeline.py\|sinks/tiles.py\|sinks/geojsonl.py" \
     && q="$q pipeline_end_to_end tiles_encode_rings"
 echo "$staged" | grep -q "plans/relational.py" \
