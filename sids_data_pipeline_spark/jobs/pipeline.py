@@ -41,7 +41,7 @@ from sids_data_pipeline_spark import lifecycle
 from sids_data_pipeline_spark.operators import manifest
 from sids_data_pipeline_spark.operators.zonal import zonal_stats
 from sids_data_pipeline_spark.sinks import geojsonl, tiles
-from sids_data_pipeline_spark.sources.storage import require_local_dir, write_bytes
+from sids_data_pipeline_spark.sources.storage import local_path, require_local_dir, write_bytes
 from sids_data_pipeline_spark.sources.raster import synthetic_raster, standardize_pixels
 from sids_data_pipeline_spark.sources.vector import fixture_zones
 
@@ -82,7 +82,7 @@ def _write_pair_data(out_dir, key, feats, stats, max_zoom, max_features_per_tile
 
     from sids_data_pipeline_spark.functions import geo
 
-    pair = os.path.join(out_dir, key)
+    pair = local_path(os.path.join(out_dir, key))  # cleared with os/shutil
     for d in (os.path.join(pair, "export.geojsonl"), os.path.join(pair, "tiles")):
         if os.path.isdir(d):
             shutil.rmtree(d)
@@ -171,7 +171,7 @@ def run_pipeline(
     """
     from collections import namedtuple
 
-    local_out = require_local_dir(out_dir)
+    require_local_dir(out_dir)
     ledger_path = os.path.join(out_dir, "_ledger")
 
     # The manifest is driver-sized BY CONSTRUCTION — ids arrive as Python
@@ -208,7 +208,7 @@ def run_pipeline(
     # existence probe — constant filesystem round-trips vs pair count.
     all_pending = [p for p in all_pairs if (p.v_id, p.r_id) not in done_set]
     # nothing pending → skip even the single listing
-    complete_keys = tiles.tileset_markers(local_out) if all_pending else set()
+    complete_keys = tiles.tileset_markers(out_dir) if all_pending else set()
     pending_rows, marker_done = [], []
     for r in all_pending:
         if r.pair_key in complete_keys:
@@ -282,7 +282,7 @@ def run_pipeline(
         for r in feats.repartitionById(n_tasks, "_slot")
         .sortWithinPartitions("pair_key")
         .mapInArrow(
-            _sink_kernel(local_out, stats, max_zoom, max_features_per_tile),
+            _sink_kernel(out_dir, stats, max_zoom, max_features_per_tile),
             "pair_key string",
         )
         .collect()
@@ -290,8 +290,8 @@ def run_pipeline(
     # a pair without stats rows still gets its (empty) outputs and marker
     for key in outputs:
         if key not in written:
-            _write_pair_data(local_out, key, None, stats, max_zoom, max_features_per_tile)
-            _write_pair_marker(local_out, key, None, max_zoom, stats)
+            _write_pair_data(out_dir, key, None, stats, max_zoom, max_features_per_tile)
+            _write_pair_marker(out_dir, key, None, max_zoom, stats)
 
     manifest.record_done(spark, ledger_path, pending)
     # release the operator-internal persists (zonal_stats pins the zone

@@ -103,7 +103,7 @@ def run_standardize_job(
     from sids_data_pipeline_spark.sources.geotiff_datasource import slice_files
     from sids_data_pipeline_spark.sources.storage import list_files, require_local_dir
 
-    local_out = require_local_dir(out_dir)
+    require_local_dir(out_dir)
     done_ids = _ledgered_ids(spark, ledger_path)
 
     # Prune BEFORE decode: raster_id is the filename stem, so a
@@ -123,7 +123,7 @@ def run_standardize_job(
     paths = sc.parallelize(slices, len(slices)).flatMap(lambda s: [(f,) for f in s])
     written = (
         spark.createDataFrame(paths, "path string")
-        .mapInArrow(_standardize_kernel(local_out, band, lon, lat), "raster_id string")
+        .mapInArrow(_standardize_kernel(out_dir, band, lon, lat), "raster_id string")
         .collect()
     )
     processed = sorted(r.raster_id for r in written)

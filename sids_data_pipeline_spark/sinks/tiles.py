@@ -22,7 +22,9 @@ Spark-first equivalents:
   executors. Tests decode the bytes back and assert feature content;
   byte-parity with tippecanoe is not a goal (SURVEY.md §7).
 - **upload (K3)** is the write itself: ``partitionBy(z, x)`` to any
-  Hadoop-supported URI; ``metadata.json`` sidecar completes the P6 loop.
+  Hadoop-supported URI; the ``_tileset_metadata.json`` sidecar completes
+  the P6 loop. It is written and probed through ``sources/storage``
+  (local disk or ``pyarrow.fs``), so its URI must be one pyarrow opens.
 - **one tileset in memory** (:func:`tileset_rows`) runs the same three
   steps without Spark, for the Entry-1 pipeline's per-pair Arrow task.
 """
@@ -40,7 +42,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from sids_data_pipeline_spark.sources.storage import exists, fs_write_text, list_files
+from sids_data_pipeline_spark.sources.storage import exists, list_files, write_bytes
 
 MAX_ZOOM = 10  # reference tippecanoe -z10 (tiles.py:22-24)
 # tippecanoe's default --buffer=5 is 5/256 of the tile span; at the default
@@ -436,11 +438,12 @@ def write_tileset(
         fields=fields,
     )
     # leading underscore: Spark data-source listings ignore _*/.* files,
-    # so the marker coexists with the parquet parts (like _SUCCESS)
-    fs_write_text(
-        tiles.sparkSession,
+    # so the marker coexists with the parquet parts (like _SUCCESS). It
+    # goes through the storage client that tileset_complete and
+    # tileset_markers probe with.
+    write_bytes(
         os.path.join(path, "_tileset_metadata.json"),
-        json.dumps(meta, separators=(",", ":")),
+        json.dumps(meta, separators=(",", ":")).encode("utf-8"),
     )
 
 

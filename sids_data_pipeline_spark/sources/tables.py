@@ -59,15 +59,15 @@ def _load_events(spark: SparkSession, path: str) -> DataFrame:
 def _events_ts_is_nanos(path: str) -> bool:
     """True when the parquet footer declares ``ts`` as nanosecond
     precision. Footer-only read; when the footer cannot be probed (a
-    missing or non-parquet path, a scheme pyarrow cannot open, no ``ts``
-    column) assume the modern micros layout: the plain read then fails
+    missing or non-parquet path, a scheme pyarrow does not know or was
+    built without, no ``ts`` column) assume the modern micros layout: the plain read then fails
     loudly if that's wrong."""
     import pyarrow.dataset as ds
     import pyarrow.types as pat
 
     try:
         field = ds.dataset(path, format="parquet").schema.field("ts")
-    except (OSError, ValueError, KeyError):
+    except (OSError, ValueError, KeyError, NotImplementedError):
         return False
     return pat.is_timestamp(field.type) and field.type.unit == "ns"
 

@@ -399,8 +399,13 @@ def test_geotiff_datasource_one_partition_per_file_without_fixed_slots(spark, tm
 def test_geotiff_uri_glob_walks_one_component_per_level(tmp_path):
     """URI globs match one component per directory level with Hadoop
     globStatus rules (``*`` stops at ``/`` and matches dot-files,
-    ``[^...]`` negates), here through a file:// URI, which lists local
+    ``[^...]`` negates), here through pyarrow's local filesystem under a
+    remote root (matches map back under the URI root, not the
+    filesystem's own path) and through a file:// URI, which lists local
     paths; alternation is refused."""
+    from pyarrow import fs as pafs
+
+    from sids_data_pipeline_spark.sources import storage
     from sids_data_pipeline_spark.sources.storage import list_files
 
     for rel in ("a/x.tif", "a/y.txt", "a/.h.tif", "b/z.tif", "b/deep/w.tif",
@@ -410,12 +415,20 @@ def test_geotiff_uri_glob_walks_one_component_per_level(tmp_path):
     base = str(tmp_path)
 
     def glob(pattern):
+        return storage._glob_walk(pafs.LocalFileSystem(), base, "mem://bucket", pattern)
+
+    assert glob("*/*.tif") == ["mem://bucket/a/.h.tif", "mem://bucket/a/x.tif", "mem://bucket/b/z.tif"]
+    assert glob("*.tif") == ["mem://bucket/top.tif"]
+    assert glob("*/deep/[^v]*") == ["mem://bucket/b/deep/w.tif"]
+    assert glob("b/deep") == [] and glob("nope/*.tif") == []
+
+    def file_glob(pattern):
         return list_files(f"file://{base}/{pattern}")
 
-    assert glob("*/*.tif") == [f"{base}/a/.h.tif", f"{base}/a/x.tif", f"{base}/b/z.tif"]
-    assert glob("*.tif") == [f"{base}/top.tif"]
-    assert glob("*/deep/[^v]*") == [f"{base}/b/deep/w.tif"]
-    assert glob("b/deep") == [] and glob("nope/*.tif") == []
+    assert file_glob("*/*.tif") == [f"{base}/a/.h.tif", f"{base}/a/x.tif", f"{base}/b/z.tif"]
+    assert file_glob("*.tif") == [f"{base}/top.tif"]
+    assert file_glob("*/deep/[^v]*") == [f"{base}/b/deep/w.tif"]
+    assert file_glob("b/deep") == [] and file_glob("nope/*.tif") == []
     assert list_files(f"file://{base}/[ab]/[!.]*.tif") == [f"{base}/a/x.tif", f"{base}/b/z.tif"]
     assert list_files(f"file://{base}/top.tif") == [f"{base}/top.tif"]
     with pytest.raises(ValueError, match="alternation"):

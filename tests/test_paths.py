@@ -111,6 +111,45 @@ def test_tileset_markers_path_forms(cwd, form):
     assert not tiles.tileset_complete(form(str(cwd / "out" / "b_r" / "tiles")))
 
 
+def test_write_tileset_marker_path_forms(spark, cwd, form):
+    """The marker write_tileset drops is the one tileset_complete and
+    tileset_markers find, in every local form."""
+    path = form(str(cwd / "out" / "k" / "tiles"))
+    enc = spark.createDataFrame([(0, 0, 0, b"\x01")], "z int, x int, y int, pbf binary")
+    assert not tiles.tileset_complete(path)
+    tiles.write_tileset(enc, path, name="k", max_zoom=0)
+    assert tiles.tileset_complete(path)
+    assert tiles.tileset_markers(form(str(cwd / "out"))) == {"k"}
+
+
+def test_tileset_marker_write_and_probes_share_one_client(spark, tmp_path, monkeypatch):
+    """On a remote URI the marker is written and probed through the same
+    pyarrow.fs client; here a local subtree stands in for the bucket."""
+    from types import SimpleNamespace
+
+    from pyarrow import fs as pafs
+
+    bucket = pafs.SubTreeFileSystem(str(tmp_path), pafs.LocalFileSystem())
+    monkeypatch.setattr(storage, "_filesystem", lambda uri: (bucket, uri.split("://", 1)[1]))
+
+    class _Writer:  # stands in for Spark's parquet write of the pyramid
+        def mode(self, _):
+            return self
+
+        def partitionBy(self, *_):
+            return self
+
+        def parquet(self, path):
+            os.makedirs(tmp_path / path.split("://", 1)[1])
+
+    pyramid = SimpleNamespace(write=_Writer(), sparkSession=spark)
+    tiles.write_tileset(pyramid, "mem://b/out/k/tiles", name="k", max_zoom=0)
+    assert json.loads((tmp_path / "b/out/k/tiles/_tileset_metadata.json").read_text())["name"] == "k"
+    assert tiles.tileset_complete("mem://b/out/k/tiles")
+    assert not tiles.tileset_complete("mem://b/out/j/tiles")
+    assert tiles.tileset_markers("mem://b/out") == {"k"}
+
+
 def test_ingest_shapefile_path_forms(spark, cwd, form):
     path = str(cwd / "z.shp")
     write_shapefile([(0, "a", box_wkb(0, 0, 1, 1)), (1, "b", box_wkb(1, 0, 2, 1))], form(path))

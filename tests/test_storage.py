@@ -118,6 +118,21 @@ def test_events_loader_schema_adaptive(spark, tmp_path):
     assert a == b == us
 
 
+def test_events_footer_probe_falls_back_on_unbuilt_scheme(monkeypatch):
+    """A scheme pyarrow knows but was built without raises
+    ArrowNotImplementedError; the footer probe assumes micros then."""
+    import pyarrow as pa
+    import pyarrow.dataset as ds
+
+    from sids_data_pipeline_spark.sources.tables import _events_ts_is_nanos
+
+    def unbuilt(path, format):
+        raise pa.lib.ArrowNotImplementedError("Got GCS URI but Arrow compiled without GCS support")
+
+    monkeypatch.setattr(ds, "dataset", unbuilt)
+    assert _events_ts_is_nanos("gs://bucket/events") is False
+
+
 def test_compact_files_reduces_count_preserves_rows(spark, tmp_path):
     from sids_data_pipeline_spark.sources.storage import compact_files
 
