@@ -196,12 +196,9 @@ def run_pipeline(
             f"ambiguous pair keys {dupes}: underscore-joined ids collide "
             "(reference data.py:33 key format); rename the inputs"
         )
-    # the ledger itself is completed-pair-sized (same magnitude): one
-    # small read when it exists, no job at all on a fresh estate
-    done_set = {
-        (r.v_id, r.r_id)
-        for r in manifest.read_ledger(spark, ledger_path).collect()
-    }
+    # the ledger itself is completed-pair-sized (same magnitude): a
+    # driver-side read of its part files, never a Spark job
+    done_set = manifest.read_done(ledger_path)
     # second P6 guard, the reference's own probe (data.py:33-35): a pair
     # whose tileset marker exists is complete even if the ledger was
     # lost. ONE recursive marker listing replaces the former per-pair
@@ -217,16 +214,9 @@ def run_pipeline(
             pending_rows.append(r)
     if marker_done:
         # heal the ledger: marker-complete pairs re-enter it so future
-        # runs skip them via the cheap anti-join instead of re-probing
+        # runs skip them via the ledger set instead of re-probing
         # the filesystem for every lost-ledger pair forever
-        manifest.record_done(
-            spark,
-            ledger_path,
-            spark.createDataFrame(
-                pd.DataFrame(marker_done, columns=Pair._fields),
-                "v_id string, r_id string, pair_key string",
-            ),
-        )
+        manifest.append_done(ledger_path, [(p.v_id, p.r_id) for p in marker_done])
     if not pending_rows:
         return {"pending": 0, "outputs": []}
     # rebuild the pending manifest from the surviving rows so the compute
@@ -293,7 +283,7 @@ def run_pipeline(
             _write_pair_data(out_dir, key, None, stats, max_zoom, max_features_per_tile)
             _write_pair_marker(out_dir, key, None, max_zoom, stats)
 
-    manifest.record_done(spark, ledger_path, pending)
+    manifest.append_done(ledger_path, [(p.v_id, p.r_id) for p in pending_rows])
     # release the operator-internal persists (zonal_stats pins the zone
     # table above BROADCAST_ZONE_LIMIT) — repeated invocations in one
     # session must not accumulate dead caches

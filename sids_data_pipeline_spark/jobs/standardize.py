@@ -9,7 +9,8 @@ done, and already-recorded rasters are skipped on re-run
 from decode to write:
 
 - Pruning is a driver-side listing: the input files whose stems are in
-  the Parquet ledger are dropped BEFORE any decode work is scheduled.
+  the parquet ledger, read on the driver, are dropped BEFORE any decode
+  work is scheduled.
 - The driver's pending path list is split by
   :func:`geotiff_datasource.slice_files` (the geotiff scan's rule) into
   ``min(len(pending), defaultParallelism)`` slices, one task each; the
@@ -19,9 +20,9 @@ from decode to write:
   row/column slice, ZSTD 128-tiled encode) and writes it through a temp
   file + ``os.replace``. It yields the raster ids it wrote; no pixel row
   is built and nothing is shuffled or cached.
-- The ledger append is the final action, so a crash mid-write
-  re-processes (idempotent overwrite) rather than skipping unfinished
-  rasters.
+- The ledger append, one parquet file written by the driver, is the
+  final action, so a crash mid-write re-processes (idempotent
+  overwrite) rather than skipping unfinished rasters.
 
 At 100 TB: inputs parallelize per file, each task holds one decoded
 raster at a time, and the only driver-side state is the pending-raster
@@ -36,12 +37,6 @@ from pyspark.sql import SparkSession
 
 from sids_data_pipeline_spark.operators import manifest
 from sids_data_pipeline_spark.sources.raster import CLIP_LAT, CLIP_LON
-
-
-def _ledgered_ids(spark: SparkSession, ledger_path: str) -> set[str]:
-    """The raster ids in the ledger (manifest.read_ledger's read rule)."""
-    ledger = manifest.read_ledger(spark, ledger_path, ("raster_id",))
-    return {r.raster_id for r in ledger.collect()}
 
 
 def _standardize_kernel(out_dir, band, lon, lat):
@@ -97,14 +92,18 @@ def run_standardize_job(
     pyarrow supports the scheme). ``out_dir`` must name a local or
     shared-POSIX directory (plain or ``file:``); a remote one raises
     ``ValueError`` before any work, since executor workers have no JVM
-    gateway to the Hadoop FS for writes. The ``ledger_path`` is plain
-    Spark parquet and may live anywhere.
+    gateway to the Hadoop FS for writes. The ledger at ``ledger_path``
+    is a directory of parquet parts that the driver reads and appends
+    through ``sources/storage`` (:func:`manifest.read_done`,
+    :func:`manifest.append_done`): one atomic part file per run that
+    processed a raster, under the same path rule as ``input_glob``, so a
+    ledger URI that pyarrow.fs cannot open raises.
     """
     from sids_data_pipeline_spark.sources.geotiff_datasource import slice_files
     from sids_data_pipeline_spark.sources.storage import list_files, require_local_dir
 
     require_local_dir(out_dir)
-    done_ids = _ledgered_ids(spark, ledger_path)
+    done_ids = {r for (r,) in manifest.read_done(ledger_path, ("raster_id",))}
 
     # Prune BEFORE decode: raster_id is the filename stem, so a
     # driver-side LISTING (metadata only) decides pending-ness without
@@ -127,8 +126,5 @@ def run_standardize_job(
         .collect()
     )
     processed = sorted(r.raster_id for r in written)
-    if processed:
-        spark.createDataFrame(
-            [(r,) for r in processed], "raster_id string"
-        ).write.mode("append").parquet(ledger_path)
+    manifest.append_done(ledger_path, [(r,) for r in processed], ("raster_id",))
     return {"processed": processed, "skipped": skipped}

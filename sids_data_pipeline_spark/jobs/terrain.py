@@ -8,10 +8,11 @@ hillshade and overview pyramids both take ``group_cols=("raster_id",
 shuffle each — no per-raster loop, no per-raster job.
 
 Idempotency follows the standardize job's ledger pattern (reference
-``utils.py:31-38``): a Parquet ledger of finished raster ids anti-joins
-the input BEFORE any derivation work is scheduled; re-running after
-completion does zero work, and the ledger append is the last action so a
-crash mid-write re-processes instead of skipping unfinished rasters.
+``utils.py:31-38``): the driver reads the parquet ledger of finished
+raster ids (operators/manifest) and drops them from the input's ids
+BEFORE any derivation work is scheduled; re-running after completion
+does zero work, and the ledger append is the last action so a crash
+mid-write re-processes instead of skipping unfinished rasters.
 
 Output layout: ``out_dir/product=hillshade|overviews/`` parquet,
 partitioned by raster_id — downstream scans prune to one raster (or one
@@ -37,30 +38,23 @@ def run_terrain_job(
     and append their ids to the ledger. Returns
     {"processed": [...], "skipped": [...]}.
 
-    Scale shape: the pending filter is a left-anti join on the ledger
-    (manifest-sized), each product is ONE group_cols shuffle over the
-    pending estate, and each product writes ONCE, partitioned by
-    raster_id — job count is constant in the raster count.
+    Scale shape: the pending ids are the collected distinct ids minus
+    the ledger set (both manifest-sized), each product is ONE
+    group_cols shuffle over the pending estate, and each product writes
+    ONCE, partitioned by raster_id — job count is constant in the
+    raster count.
     """
     import os
 
-    from pyspark.errors import AnalysisException
-
+    from sids_data_pipeline_spark.operators import manifest
     from sids_data_pipeline_spark.operators.terrain import (
         build_overviews,
         hillshade,
     )
 
-    ids = pixels.select("raster_id").distinct()
-    try:
-        done = spark.read.parquet(ledger_path).select("raster_id").distinct()
-        pending_ids = ids.join(done, "raster_id", "left_anti")
-    except AnalysisException:
-        pending_ids = ids  # first run: no ledger yet
-    pending = [r.raster_id for r in pending_ids.collect()]
-    skipped = sorted(
-        set(r.raster_id for r in ids.collect()) - set(pending)
-    )
+    ids = {r.raster_id for r in pixels.select("raster_id").distinct().collect()}
+    done = {r for (r,) in manifest.read_done(ledger_path, ("raster_id",))}
+    pending, skipped = sorted(ids - done), sorted(ids & done)
     if not pending:
         return {"processed": [], "skipped": skipped}
 
@@ -84,7 +78,5 @@ def run_terrain_job(
         )
     # ledger append LAST: a crash above re-processes (overwrite), never
     # records unfinished rasters as done
-    spark.createDataFrame(
-        [(r,) for r in pending], "raster_id string"
-    ).write.mode("append").parquet(ledger_path)
-    return {"processed": sorted(pending), "skipped": skipped}
+    manifest.append_done(ledger_path, [(r,) for r in pending], ("raster_id",))
+    return {"processed": pending, "skipped": skipped}

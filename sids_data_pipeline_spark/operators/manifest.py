@@ -8,22 +8,39 @@ when its output marker blob ``{v}_{r}/metadata.json`` exists
 (``batch/processing/raster.py:40``, ``batch/processing/utils.py:31-38``)
 exported as CSV (``batch/processing/upload.py:35-44``).
 
-Here the same semantics are three one-liners over DataFrames — the shapes
-Catalyst already optimizes:
+Here the pair semantics are three one-liners over DataFrames — the
+shapes Catalyst already optimizes:
 
 - pair generation  = crossJoin (J3); both sides are manifests (tiny), so
   the cross product is broadcast and never shuffles the cluster.
 - incremental skip = left ANTI join against the completion ledger (P6).
 - pending gate     = left SEMI join (P8).
-- completion       = append to a Parquet ledger (X3/S7) — job-atomic, and
-  re-running the pipeline after a completed run yields an empty pending
-  set (idempotency, proven in tests/test_manifest.py).
+
+The completion ledger (X3/S7) is driver-sized, so the driver reads and
+writes it as plain files with no Spark job: a directory of parquet
+parts with string columns. :func:`append_done` adds ONE atomic part
+file per append, :func:`read_done` reads every part back as a Python
+set, and re-running a job after a completed run yields an empty
+pending set (idempotency, proven in tests/test_manifest.py). Both go
+through ``sources/storage``, so the ledger path follows the package's
+one path rule: a plain path, ``file:/abs`` or ``file:///abs`` is local
+disk, any other ``scheme://`` is opened with ``pyarrow.fs``. Spark and
+pyarrow's dataset reader read the same directory as a parquet table.
 """
 
 from __future__ import annotations
 
+import glob
+import os
+import uuid
+
+import pandas as pd
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from sids_data_pipeline_spark.sources.storage import list_files, read_bytes, write_bytes
 
 PAIR_COLS = ("v_id", "r_id")
 
@@ -52,36 +69,73 @@ def gate_to_pending(df: DataFrame, pending: DataFrame) -> DataFrame:
     return df.join(pending.select(*PAIR_COLS), list(PAIR_COLS), "left_semi")
 
 
-def record_done(
-    spark: SparkSession, ledger_path: str, completed: DataFrame
-) -> None:
-    """X3: append completed pairs to the Parquet ledger (the reference's
-    SQLite INSERT, batch/processing/raster.py:40). Parquet append is
-    job-atomic per directory; concurrent pipelines each add their files."""
-    completed.select(*PAIR_COLS).write.mode("append").parquet(ledger_path)
+def _ledger_rows(ledger_path: str, cols: tuple[str, ...]) -> list[tuple]:
+    """The ``cols`` tuples of every row in the completion ledger, read on
+    the driver with pyarrow and no Spark job.
+
+    The ledger's data parts are the files directly under ``ledger_path``
+    whose names start with neither ``_`` nor ``.`` — the rule Spark's
+    own parquet reader applies, so ``_SUCCESS``, ``.crc`` checksums, a
+    ``_temporary`` directory left by a killed Spark append and the
+    hidden temp file of a killed :func:`append_done` are all skipped. A
+    missing ledger has no rows. A part that lacks one of ``cols`` is
+    schema drift and raises ``ValueError``: an empty fallback there
+    would silently disable incrementality and re-run ALL completed work.
+    Any other read failure (corrupt footer, permissions) surfaces too.
+    """
+    rows = []
+    for part in list_files(glob.escape(ledger_path.rstrip("/")) + "/*"):
+        if os.path.basename(part).startswith(("_", ".")):
+            continue
+        table = pq.read_table(pa.BufferReader(read_bytes(part)))
+        for c in cols:
+            if c not in table.column_names:
+                raise ValueError(f"ledger {ledger_path}: {part} has no column {c!r}")
+        rows += zip(*(table.column(c).to_pylist() for c in cols))
+    return rows
+
+
+def read_done(ledger_path: str, cols: tuple[str, ...] = PAIR_COLS) -> set[tuple]:
+    """S7: the set of ``cols`` tuples the completion ledger records."""
+    return set(_ledger_rows(ledger_path, cols))
+
+
+def append_done(ledger_path: str, rows: list[tuple], cols: tuple[str, ...] = PAIR_COLS) -> None:
+    """X3: append ``rows`` (tuples of ``cols``, all strings) to the
+    ledger as ONE new ``part-<uuid>.parquet`` file — the reference's
+    SQLite INSERT (batch/processing/raster.py:40). :func:`write_bytes`
+    writes a local part through a hidden temp file and ``os.replace``,
+    so an append is atomic: a reader sees all of its rows or none.
+    Concurrent writers each add their own part. No rows, no file."""
+    if not rows:
+        return
+    table = pa.table({c: pa.array(v, pa.string()) for c, v in zip(cols, zip(*rows))})
+    sink = pa.BufferOutputStream()
+    # the parquet schema already types every string column; the Arrow
+    # schema blob would only grow a small part by more than half
+    pq.write_table(table, sink, store_schema=False)
+    part = f"{ledger_path.rstrip('/')}/part-{uuid.uuid4().hex}.parquet"
+    write_bytes(part, sink.getvalue().to_pybytes())
+
+
+def record_done(spark: SparkSession, ledger_path: str, completed: DataFrame) -> None:
+    """:func:`append_done` of the ``PAIR_COLS`` of ``completed``."""
+    append_done(ledger_path, completed.select(*PAIR_COLS).collect())
 
 
 def read_ledger(
     spark: SparkSession, ledger_path: str, cols: tuple[str, ...] = PAIR_COLS
 ) -> DataFrame:
-    """S7: the ``cols`` of the completion ledger as a DataFrame.
-
-    A driver-side Hadoop FileSystem listing decides first: a missing
-    ledger, or one holding no entry Spark would read (only ``_temporary``
-    from a first append killed before its commit), is an empty local
-    relation, built without any read, so collecting it runs no Spark
-    job. Any read failure after that (corrupt footer, permissions)
-    surfaces, and a ledger that lacks one of ``cols`` is schema drift and
-    raises — an empty fallback there would silently disable
-    incrementality and re-run ALL completed work. No os.path fast path:
-    scheme-less paths resolve against Hadoop defaultFS, not the driver's
-    local disk.
-    """
-    hpath = spark._jvm.org.apache.hadoop.fs.Path(ledger_path)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(hpath) or all(
-        st.getPath().getName().startswith(("_", ".")) for st in fs.listStatus(hpath)
-    ):
-        nulls = ", ".join(f"CAST(NULL AS STRING) AS `{c}`" for c in cols)
-        return spark.sql(f"SELECT {nulls} WHERE FALSE")
-    return spark.read.parquet(ledger_path).select(*cols)
+    """The ledger's rows as a DataFrame of string ``cols``, one row per
+    recorded row (duplicates kept). The driver-side reader of
+    :func:`read_done` reads them, so the path follows the
+    ``sources/storage`` rule, not Hadoop's ``defaultFS``. A non-empty
+    ledger is a local relation built from pandas and an empty one a
+    relation built without any read; collecting either runs no Spark
+    job."""
+    rows = _ledger_rows(ledger_path, cols)
+    if rows:
+        schema = ", ".join(f"`{c}` string" for c in cols)
+        return spark.createDataFrame(pd.DataFrame(rows, columns=list(cols)), schema)
+    nulls = ", ".join(f"CAST(NULL AS STRING) AS `{c}`" for c in cols)
+    return spark.sql(f"SELECT {nulls} WHERE FALSE")

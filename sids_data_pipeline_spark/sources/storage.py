@@ -15,9 +15,11 @@ probe and listing in the package goes through it:
 - :func:`require_local_dir` guards the output directories that
   executors fill with ``os``/``open``.
 - The driver-side ``fs_*`` helpers keep the Hadoop ``FileSystem`` for
-  remote URIs, so ledgers and markers land wherever Spark writes data.
+  remote URIs, so the curation and CDC ledgers land wherever Spark
+  writes data. The Entry-1/Entry-2 completion ledger
+  (operators/manifest) is read and appended with the helpers above.
 
-Spark-side reads and writes (parquet ledgers, bucketed tables) resolve
+Spark-side reads and writes (bucketed tables, the pixel store) resolve
 through Hadoop and are not routed here.
 
 **Layouts.** Two layouts the engine standardises (SURVEY.md §7

@@ -91,13 +91,92 @@ def test_first_run_ledger_reads_empty_without_a_job(spark, tmp_path, layout, mon
 
 def test_ledger_read_surfaces_other_analysis_errors(spark, tmp_path):
     """A ledger that exists but lacks the requested columns is schema
-    drift, not a first run."""
-    from pyspark.errors import AnalysisException
-
+    drift, not a first run: the error names the ledger and the column."""
     ledger = str(tmp_path / "ledger")
     spark.createDataFrame([("r1",)], "id string").write.parquet(ledger)
-    with pytest.raises(AnalysisException):
+    with pytest.raises(ValueError, match=f"ledger {ledger}: .* no column 'v_id'"):
         manifest.read_ledger(spark, ledger)
+
+
+def _part_files(ledger):
+    return sorted(p.name for p in ledger.iterdir())
+
+
+def test_spark_appended_ledger_reads_as_the_same_set(spark, tmp_path):
+    """A ledger written by Spark's parquet append, with its
+    ``part-*.snappy.parquet`` parts, ``_SUCCESS``, ``.crc`` checksums and
+    a ``_temporary/0`` directory left by a killed append, reads as the
+    set of its rows; a later append of this module's adds to it."""
+    ledger = tmp_path / "ledger"
+    rows = [("v1", "r1"), ("v1", "r2"), ("v2", "r1")]
+    for chunk in (rows[:2], rows[2:]):
+        spark.createDataFrame(chunk, "v_id string, r_id string").write.mode(
+            "append"
+        ).option("compression", "snappy").parquet(str(ledger))
+    (ledger / "_temporary" / "0").mkdir(parents=True)
+    names = _part_files(ledger)
+    assert "_SUCCESS" in names and any(n.endswith(".crc") for n in names)
+    assert any(n.startswith("part-") and n.endswith(".snappy.parquet") for n in names)
+
+    assert manifest.read_done(str(ledger)) == set(rows)
+    assert sorted(tuple(r) for r in manifest.read_ledger(spark, str(ledger)).collect()) == rows
+    manifest.append_done(str(ledger), [("v2", "r2")])
+    assert manifest.read_done(str(ledger)) == {*rows, ("v2", "r2")}
+
+
+def test_appended_ledger_reads_back_through_spark_and_pyarrow(spark, tmp_path):
+    """Each append is one ``part-<uuid>.parquet`` file and nothing else;
+    Spark's parquet reader and pyarrow's dataset reader see the rows
+    the ledger reader sees, duplicates included."""
+    import pyarrow.parquet as pq
+
+    ledger = tmp_path / "ledger"
+    manifest.append_done(str(ledger), [("v1", "r1"), ("v1", "r2")])
+    manifest.append_done(str(ledger), [])  # no rows, no file
+    manifest.append_done(str(ledger), [("v2", "r1"), ("v1", "r1")])
+    names = _part_files(ledger)
+    assert len(names) == 2
+    assert all(n.startswith("part-") and n.endswith(".parquet") for n in names)
+
+    want = sorted([("v1", "r1"), ("v1", "r1"), ("v1", "r2"), ("v2", "r1")])
+    via_spark = spark.read.parquet(str(ledger))
+    assert via_spark.schema.simpleString() == "struct<v_id:string,r_id:string>"
+    assert sorted(tuple(r) for r in via_spark.collect()) == want
+    table = pq.read_table(str(ledger))
+    assert sorted(zip(table.column("v_id").to_pylist(), table.column("r_id").to_pylist())) == want
+    assert sorted(tuple(r) for r in manifest.read_ledger(spark, str(ledger)).collect()) == want
+    assert manifest.read_done(str(ledger)) == set(want)
+
+
+def test_hidden_temp_part_of_a_killed_append_is_ignored(spark, tmp_path):
+    """A killed append leaves at most its hidden ``.part-*.tmp`` file,
+    which is not a data part: the ledger reads without it, through this
+    module and through Spark."""
+    ledger = tmp_path / "ledger"
+    manifest.append_done(str(ledger), [("r1",)], ("raster_id",))
+    (ledger / ".part-0123abcd.parquet.4567.tmp").write_bytes(b"PAR1 torn")
+    assert manifest.read_done(str(ledger), ("raster_id",)) == {("r1",)}
+    assert [r.raster_id for r in spark.read.parquet(str(ledger)).collect()] == ["r1"]
+
+
+def test_append_is_one_atomic_rename(tmp_path, monkeypatch):
+    """An append that fails while its part is written leaves no part
+    and no temp file behind, so the ledger reads as before."""
+    import os
+
+    ledger = tmp_path / "ledger"
+    manifest.append_done(str(ledger), [("r1",)], ("raster_id",))
+    before = _part_files(ledger)
+
+    def fail(src, dst):
+        raise OSError("injected failure at the rename")
+
+    monkeypatch.setattr(os, "replace", fail)
+    with pytest.raises(OSError, match="injected"):
+        manifest.append_done(str(ledger), [("r2",)], ("raster_id",))
+    monkeypatch.undo()
+    assert _part_files(ledger) == before
+    assert manifest.read_done(str(ledger), ("raster_id",)) == {("r1",)}
 
 
 def test_list_datasets_stems(spark, tmp_path):

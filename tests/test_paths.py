@@ -18,6 +18,7 @@ import pytest
 from sids_data_pipeline_spark.functions.geo import box_wkb
 from sids_data_pipeline_spark.jobs.pipeline import run_pipeline
 from sids_data_pipeline_spark.jobs.standardize import run_standardize_job
+from sids_data_pipeline_spark.operators import manifest
 from sids_data_pipeline_spark.sinks import tiles
 from sids_data_pipeline_spark.sinks.tokenbin import write_token_shards
 from sids_data_pipeline_spark.sources.geotiff import decode_geotiff, encode_geotiff
@@ -68,13 +69,20 @@ def test_standardize_job_path_forms(spark, cwd, form):
     src.mkdir()
     arr = np.arange(64, dtype="float64").reshape(8, 8)
     (src / "r1.tif").write_bytes(encode_geotiff(arr, origin_x=0.0, origin_y=0.8, pixel_deg=0.1))
-    res = run_standardize_job(
-        spark, form(f"{src}/*.tif"), form(str(out)), str(cwd / "ledger"),
-        lon=(0.0, 0.45), lat=(0.0, 0.8),
-    )
-    assert res == {"processed": ["r1"], "skipped": []}
+
+    def run():
+        return run_standardize_job(
+            spark, form(f"{src}/*.tif"), form(str(out)), form(str(cwd / "ledger")),
+            lon=(0.0, 0.45), lat=(0.0, 0.8),
+        )
+
+    assert run() == {"processed": ["r1"], "skipped": []}
     assert decode_geotiff((out / "r1.tif").read_bytes())[0].shape == (8, 5)
     assert os.listdir(out) == ["r1.tif"]
+    # the ledger's one part lands in the local directory and the rerun reads it
+    (part,) = os.listdir(cwd / "ledger")
+    assert part.startswith("part-") and part.endswith(".parquet")
+    assert run() == {"processed": [], "skipped": ["r1"]}
 
 
 def test_standardize_uri_glob_refusals(spark, tmp_path):
@@ -97,6 +105,10 @@ def test_pipeline_out_dir_path_forms(spark, cwd, form):
     assert len((pair / "export.geojsonl" / "part-00000.txt").read_text().splitlines()) == 4
     meta = json.loads((pair / "tiles" / "_tileset_metadata.json").read_text())
     assert meta["name"] == "zones_grid_rast_gradient"
+    assert len(os.listdir(out / "_ledger")) == 1
+    for other in FORMS.values():
+        got = manifest.read_done(other(str(out / "_ledger")))
+        assert got == {("zones_grid", "rast_gradient")}
     assert run_pipeline(spark, ["zones_grid"], ["rast_gradient"], form(str(out))) == {
         "pending": 0, "outputs": [],
     }

@@ -174,7 +174,7 @@ def test_pipeline_single_write_constant_job_count(spark, tmp_path, monkeypatch):
     # pair (broadcast/AQE variation allows a tiny slack, never 4x)
     assert j4 <= j1 + 3, (j1, j4)
     # the sink is the last stage the pipeline's collect ran (the ledger
-    # append after it is a parquet write)
+    # append after it runs on the driver)
     sink = [
         s for s in _stage_infos(spark, "jcount-four-pair")
         if s.name.startswith("collect at") and "pipeline.py" in s.name
@@ -469,6 +469,21 @@ def test_pipeline_crash_before_marker_converges_on_rerun(spark, tmp_path, monkey
     assert sorted((r.v_id, r.r_id) for r in ledger) == sorted(
         (v, r) for v in vectors for r in rasters
     )
+
+
+def test_pipeline_noop_rerun_schedules_no_job(spark, tmp_path):
+    """After a completed run the ledger, read on the driver, empties
+    the pending set: the rerun returns without a single Spark job."""
+    out = str(tmp_path / "out")
+    assert run_pipeline(spark, ["zones_grid"], ["rast_gradient"], out)["pending"] == 1
+    sc = spark.sparkContext
+    sc.setJobGroup("pipeline-noop-rerun", "pipeline-noop-rerun")
+    try:
+        res = run_pipeline(spark, ["zones_grid"], ["rast_gradient"], out)
+    finally:
+        sc.setJobGroup(None, None)
+    assert res == {"pending": 0, "outputs": []}
+    assert sc.statusTracker().getJobIdsForGroup("pipeline-noop-rerun") == []
 
 
 def test_pipeline_refuses_remote_out_dir_before_any_job(spark, tmp_path, monkeypatch):

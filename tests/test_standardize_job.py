@@ -275,16 +275,50 @@ def test_standardize_file_names_with_glob_metacharacters(spark, tmp_path):
 def test_standardize_ledger_without_raster_id_raises(spark, tmp_path):
     """A ledger that exists but has no raster_id column is an error, not
     an empty ledger that would reprocess every raster."""
-    from pyspark.errors import AnalysisException
-
     src = tmp_path / "in"
     src.mkdir()
     _write_fixture(src, "r1")
     ledger = str(tmp_path / "ledger")
     spark.createDataFrame([("r1",)], "id string").write.parquet(ledger)
-    with pytest.raises(AnalysisException):
+    with pytest.raises(ValueError, match=f"ledger {ledger}: .* no column 'raster_id'"):
         run_standardize_job(spark, str(src / "*.tif"), str(tmp_path / "out"), ledger)
     assert not (tmp_path / "out").exists()
+
+
+def _spark_jobs(spark, group, fn):
+    """(fn's result, the number of Spark jobs it scheduled)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        res = fn()
+    finally:
+        sc.setJobGroup(None, None)
+    return res, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_standardize_schedules_one_job_and_a_noop_rerun_none(spark, tmp_path):
+    """The decode-and-write kernel is the run's only Spark job: the
+    ledger read and append run on the driver, so a first run schedules
+    exactly one job and a no-op rerun none."""
+    src = tmp_path / "in"
+    src.mkdir()
+    _write_fixture(src, "r1")
+    _write_fixture(src, "r2", 100.0)
+
+    def run():
+        return run_standardize_job(
+            spark, str(src / "*.tif"), str(tmp_path / "out"), str(tmp_path / "ledger"),
+            lon=(0.0, 0.45), lat=(0.0, 0.8),
+        )
+
+    assert _spark_jobs(spark, "standardize-first-run", run) == (
+        {"processed": ["r1", "r2"], "skipped": []}, 1,
+    )
+    assert _spark_jobs(spark, "standardize-noop-rerun", run) == (
+        {"processed": [], "skipped": ["r1", "r2"]}, 0,
+    )
+    (part,) = (tmp_path / "ledger").iterdir()  # one append, one file
+    assert part.name.startswith("part-")
 
 
 def test_standardize_ledger_without_data_file_reads_as_empty(spark, tmp_path):

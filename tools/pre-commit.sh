@@ -40,6 +40,9 @@ echo "$staged" | grep -q "sources/storage.py\|sinks/tokenbin.py\|sources/shapefi
     && q="$q source_geotiff_datasource raster_geotiff_ingest sink_tokenbin_roundtrip vector_shapefile_ingest streaming_vector_ingest streaming_cdc_upsert"
 echo "$staged" | grep -q "jobs/pipeline.py\|sinks/tiles.py\|sinks/geojsonl.py" \
     && q="$q pipeline_end_to_end tiles_encode_rings"
+# the completion ledger of the pipeline, standardize and terrain jobs
+echo "$staged" | grep -q "operators/manifest.py\|jobs/terrain.py" \
+    && q="$q manifest_pending pipeline_end_to_end"
 echo "$staged" | grep -q "plans/relational.py" \
     && q="$q pricing_summary sql_shipping_priority window_rank"
 
