@@ -28,7 +28,6 @@ pending = crossJoin − ledger; a re-run after completion does zero work
 from __future__ import annotations
 
 import itertools
-import json
 import os
 import shutil
 from functools import reduce
@@ -118,13 +117,9 @@ def _write_pair_data(out_dir, key, feats, stats, max_zoom, max_features_per_tile
 def _write_pair_marker(out_dir, key, bounds, max_zoom, stats):
     """The pair's tippecanoe-compatible completion marker (P6), written
     after all of its data."""
-    meta = tiles.tileset_metadata(
-        key, max_zoom=max_zoom, bounds=bounds,
-        fields={"fid": "Number", **{s: "Number" for s in stats}},
-    )
-    write_bytes(
-        os.path.join(out_dir, key, "tiles", "_tileset_metadata.json"),
-        json.dumps(meta, separators=(",", ":")).encode("utf-8"),
+    tiles.write_tileset_marker(
+        os.path.join(out_dir, key, "tiles"), key, max_zoom=max_zoom,
+        bounds=bounds, fields={"fid": "Number", **{s: "Number" for s in stats}},
     )
 
 

@@ -16,17 +16,21 @@ Spark-first equivalents:
   tippecanoe's ``--drop-densest-as-needed`` performs internally
   (``tiles.py:18``): smallest-area (densest) features drop first once a
   tile exceeds ``max_features_per_tile``;
-- **PBF encode** runs per tile group in ``applyInPandas``, emitting REAL
+- **PBF encode** is one per-tile encoder, :func:`encode_tile`: a tile's
+  features in layer order → their true clipped polygon rings → REAL
   Mapbox Vector Tile (vector-tile-spec 2.1) protobuf bytes via the
   pure-Python codec in ``functions/mvt.py`` — no native libs needed on
-  executors. Tests decode the bytes back and assert feature content;
-  byte-parity with tippecanoe is not a goal (SURVEY.md §7).
+  executors. :func:`encode_tiles` calls it per tile group in
+  ``applyInPandas``. Tests decode the bytes back and assert feature
+  content; byte-parity with tippecanoe is not a goal (SURVEY.md §7).
 - **upload (K3)** is the write itself: ``partitionBy(z, x)`` to any
-  Hadoop-supported URI; the ``_tileset_metadata.json`` sidecar completes
-  the P6 loop. It is written and probed through ``sources/storage``
-  (local disk or ``pyarrow.fs``), so its URI must be one pyarrow opens.
+  Hadoop-supported URI; the ``_tileset_metadata.json`` sidecar
+  (:func:`write_tileset_marker`) completes the P6 loop. It is written
+  and probed through ``sources/storage`` (local disk or ``pyarrow.fs``),
+  so its URI must be one pyarrow opens.
 - **one tileset in memory** (:func:`tileset_rows`) runs the same three
-  steps without Spark, for the Entry-1 pipeline's per-pair Arrow task.
+  steps without Spark, for the Entry-1 pipeline's per-pair Arrow task:
+  NumPy tile assignment and drop, then :func:`encode_tile` per tile.
 """
 
 from __future__ import annotations
@@ -54,6 +58,8 @@ DEFAULT_SIMPLIFY_TOL = 16.0
 # the Web Mercator latitude limit (tippecanoe's too): the poles project to
 # infinity, so latitudes clamp here before the slippy y math
 MAX_MERCATOR_LAT = 85.0511287798066
+# a tileset directory's completion marker (P6)
+MARKER = "_tileset_metadata.json"
 
 
 def _tile_x(lon, z):
@@ -126,27 +132,6 @@ def drop_densest(
     )
 
 
-def _local_coords(z: int, x: int, y: int, xmin, ymin, xmax, ymax, extent: int):
-    """Project a lon/lat bbox into tile-local integer space [0, extent]
-    (coords may exceed the range for features spilling past the tile edge
-    — MVT geometry is sint, the spec allows buffer overflow)."""
-    n = 2.0 ** z
-
-    def lx(lon):
-        return round(((lon + 180.0) / 360.0 * n - x) * extent)
-
-    def ly(lat):
-        t = math.tan(math.radians(min(max(lat, -MAX_MERCATOR_LAT), MAX_MERCATOR_LAT)))
-        merc = (1.0 - math.log(t + math.sqrt(t * t + 1.0)) / math.pi) / 2.0
-        return round((merc * n - y) * extent)
-
-    # tile Y grows downward, so ymax (north) is the smaller local y;
-    # ring is CW in screen space per spec §4.3.3.2 (exterior ring)
-    x0, x1 = lx(xmin), lx(xmax)
-    y0, y1 = ly(ymax), ly(ymin)
-    return [(x0, y0), (x1, y0), (x1, y1), (x0, y1), (x0, y0)]
-
-
 def _mercator_y(lat: np.ndarray) -> np.ndarray:
     """Latitudes → Web Mercator y in [0, 1], 0 at the north limit: the
     NumPy form of :func:`_tile_y`'s math, latitudes clamped first."""
@@ -155,8 +140,8 @@ def _mercator_y(lat: np.ndarray) -> np.ndarray:
 
 
 def _project_ring(z: int, x: int, y: int, ring: np.ndarray, extent: int) -> np.ndarray:
-    """Vectorised lon/lat ring → tile-local float coordinates (same slippy
-    math as :func:`_local_coords`, unrounded)."""
+    """Vectorised lon/lat ring → tile-local float coordinates: the slippy
+    math of :func:`_tile_x`/:func:`_tile_y`, unrounded."""
     n = 2.0 ** z
     return np.column_stack((
         ((ring[:, 0] + 180.0) / 360.0 * n - x) * extent,
@@ -227,115 +212,88 @@ def geometry_tile_rings(
     return out
 
 
-def _make_tile_encoder(
-    geometry_col: str | None,
-    max_zoom: int,
+def _props(record: dict) -> dict:
+    """A feature's MVT properties from its non-geometry columns: null
+    and NaN values drop (tippecanoe drops null attributes entirely) and
+    NumPy scalars unbox."""
+    return {
+        k: (v.item() if hasattr(v, "item") else v)
+        for k, v in record.items()
+        if v is not None and not (isinstance(v, float) and math.isnan(v))
+    }
+
+
+def encode_tile(
+    z: int,
+    x: int,
+    y: int,
+    features: Iterable[tuple[bytes, dict]],
+    max_zoom: int = MAX_ZOOM,
     buffer: int = DEFAULT_TILE_BUFFER,
     simplify_tol: float = DEFAULT_SIMPLIFY_TOL,
-    extra_keys: tuple[str, ...] = (),
-):
-    """Build the applyInPandas tile encoder. With ``geometry_col`` the
-    feature geometry is the WKB polygon's true rings (clipped, simplified
-    below ``max_zoom``); without it the legacy bbox-rectangle path applies.
-    ``extra_keys`` are additional group columns re-emitted verbatim (never
-    encoded as feature properties)."""
+) -> bytes:
+    """One tile's MVT bytes from its ``(wkb, props)`` features in layer
+    order: each polygon's true rings (:func:`geometry_tile_rings`,
+    simplified only below ``max_zoom``), ids 1..n in that order. A
+    feature whose polygon misses the tile (its bbox only touched it) is
+    left out, so a tile every polygon misses encodes an empty layer."""
+    from sids_data_pipeline_spark.functions import mvt
 
-    def encode(pdf: pd.DataFrame) -> pd.DataFrame:
-        from sids_data_pipeline_spark.functions import mvt
-
-        z, x, y = int(pdf["z"].iloc[0]), int(pdf["x"].iloc[0]), int(pdf["y"].iloc[0])
-        feat_cols = [
-            c for c in pdf.columns if c not in ("z", "x", "y", *extra_keys)
-        ]
-        bbox = ("xmin", "ymin", "xmax", "ymax")
-        has_geom = geometry_col is not None and geometry_col in feat_cols
-        has_bbox = not has_geom and all(c in feat_cols for c in bbox)
-        prop_cols = [
-            c for c in feat_cols
-            if c != geometry_col and (has_geom or c not in bbox)
-        ]
-        # stable sort over EVERY property column: a single non-unique
-        # key under pandas' default unstable quicksort would make
-        # feature order (and the pbf bytes) shuffle-dependent
-        sort_keys = prop_cols if prop_cols else feat_cols
-        rows = (
-            pdf[feat_cols]
-            .sort_values(sort_keys, kind="mergesort")
-            .to_dict("records")
-        )
-        tol = simplify_tol if z < max_zoom else 0.0
-        features = []
-        for r in rows:
-            if has_geom:
-                rings = geometry_tile_rings(
-                    r[geometry_col], z, x, y,
-                    buffer=buffer, simplify_tol=tol,
-                )
-                if not rings:
-                    continue  # bbox touched the tile but the polygon doesn't
-                gtype = mvt.GEOM_POLYGON
-            elif has_bbox:
-                rings = [
-                    _local_coords(z, x, y, r["xmin"], r["ymin"], r["xmax"],
-                                  r["ymax"], mvt.DEFAULT_EXTENT)
-                ]
-                gtype = mvt.GEOM_POLYGON
-            else:
-                rings = [[(mvt.DEFAULT_EXTENT // 2, mvt.DEFAULT_EXTENT // 2)]]
-                gtype = mvt.GEOM_POINT
-            features.append(
-                {
-                    "id": len(features) + 1,  # spec: nonzero unique-in-layer id
-                    "type": gtype,
-                    "rings": rings,
-                    # geometry/bbox columns become the rings, not properties
-                    # (tippecanoe likewise doesn't duplicate geometry as
-                    # attrs, and drops null attributes entirely)
-                    "props": {
-                        k: (v.item() if hasattr(v, "item") else v)
-                        for k, v in r.items()
-                        if k in prop_cols
-                        and v is not None
-                        and not (isinstance(v, float) and math.isnan(v))
-                    },
-                }
-            )
-        payload = mvt.encode_tile("features", features)
-        row = {k: pdf[k].iloc[0] for k in extra_keys}
-        row.update({"z": z, "x": x, "y": y, "pbf": payload})
-        return pd.DataFrame([row])
-
-    return encode
+    tol = simplify_tol if z < max_zoom else 0.0
+    layer = []
+    for wkb, props in features:
+        rings = geometry_tile_rings(wkb, z, x, y, buffer=buffer, simplify_tol=tol)
+        if rings:
+            # spec: nonzero unique-in-layer id
+            layer.append({"id": len(layer) + 1, "type": mvt.GEOM_POLYGON,
+                          "rings": rings, "props": props})
+    return mvt.encode_tile("features", layer)
 
 
 def encode_tiles(
     tiles: DataFrame,
     feature_cols: Iterable[str],
-    geometry_col: str | None = None,
+    geometry_col: str = "geometry",
     max_zoom: int = MAX_ZOOM,
     buffer: int = DEFAULT_TILE_BUFFER,
     simplify_tol: float = DEFAULT_SIMPLIFY_TOL,
     extra_keys: tuple[str, ...] = (),
 ) -> DataFrame:
     """Group by tile key and encode each group to one binary payload
-    (K2). applyInPandas keeps encoding executor-side; the groupBy is the
-    single shuffle of the tile pipeline. Pass ``geometry_col`` (a WKB
-    column) to emit true clipped polygon rings; bbox columns remain as a
-    fallback for rectangle-only feeds. ``extra_keys`` (string columns,
-    e.g. pair_key) scope the grouping so MANY tilesets encode in ONE
-    job; they re-emit in the output, never as feature properties."""
-    cols = [*extra_keys, "z", "x", "y", *feature_cols]
-    encoder = _make_tile_encoder(
-        geometry_col, max_zoom=max_zoom, buffer=buffer,
-        simplify_tol=simplify_tol, extra_keys=tuple(extra_keys),
-    )
+    (K2) with :func:`encode_tile`. applyInPandas keeps encoding
+    executor-side; the groupBy is the single shuffle of the tile
+    pipeline. ``geometry_col`` (WKB, among ``feature_cols``) becomes the
+    clipped polygon rings and every other feature column a property.
+    ``extra_keys`` (string columns, e.g. pair_key) scope the grouping so
+    MANY tilesets encode in ONE job; they re-emit in the output, never
+    as feature properties."""
+    extra_keys = tuple(extra_keys)
+
+    def encode(pdf: pd.DataFrame) -> pd.DataFrame:
+        z, x, y = (int(pdf[k].iloc[0]) for k in ("z", "x", "y"))
+        prop_cols = [
+            c for c in pdf.columns
+            if c not in (*extra_keys, "z", "x", "y", geometry_col)
+        ]
+        # stable sort over EVERY property column: a single non-unique
+        # key under pandas' default unstable quicksort would make
+        # feature order (and the pbf bytes) shuffle-dependent
+        pdf = pdf.sort_values(prop_cols or [geometry_col], kind="mergesort")
+        records = pdf[[*prop_cols, geometry_col]].to_dict("records")
+        pbf = encode_tile(
+            z, x, y, ((r.pop(geometry_col), _props(r)) for r in records),
+            max_zoom, buffer, simplify_tol,
+        )
+        row = {k: pdf[k].iloc[0] for k in extra_keys}
+        return pd.DataFrame([{**row, "z": z, "x": x, "y": y, "pbf": pbf}])
+
     schema = "".join(f"{k} string, " for k in extra_keys) + (
         "z int, x int, y int, pbf binary"
     )
     return (
-        tiles.select(*cols)
+        tiles.select(*extra_keys, "z", "x", "y", *feature_cols)
         .groupBy(*extra_keys, "z", "x", "y")
-        .applyInPandas(encoder, schema)
+        .applyInPandas(encode, schema)
     )
 
 
@@ -348,12 +306,19 @@ def tileset_rows(
     """``encode_tiles(drop_densest(assign_tiles(...)))`` for ONE tileset
     held in memory, as sorted (z, x, y, pbf) rows: the slippy ranges of
     :func:`_tile_x`/:func:`_tile_y` in NumPy, the same (area desc, fid
-    asc) drop order and the same encoder. ``features`` holds the encoded
-    feature columns in order, WKB in ``geometry``; ``bbox`` is their
-    (n, 4) xmin, ymin, xmax, ymax."""
-    encode = _make_tile_encoder("geometry", max_zoom)
+    asc) drop order and the same :func:`encode_tile`. ``features`` holds
+    the encoded feature columns in order, WKB in ``geometry``; ``bbox``
+    is their (n, 4) xmin, ymin, xmax, ymax."""
+    attrs = features.drop(columns="geometry").reset_index(drop=True)
+    wkbs = features["geometry"].tolist()
+    props = [_props(r) for r in attrs.to_dict("records")]
     xmin, ymin, xmax, ymax = bbox.T
-    rank = np.lexsort((features["fid"].to_numpy(), -(xmax - xmin) * (ymax - ymin)))
+    rank = np.lexsort((attrs["fid"].to_numpy(), -(xmax - xmin) * (ymax - ymin)))
+    # the layer order of every tile, fixed once: encode_tiles' stable
+    # property sort of the rank-ordered rows, so a tile's members sorted
+    # by it keep rank order among ties, NaN last
+    layer = attrs.iloc[rank].sort_values(list(attrs.columns), kind="mergesort").index
+    position = np.argsort(layer.to_numpy())  # row → its place in that order
 
     out = []
     for z in range(max_zoom + 1):
@@ -369,8 +334,10 @@ def tileset_rows(
                     if len(members) < max_features_per_tile:
                         members.append(i)
         for (x, y), members in sorted(kept.items()):
-            pdf = features.iloc[members].assign(z=z, x=x, y=y)
-            out.append((z, x, y, encode(pdf)["pbf"].iloc[0]))
+            members.sort(key=position.__getitem__)
+            out.append((z, x, y, encode_tile(
+                z, x, y, ((wkbs[i], props[i]) for i in members), max_zoom
+            )))
     return out
 
 
@@ -416,6 +383,20 @@ def tileset_metadata(
     return meta
 
 
+def write_tileset_marker(path: str, name: str, **metadata) -> None:
+    """Write the tileset directory ``path``'s completion marker (P6):
+    the tippecanoe-compatible :func:`tileset_metadata` of ``name`` and
+    the ``metadata`` keywords. Its leading underscore keeps it out of Spark data-source
+    listings (like _SUCCESS), so it coexists with the parquet parts; it
+    goes through the storage client that :func:`tileset_complete` and
+    :func:`tileset_markers` probe with."""
+    meta = tileset_metadata(name, **metadata)
+    write_bytes(
+        os.path.join(path, MARKER),
+        json.dumps(meta, separators=(",", ":")).encode("utf-8"),
+    )
+
+
 def write_tileset(
     tiles: DataFrame,
     path: str,
@@ -433,17 +414,9 @@ def write_tileset(
     tippecanoe-compatible fields (:func:`tileset_metadata`) so map
     clients can consume the directory unchanged."""
     tiles.write.mode(mode).partitionBy("z", "x").parquet(path)
-    meta = tileset_metadata(
-        name, max_zoom=max_zoom, min_zoom=min_zoom, bounds=bounds,
+    write_tileset_marker(
+        path, name, max_zoom=max_zoom, min_zoom=min_zoom, bounds=bounds,
         fields=fields,
-    )
-    # leading underscore: Spark data-source listings ignore _*/.* files,
-    # so the marker coexists with the parquet parts (like _SUCCESS). It
-    # goes through the storage client that tileset_complete and
-    # tileset_markers probe with.
-    write_bytes(
-        os.path.join(path, "_tileset_metadata.json"),
-        json.dumps(meta, separators=(",", ":")).encode("utf-8"),
     )
 
 
@@ -460,7 +433,7 @@ def tileset_markers(out_dir: str) -> set[str]:
     round-trips no matter how many pairs the estate holds (reference
     data.py:26-40 probes per pair because its shell loop is already
     per-pair; at 10⁵ pairs one listing wins)."""
-    pattern = os.path.join(glob.escape(out_dir), "*", "tiles", "_tileset_metadata.json")
+    pattern = os.path.join(glob.escape(out_dir), "*", "tiles", MARKER)
     return {
         os.path.basename(os.path.dirname(os.path.dirname(p)))
         for p in list_files(pattern)
@@ -469,4 +442,4 @@ def tileset_markers(out_dir: str) -> set[str]:
 
 def tileset_complete(path: str) -> bool:
     """P6 existence probe (reference data.py:33-35)."""
-    return exists(os.path.join(path, "_tileset_metadata.json"))
+    return exists(os.path.join(path, MARKER))

@@ -79,10 +79,9 @@ def _filesystem(uri: str):
         return pafs.FileSystem.from_uri(uri)
     except Exception as ex:
         raise NotImplementedError(
-            f"remote scheme {scheme!r} is not reachable from Python workers "
-            f"(no JVM gateway; pyarrow.fs rejected {uri!r}: {ex}) — copy the "
-            "data to local or s3 storage, or read it through Spark's "
-            "binaryFile source"
+            f"storage scheme {scheme!r} is not supported: pyarrow.fs "
+            f"rejected {uri!r} ({ex}); use a local path or a scheme "
+            "pyarrow.fs opens"
         ) from ex
 
 

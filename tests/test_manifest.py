@@ -179,6 +179,16 @@ def test_append_is_one_atomic_rename(tmp_path, monkeypatch):
     assert manifest.read_done(str(ledger), ("raster_id",)) == {("r1",)}
 
 
+def test_unsupported_ledger_scheme_names_scheme_without_worker_advice():
+    """A ledger URI pyarrow.fs cannot open fails with an error that
+    names the scheme and fits a ledger read: no advice to read the
+    ledger through Spark's binaryFile source."""
+    with pytest.raises(NotImplementedError, match="'wasbs'") as err:
+        manifest.read_done("wasbs://c@acct.blob.core.windows.net/ledger")
+    assert "local path" in str(err.value)
+    assert "binaryFile" not in str(err.value)
+
+
 def test_list_datasets_stems(spark, tmp_path):
     """S1: directory listing -> id DataFrame, stem projected, non-dataset
     files ignored, no content fetched."""

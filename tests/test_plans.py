@@ -113,11 +113,10 @@ def test_tileset_partition_pruning(spark, tmp_path):
     from sids_data_pipeline_spark.sources.vector import fixture_zones
 
     feats = _zone_bboxes(fixture_zones(spark, "zones_grid")).select(
-        "fid", "xmin", "ymin", "xmax", "ymax"
+        "fid", "geometry", "xmin", "ymin", "xmax", "ymax"
     )
     enc = tiles.encode_tiles(
-        tiles.assign_tiles(feats, max_zoom=3),
-        ["fid", "xmin", "ymin", "xmax", "ymax"],
+        tiles.assign_tiles(feats, max_zoom=3), ["fid", "geometry"], max_zoom=3
     )
     path = str(tmp_path / "ts")
     tiles.write_tileset(enc, path, name="prune-test", max_zoom=3)

@@ -116,9 +116,15 @@ def test_drop_densest(spark, features):
 
 
 def test_tileset_write_read_complete(spark, features, tmp_path):
+    from sids_data_pipeline_spark.functions import geo
+
     path = str(tmp_path / "tileset")
-    assigned = tiles.assign_tiles(features, max_zoom=2)
-    encoded = tiles.encode_tiles(assigned, ["fid", "xmin", "ymin", "xmax", "ymax"])
+    boxes = features.withColumn(
+        "geometry",
+        F.udf(lambda *b: geo.box_wkb(*b), "binary")("xmin", "ymin", "xmax", "ymax"),
+    )
+    assigned = tiles.assign_tiles(boxes, max_zoom=2)
+    encoded = tiles.encode_tiles(assigned, ["fid", "geometry"], max_zoom=2)
     assert not tiles.tileset_complete(path)
     tiles.write_tileset(encoded, path, name="zones_grid_rast_gradient", max_zoom=2)
     assert tiles.tileset_complete(path)  # P6 marker exists
@@ -131,7 +137,9 @@ def test_tileset_write_read_complete(spark, features, tmp_path):
     tile0 = mvt.decode_tile(bytes(back.filter("z = 0").first().pbf))
     layer = tile0["features"]
     assert layer["version"] == 2 and layer["extent"] == mvt.DEFAULT_EXTENT
-    assert {f["props"]["fid"] for f in layer["features"]} == {1, 2, 3, 4}
+    # fid 3's box spans 0.01° (0.1 tile units at z=0): its ring snaps to
+    # a point, and the rings path drops a degenerate exterior
+    assert {f["props"]["fid"] for f in layer["features"]} == {1, 2, 4}
     for f in layer["features"]:
         ring = f["rings"][0]
         assert ring[0] == ring[-1] and len(ring) == 5  # closed quad
@@ -341,8 +349,61 @@ def test_polar_bbox_lands_in_southern_row(spark):
             for ring in tiles.geometry_tile_rings(g, z, x, y):
                 assert all(lo <= c <= hi for pt in ring for c in pt), (z, ring)
     assert tiles.geometry_tile_rings(crossing, 2, 2, 3)
-    # the bbox-only encode path clamps the same way
-    assert tiles._local_coords(2, 2, 3, *bbox, mvt.DEFAULT_EXTENT)[0] == (455, 4096)
+
+
+def test_encode_tile_order_ids_and_props():
+    """encode_tile keeps the input order and numbers the surviving
+    features 1..n, also when a middle feature misses the tile; null and
+    NaN props drop and NumPy scalars unbox; a tile every polygon misses
+    encodes an empty layer. Props come from the one props helper."""
+    import numpy as np
+
+    from sids_data_pipeline_spark.functions import geo, mvt
+
+    east = geo.box_wkb(10.0, 10.0, 20.0, 20.0)
+    west = geo.box_wkb(-50.0, 10.0, -40.0, 20.0)  # misses tile (1, 1, 0)
+    north_east = geo.box_wkb(30.0, 30.0, 40.0, 40.0)
+    records = [
+        {"fid": np.int64(7), "mean": np.float64(1.5), "name": None},
+        {"fid": 8, "mean": 2.0, "name": "a"},
+        {"fid": 9, "mean": float("nan"), "name": "b"},
+    ]
+    feats = list(zip([east, west, north_east], map(tiles._props, records)))
+    layer = mvt.decode_tile(tiles.encode_tile(1, 1, 0, feats, max_zoom=1))["features"]
+    assert [f["id"] for f in layer["features"]] == [1, 2]
+    assert [f["props"] for f in layer["features"]] == [
+        {"fid": 7, "mean": 1.5}, {"fid": 9, "name": "b"},
+    ]
+    assert layer["features"][0]["rings"] == tiles.geometry_tile_rings(east, 1, 1, 0)
+    empty = mvt.decode_tile(tiles.encode_tile(1, 0, 0, feats[2:], max_zoom=1))
+    assert empty["features"]["features"] == []
+
+
+def test_tileset_rows_ignores_row_order_and_index():
+    """tileset_rows fixes its layer order once per tileset from the
+    (area desc, fid asc) rank and the property sort, so a row-shuffled
+    frame with a non-RangeIndex encodes the same tiles as the sorted
+    RangeIndex frame, through the per-tile cap, tied and NaN means."""
+    import numpy as np
+    import pandas as pd
+
+    from sids_data_pipeline_spark.functions import geo
+
+    rng = np.random.default_rng(3)
+    n = 40
+    x, y = rng.uniform(0.0, 8.0, n), rng.uniform(0.0, 8.0, n)
+    w = rng.choice([0.5, 1.0, 2.0], n)  # repeated sizes: area ties
+    bbox = np.column_stack((x, y, x + w, y + w))
+    mean = rng.choice([1.0, 2.0, np.nan], n)
+    frame = pd.DataFrame({
+        "fid": np.arange(n, dtype=np.int64), "mean": mean,
+        "geometry": [geo.box_wkb(*b) for b in bbox],
+    })
+    want = tiles.tileset_rows(frame, bbox, 6, 8)
+    perm = rng.permutation(n)
+    shuffled = frame.iloc[perm].set_index(pd.Index(np.arange(n)[::-1] * 10))
+    assert tiles.tileset_rows(shuffled, bbox[perm], 6, 8) == want
+    assert len(want) > 7  # several tiles per zoom above z=2
 
 
 def test_mvt_skips_degenerate_rings():

@@ -40,6 +40,9 @@ echo "$staged" | grep -q "sources/storage.py\|sinks/tokenbin.py\|sources/shapefi
     && q="$q source_geotiff_datasource raster_geotiff_ingest sink_tokenbin_roundtrip vector_shapefile_ingest streaming_vector_ingest streaming_cdc_upsert"
 echo "$staged" | grep -q "jobs/pipeline.py\|sinks/tiles.py\|sinks/geojsonl.py" \
     && q="$q pipeline_end_to_end tiles_encode_rings"
+# tile assignment and the density drop are the Column operators of sinks/tiles.py
+echo "$staged" | grep -q "sinks/tiles.py" \
+    && q="$q tiles_assign tiles_density_drop"
 # the completion ledger of the pipeline, standardize and terrain jobs
 echo "$staged" | grep -q "operators/manifest.py\|jobs/terrain.py" \
     && q="$q manifest_pending pipeline_end_to_end"
